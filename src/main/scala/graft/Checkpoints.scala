@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{coalesce, lit}
 
 /** Lineage-truncation seam for the iterative queries (connected components,
   * PageRank, the Jaccard rerank's doc-set frame).
@@ -107,6 +108,39 @@ object Checkpoints {
       }
     org.apache.spark.sql.graftbridge.GraftPlanBridge.capCheckpointStats(
       ckpt.asInstanceOf[org.apache.spark.sql.classic.DataFrame])
+  }
+
+  private val observedId = new java.util.concurrent.atomic.AtomicLong
+
+  /** A JVM-unique observation name: loops run several times per session
+    * (state builds, IVM resumes), and a reused name would collide if two
+    * observed frames ever met in one plan. */
+  private[graft] def observedName(prefix: String): String =
+    s"${prefix}_${observedId.incrementAndGet()}"
+
+  /** [[truncate]] `df` and read the aggregate `metric` (a Long-valued
+    * aggregate over `df`'s columns, unaliased) off the SAME job via
+    * `.observe` — the loops' one-action-per-round discipline: the
+    * convergence or size test costs no second pass over the round frame.
+    * A null result (max over an empty frame) reads 0. If the observation
+    * is absent, the metric is aggregated over the materialized
+    * checkpoint instead.
+    *
+    * Exactness: local mode runs the plan once, so every metric is exact.
+    * A reliable-mode eager checkpoint runs the plan twice (the eager
+    * action and the checkpoint-write job), so an ADDITIVE metric (count,
+    * sum) can read up to 2× there; an idempotent one (max, min) stays
+    * exact. Loop tests that must be mode-independent use a max flag;
+    * counts are only fit for a `> 0` test (0 is exact) or a size gate
+    * where inflation errs toward the safe side. */
+  def truncateObserved(df: DataFrame, metric: Column): (DataFrame, Long) = {
+    val name = observedName("ck_obs")
+    val obs = df.observe(name, metric.as("v"))
+    val ck = truncate(obs)
+    val v = obs.queryExecution.observedMetrics.get(name)
+      .map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
+      .getOrElse(ck.agg(coalesce(metric, lit(0L))).head().getLong(0))
+    (ck, v)
   }
 
   /** Best-effort delete of the RELIABLE checkpoint files backing a frame

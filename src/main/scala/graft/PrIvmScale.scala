@@ -37,9 +37,6 @@ object PrIvmScale {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     DevSessionConf(spark)
-    // measure the COLD converge: force a state rebuild instead of the
-    // serving path's persisted-state reuse
-    spark.conf.set("spark.graft.privm.freshState", "true")
 
     val base = "/root/testdata/sf0.1"
     val dir =
@@ -82,6 +79,14 @@ object PrIvmScale {
     val rows =
       if (serveOnly) Array.empty[org.apache.spark.sql.Row]
       else {
+        // measure the COLD converge: drop the persisted state artifact so
+        // the builder's ArtifactStore.ensure rebuilds it
+        val stateRoot = new org.apache.hadoop.fs.Path(
+          graft.queries.ArtifactStore.root(dir, "lineitem", "privm_state",
+            graft.queries.Graph.privmRecipe))
+        stateRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .delete(stateRoot, true)
+        t0 = System.nanoTime(); b0 = snap()
         val df = graft.queries.Graph.pagerankIvmBuild(spark, dir, emit)
         val r = df.collect()
         emit("final")
@@ -93,11 +98,10 @@ object PrIvmScale {
 
     // the SERVED maintenance path (VERDICT r17 task 1): state + base
     // edge set come from the artifact the run above just persisted
-    // (ensure reuses it — drop the fresh-state force), the delta is
-    // committed in "setup", and the measured maintenance step is
-    // feed → patch → resume with NO base-table scan. These phases are
-    // what a deployment pays per change batch.
-    spark.conf.unset("spark.graft.privm.freshState")
+    // (ensure reuses it), the delta is committed in "setup", and the
+    // measured maintenance step is feed → patch → resume with NO
+    // base-table scan. These phases are what a deployment pays per
+    // change batch.
     t0 = System.nanoTime(); b0 = snap()
     val sdf = graft.queries.Graph.pagerankIvmServe(spark, dir,
       ph => emit(s"serve_$ph"))
@@ -123,33 +127,6 @@ object PrIvmScale {
     val lr2 = if (lrows.isEmpty) 0L else lrows.head.getLong(3)
     println(s"""{"harness":"pr_ivm","mult":$mult,"frac":$frac,"local_rows":${lrows.length},"local_r2":$lr2}""")
 
-    // BROADCAST-Δ resume (VERDICT r17 task 5 — the §39 resume floor):
-    // same serve path under spark.graft.graph.prResumeExchange=bcast —
-    // the edge frame lays out by dst once per batch, each round
-    // broadcasts the active (vertex, Δunit) frame and aggregates Δcin
-    // partition-local, so resume shuffle collapses from O(active edges)
-    // to the O(touched dst) state-join build side. Measured on the
-    // uniform delta AND the localized 1/frac delta; results must match
-    // the default form bit-for-bit.
-    spark.conf.set(
-      graft.queries.GraphAdaptive.PrResumeConfKey, "bcast")
-    t0 = System.nanoTime(); b0 = snap()
-    val bdf = graft.queries.Graph.pagerankIvmServe(spark, dir,
-      ph => emit(s"bsrv_$ph"))
-    val brows = bdf.collect()
-    emit("bsrv_final")
-    val bAgree = brows.map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
-      .toSeq == srows.map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq
-    println(s"""{"harness":"pr_ivm","mult":$mult,"bsrv_rows":${brows.length},"matches_edge_form":$bAgree}""")
-    t0 = System.nanoTime(); b0 = snap()
-    val bldf = graft.queries.Graph.pagerankIvmServe(spark, dir,
-      ph => emit(s"blocal_$ph"), localFrac = Some(frac))
-    val blrows = bldf.collect()
-    emit("blocal_final")
-    val blAgree = blrows.map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
-      .toSeq == lrows.map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq
-    println(s"""{"harness":"pr_ivm","mult":$mult,"frac":$frac,"blocal_rows":${blrows.length},"matches_edge_form":$blAgree}""")
-    spark.conf.unset(graft.queries.GraphAdaptive.PrResumeConfKey)
     spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Checkpoints.TruncateOps
+import graft.Checkpoints.{TruncateOps, truncateObserved}
 
 import Parity._
 
@@ -51,62 +51,6 @@ private[graft] object GraphAdaptive {
     * stream the big one — never sort it, never move it). */
   def pick(bcast: Boolean)(df: DataFrame): DataFrame =
     if (bcast) broadcast(df) else df.hint("shuffle_hash")
-
-  /** PageRank contribution-aggregate exchange form. The default map-side
-    * PARTIAL aggregation duplicates each destination's partial across
-    * every map partition that saw one of its in-edges — an
-    * O(V·partitions) exchange term that grows with the partition count
-    * (73-87× shuffled bytes at 30-36× data; VERDICT r13 watch item 1).
-    * `repartition` instead exchanges the RAW contribution rows
-    * (O(E), two longs each) and aggregates complete on the receiver —
-    * fewer bytes whenever the average in-degree is below the map
-    * partition count. Both forms are value-identical; the knob exists so
-    * ScaleStress can measure them head-to-head (SCALE.md §21). */
-  val ContribConfKey = "spark.graft.graph.contribExchange"
-
-  def contribRepartition(spark: SparkSession): Boolean =
-    spark.conf.get(ContribConfKey, "partial") == "repartition"
-
-  /** Convergence-loop exchange form for q_pagerank_converged. `full`
-    * (default) re-exchanges every vertex's contribution each round —
-    * the r13-r14 measured shape. `delta` is PUSH-ON-CHANGE (the
-    * differential-dataflow / GAS engines' idea, public knowledge): the
-    * round exchanges only vertices whose per-edge contribution unit
-    * CHANGED since the last propagated round, and each destination's
-    * contribution sum is maintained incrementally
-    * (cin_k = cin_{k-1} + Σ Δunit over the active vertices' edges).
-    * Integer arithmetic makes the telescoped sum EXACT — per-round rank
-    * values are bit-identical to the full form (the div happens at the
-    * per-node unit, never on the accumulation path), so the oracle gate
-    * is unchanged; what changes is the exchange volume, which collapses
-    * with the active set as vertices hit their integer fixpoints mid-
-    * loop. Both forms are measured head-to-head in SCALE.md §30; the
-    * default is the measured winner. */
-  val PrLoopConfKey = "spark.graft.graph.prLoopExchange"
-
-  def prDelta(spark: SparkSession): Boolean =
-    spark.conf.get(PrLoopConfKey, "delta") == "delta"
-
-  /** Resume-exchange form for the SERVED PageRank maintenance path
-    * (pagerankIvmServe). `edge` (default): the r17 shape — each round
-    * exchanges the active vertices' per-EDGE contribution rows, which
-    * saturates at one full contribution exchange on hub-dense graphs
-    * (SCALE.md §39's ~450 MB floor: one spread delta activates most
-    * suppliers, and every active hub re-sends its whole adjacency).
-    * `bcast`: the edge frame is laid out partitioned by DST once per
-    * change batch; each round then BROADCASTS the active (vertex, Δunit)
-    * frame — O(active vertices) bytes, never O(active edges) — joins it
-    * map-side against the dst-partitioned edge blocks, and the per-dst
-    * Δ aggregation is partition-local. Per-round exchange collapses to
-    * the O(touched dst) state-join build side. Bit-identical by integer
-    * determinism (same Δ rows, same sums, same rounds — spec-pinned).
-    * Requires the ACTIVE SET to fit the broadcast ceiling — on this
-    * exhibit's saturated resume that is the supplier vertex set, 16
-    * bytes each; an operator enables it per corpus from the audit. */
-  val PrResumeConfKey = "spark.graft.graph.prResumeExchange"
-
-  def prResumeBcast(spark: SparkSession): Boolean =
-    spark.conf.get(PrResumeConfKey, "edge") == "bcast"
 }
 
 /** Iterative graph analytics beyond connected components (q_dedup_components
@@ -268,13 +212,10 @@ SELECT node_id, pr FROM pr$Iters ORDER BY pr DESC, node_id LIMIT 50"""
         // checkpoint: the O(V) frame exchanges, the edge list still
         // never moves. GraphFallbackSpec forces this path and asserts
         // plan shape + identical results.
-        val cj = edgesW
+        val contrib = edgesW
           .join(pv(pr), col("src") === col("node_id"))
           .select(col("dst"), expr("pr div outdeg").as("c1"))
-        val contrib =
-          (if (GraphAdaptive.contribRepartition(spark)) cj.repartition(col("dst"))
-           else cj)
-            .groupBy("dst").agg(sum(col("c1")).as("cin"))
+          .groupBy("dst").agg(sum(col("c1")).as("cin"))
         pr = nodes.crossJoin(broadcast(nn))
           .join(pv(contrib), col("node_id") === col("dst"), "left")
           .select(col("node_id"),
@@ -301,11 +242,11 @@ SELECT node_id, pr FROM pr$Iters ORDER BY pr DESC, node_id LIMIT 50"""
     * hash gate proves trajectory, stopping rule, and fixpoint all at
     * once.
     *
-    * Scale shape: identical per-round plan to [[qPagerank]] (edges never
-    * move; one O(V) contribution exchange + one O(V) delta join per
-    * round); the convergence test is a 1-value agg off the
-    * already-materialized round frame, so it adds no extra pass over
-    * the data. */
+    * Scale shape: [[prPushLoop]] over [[qPagerank]]'s edge layout (edges
+    * never move; a round exchanges only the changed vertices'
+    * contributions); the convergence metric rides the round's own
+    * checkpoint job ([[graft.Checkpoints.truncateObserved]]), so it adds
+    * no extra pass over the data. */
   private val PrEpsDiv = 10L   // ε = Scale / (PrEpsDiv · V)
   private val PrMaxRounds = 100L
 
@@ -324,26 +265,33 @@ SELECT node_id, pr FROM pr$Iters ORDER BY pr DESC, node_id LIMIT 50"""
         lit(0L).as("lpu"), lit(0L).as("cin"))
   }
 
-  /** PUSH-ON-CHANGE convergence loop (GraphAdaptive.PrLoopConfKey
-    * scaladoc; SCALE.md §30): state = (node_id, outdeg, pr, unit, lpu,
-    * cin) where unit = pr div outdeg (the per-edge contribution), lpu =
-    * the unit whose contributions cin currently reflects. A round
-    * exchanges ONLY the edges of vertices with unit ≠ lpu; the integer
-    * telescope cin_k = cin_{k-1} + Σ Δunit keeps every round's rank
-    * BIT-IDENTICAL to the full re-exchange. As vertices hit their
-    * integer fixpoints the active set — and with it the round's
-    * exchange — collapses toward zero.
+  /** PUSH-ON-CHANGE convergence loop (SCALE.md §30 measured it against
+    * a full re-exchange of every vertex's contribution each round, and
+    * it won): state = (node_id, outdeg, pr, unit, lpu, cin) where unit =
+    * pr div outdeg (the per-edge contribution), lpu = the unit whose
+    * contributions cin currently reflects. A round exchanges ONLY the
+    * edges of vertices with unit ≠ lpu; the integer telescope
+    * cin_k = cin_{k-1} + Σ Δunit is exact (the div happens at the
+    * per-node unit, never on the accumulation path), so every round's
+    * rank is BIT-IDENTICAL to the full-form recurrence the DuckDB oracle
+    * runs. As vertices hit their integer fixpoints the active set — and
+    * with it the round's exchange — collapses toward zero.
     *
     * RESUMABLE: `init` is any state satisfying the cin invariant — the
     * cold-start seed ([[prPushSeed]]) or a converged state patched for
     * an edge delta (q_pagerank_ivm), which is the whole point of the
     * push form: a sparse update reactivates only the patched vertices.
     * Returns the final state frame (checkpointed; the caller owns its
-    * release) and the executed round count. `tag` keys the per-round
-    * observe metrics so two loops in one query don't collide. */
+    * release) and the executed round count.
+    *
+    * The throw fires only BEYOND the cap, so round PrMaxRounds itself
+    * executes — mirroring the oracle's `rounds < cap` recursion guard
+    * exactly: an input converging AT the cap returns identically in both
+    * engines; one that never converges fails loudly here while the
+    * oracle stops silently (a gate error, the honest outcome for a
+    * broken contract). */
   private def prPushLoop(
-      spark: SparkSession, g: PrGraph, init: DataFrame,
-      prBase: Long, eps: Long, tag: String): (DataFrame, Long) = {
+      g: PrGraph, init: DataFrame, prBase: Long, eps: Long): (DataFrame, Long) = {
     var curCk = graft.Checkpoints.truncate(init)
     var cur: org.apache.spark.sql.DataFrame = curCk
     var rounds = 0L
@@ -358,14 +306,10 @@ SELECT node_id, pr FROM pr$Iters ORDER BY pr DESC, node_id LIMIT 50"""
       val active = cur.filter(col("unit") =!= col("lpu"))
         .select(col("node_id").as("asrc"),
           (col("unit") - col("lpu")).as("du"))
-      val dcj = g.edgesW.join(g.pv(active), col("src") === col("asrc"))
+      val dAgg = g.edgesW.join(g.pv(active), col("src") === col("asrc"))
         .select(col("dst"), col("du"))
-      val dAgg =
-        (if (GraphAdaptive.contribRepartition(spark))
-          dcj.repartition(col("dst"))
-         else dcj)
-          .groupBy("dst").agg(sum(col("du")).as("dd"))
-      val obs = cur
+        .groupBy("dst").agg(sum(col("du")).as("dd"))
+      val (nxt, d) = truncateObserved(cur
         .join(g.pv(dAgg), col("node_id") === col("dst"), "left")
         .select(col("node_id"), col("outdeg"),
           (col("cin") + coalesce(col("dd"), lit(0L))).as("cin"),
@@ -376,80 +320,9 @@ SELECT node_id, pr FROM pr$Iters ORDER BY pr DESC, node_id LIMIT 50"""
         .select(col("node_id"), col("outdeg"), col("pr"),
           expr("pr div outdeg").as("unit"),
           col("lpu_next").as("lpu"), col("cin"),
-          abs(col("pr") - col("prev_pr")).as("d"))
-        .observe(s"pr_delta_$tag$rounds", max(col("d")).as("v"))
-      val nxt = graft.Checkpoints.truncate(obs)
-      delta = obs.queryExecution.observedMetrics
-        .get(s"pr_delta_$tag$rounds")
-        .map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
-        .getOrElse(nxt.agg(coalesce(max(col("d")), lit(0L))).head().getLong(0))
-      graft.Checkpoints.release(curCk)
-      curCk = nxt
-      cur = nxt.select("node_id", "outdeg", "pr", "unit", "lpu", "cin")
-    }
-    (cur, rounds)
-  }
-
-  /** [[prPushLoop]]'s BROADCAST-Δ variant (GraphAdaptive.PrResumeConfKey
-    * scaladoc): `edgesD` must be materialized HASH-PARTITIONED ON DST.
-    * Each round broadcasts the active (vertex, Δunit) frame — the per-
-    * round exchange is O(active vertices) + the O(touched dst) Δ build
-    * side, never O(active edges); the per-dst aggregation runs inside
-    * the dst-partitioned edge blocks. Arithmetic identical to
-    * [[prPushLoop]] row-for-row, so the trajectory and round count are
-    * bit-identical (GraphFallbackSpec pins it against the gate). */
-  private def prPushLoopBcast(
-      spark: SparkSession, edgesD: DataFrame, init: DataFrame,
-      prBase: Long, eps: Long, tag: String,
-      edgesAdd: Option[DataFrame] = None): (DataFrame, Long) = {
-    var curCk = graft.Checkpoints.truncate(init)
-    var cur: org.apache.spark.sql.DataFrame = curCk
-    var rounds = 0L
-    var delta = Long.MaxValue
-    while (delta >= eps) {
-      rounds += 1
-      if (rounds > PrMaxRounds)
-        throw new IllegalStateException(
-          s"prPushLoopBcast: no convergence after $PrMaxRounds " +
-            s"rounds (last max |Δ| = $delta, ε = $eps) — the damping/ε " +
-            "contract is broken, refusing to return a half-converged rank")
-      val active = cur.filter(col("unit") =!= col("lpu"))
-        .select(col("node_id").as("asrc"),
-          (col("unit") - col("lpu")).as("du"))
-      // per-round Δ contributions off the dst-partitioned big side —
-      // partition-local aggregate. `edgesAdd` carries this batch's
-      // O(delta) ADD edges as a second leg (OPTIMIZATION r20): a union
-      // into edgesD would erase its partitioning (the §48 per-batch
-      // re-layout this form now avoids), so the adds aggregate
-      // separately and the two partials combine in one tiny O(touched
-      // dst) exchange. Long sums reassociate exactly — bit-identical.
-      def dLeg(e: DataFrame): DataFrame =
-        e.join(broadcast(active), col("src") === col("asrc"))
-          .select(col("dst"), col("du"))
-          .groupBy("dst").agg(sum(col("du")).as("dd"))
-      val dAgg = edgesAdd match {
-        case None => dLeg(edgesD)
-        case Some(a) => dLeg(edgesD).unionByName(dLeg(a))
-          .groupBy("dst").agg(sum(col("dd")).as("dd"))
-      }
-      val obs = cur
-        .join(dAgg.hint("shuffle_hash"), col("node_id") === col("dst"), "left")
-        .select(col("node_id"), col("outdeg"),
-          (col("cin") + coalesce(col("dd"), lit(0L))).as("cin"),
-          col("pr").as("prev_pr"), col("unit").as("lpu_next"))
-        .select(col("node_id"), col("outdeg"), col("cin"),
-          (lit(prBase) + expr("(85 * cin) div 100")).as("pr"),
-          col("prev_pr"), col("lpu_next"))
-        .select(col("node_id"), col("outdeg"), col("pr"),
-          expr("pr div outdeg").as("unit"),
-          col("lpu_next").as("lpu"), col("cin"),
-          abs(col("pr") - col("prev_pr")).as("d"))
-        .observe(s"pr_delta_b$tag$rounds", max(col("d")).as("v"))
-      val nxt = graft.Checkpoints.truncate(obs)
-      delta = obs.queryExecution.observedMetrics
-        .get(s"pr_delta_b$tag$rounds")
-        .map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
-        .getOrElse(nxt.agg(coalesce(max(col("d")), lit(0L))).head().getLong(0))
+          abs(col("pr") - col("prev_pr")).as("d")),
+        max(col("d")))
+      delta = d
       graft.Checkpoints.release(curCk)
       curCk = nxt
       cur = nxt.select("node_id", "outdeg", "pr", "unit", "lpu", "cin")
@@ -515,68 +388,9 @@ ORDER BY pr DESC, node_id LIMIT 50"""
         // truncates exactly like `div`/`//` on these positive values.
         val prBase = (Scale * 15L) / (100L * vCnt)
         val pr0 = Scale / vCnt
-        if (GraphAdaptive.prDelta(spark)) {
-          val (cur, rounds) =
-            prPushLoop(spark, g, prPushSeed(g, pr0), prBase, eps, "")
-          cur.select(col("node_id"), col("pr"), lit(rounds).as("rounds"))
-            .orderBy(desc("pr"), asc("node_id")).limit(50)
-        } else {
-        // curCk is the round's CHECKPOINTED frame (the release target —
-        // release() only reclaims a bare LogicalRDD root, so handing it a
-        // projection of the checkpoint would silently leak every round's
-        // reliable files); cur is the (node_id, pr) view the next round
-        // consumes
-        var curCk = graft.Checkpoints.truncate(
-          g.nodes.select(col("node_id"), lit(pr0).as("pr")))
-        var cur = curCk
-        var rounds = 0L
-        var delta = Long.MaxValue
-        while (delta >= eps) {
-          rounds += 1
-          // the throw fires only BEYOND the cap, so round PrMaxRounds
-          // itself executes — mirroring the oracle's `rounds < cap`
-          // recursion guard exactly: an input converging AT the cap
-          // returns identically in both engines; one that never converges
-          // fails loudly here while the oracle stops silently (a gate
-          // error, which is the honest outcome for a broken contract)
-          if (rounds > PrMaxRounds)
-            throw new IllegalStateException(
-              s"q_pagerank_converged: no convergence after $PrMaxRounds " +
-                s"rounds (last max |Δ| = $delta, ε = $eps) — the damping/ε " +
-                "contract is broken, refusing to return a half-converged rank")
-          val cj = g.edgesW
-            .join(g.pv(cur), col("src") === col("node_id"))
-            .select(col("dst"), expr("pr div outdeg").as("c1"))
-          val contrib =
-            (if (GraphAdaptive.contribRepartition(spark))
-              cj.repartition(col("dst"))
-             else cj)
-              .groupBy("dst").agg(sum(col("c1")).as("cin"))
-          // the convergence metric rides the checkpoint's own
-          // materialization job via observe() — one action per round,
-          // not a second scan of the round frame
-          val obs = g.nodes
-            .join(g.pv(contrib), col("node_id") === col("dst"), "left")
-            .select(col("node_id"),
-              (lit(prBase) +
-                expr("(85 * coalesce(cin, 0L)) div 100")).as("pr"))
-            .join(g.pv(cur.select(col("node_id").as("pn"),
-              col("pr").as("prev"))), col("node_id") === col("pn"))
-            .select(col("node_id"), col("pr"),
-              abs(col("pr") - col("prev")).as("d"))
-            .observe(s"pr_delta_$rounds", max(col("d")).as("v"))
-          val nxt = graft.Checkpoints.truncate(obs)
-          delta = obs.queryExecution.observedMetrics
-            .get(s"pr_delta_$rounds")
-            .map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
-            .getOrElse(nxt.agg(coalesce(max(col("d")), lit(0L))).head().getLong(0))
-          graft.Checkpoints.release(curCk)
-          curCk = nxt
-          cur = nxt.select("node_id", "pr")
-        }
+        val (cur, rounds) = prPushLoop(g, prPushSeed(g, pr0), prBase, eps)
         cur.select(col("node_id"), col("pr"), lit(rounds).as("rounds"))
           .orderBy(desc("pr"), asc("node_id")).limit(50)
-        }
       }
     })
 
@@ -750,8 +564,8 @@ ORDER BY pr DESC, node_id LIMIT 50"""
     val v = g.nodes.agg(count(lit(1))).head().getLong(0)
     require(v > 0L, "pagerankIvmColdFinal: empty final graph")
     val eps = Scale / (PrEpsDiv * v)
-    val (st, _) = prPushLoop(spark, g, prPushSeed(g, Scale / v),
-      (Scale * 15L) / (100L * v), eps, "cf")
+    val (st, _) = prPushLoop(g, prPushSeed(g, Scale / v),
+      (Scale * 15L) / (100L * v), eps)
     val out = st.select(col("node_id"), col("pr"))
       .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
     Seq(st, g.edgesW, g.nodes).foreach(graft.Checkpoints.release)
@@ -763,41 +577,12 @@ ORDER BY pr DESC, node_id LIMIT 50"""
     * maintenance path ([[pagerankIvmServe]]) patches that frame off the
     * changes feed instead of re-scanning + re-distincting the mutated
     * table, so the whole maintenance step is O(delta + affected
-    * subgraph), never O(E) shuffle. v3 (OPTIMIZATION r20, VERDICT r19
-    * #4): the edge set is ADDITIONALLY stored BUCKETED BY DST
-    * (edges_bdst, [[PrBdstBuckets]] buckets) — the broadcast-Δ resume
-    * form previously re-laid the whole edge frame out by dst ONCE PER
-    * CHANGE BATCH (SCALE.md §48: 567.7 MB at 72×, ≈ one full edge
-    * exchange, charged to its patch phase); reading the dst layout from
-    * the bucketed artifact moves that exchange to build time, where a
-    * deployment pays it once per base snapshot. */
+    * subgraph), never O(E) shuffle. v4: the artifact holds state, edges
+    * and meta only; the version keys the artifact root, so a build by an
+    * older recipe is never read. */
   private[graft] val privmRecipe: String =
-    s"privm-v3:scale=$Scale,epsdiv=$PrEpsDiv," +
-      s"cap=$PrMaxRounds,off=$Off,add=31/41,del=37/43,bdst=$PrBdstBuckets"
-
-  /** Bucket count for the dst-bucketed base edge artifact. Fixed per
-    * artifact (bucket ids are baked into file names); a deployment sizes
-    * it to edge bytes / a 128-512 MB per-bucket target — 64 keeps every
-    * harness scale (1-72×) in sane per-bucket file sizes while giving the
-    * resume loop's partition-local Δ aggregation full-core parallelism. */
-  private val PrBdstBuckets = 64
-
-  /** Register (once per session) and read the dst-bucketed base edge
-    * table stored under the state artifact. The bucketed SCAN carries
-    * HashPartitioning(dst, [[PrBdstBuckets]]), so the resume loop's
-    * per-dst Δ aggregation is partition-local with NO per-batch layout
-    * exchange. Deliberately NOT checkpointed: auto-bucketed-scan keeps
-    * the bucket layout only in plans that use it (each round's groupBy
-    * does), and a checkpoint materialized from a layout-free plan would
-    * lose the partitioning. */
-  private def privmBdstEdges(spark: SparkSession, stateRoot: String): DataFrame = {
-    val bt = s"privm_bdst_${java.lang.Integer.toHexString(stateRoot.hashCode)}"
-    if (!spark.catalog.tableExists(bt))
-      spark.sql(s"""CREATE TABLE $bt (src BIGINT, dst BIGINT) USING parquet
-        CLUSTERED BY (dst) INTO $PrBdstBuckets BUCKETS
-        LOCATION '$stateRoot/edges_bdst'""")
-    spark.table(bt)
-  }
+    s"privm-v4:scale=$Scale,epsdiv=$PrEpsDiv," +
+      s"cap=$PrMaxRounds,off=$Off,add=31/41,del=37/43"
 
   /** Converged-base-state builder shared by the gate's serving path and
     * [[pagerankIvmServe]]: converge on base0 and persist the state, the
@@ -813,27 +598,12 @@ ORDER BY pr DESC, node_id LIMIT 50"""
         col("id").as("lpu"), col("id").as("cin")), 0L)
       else {
         val eps0 = Scale / (PrEpsDiv * v)
-        prPushLoop(spark, g1, prPushSeed(g1, Scale / v),
-          (Scale * 15L) / (100L * v), eps0, "b")
+        prPushLoop(g1, prPushSeed(g1, Scale / v),
+          (Scale * 15L) / (100L * v), eps0)
       }
     st.write.mode("overwrite").parquet(s"$r/state")
     g1.edgesW.select(col("src"), col("dst"))
       .write.mode("overwrite").parquet(s"$r/edges")
-    // the SAME edge set, bucketed by dst (recipe v3): the broadcast-Δ
-    // resume reads its dst layout from here instead of re-laying the
-    // frame out per change batch (SCALE.md §48's 567.7 MB patch-phase
-    // exchange). The pre-repartition aligns rows to their bucket task
-    // (repartition(n, col) and Spark-native bucketing share the
-    // pmod(murmur3) placement), so each bucket lands as ONE file.
-    val bt = s"privm_bdst_${java.lang.Integer.toHexString(r.hashCode)}"
-    spark.sql(s"DROP TABLE IF EXISTS $bt")
-    g1.edgesW.select(col("src"), col("dst"))
-      .repartition(PrBdstBuckets, col("dst"))
-      .write.format("parquet")
-      .bucketBy(PrBdstBuckets, "dst")
-      .option("path", s"$r/edges_bdst")
-      .mode("overwrite")
-      .saveAsTable(bt)
     // state and edges now live in parquet — nothing re-reads through
     // the loop's final checkpoint or the graph blocks; reclaim them
     graft.Checkpoints.release(st)
@@ -1036,51 +806,28 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       val addE = dedges.filter(col("sgn") > 0)
         .select(col("dsrc").as("src"), col("ddst").as("dst"))
       val bcastV = GraphAdaptive.broadcastOk(spark, vCnt)
-      val resumeBcast = GraphAdaptive.prResumeBcast(spark)
-      // bcast resume (OPTIMIZATION r20): the dst layout comes from the
-      // BUCKETED base edge artifact (privmRecipe v3) — the broadcast
-      // delete anti-join is map-side and layout-preserving, and the
-      // batch's adds ride prPushLoopBcast's second aggregation leg, so
-      // the §48 once-per-batch O(E) dst re-layout exchange is GONE: a
-      // deployment pays the layout once per base snapshot, at build.
-      // The default (edge) form keeps the src layout the per-edge
-      // exchange loop wants.
-      val edgesFin: Option[DataFrame] =
-        if (resumeBcast) None
-        else {
-          val ef0 = spark.read.parquet(s"$stateRoot/edges")
-            .join(broadcast(delE),
-              col("src") === col("dsrc") && col("dst") === col("ddst"),
-              "left_anti")
-            .unionByName(addE)
-          Some(if (bcastV) ef0.truncateLineage
-               else ef0.repartition(col("src")).truncateLineagePartitioned)
-        }
+      val edgesFin0 = spark.read.parquet(s"$stateRoot/edges")
+        .join(broadcast(delE),
+          col("src") === col("dsrc") && col("dst") === col("ddst"),
+          "left_anti")
+        .unionByName(addE)
+      val edgesFin =
+        if (bcastV) edgesFin0.truncateLineage
+        else edgesFin0.repartition(col("src")).truncateLineagePartitioned
       val patchedCk = graft.Checkpoints.truncate(patched)
       mark("patch")
 
       // nodes is unused by the resumed loop (init is pre-patched) but
       // kept honest: the state's own vertex set
-      val (s2, r2) =
-        if (resumeBcast) {
-          val edgesD = privmBdstEdges(spark, stateRoot)
-            .join(broadcast(delE),
-              col("src") === col("dsrc") && col("dst") === col("ddst"),
-              "left_anti")
-          val addLeg = if (localFrac.isEmpty) Some(addE) else None
-          prPushLoopBcast(spark, edgesD, patchedCk, prBase, eps, "sv",
-            edgesAdd = addLeg)
-        } else {
-          val g = PrGraph(edgesFin.get, s1.select(col("node_id")),
-            GraphAdaptive.pick(bcastV) _)
-          prPushLoop(spark, g, patchedCk, prBase, eps, "sv")
-        }
+      val g = PrGraph(edgesFin, s1.select(col("node_id")),
+        GraphAdaptive.pick(bcastV) _)
+      val (s2, r2) = prPushLoop(g, patchedCk, prBase, eps)
       mark("resume")
       val res = s2.select(col("node_id"), col("pr"))
         .orderBy(desc("pr"), asc("node_id")).limit(50)
         .withColumn("r1", lit(r1)).withColumn("r2", lit(r2))
       val rows = res.collect().toSeq
-      (Seq(s2, dedges, dpairs, patchedCk) ++ edgesFin)
+      Seq(s2, dedges, dpairs, patchedCk, edgesFin)
         .foreach(graft.Checkpoints.release)
       spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 1), res.schema)
@@ -1127,20 +874,11 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       // snapshot, not per change. The state is a pure deterministic
       // function of lineitem + the spelled-out recipe constants, so a
       // loaded state is bit-identical to a rebuilt one and the oracle
-      // gate is unchanged; `spark.graft.privm.freshState=true` forces a
-      // rebuild (the measurement harness's cold-path knob). The build
-      // converges on the base0 FRAME — by construction identical to the
-      // table's gen-1 snapshot committed above.
-      val stateRecipe = privmRecipe
-      val buildState = privmBuildState(spark, base0) _
-      val stateRoot =
-        if (spark.conf.getOption("spark.graft.privm.freshState")
-            .contains("true"))
-          ArtifactStore.rebuild(spark, dir, "lineitem", "privm_state",
-            stateRecipe)(buildState)
-        else
-          ArtifactStore.ensure(spark, dir, "lineitem", "privm_state",
-            stateRecipe)(buildState)
+      // gate is unchanged. The build converges on the base0 FRAME — by
+      // construction identical to the table's gen-1 snapshot committed
+      // above.
+      val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
+        "privm_state", privmRecipe)(privmBuildState(spark, base0))
       val metaRow = spark.read.parquet(s"$stateRoot/meta").head()
       val (r1, vCnt) = (metaRow.getLong(0), metaRow.getLong(1))
       if (vCnt == 0L) {
@@ -1178,7 +916,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
             s"($vCnt -> $v2) — the held-out guards are broken; a V change " +
             "rebases the teleport mass and needs a full recompute")
         mark("delta")
-        val (s2, r2) = prPushLoop(spark, g2, patched, prBase, eps, "i")
+        val (s2, r2) = prPushLoop(g2, patched, prBase, eps)
         mark("p2")
         // materialize the O(1) top-50 locally so every loop-era
         // checkpoint (the final state, g2's edge/node blocks, the delta
@@ -1558,18 +1296,14 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
                 "(min-hop BFS terminates in <= diameter+1 waves)")
           val reached = edges.join(pv(frontier), col("src") === col("node_id"))
             .select(col("dst").as("node_id")).distinct()
-          // non-emptiness flag, NOT a count: a reliable-mode eager
-          // checkpoint materializes the plan twice, so an additive
-          // observe() metric can double-count — max(1) is idempotent
-          // under replays (null on an empty frontier), and the loop only
+          // non-emptiness flag, NOT a count: max(1) is exact in both
+          // checkpoint modes (0 on an empty frontier), and the loop only
           // consumes emptiness
-          val obs = reached.join(pv(dist.select("node_id")),
-              Seq("node_id"), "left_anti")
-            .observe(s"bfs_f_$h", max(lit(1L)).as("n"))
-          frontier = graft.Checkpoints.truncate(obs)
-          fSize = obs.queryExecution.observedMetrics.get(s"bfs_f_$h")
-            .map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
-            .getOrElse(frontier.count())
+          val (f, n) = truncateObserved(
+            reached.join(pv(dist.select("node_id")), Seq("node_id"), "left_anti"),
+            max(lit(1L)))
+          frontier = f
+          fSize = n
           if (fSize > 0L)
             dist = dist.unionByName(
               frontier.select(col("node_id"), lit(h).as("hop")))
@@ -1715,13 +1449,12 @@ ORDER BY f.node_id"""
     * incremental kernel can run the IDENTICAL kernel on an affected
     * subgraph. Starts from self labels of the edge sources; stops when
     * zero labels changed. Returns (converged labels — checkpointed, the
-    * caller releases; executed rounds). `tag` keys the observe metric
-    * names ("" = the gate's historical names). */
-  private def lpLoop(spark: SparkSession, edges: DataFrame,
-      pv: DataFrame => DataFrame, tag: String = ""): (DataFrame, Long) = {
+    * caller releases; executed rounds). */
+  private def lpLoop(
+      edges: DataFrame, pv: DataFrame => DataFrame): (DataFrame, Long) = {
       // lblCk = the checkpointed release target; lbl = the (node_id, lbl)
-      // view (release() reclaims only a bare LogicalRDD root — see
-      // q_pagerank_converged)
+      // view (Checkpoints.release reclaims only a bare LogicalRDD root,
+      // so handing it a projection would leak every round's reliable files)
       var lblCk = graft.Checkpoints.truncate(
         edges.select(col("src").as("node_id")).distinct()
           .select(col("node_id"), col("node_id").as("lbl")))
@@ -1746,24 +1479,16 @@ ORDER BY f.node_id"""
           .groupBy("node_id")
           .agg(min(struct((-col("c")).as("negc"), col("lbl").as("l"))).as("m"))
           .select(col("node_id"), col("m.l").as("lbl"))
-        // any-change flag observed on the checkpoint job itself (the
-        // q_pagerank_converged one-action-per-round discipline). max, not
-        // sum: a reliable-mode eager checkpoint runs the plan twice (eager
-        // action + checkpoint-write job), so an ADDITIVE metric can
-        // double-count — max is idempotent under replays, and only the
-        // sign drives the loop anyway
-        val obs = nxt0
+        // any-change flag observed on the checkpoint job itself (one
+        // action per round, as in prPushLoop); a max flag, exact in both
+        // checkpoint modes — only the sign drives the loop anyway
+        val (nxt, c) = truncateObserved(nxt0
           .join(pv(lbl.select(col("node_id").as("pn"), col("lbl").as("prev"))),
             col("node_id") === col("pn"))
           .select(col("node_id"), col("lbl"),
-            (col("lbl") =!= col("prev")).cast("long").as("chgd"))
-          .observe(s"lp_chg_$tag$rounds", max(col("chgd")).as("v"))
-        val nxt = graft.Checkpoints.truncate(obs)
-        chg = obs.queryExecution.observedMetrics
-          .get(s"lp_chg_$tag$rounds")
-          .map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
-          .getOrElse(
-            nxt.agg(coalesce(max(col("chgd")), lit(0L))).head().getLong(0))
+            (col("lbl") =!= col("prev")).cast("long").as("chgd")),
+          max(col("chgd")))
+        chg = c
         graft.Checkpoints.release(lblCk)
         lblCk = nxt
         lbl = nxt.select("node_id", "lbl")
@@ -1779,7 +1504,7 @@ ORDER BY f.node_id"""
       // before the vote aggregate, so the dst layout would cost an O(E)
       // exchange at build and save nothing per round
       val g = edgeLayout(spark, dir, dstLayout = false)
-      val (lblCk, rounds) = lpLoop(spark, g.edges, g.pv)
+      val (lblCk, rounds) = lpLoop(g.edges, g.pv)
       val lbl = lblCk.select("node_id", "lbl")
       val sz = lbl.groupBy("lbl").agg(count(lit(1)).as("comm_size"))
       lbl.join(sz, "lbl")
@@ -2052,70 +1777,23 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
   private[graft] val bfsIvmRecipe: String =
     s"bfsivm-v1:off=$Off,add=31/41,inf=$BfsInf"
 
+  /** Relax-loop activity flag for [[graft.Checkpoints.truncateObserved]]:
+    * any row still active (dist ≠ pd). A max, not a count — exact in both
+    * checkpoint modes, and only the sign drives the loop. */
+  private def bfsActive = max((col("dist") =!= col("pd")).cast("long"))
+
   /** Active-set distance relaxation over a materialized edge frame:
     * state = (node_id, dist, pd) where pd is the previous round's dist —
     * a vertex is ACTIVE iff dist ≠ pd. Each round relaxes only active
     * vertices' out-edges; converges when no distance changes. `init`
     * must be an upper bound of the true distances (the uniform-Inf cold
     * seed or a converged base state with delta endpoints re-activated). */
-  /** Unique observe-metric names for the BFS relax loops — the loops run
-    * several times per JVM (state builds + three IVM resumes), and a
-    * static name would collide if two frames ever met in one plan. */
-  private val bfsObsId = new java.util.concurrent.atomic.AtomicLong
-
-  /** Checkpoint a (… dist, pd …) relaxation frame and learn whether ANY
-    * row is still active (dist ≠ pd) from the SAME job — the lpLoop /
-    * prPushLoop one-action-per-round discipline (OPTIMIZATION r19: the
-    * loops previously paid a second full O(V) filter+count job per
-    * round). max, not sum/count — idempotent under a reliable-mode eager
-    * checkpoint's double execution; only the SIGN drives the loop, so
-    * the round counts (and with them the results) are unchanged. The
-    * fallback agg runs over the already-materialized checkpoint with the
-    * lpLoop null guard. */
-  private def bfsCkObserved(df: DataFrame): (DataFrame, Long) = {
-    val name = s"bfs_act_${bfsObsId.incrementAndGet()}"
-    // the aggregate rides .observe directly (ADVICE r20) — materializing
-    // a helper `act` column via withColumn changed the checkpointed
-    // schema, so every caller ended up releasing a PROJECTION of the
-    // checkpoint (Checkpoints.release only reclaims a LogicalRDD root:
-    // the final relaxation frame's reliable-mode files leaked) and wrote
-    // an extra O(V) long column into every per-round checkpoint
-    val actExpr = (col("dist") =!= col("pd")).cast("long")
-    val obs = df.observe(name, max(actExpr).as("v"))
-    val ck = graft.Checkpoints.truncate(obs)
-    val active = obs.queryExecution.observedMetrics.get(name)
-      .map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
-      .getOrElse(ck.agg(coalesce(max(actExpr), lit(0L))).head().getLong(0))
-    (ck, active)
-  }
-
-  /** Checkpoint a frame and learn its ROW COUNT from the same job via
-    * .observe (OPTIMIZATION r20, guide §1.4 one-action discipline): the
-    * BFS dirty-walk loops paid a separate full count() job per wave plus
-    * one per gating decision — at bench SF the recompute phase was
-    * job-count-bound (9.2 s for 7.4 MB shuffled). count is additive, so
-    * under a reliable-mode eager checkpoint's double execution the
-    * observed value can read up to 2×: every consumer uses it only for
-    * (a) the `> 0` loop test, where 0 is exact (no rows → nothing to
-    * double), and (b) the broadcast-vs-shuffle pick, where inflation
-    * errs toward the SAFE (fallback) side. Default local mode runs the
-    * plan once, so the count is exact there. */
-  private def ckCounted(df: DataFrame): (DataFrame, Long) = {
-    val name = s"bfs_cnt_${bfsObsId.incrementAndGet()}"
-    val obs = df.observe(name, count(lit(1)).as("v"))
-    val ck = graft.Checkpoints.truncate(obs)
-    val n = obs.queryExecution.observedMetrics.get(name)
-      .map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
-      .getOrElse(ck.count())
-    (ck, n)
-  }
-
   private def bfsRelaxLoop(
       spark: SparkSession, g: PrGraph, init: DataFrame): (DataFrame, Long) = {
-    // the checkpointed schema IS the state schema (bfsCkObserved no longer
-    // appends a column), so the loop works on — and RETURNS — the
-    // checkpoint root itself: the caller's release reclaims it
-    var (curCk, act) = bfsCkObserved(init)
+    // the checkpointed schema IS the state schema (the activity flag
+    // rides .observe, not a column), so the loop works on — and RETURNS —
+    // the checkpoint root itself: the caller's release reclaims it
+    var (curCk, act) = truncateObserved(init, bfsActive)
     var cur: DataFrame = curCk
     var rounds = 0L
     while (act > 0L) {
@@ -2135,7 +1813,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
         .select(col("node_id"),
           least(col("dist"), coalesce(col("nd"), col("dist"))).as("dist"),
           col("dist").as("pd"))
-      val (nxt, a2) = bfsCkObserved(nxt0)
+      val (nxt, a2) = truncateObserved(nxt0, bfsActive)
       graft.Checkpoints.release(curCk)
       curCk = nxt
       cur = nxt
@@ -2301,10 +1979,10 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     * the node, contradicting the fixpoint). */
   private def bfsRelaxLoopPar(
       spark: SparkSession, g: PrGraph, init: DataFrame): (DataFrame, Long) = {
-    // active test observed on the checkpoint job ([[bfsCkObserved]]) —
-    // same one-action-per-round treatment as bfsRelaxLoop, and the same
+    // active test observed on the checkpoint job ([[bfsActive]]) — same
+    // one-action-per-round treatment as bfsRelaxLoop, and the same
     // return-the-root discipline (the caller's release reclaims it)
-    var (curCk, act) = bfsCkObserved(init)
+    var (curCk, act) = truncateObserved(init, bfsActive)
     var cur: DataFrame = curCk
     var rounds = 0L
     while (act > 0L) {
@@ -2328,7 +2006,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           col("dist").as("pd"),
           when(col("nd").isNotNull && col("nd") < col("dist"), col("np"))
             .otherwise(col("par")).as("par"))
-      val (nxt, a2) = bfsCkObserved(nxt0)
+      val (nxt, a2) = truncateObserved(nxt0, bfsActive)
       graft.Checkpoints.release(curCk)
       curCk = nxt
       cur = nxt
@@ -2447,13 +2125,16 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
             GraphAdaptive.pick(GraphAdaptive.broadcastOk(spark, sz))(df)
           val nDel = dedges.count()
           val waveCks = scala.collection.mutable.ListBuffer.empty[DataFrame]
-          // wave counts OBSERVED on the wave's own checkpoint job
-          // (ckCounted — one job per wave, not two; the walk was
-          // job-count-bound at bench SF)
-          var (frontier, n) = ckCounted(
+          // wave counts OBSERVED on the wave's own checkpoint job (one
+          // job per wave, not two; the walk was job-count-bound at bench
+          // SF). Counts are additive — exact in local mode, up to 2× in
+          // reliable mode (Checkpoints.truncateObserved) — and feed only
+          // the `> 0` test (0 is exact) and the size gates, where
+          // inflation errs toward the safe shuffle side
+          var (frontier, n) = truncateObserved(
             st.join(pickN(nDel)(dedges),
                 col("par") === col("u") && col("node_id") === col("v"))
-              .select(col("node_id")))
+              .select(col("node_id")), count(lit(1)))
           waveCks += frontier
           var dirty = frontier
           var waves = 0
@@ -2463,10 +2144,10 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
               throw new IllegalStateException(
                 "bfsIvmDelBuild: dirty walk still growing after 100 waves " +
                   "— the parent forest has a cycle; the state is corrupt")
-            val (next, n2) = ckCounted(
+            val (next, n2) = truncateObserved(
               st.join(pickN(n)(frontier.select(col("node_id").as("dn"))),
                   col("par") === col("dn"))
-                .select(col("node_id")))
+                .select(col("node_id")), count(lit(1)))
             waveCks += next
             frontier = next
             dirty = dirty.unionByName(next)
@@ -2475,7 +2156,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           // distinct: a node whose own parent edge was deleted AND whose
           // ancestor is also dirty enters via the seed and via a wave —
           // duplicated dirty rows would multiply the init join below
-          val (dirtyCk, nDirty) = ckCounted(dirty.distinct())
+          val (dirtyCk, nDirty) = truncateObserved(dirty.distinct(), count(lit(1)))
           waveCks.foreach(graft.Checkpoints.release)
           val pickD = pickN(nDirty) _
           val bcastV = GraphAdaptive.broadcastOk(spark, vCnt)
@@ -2487,11 +2168,11 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
             else edgesFin0.repartition(col("src")).truncateLineagePartitioned
           // clean frontier: clean nodes with a surviving edge into a
           // dirty node — the only vertices that need to push in round 1
-          val (cfCk, nCf) = ckCounted(edgesFin
+          val (cfCk, nCf) = truncateObserved(edgesFin
             .join(pickD(dirtyCk.select(col("node_id").as("dst"))),
               Seq("dst"))
             .select(col("src").as("node_id")).distinct()
-            .join(pickD(dirtyCk), Seq("node_id"), "left_anti"))
+            .join(pickD(dirtyCk), Seq("node_id"), "left_anti"), count(lit(1)))
           val init = st
             .join(pickD(dirtyCk.withColumn("isd", lit(true))),
               Seq("node_id"), "left")
@@ -2612,12 +2293,12 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
             GraphAdaptive.pick(GraphAdaptive.broadcastOk(spark, sz))(df)
           val nDelE = dedgesD.count()
           val waveCks = scala.collection.mutable.ListBuffer.empty[DataFrame]
-          // wave counts observed on the wave's own checkpoint job
-          // (ckCounted, as in bfsIvmDelBuild)
-          var (frontier, n) = ckCounted(
+          // wave counts observed on the wave's own checkpoint job, as in
+          // bfsIvmDelBuild
+          var (frontier, n) = truncateObserved(
             st.join(pickN(nDelE)(dedgesD),
                 col("par") === col("u") && col("node_id") === col("v"))
-              .select(col("node_id")))
+              .select(col("node_id")), count(lit(1)))
           waveCks += frontier
           var dirty = frontier
           var waves = 0
@@ -2627,16 +2308,16 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
               throw new IllegalStateException(
                 "bfsIvmMixedBuild: dirty walk still growing after 100 " +
                   "waves — the parent forest has a cycle; the state is corrupt")
-            val (next, n2) = ckCounted(
+            val (next, n2) = truncateObserved(
               st.join(pickN(n)(frontier.select(col("node_id").as("dn"))),
                   col("par") === col("dn"))
-                .select(col("node_id")))
+                .select(col("node_id")), count(lit(1)))
             waveCks += next
             frontier = next
             dirty = dirty.unionByName(next)
             n = n2
           }
-          val (dirtyCk, nDirty) = ckCounted(dirty.distinct())
+          val (dirtyCk, nDirty) = truncateObserved(dirty.distinct(), count(lit(1)))
           waveCks.foreach(graft.Checkpoints.release)
           val pickD = pickN(nDirty) _
           val bcastV = GraphAdaptive.broadcastOk(spark, vCnt)
@@ -2660,8 +2341,8 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           // own observe, and both metrics are read from the EXECUTED
           // frame's QueryExecution (a child frame's own QE never runs,
           // so reading the metric off addV would yield 0).
-          val addVName = s"bfs_addv_${bfsObsId.incrementAndGet()}"
-          val actName = s"bfs_act_ct_${bfsObsId.incrementAndGet()}"
+          val addVName = graft.Checkpoints.observedName("bfs_addv")
+          val actName = graft.Checkpoints.observedName("bfs_act_ct")
           val addV = dedgesA.select(col("u").as("node_id")).distinct()
             .observe(addVName, count(lit(1)).as("v"))
           val actObs = cleanFrontier.unionByName(addV).distinct()
@@ -3130,7 +2811,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       else graft.Checkpoints.truncate(
         both.repartition(col("src")), keepPartitioning = true)
     }
-    val (lbl, r1) = lpLoop(spark, dirEdges, GraphAdaptive.pick(bcast) _, "b")
+    val (lbl, r1) = lpLoop(dirEdges, GraphAdaptive.pick(bcast) _)
     lbl.select(col("node_id"), col("lbl"))
       .write.mode("overwrite").parquet(s"$r/lp")
     Seq(lbl, dirEdges).foreach(graft.Checkpoints.release)
@@ -3227,8 +2908,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
             else graft.Checkpoints.truncate(
               both.repartition(col("src")), keepPartitioning = true)
           }
-          val (lbl2, r2) = lpLoop(spark, affEdges,
-            GraphAdaptive.pick(bcast) _, "i")
+          val (lbl2, r2) = lpLoop(affEdges, GraphAdaptive.pick(bcast) _)
           mark(s"resume:r1=$r1:r2=$r2:aff=$nAff")
           val keep = lpBase.join(broadcast(affV), Seq("node_id"), "left_anti")
           val spliced = keep

@@ -161,4 +161,28 @@ class CheckpointSpec extends SparkSuite {
     assert(ck.queryExecution.optimizedPlan.stats.sizeInBytes ==
       smallStats.sizeInBytes)
   }
+
+  test("truncateObserved reads its metric off the checkpoint job in both modes") {
+    import org.apache.spark.sql.functions._
+    val df = spark.range(100).select((col("id") % 7).as("x"))
+    def run(reliable: Boolean): Unit = {
+      // a max flag is idempotent: exact whatever the checkpoint mode
+      val (ck, flag) = Checkpoints.truncateObserved(df, max((col("x") === 6L).cast("long")))
+      assert(flag == 1L, s"reliable=$reliable: max flag read $flag")
+      assert(ck.count() == 100)
+      val (_, none) = Checkpoints.truncateObserved(df, max((col("x") > 6L).cast("long")))
+      assert(none == 0L, s"reliable=$reliable: absent-flag read $none")
+      // a count is additive: exact when the plan runs once (local mode);
+      // a reliable checkpoint may run it twice, so it reads at most 2×
+      val (_, n) = Checkpoints.truncateObserved(df, count(lit(1)))
+      if (reliable) assert(n == 100L || n == 200L, s"reliable count read $n")
+      else assert(n == 100L, s"local count read $n")
+      // an empty frame: max is null there, and must read 0
+      val (empty, z) = Checkpoints.truncateObserved(df.filter(lit(false)), max(col("x")))
+      assert(z == 0L, s"reliable=$reliable: empty frame read $z")
+      assert(empty.count() == 0)
+    }
+    run(reliable = false)
+    withReliableDir(run(reliable = true))
+  }
 }

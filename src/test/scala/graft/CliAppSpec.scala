@@ -10,6 +10,8 @@ import graft.cli.{TopkCommonWordsApp, WordCountApp}
   * golden answers. */
 class CliAppSpec extends SparkSuite {
   private val ref = "/root/reference/input"
+  // the WordCount tutorial pair is kept in the repo (FIXTURES.md)
+  private val tutorial = getClass.getResource("/reference").getPath
 
   private def readOut(dir: Path): Seq[String] =
     Files.list(dir).iterator().asScala
@@ -31,7 +33,7 @@ class CliAppSpec extends SparkSuite {
 
   test("WordCountApp writes word<TAB>count over the tutorial corpus") {
     val out = Files.createTempDirectory("graft-wc")
-    WordCountApp.run(spark, Seq(s"$ref/file01.txt", s"$ref/file02.txt"), out.toString)
+    WordCountApp.run(spark, Seq(s"$tutorial/file01.txt", s"$tutorial/file02.txt"), out.toString)
     assert(readOut(out).sorted ===
       Seq("Bye\t1", "Goodbye\t1", "Hadoop\t2", "Hello\t2", "World\t2"))
   }

@@ -10,6 +10,8 @@ import graft.operators.TextOps
   * k=20, and the `count<TAB>word` sink format. */
 class GoldenParitySpec extends SparkSuite {
   private val ref = "/root/reference/input"
+  // the WordCount tutorial pair is kept in the repo (FIXTURES.md)
+  private val tutorial = getClass.getResource("/reference").getPath
 
   private def readLines(path: String): Seq[String] = {
     val src = scala.io.Source.fromFile(path, "UTF-8")
@@ -34,7 +36,7 @@ class GoldenParitySpec extends SparkSuite {
   }
 
   test("Q1 WordCount matches the derived golden for the tutorial corpus") {
-    val lines = spark.read.textFile(s"$ref/file01.txt", s"$ref/file02.txt")
+    val lines = spark.read.textFile(s"$tutorial/file01.txt", s"$tutorial/file02.txt")
     val got = TextOps.wordCountPipeline(lines)
       .collect().map(r => s"${r.getString(0)}\t${r.getLong(1)}").toSeq
     val expected = Seq("Bye\t1", "Goodbye\t1", "Hadoop\t2", "Hello\t2", "World\t2")

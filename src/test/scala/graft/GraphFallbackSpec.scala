@@ -81,27 +81,6 @@ class GraphFallbackSpec extends SparkSuite {
     }
   }
 
-  // The push-on-change loop (PrLoopConfKey 'delta') must be BIT-IDENTICAL
-  // to the full re-exchange per round — the integer telescope
-  // cin_k = cin_{k-1} + Σ Δunit is exact, so rank values AND the
-  // converged round count (which any per-round numeric divergence would
-  // shift) must match across the two forms.
-  test("q_pagerank_converged: delta and full loop forms are value-identical") {
-    val saved = spark.conf.getOption(queries.GraphAdaptive.PrLoopConfKey)
-    def withForm(v: String) = {
-      spark.conf.set(queries.GraphAdaptive.PrLoopConfKey, v)
-      try collectSorted("q_pagerank_converged")
-      finally saved match {
-        case Some(s) => spark.conf.set(queries.GraphAdaptive.PrLoopConfKey, s)
-        case None => spark.conf.unset(queries.GraphAdaptive.PrLoopConfKey)
-      }
-    }
-    val delta = withForm("delta")
-    val full = withForm("full")
-    assert(delta.toSeq == full.toSeq,
-      "delta-exchange loop diverged from the full re-exchange form")
-  }
-
   // The incremental kernel: phase-1 convergence, state patch off the
   // changes feed, resumed phase-2. The oracle gate proves the
   // maintenance arithmetic bit-exact; THIS test pins the exhibit's two
@@ -148,16 +127,6 @@ class GraphFallbackSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq
     assert(served == gate,
       "served maintenance path diverged from the gate's (node, pr, r2)")
-    // the broadcast-Δ resume form (prResumeExchange=bcast): same Δ rows,
-    // same integer sums, dst-local aggregation — must land on the same
-    // trajectory INCLUDING the round count
-    spark.conf.set(queries.GraphAdaptive.PrResumeConfKey, "bcast")
-    try {
-      val bcast = queries.Graph.pagerankIvmServe(spark, sfDir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq
-      assert(bcast == gate,
-        "broadcast-Δ resume diverged from the gate's (node, pr, r2)")
-    } finally spark.conf.unset(queries.GraphAdaptive.PrResumeConfKey)
   }
 
   // Incremental components: the oracle already proves the maintained
