@@ -19,15 +19,7 @@ object AbDsv2 {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session("graft-ab-dsv2")
 
     val out = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       s"graft_ab_dsv2_${Integer.toHexString(sfDir.hashCode)}").toString

@@ -1,6 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE JSON line:
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}
@@ -28,20 +27,6 @@ import org.apache.spark.sql.functions.expr
   * query), then once timed, in sorted name order.
   */
 object Bench {
-  /** Force EVERY output column to be computed. `.count()` lets Catalyst
-    * prune unreferenced projections, so projection-heavy queries (array /
-    * scalar funcs, window frames) would time little more than the scan.
-    * Hashing a struct of all columns defeats pruning without collecting
-    * rows to the driver. The fold MUST be bit_xor, not sum: xxhash64
-    * values are uniform over the full long range, so under ANSI mode (the
-    * Spark 4 default) a sum overflows after a handful of rows, killing the
-    * result stage before the per-row work runs — which silently restored
-    * the count()-style undermeasurement for projection-only queries. */
-  private def consumeAll(df: DataFrame): Unit = {
-    df.agg(expr("bit_xor(xxhash64(struct(*)))")).collect()
-    ()
-  }
-
   /** The stdout JSON line is captured through a bounded tail buffer
     * (observed 2000 chars: rounds 3-4 grew the catalog past it and the
     * line was truncated mid-JSON → unparseable). So stdout carries a
@@ -129,26 +114,7 @@ object Bench {
   private def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Let AQE START wide and COALESCE down instead of pinning every
-      // exchange at cpu-count width — the SCALE.md §12 finding (230→87 s
-      // on the 30× triangle close, whose ~200 MB-per-task sorts spilled
-      // at pinned width) adopted in the main sessions; small stages still
-      // coalesce to a handful of tasks so the per-query fixed cost at
-      // bench SF is unchanged.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 16).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  private def session(): SparkSession = Measure.session("graft-bench")
 
   /** One measured query: in-suite seconds, success, shuffle-write bytes
     * of the rep that produced the recorded time. */
@@ -161,20 +127,9 @@ object Bench {
   private val RepeatAbove = 0.5
   private def measure(spark: SparkSession, names: Seq[String]): Seq[QRes] = {
     val dir = sfDir
-    // per-query shuffle-write tally: stage-completed events carry the
-    // metrics; flushListenerBus before reading makes attribution exact
-    val tally = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) tally.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      })
+    val tally = new Measure.Tally(spark)
     names.foreach { n =>
-      try consumeAll(SparkEntry.queries(n)(spark, dir))
+      try Measure.consume(SparkEntry.queries(n)(spark, dir))
       catch { case _: Throwable => () }
     }
     // Isolate BETWEEN reps so the previous query's footprint is not
@@ -187,12 +142,7 @@ object Bench {
     // ContextCleaner's weak refs enqueue (shuffle-file and broadcast
     // removal is GC-driven), and give the cleaner a beat to issue the
     // removals before the next timer window opens.
-    def isolate(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      Thread.sleep(50)
-    }
+    def isolate(): Unit = { Measure.isolate(spark); Thread.sleep(50) }
     names.map { name =>
       isolate()
       // A failed query must be VISIBLE (a silent catch once hid a consumer
@@ -200,20 +150,16 @@ object Bench {
       // not zero the whole round, so: log to stderr (stdout stays
       // parseable) and keep timing the rest.
       def rep(): (Double, Boolean, Long) = {
-        org.apache.spark.sql.graftbridge.GraftPlanBridge
-          .flushListenerBus(spark.sparkContext)
-        tally.set(0L)
+        val b0 = tally.snap()
         val t0 = System.nanoTime()
         val ok =
-          try { consumeAll(SparkEntry.queries(name)(spark, dir)); true }
+          try { Measure.consume(SparkEntry.queries(name)(spark, dir)); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             false
           }
         val secs = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graftbridge.GraftPlanBridge
-          .flushListenerBus(spark.sparkContext)
-        (secs, ok, tally.get)
+        (secs, ok, (tally.snap() - b0).shuffleBytes)
       }
       // Single-shot timings kept producing false trend signals (r09's
       // q_jaccard_pairs artifact read 6.0s vs 1.4s re-measured) — so any
@@ -258,25 +204,14 @@ object Bench {
         })
   }
 
-  /** Fork a fresh `graft.Bench <args>` JVM: same classpath and JVM flags
-    * as this process (run/fork := true makes java.class.path the real
-    * app classpath), stdout+stderr to a log file (the parent's stdout
-    * must stay one parseable JSON line). Returns true on a clean exit. */
-  private def fork(args: Seq[String], log: String): Boolean = {
-    import scala.jdk.CollectionConverters._
+  /** Fork a fresh `graft.Bench <args>` JVM, stdout+stderr to a log file
+    * (the parent's stdout must stay one parseable JSON line). Returns true
+    * on a clean exit. */
+  private def fork(args: Seq[String], log: String): Boolean =
     try {
-      val javaBin = java.nio.file.Paths.get(
-        sys.props("java.home"), "bin", "java").toString
-      val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.toSeq
-        .filterNot(a => a.startsWith("-javaagent") ||
-          a.startsWith("-agentlib") || a.startsWith("-agentpath"))
-      val cmd = (Seq(javaBin) ++ jvm ++
-        Seq("-cp", sys.props("java.class.path"), "graft.Bench") ++ args).asJava
-      val pb = new ProcessBuilder(cmd)
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(new java.io.File(log))
-      val p = pb.start()
+      val p = Measure.forkMain("graft.Bench", args)
+        .redirectErrorStream(true).redirectOutput(new java.io.File(log))
+        .start()
       // generous ceiling — a hung child must not hang the round
       val done = p.waitFor(45, java.util.concurrent.TimeUnit.MINUTES)
       if (!done) { p.destroyForcibly(); p.waitFor() }
@@ -285,7 +220,6 @@ object Bench {
       System.err.println(s"[bench] fork failed: $e")
       false
     }
-  }
 
   private def tailLog(log: String, n: Int): Unit =
     try scala.jdk.CollectionConverters.ListHasAsScala(
@@ -443,7 +377,9 @@ object Bench {
     // its BENCH_FULL.json overwrite erased the only 32-core per-query
     // record of the full-bench-only queries (the IVM kernels). The
     // suffixed artifacts survive a full driver cycle side by side.
-    val cpusTag = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // Measure.cpus is the value every session of this run was built
+    // with, so the tag cannot mislabel the record
+    val cpusTag = Measure.cpus
     val byCores = fullPath.resolveSibling(
       fullPath.getFileName.toString
         .replaceFirst("\\.json$", "") + s"_c$cpusTag.json")

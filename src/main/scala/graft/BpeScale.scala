@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the BPE ENCODER at production merge counts (SCALE.md §27).
@@ -94,15 +94,7 @@ object BpeScale {
     val merges = args.headOption.flatMap(_.toIntOption).getOrElse(64)
     val sizes = if (args.length > 1) args.drop(1).toSeq.map(_.toLong)
       else Seq(100000L, 1000000L, 4000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    DevSessionConf(spark)
+    val spark = Measure.session("graft-bpe-dist")
     import spark.implicits._
 
     def vocabOf(n: Long) =
@@ -127,31 +119,17 @@ object BpeScale {
       require(agree, "distributed trainer diverged from the driver trainer")
     }
 
-    val tally = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) tally.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      })
-    def snap(): Long = {
-      org.apache.spark.sql.graftbridge.GraftPlanBridge
-        .flushListenerBus(spark.sparkContext)
-      tally.get
-    }
+    val tally = new Measure.Tally(spark)
 
     for (n <- sizes) {
       val vc = vocabOf(n)
       val types = vc.count()
       val t0 = System.nanoTime()
-      val b0 = snap()
+      val b0 = tally.snap()
       val (ms, vf) =
         graft.queries.TextAnalysis.bpeTrainLoopOver(spark, vc, merges)
       val secs = (System.nanoTime() - t0) / 1e9
-      val mb = (snap() - b0) / 1e6
+      val mb = (tally.snap() - b0).shuffleBytes / 1e6
       graft.Checkpoints.release(vf)
       println(f"""{"harness":"bpe_dist","vocab":$n,"types":$types,"merges":$merges,"secs":$secs%.1f,"secs_per_round":${secs / merges}%.3f,"shuffle_mb":$mb%.1f,"driver_state_rows":${ms.size}}""")
 
@@ -161,11 +139,11 @@ object BpeScale {
       // vocabulary aggregate + an argmax action) collapsing by the
       // average batch width
       val t1 = System.nanoTime()
-      val b1 = snap()
+      val b1 = tally.snap()
       val (bms, bvf) =
         graft.queries.TextAnalysis.bpeTrainLoopBatched(spark, vc, merges)
       val bsecs = (System.nanoTime() - t1) / 1e9
-      val bmb = (snap() - b1) / 1e6
+      val bmb = (tally.snap() - b1).shuffleBytes / 1e6
       graft.Checkpoints.release(bvf)
       require(bms == ms,
         "batched trainer diverged from the sequential merge table")
@@ -188,15 +166,7 @@ object BpeScale {
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.1")
     val counts = if (rest.length > 1) rest.drop(1).toSeq.map(_.toInt)
       else Seq(16, 64, 256, 1024)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session("graft-bpe-scale")
     import spark.implicits._
 
     // the corpus vocabulary, once (the same tokenization as q_bpe_*:

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: what the banded-Hamming bucket cap (Dedup.SimPairCap)
@@ -35,15 +34,7 @@ object CapScale {
 
   def main(args: Array[String]): Unit = {
     val bomb = args.headOption.flatMap(_.toIntOption).getOrElse(4096)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    DevSessionConf(spark)
+    val spark = Measure.session("graft-cap-scale")
 
     val nc = 200L
     val sz = 4L
@@ -77,25 +68,11 @@ object CapScale {
     val trueCluster = trueTotal - trueBomb
     println(s"""{"harness":"cap_scale","bomb":$bomb,"docs":$n,"true_pairs":$trueTotal,"true_cluster":$trueCluster,"true_bomb":$trueBomb}""")
 
-    val tally = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) tally.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      })
-    def snap(): Long = {
-      org.apache.spark.sql.graftbridge.GraftPlanBridge
-        .flushListenerBus(spark.sparkContext)
-      tally.get
-    }
+    val tally = new Measure.Tally(spark)
 
     def measured(cap: Int, tag: String): Unit = {
       val t0 = System.nanoTime()
-      val b0 = snap()
+      val b0 = tally.snap()
       val pairs = graft.queries.Dedup.simhashBandedPairs(sim, cap)
         .withColumn("isBomb", col("doc_a") >= 10000000L)
         .groupBy()
@@ -106,7 +83,7 @@ object CapScale {
             .otherwise(0L)).as("found_bomb"))
         .head()
       val secs = (System.nanoTime() - t0) / 1e9
-      val mb = (snap() - b0) / 1e6
+      val mb = (tally.snap() - b0).shuffleBytes / 1e6
       val (cand, fc, fb) =
         (pairs.getLong(0), pairs.getLong(1), pairs.getLong(2))
       val rc = if (trueCluster == 0) 1.0 else fc.toDouble / trueCluster

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the graft-tsv connector's metadata paths measured AGAINST
@@ -51,15 +50,7 @@ object Dsv2Scale {
     val cycles = args.headOption.flatMap(_.toIntOption).getOrElse(24)
     val rowsPerBatch = 4000L
     val seedRows = 40000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    DevSessionConf(spark)
+    val spark = Measure.session("graft-dsv2-churn")
 
     val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       "graft_dsv2_churn").toString
@@ -138,15 +129,7 @@ object Dsv2Scale {
     }
     val maxGens = args.headOption.flatMap(_.toIntOption).getOrElse(300)
     val rowsPerGen = args.drop(1).headOption.flatMap(_.toIntOption).getOrElse(500)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    DevSessionConf(spark)
+    val spark = Measure.session("graft-dsv2-scale")
 
     val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       s"graft_dsv2_scale_$maxGens").toString

@@ -71,13 +71,9 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // a fixed core count, so the plans' partition counts do not depend
+    // on the host that regenerates the artifact
+    val spark = Measure.session("graft-plans", cpus = 4)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of representative queries\n\n")

@@ -1,20 +1,4 @@
 package graft
-import org.apache.spark.sql.functions.expr
-
-/** Dev-harness session overrides: SPARK_GRAFT_CONF="k=v,k2=v2" applied
-  * to a built session (RunOne and ScaleStress share this — e.g. forcing
-  * the graph kernels' no-broadcast fallback for a measurement). Pairs
-  * split on commas that START a new `key=` (lookahead), so a VALUE
-  * containing commas survives as long as no comma-fragment itself looks
-  * like a conf key assignment. */
-private[graft] object DevSessionConf {
-  def apply(spark: org.apache.spark.sql.SparkSession): Unit =
-    sys.env.get("SPARK_GRAFT_CONF").foreach(
-      _.split(",(?=[A-Za-z_][A-Za-z0-9._-]*=)").filter(_.contains("="))
-        .foreach { kv =>
-          val i = kv.indexOf('='); spark.conf.set(kv.take(i), kv.drop(i + 1))
-        })
-}
 
 /** Dev tool: time ONE catalog query in isolation (the full Bench run is
   * ~4 min; iterating on a single query's plan needs a tighter loop).
@@ -30,26 +14,8 @@ object RunOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE starts wide, coalesces down (SCALE.md §12; see Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 16).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.get("SPARK_GRAFT_WIDEN").contains("0"))
-      spark.conf.set("spark.graft.widen", "false")
-    DevSessionConf(spark)
+    val spark = Measure.session("graft-runone")
     val fn = SparkEntry.queries(name)
-    // bit_xor, not sum: xxhash64 sums overflow under ANSI (see Bench)
-    def consume(dir: String): Unit = {
-      fn(spark, dir).agg(expr("bit_xor(xxhash64(struct(*)))")).collect(); ()
-    }
     if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
       fn(spark, sfDir).explain("formatted")
     // SPARK_GRAFT_DUMP=<dir>: write the result once for ad-hoc oracle
@@ -57,14 +23,11 @@ object RunOne {
     sys.env.get("SPARK_GRAFT_DUMP").foreach { d =>
       fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$d/$name")
     }
-    consume("/root/testdata/sf0.001")
+    Measure.consume(fn(spark, "/root/testdata/sf0.001"))
     val times = (1 to reps).map { _ =>
-      // same isolation as Bench: drop leftover localCheckpoint blocks
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
+      Measure.isolate(spark)
       val t0 = System.nanoTime()
-      consume(sfDir)
+      Measure.consume(fn(spark, sfDir))
       (System.nanoTime() - t0) / 1e9
     }
     println(f"[runone] $name ${times.map(t => f"$t%.3f").mkString(" ")} (min ${times.min}%.3f)")

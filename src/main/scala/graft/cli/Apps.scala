@@ -14,19 +14,6 @@ import graft.operators.TextOps
   * lines (WordCount: `word<TAB>count` ascending; Topk: `count<TAB>word`,
   * count desc / word desc, 20 rows). A reference user can point these at
   * the same inputs and diff the outputs. */
-object CliSpark {
-  def session(app: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName(app)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-}
-
 object WordCountApp {
   def run(spark: SparkSession, inPaths: Seq[String], outDir: String): Unit =
     TextOps.writeTabText(
@@ -34,7 +21,7 @@ object WordCountApp {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: WordCountApp <in...> <outDir>")
-    val spark = CliSpark.session("graft-wordcount")
+    val spark = graft.Measure.session("graft-wordcount")
     try run(spark, args.init.toIndexedSeq, args.last) finally spark.stop()
   }
 }
@@ -52,7 +39,7 @@ object TopkCommonWordsApp {
   def main(args: Array[String]): Unit = {
     require(args.length == 4,
       "usage: TopkCommonWordsApp <in1> <in2> <stopwords> <outDir>")
-    val spark = CliSpark.session("graft-topk")
+    val spark = graft.Measure.session("graft-topk")
     try run(spark, args(0), args(1), args(2), args(3)) finally spark.stop()
   }
 }

@@ -723,7 +723,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
     * O(E) degree shuffle — the three costs SCALE.md §31 charged to the
     * gate's delta phase, all exhibit bookkeeping (the gate rebuilds its
     * final graph from the mutated table so the oracle covers the
-    * table-read path; THIS is the recipe PrIvmScale prices). In
+    * table-read path; THIS is the recipe ScaleStress phases prices). In
     * fallback mode (V above the broadcast ceiling) the patched edge
     * frame is re-partitioned on src once — the price of restoring the
     * baked co-partitioning, still a single O(E) exchange per change
@@ -744,9 +744,9 @@ ORDER BY pr DESC, node_id LIMIT 50"""
     * files). The exhibit's own uniform delta touches every file by
     * construction (every segment holds hash-spread held-out rows), which
     * is a property of the DELTA SHAPE, not the maintenance algorithm —
-    * PrIvmScale prices both. Not oracle-comparable to the gate (different
-    * delta), but held-out-guarded, so vertex-preserving and resumable
-    * with the same prBase/ε.
+    * ScaleStress phases prices both. Not oracle-comparable to the gate
+    * (different delta), but held-out-guarded, so vertex-preserving and
+    * resumable with the same prBase/ε.
     *
     * `mark` phases: "setup", "feed", "patch", "resume". */
   private[graft] def pagerankIvmServe(
@@ -837,7 +837,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
 
   /** q_pagerank_ivm's builder with a phase-boundary callback: `mark` is
     * invoked (with "p1", "delta", "p2") right after each eager phase
-    * completes, so a measurement harness (PrIvmScale) can window its
+    * completes, so a measurement harness (ScaleStress phases) can window its
     * shuffle-byte tally per phase — the resume-bytes-∝-delta claim needs
     * per-phase numbers, not the query total. The default no-op keeps the
     * oracle-gated path byte-identical. */
@@ -903,7 +903,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
 
         // the delta from the changes feed, then the O(delta) broadcast
         // patch of the converged state (privmNetDelta/privmPatch — shared
-        // with the served path, which PrIvmScale prices separately)
+        // with the served path, which ScaleStress phases prices separately)
         val dpairs = privmNetDelta(spark, root, tn)
         val (patched, dedges) = privmPatch(s1, dpairs, prBase)
 

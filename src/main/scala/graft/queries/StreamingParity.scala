@@ -94,11 +94,11 @@ object StreamingParity {
     // depends on it, and the oracle's wm gate models exactly that batch.
     if (!finalizeWatermark)
       ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // Measured NON-costs at this volume, so they stay default (profiled
-    // via SPARK_GRAFT_STREAM_PROF): checkpoint placement (a RAM-backed
-    // checkpoint dir changed nothing — the page cache already absorbs
-    // the small per-batch log writes), state format validation, and
-    // state partitions 1/8 vs the derived 4 (both slower). The steady
+    // Measured NON-costs at this volume, so they stay default:
+    // checkpoint placement (a RAM-backed checkpoint dir changed nothing —
+    // the page cache already absorbs the small per-batch log writes),
+    // state format validation, and state partitions 1/8 vs the derived 4
+    // (both slower). The steady
     // per-entry cost is ~0.3 s per-batch incremental planning plus
     // addBatch state work proportional to stream volume — real work,
     // not amortizable machinery.
@@ -109,9 +109,6 @@ object StreamingParity {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROF"))
-      q.recentProgress.foreach(p => System.err.println(
-        s"[streamprof] $sink batch=${p.batchId} rows=${p.numInputRows} ${p.durationMs}"))
     ss.table(sink)
   }
 

@@ -50,7 +50,6 @@ object Tables {
     * entirely), and at 100 TB an extra full-corpus exchange would be
     * exactly the wrong trade. */
   private def widen(spark: SparkSession, df: DataFrame, p: String): DataFrame = {
-    if (spark.conf.getOption("spark.graft.widen").contains("false")) return df
     val f = new java.io.File(p)
     val cores = spark.sparkContext.defaultParallelism
     if (f.isFile && f.length >= 100L * 1024 && f.length < 64L * 1024 * 1024
