@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{coalesce, lit}
 
-/** Lineage-truncation seam for the iterative queries (connected components,
-  * PageRank, the Jaccard rerank's doc-set frame).
+/** Lineage-truncation seam for the iterative queries, and [[fixpoint]],
+  * the one fixpoint loop their convergence kernels run on.
   *
   * Iterative DataFrame loops MUST truncate logical lineage each round or
   * Catalyst re-analyzes a plan tree that grows per iteration (measured
@@ -39,10 +39,9 @@ import org.apache.spark.sql.functions.{coalesce, lit}
   * session (deleting them would break the returned, lazily-re-readable
   * result).
   *
-  * CheckpointSpec runs the components loop through the reliable path and
-  * asserts it reaches the same fixpoint as the default path, that a
-  * changed dir conf is honored, and that iteration does not accumulate
-  * checkpoint files.
+  * CheckpointSpec pins [[fixpoint]]'s cap, job count and retention, and
+  * asserts that every iterative query it runs reaches the same rows
+  * through the reliable path as through the default one.
   */
 object Checkpoints {
 
@@ -141,6 +140,33 @@ object Checkpoints {
       .map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
       .getOrElse(ck.agg(coalesce(metric, lit(0L))).head().getLong(0))
     (ck, v)
+  }
+
+  /** The one fixpoint loop for a convergence kernel: while the last
+    * observed value is > 0, run round k as `truncateObserved(step(cur),
+    * metric)` — one Spark job — then [[release]] the superseded root.
+    * `start` is the truncated seed and its value: `truncateObserved(init,
+    * metric)` when zero rounds may do, `(truncate(init), 1L)` when round
+    * 1 always runs. `metric` must be a max-style flag, idempotent and so
+    * exact in both checkpoint modes. Round `cap` runs (the oracles'
+    * `rounds < cap` guard); needing round `cap + 1` throws, naming
+    * `what`. Returns (last checkpoint root — the caller releases it;
+    * rounds run). */
+  def fixpoint(what: String, cap: Long, start: (DataFrame, Long), metric: Column)(
+      step: DataFrame => DataFrame): (DataFrame, Long) = {
+    @scala.annotation.tailrec
+    def go(cur: DataFrame, v: Long, rounds: Long): (DataFrame, Long) =
+      if (v <= 0L) (cur, rounds)
+      else if (rounds >= cap)
+        throw new IllegalStateException(
+          s"$what: no fixpoint after $cap rounds (still changing) — " +
+            "refusing to return a half-converged result")
+      else {
+        val (nxt, v2) = truncateObserved(step(cur), metric)
+        release(cur)
+        go(nxt, v2, rounds + 1)
+      }
+    go(start._1, start._2, 0L)
   }
 
   /** Best-effort delete of the RELIABLE checkpoint files backing a frame

@@ -508,6 +508,12 @@ comp AS (
         converged = s == prevSum
         prevSum = s
       }
+      // round 50 runs, like every loop cap; labels still changing after
+      // it fail loudly instead of reaching the 8 callers half-converged
+      if (!converged)
+        throw new IllegalStateException(
+          "componentsLoop: no fixpoint after 50 rounds (labels were still " +
+            "changing) — refusing to return a half-converged labeling")
       // the final fold below reads only `labels` (a jump over the LAST
       // hop's blocks) — the edge frame is out of every live lineage now
       (labels, iter.toLong)
@@ -1170,35 +1176,30 @@ ORDER BY doc_a, doc_b"""),
       // min-label propagation over the active set (edge endpoints only),
       // with POINTER JUMPING (label-of-label) per round so convergence is
       // O(log diameter) — a 20-round one-hop loop would silently split a
-      // long edit chain into multiple entities
-      var labels = edges.select(col("u")).distinct()
-        .select(col("u"), col("u").as("lbl"))
-        .truncateLineage
-      var converged = labels.isEmpty
-      var iter = 0
-      while (!converged && iter < 50) {
-        iter += 1
+      // long edit chain into multiple entities. The seed's flag reads 0 on
+      // an empty edge set (no round); a diameter beyond 2^50 is not a real
+      // graph, so the 50-round cap fails loudly.
+      val changed = max(col("chgd"))
+      val (labels, _) = graft.Checkpoints.fixpoint(
+          "q_entity_resolution label propagation", 50L,
+          graft.Checkpoints.truncateObserved(edges.select(col("u")).distinct()
+            .select(col("u"), col("u").as("lbl"), lit(1L).as("chgd")), changed),
+          changed) { ck =>
+        val labels = ck.select("u", "lbl")
         val hop = edges
           .join(labels.withColumnRenamed("u", "v2").hint("shuffle_hash"),
             col("v") === col("v2"))
           .select(col("u"), col("lbl"))
           .unionByName(labels)
           .groupBy("u").agg(min(col("lbl")).as("lbl"))
-        val jumped = hop
+        hop
           .join(hop.select(col("u").as("lbl"), col("lbl").as("lbl2"))
             .hint("shuffle_hash"), Seq("lbl"), "left")
           .select(col("u"), coalesce(col("lbl2"), col("lbl")).as("lbl"))
-          .truncateLineage
-        val changed = jumped.join(labels.withColumnRenamed("lbl", "old"),
-          Seq("u")).filter(col("lbl") =!= col("old")).limit(1).isEmpty
-        converged = changed
-        graft.Checkpoints.release(labels)
-        labels = jumped
+          .join(labels.withColumnRenamed("lbl", "old"), Seq("u"))
+          .select(col("u"), col("lbl"),
+            (col("lbl") =!= col("old")).cast("long").as("chgd"))
       }
-      require(converged,
-        "q_entity_resolution: label propagation did not converge in 50 " +
-          "pointer-jumped rounds — component diameter beyond 2^50 is not a " +
-          "real graph; investigate before trusting the clustering")
       val cl = names
         .join(labels.withColumnRenamed("u", "name"), Seq("name"), "left")
         .select(col("name"), col("n_parts"),

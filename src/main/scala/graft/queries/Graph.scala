@@ -281,8 +281,8 @@ SELECT node_id, pr FROM pr$Iters ORDER BY pr DESC, node_id LIMIT 50"""
     * cold-start seed ([[prPushSeed]]) or a converged state patched for
     * an edge delta (q_pagerank_ivm), which is the whole point of the
     * push form: a sparse update reactivates only the patched vertices.
-    * Returns the final state frame (checkpointed; the caller owns its
-    * release) and the executed round count.
+    * Returns the final state frame (the checkpoint root, with the last
+    * |Δpr| column `d`; the caller owns its release) and the round count.
     *
     * The throw fires only BEYOND the cap, so round PrMaxRounds itself
     * executes — mirroring the oracle's `rounds < cap` recursion guard
@@ -291,25 +291,18 @@ SELECT node_id, pr FROM pr$Iters ORDER BY pr DESC, node_id LIMIT 50"""
     * oracle stops silently (a gate error, the honest outcome for a
     * broken contract). */
   private def prPushLoop(
-      g: PrGraph, init: DataFrame, prBase: Long, eps: Long): (DataFrame, Long) = {
-    var curCk = graft.Checkpoints.truncate(init)
-    var cur: org.apache.spark.sql.DataFrame = curCk
-    var rounds = 0L
-    var delta = Long.MaxValue
-    while (delta >= eps) {
-      rounds += 1
-      if (rounds > PrMaxRounds)
-        throw new IllegalStateException(
-          s"prPushLoop: no convergence after $PrMaxRounds " +
-            s"rounds (last max |Δ| = $delta, ε = $eps) — the damping/ε " +
-            "contract is broken, refusing to return a half-converged rank")
+      g: PrGraph, init: DataFrame, prBase: Long, eps: Long): (DataFrame, Long) =
+    graft.Checkpoints.fixpoint("prPushLoop", PrMaxRounds,
+        (graft.Checkpoints.truncate(init), 1L),
+        max((col("d") >= eps).cast("long"))) { ck =>
+      val cur = ck.select("node_id", "outdeg", "pr", "unit", "lpu", "cin")
       val active = cur.filter(col("unit") =!= col("lpu"))
         .select(col("node_id").as("asrc"),
           (col("unit") - col("lpu")).as("du"))
       val dAgg = g.edgesW.join(g.pv(active), col("src") === col("asrc"))
         .select(col("dst"), col("du"))
         .groupBy("dst").agg(sum(col("du")).as("dd"))
-      val (nxt, d) = truncateObserved(cur
+      cur
         .join(g.pv(dAgg), col("node_id") === col("dst"), "left")
         .select(col("node_id"), col("outdeg"),
           (col("cin") + coalesce(col("dd"), lit(0L))).as("cin"),
@@ -320,15 +313,8 @@ SELECT node_id, pr FROM pr$Iters ORDER BY pr DESC, node_id LIMIT 50"""
         .select(col("node_id"), col("outdeg"), col("pr"),
           expr("pr div outdeg").as("unit"),
           col("lpu_next").as("lpu"), col("cin"),
-          abs(col("pr") - col("prev_pr")).as("d")),
-        max(col("d")))
-      delta = d
-      graft.Checkpoints.release(curCk)
-      curCk = nxt
-      cur = nxt.select("node_id", "outdeg", "pr", "unit", "lpu", "cin")
+          abs(col("pr") - col("prev_pr")).as("d"))
     }
-    (cur, rounds)
-  }
 
   private val pagerankConvergedSql: String = s"""
 WITH RECURSIVE
@@ -601,7 +587,8 @@ ORDER BY pr DESC, node_id LIMIT 50"""
         prPushLoop(g1, prPushSeed(g1, Scale / v),
           (Scale * 15L) / (100L * v), eps0)
       }
-    st.write.mode("overwrite").parquet(s"$r/state")
+    st.select("node_id", "outdeg", "pr", "unit", "lpu", "cin")
+      .write.mode("overwrite").parquet(s"$r/state")
     g1.edgesW.select(col("src"), col("dst"))
       .write.mode("overwrite").parquet(s"$r/edges")
     // state and edges now live in parquet — nothing re-reads through
@@ -1405,8 +1392,9 @@ ORDER BY node_id"""
     * bit-identical.
     *
     * Scale shape: per round = [[qLabelProp]]'s budget + one O(V) union
-    * leg and one O(V) change-count join; the convergence test is a
-    * 1-value agg off the already-materialized round frame. */
+    * leg and one O(V) change-flag join; the convergence test is a max
+    * flag observed on the round's own checkpoint job, so a round is one
+    * Spark job. */
   private val LpMaxRounds = 100L
 
   private val labelPropConvergedSql: String = s"""
@@ -1451,50 +1439,32 @@ ORDER BY f.node_id"""
     * zero labels changed. Returns (converged labels — checkpointed, the
     * caller releases; executed rounds). */
   private def lpLoop(
-      edges: DataFrame, pv: DataFrame => DataFrame): (DataFrame, Long) = {
-      // lblCk = the checkpointed release target; lbl = the (node_id, lbl)
-      // view (Checkpoints.release reclaims only a bare LogicalRDD root,
-      // so handing it a projection would leak every round's reliable files)
-      var lblCk = graft.Checkpoints.truncate(
-        edges.select(col("src").as("node_id")).distinct()
-          .select(col("node_id"), col("node_id").as("lbl")))
-      var lbl: DataFrame = lblCk
-      var rounds = 0L
-      var chg = 1L
-      while (chg > 0L) {
-        rounds += 1
-        // beyond-the-cap throw: round LpMaxRounds itself executes, exactly
-        // like the oracle's `rounds < cap` recursion guard
-        if (rounds > LpMaxRounds)
-          throw new IllegalStateException(
-            s"label-prop loop: no fixpoint after $LpMaxRounds rounds " +
-              "(labels were still changing) — the self-vote damping " +
-              "contract is broken, refusing to return a half-converged labeling")
-        val votes = edges
-          .join(pv(lbl), col("src") === col("node_id"))
-          .select(col("dst").as("node_id"), col("lbl"))
-          .unionByName(lbl)
-        val nxt0 = votes
-          .groupBy(col("node_id"), col("lbl")).agg(count(lit(1)).as("c"))
-          .groupBy("node_id")
-          .agg(min(struct((-col("c")).as("negc"), col("lbl").as("l"))).as("m"))
-          .select(col("node_id"), col("m.l").as("lbl"))
-        // any-change flag observed on the checkpoint job itself (one
-        // action per round, as in prPushLoop); a max flag, exact in both
-        // checkpoint modes — only the sign drives the loop anyway
-        val (nxt, c) = truncateObserved(nxt0
-          .join(pv(lbl.select(col("node_id").as("pn"), col("lbl").as("prev"))),
-            col("node_id") === col("pn"))
-          .select(col("node_id"), col("lbl"),
-            (col("lbl") =!= col("prev")).cast("long").as("chgd")),
-          max(col("chgd")))
-        chg = c
-        graft.Checkpoints.release(lblCk)
-        lblCk = nxt
-        lbl = nxt.select("node_id", "lbl")
-      }
-      (lblCk, rounds)
-  }
+      edges: DataFrame, pv: DataFrame => DataFrame): (DataFrame, Long) =
+    // rounds read the (node_id, lbl) view; fixpoint releases the root
+    // (Checkpoints.release reclaims only a bare LogicalRDD root, so
+    // handing it a projection would leak every round's reliable files)
+    graft.Checkpoints.fixpoint("label-prop loop", LpMaxRounds,
+        (graft.Checkpoints.truncate(
+          edges.select(col("src").as("node_id")).distinct()
+            .select(col("node_id"), col("node_id").as("lbl"))), 1L),
+        // any-change flag observed on the checkpoint job; a max flag, exact
+        // in both checkpoint modes — only the sign drives the loop anyway
+        max(col("chgd"))) { ck =>
+      val lbl = ck.select("node_id", "lbl")
+      val votes = edges
+        .join(pv(lbl), col("src") === col("node_id"))
+        .select(col("dst").as("node_id"), col("lbl"))
+        .unionByName(lbl)
+      votes
+        .groupBy(col("node_id"), col("lbl")).agg(count(lit(1)).as("c"))
+        .groupBy("node_id")
+        .agg(min(struct((-col("c")).as("negc"), col("lbl").as("l"))).as("m"))
+        .select(col("node_id"), col("m.l").as("lbl"))
+        .join(pv(lbl.select(col("node_id").as("pn"), col("lbl").as("prev"))),
+          col("node_id") === col("pn"))
+        .select(col("node_id"), col("lbl"),
+          (col("lbl") =!= col("prev")).cast("long").as("chgd"))
+    }
 
   private val qLabelPropConverged = QueryDef(
     "q_label_prop_converged",
@@ -1788,39 +1758,26 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
     * vertices' out-edges; converges when no distance changes. `init`
     * must be an upper bound of the true distances (the uniform-Inf cold
     * seed or a converged base state with delta endpoints re-activated). */
-  private def bfsRelaxLoop(
-      spark: SparkSession, g: PrGraph, init: DataFrame): (DataFrame, Long) = {
+  private def bfsRelaxLoop(g: PrGraph, init: DataFrame): (DataFrame, Long) =
     // the checkpointed schema IS the state schema (the activity flag
     // rides .observe, not a column), so the loop works on — and RETURNS —
-    // the checkpoint root itself: the caller's release reclaims it
-    var (curCk, act) = truncateObserved(init, bfsActive)
-    var cur: DataFrame = curCk
-    var rounds = 0L
-    while (act > 0L) {
-      rounds += 1
-      if (rounds > 100L)
-        throw new IllegalStateException(
-          "bfsRelaxLoop: still active after 100 rounds — relaxation " +
-            "terminates in <= diameter rounds; the active-set test is broken")
+    // the checkpoint root itself: the caller's release reclaims it.
+    // Relaxation terminates in <= diameter rounds; hitting the cap means
+    // the active-set test is broken
+    graft.Checkpoints.fixpoint("bfsRelaxLoop", 100L,
+        truncateObserved(init, bfsActive), bfsActive) { cur =>
       val active = cur.filter(col("dist") =!= col("pd"))
         .select(col("node_id").as("asrc"), col("dist").as("ad"))
       val relax = g.edgesW
         .join(g.pv(active), col("src") === col("asrc"))
         .select(col("dst"), (col("ad") + 1L).as("nd0"))
         .groupBy("dst").agg(min(col("nd0")).as("nd"))
-      val nxt0 = cur
+      cur
         .join(g.pv(relax), col("node_id") === col("dst"), "left")
         .select(col("node_id"),
           least(col("dist"), coalesce(col("nd"), col("dist"))).as("dist"),
           col("dist").as("pd"))
-      val (nxt, a2) = truncateObserved(nxt0, bfsActive)
-      graft.Checkpoints.release(curCk)
-      curCk = nxt
-      cur = nxt
-      act = a2
     }
-    (cur, rounds)
-  }
 
   private def bfsIvmBuildState(
       spark: SparkSession, base0: DataFrame)(r: String): Unit = {
@@ -1842,7 +1799,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
         when(col("node_id") === srcId, 0L).otherwise(BfsInf).as("dist"),
         // src starts active (pd ≠ dist); everything else inactive
         lit(BfsInf).as("pd"))
-      val (st, r1) = bfsRelaxLoop(spark, g1, seed)
+      val (st, r1) = bfsRelaxLoop(g1, seed)
       st.select(col("node_id"), col("dist"))
         .write.mode("overwrite").parquet(s"$r/dist")
       g1.edgesW.select(col("src"), col("dst"))
@@ -1909,7 +1866,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
       val g = PrGraph(edgesFin,
         spark.read.parquet(s"$stateRoot/dist").select(col("node_id")),
         GraphAdaptive.pick(bcastV) _)
-      val (d2, r2) = bfsRelaxLoop(spark, g, init)
+      val (d2, r2) = bfsRelaxLoop(g, init)
       mark(s"resume:r1=$r1:r2=$r2")
       // data-sized distance frame → parquet spill + distributed
       // read-back, never a driver collect (VERDICT r17 task 1)
@@ -1977,20 +1934,11 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     * dist(par) + 1 = dist(node) for every reached non-source node (any
     * later improvement of par's dist would re-activate par and re-relax
     * the node, contradicting the fixpoint). */
-  private def bfsRelaxLoopPar(
-      spark: SparkSession, g: PrGraph, init: DataFrame): (DataFrame, Long) = {
-    // active test observed on the checkpoint job ([[bfsActive]]) — same
-    // one-action-per-round treatment as bfsRelaxLoop, and the same
-    // return-the-root discipline (the caller's release reclaims it)
-    var (curCk, act) = truncateObserved(init, bfsActive)
-    var cur: DataFrame = curCk
-    var rounds = 0L
-    while (act > 0L) {
-      rounds += 1
-      if (rounds > 100L)
-        throw new IllegalStateException(
-          "bfsRelaxLoopPar: still active after 100 rounds — relaxation " +
-            "terminates in <= diameter rounds; the active-set test is broken")
+  private def bfsRelaxLoopPar(g: PrGraph, init: DataFrame): (DataFrame, Long) =
+    // same fixpoint loop, activity flag and return-the-root discipline as
+    // bfsRelaxLoop; only the relax step carries the parent
+    graft.Checkpoints.fixpoint("bfsRelaxLoopPar", 100L,
+        truncateObserved(init, bfsActive), bfsActive) { cur =>
       val active = cur.filter(col("dist") =!= col("pd"))
         .select(col("node_id").as("asrc"), col("dist").as("ad"))
       val relax = g.edgesW
@@ -1999,21 +1947,14 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           struct((col("ad") + 1L).as("nd"), col("src").as("np")).as("c0"))
         .groupBy("dst").agg(min(col("c0")).as("c1"))
         .select(col("dst"), col("c1.nd").as("nd"), col("c1.np").as("np"))
-      val nxt0 = cur
+      cur
         .join(g.pv(relax), col("node_id") === col("dst"), "left")
         .select(col("node_id"),
           least(col("dist"), coalesce(col("nd"), col("dist"))).as("dist"),
           col("dist").as("pd"),
           when(col("nd").isNotNull && col("nd") < col("dist"), col("np"))
             .otherwise(col("par")).as("par"))
-      val (nxt, a2) = truncateObserved(nxt0, bfsActive)
-      graft.Checkpoints.release(curCk)
-      curCk = nxt
-      cur = nxt
-      act = a2
     }
-    (cur, rounds)
-  }
 
   /** State builder for the delete variant: converge distances AND parents
     * on the FULL pair set (the delete exhibit's base graph), persist
@@ -2037,7 +1978,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       val seed = g1.nodes.select(col("node_id"),
         when(col("node_id") === srcId, 0L).otherwise(BfsInf).as("dist"),
         lit(BfsInf).as("pd"), lit(-1L).as("par"))
-      val (st, r1) = bfsRelaxLoopPar(spark, g1, seed)
+      val (st, r1) = bfsRelaxLoopPar(g1, seed)
       st.select(col("node_id"), col("dist"), col("par"))
         .write.mode("overwrite").parquet(s"$r/dist")
       g1.edgesW.select(col("src"), col("dst"))
@@ -2062,6 +2003,117 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
   }
 
   private[graft] val BfsInfBound: Long = BfsInf
+
+  /** The delete/mixed builders' dirty walk. Seed: nodes of the state
+    * `st` (node_id, dist, par) whose shortest-path PARENT edge is among
+    * the deleted directed edges `dedges` (u, v) — an O(delta) probe of
+    * the state scan. Then the walk down the parent forest: each wave is
+    * the previous wave's tree children, so waves never revisit and the
+    * total dirty set is exactly the deleted edges' SP-subtrees. Returns
+    * (the distinct dirty node_ids — checkpointed, the caller releases;
+    * their count). */
+  private def bfsDirtyWalk(spark: SparkSession, what: String, st: DataFrame,
+      dedges: DataFrame, nDel: Long): (DataFrame, Long) = {
+    val waveCks = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    // wave counts OBSERVED on the wave's own checkpoint job (one job per
+    // wave, not two; the walk was job-count-bound at bench SF). Counts
+    // are additive — exact in local mode, up to 2× in reliable mode
+    // (Checkpoints.truncateObserved) — and feed only the `> 0` test (0 is
+    // exact) and the size gates, where inflation errs toward the safe
+    // shuffle side
+    var (frontier, n) = truncateObserved(
+      st.join(pickN(spark, nDel)(dedges),
+          col("par") === col("u") && col("node_id") === col("v"))
+        .select(col("node_id")), count(lit(1)))
+    waveCks += frontier
+    var dirty = frontier
+    var waves = 0
+    while (n > 0L) {
+      waves += 1
+      if (waves > 100)
+        throw new IllegalStateException(
+          s"$what: dirty walk still growing after 100 waves — the parent " +
+            "forest has a cycle; the state is corrupt")
+      val (next, n2) = truncateObserved(
+        st.join(pickN(spark, n)(frontier.select(col("node_id").as("dn"))),
+            col("par") === col("dn"))
+          .select(col("node_id")), count(lit(1)))
+      waveCks += next
+      frontier = next
+      dirty = dirty.unionByName(next)
+      n = n2
+    }
+    // distinct: a node whose own parent edge was deleted AND whose
+    // ancestor is also dirty enters via the seed and via a wave —
+    // duplicated dirty rows would multiply the callers' init joins
+    val res = truncateObserved(dirty.distinct(), count(lit(1)))
+    waveCks.foreach(graft.Checkpoints.release)
+    res
+  }
+
+  /** Size-gated join build side: broadcast `df` when its `sz` rows fit
+    * [[GraphAdaptive.broadcastOk]], else the SHUFFLE_HASH pick. EVERY
+    * per-frame join of the delete/mixed dirty walk and re-grow goes
+    * through it (VERDICT r18 #1): the dirty set is the deleted edges'
+    * SP-subtrees, which for a root-adjacent delete approaches O(V) — an
+    * ungated broadcast there is a driver / executor memory blowup at
+    * 100×, where the SHUFFLE_HASH build merely degrades to one more
+    * exchange. */
+  private def pickN(spark: SparkSession, sz: Long)(df: DataFrame): DataFrame =
+    GraphAdaptive.pick(GraphAdaptive.broadcastOk(spark, sz))(df)
+
+  /** The delete/mixed builders' re-grow. The final edge frame
+    * `edgesFin0` is laid out like [[edgeLayout]]'s (src-partitioned
+    * unless V broadcasts); `activate` maps the CLEAN FRONTIER (clean
+    * nodes with a surviving edge into a dirty node) to the checkpointed
+    * set that pushes in round 1 and its size. Every `dirty` node resets
+    * to +Inf, every activated one gets pd = dist + 1 ≠ dist, and the
+    * relaxation runs to its fixpoint; `relaxed(r2)` then marks the phase.
+    * The reached distances are spilled under `resPrefix` and every frame
+    * made here, plus `dirty`, is released. Returns the ordered
+    * (node_id, hop) result. */
+  private def bfsRegrow(spark: SparkSession, what: String, resPrefix: String,
+      st: DataFrame, vCnt: Long, edgesFin0: DataFrame, dirty: (DataFrame, Long))(
+      activate: DataFrame => (DataFrame, Long))(relaxed: Long => Unit): DataFrame = {
+    val (dirtyCk, nDirty) = dirty
+    val pickD = pickN(spark, nDirty) _
+    val bcastV = GraphAdaptive.broadcastOk(spark, vCnt)
+    val edgesFin =
+      if (bcastV) edgesFin0.truncateLineage
+      else edgesFin0.repartition(col("src")).truncateLineagePartitioned
+    val (actCk, nAct) = activate(edgesFin
+      .join(pickD(dirtyCk.select(col("node_id").as("dst"))), Seq("dst"))
+      .select(col("src").as("node_id")).distinct()
+      .join(pickD(dirtyCk), Seq("node_id"), "left_anti"))
+    val init = st
+      .join(pickD(dirtyCk.withColumn("isd", lit(true))),
+        Seq("node_id"), "left")
+      .join(pickN(spark, nAct)(actCk.withColumn("isf", lit(true))),
+        Seq("node_id"), "left")
+      .select(col("node_id"),
+        when(col("isd"), lit(BfsInf)).otherwise(col("dist")).as("dist"),
+        when(col("isd"), lit(BfsInf))
+          .otherwise(when(col("isf"), col("dist") + 1L)
+            .otherwise(col("dist"))).as("pd"))
+    val (d2, r2) = bfsRelaxLoop(PrGraph(edgesFin, st.select(col("node_id")),
+      GraphAdaptive.pick(bcastV) _), init)
+    relaxed(r2)
+    val out = ArtifactStore.spillResult(spark, resPrefix,
+      d2.filter(col("dist") < BfsInf)
+        .select(col("node_id"), col("dist").as("hop")))
+    Seq(d2, edgesFin, dirtyCk, actCk).foreach(graft.Checkpoints.release)
+    // ADVICE r19: deletes LENGTHEN hops, but the DuckDB oracle's
+    // recursive CTE is capped at BfsOracleWaves — if maintenance
+    // ever pushes a shortest path to the cap, fail loudly here
+    // instead of silently hash-mismatching the gate
+    val maxHop = out
+      .agg(coalesce(max(col("hop")), lit(0L))).head().getLong(0)
+    require(maxHop < BfsOracleWaves,
+      s"$what: maintained max hop $maxHop reached the " +
+        s"oracle cap BfsOracleWaves=$BfsOracleWaves — raise the cap " +
+        "(builder and gate SQL together) for this corpus")
+    out.orderBy("hop", "node_id")
+  }
 
   /** q_bfs_ivm_del's builder. `mark`: "p1", "delta",
     * "recompute:r1=<cold>:r2=<resume>:dirty=<subtree size>". */
@@ -2110,98 +2162,19 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
             .select(col("node_id"), col("dist").as("hop"))
             .orderBy("hop", "node_id")
         } else {
-          // dirty seed: nodes whose shortest-path PARENT edge was deleted
-          // (an O(delta) probe of the state scan), then the
-          // walk down the parent forest — each wave is the previous
-          // wave's tree children, so waves never revisit and the total
-          // dirty set is exactly the deleted edges' SP-subtrees.
-          // EVERY per-frame join below is size-gated through
-          // GraphAdaptive.pick (VERDICT r18 #1): the dirty set is the
-          // deleted edges' SP-subtrees, which for a root-adjacent delete
-          // approaches O(V) — an ungated broadcast there is a driver /
-          // executor memory blowup at 100×, where the SHUFFLE_HASH build
-          // merely degrades to one more exchange.
-          def pickN(sz: Long)(df: DataFrame): DataFrame =
-            GraphAdaptive.pick(GraphAdaptive.broadcastOk(spark, sz))(df)
           val nDel = dedges.count()
-          val waveCks = scala.collection.mutable.ListBuffer.empty[DataFrame]
-          // wave counts OBSERVED on the wave's own checkpoint job (one
-          // job per wave, not two; the walk was job-count-bound at bench
-          // SF). Counts are additive — exact in local mode, up to 2× in
-          // reliable mode (Checkpoints.truncateObserved) — and feed only
-          // the `> 0` test (0 is exact) and the size gates, where
-          // inflation errs toward the safe shuffle side
-          var (frontier, n) = truncateObserved(
-            st.join(pickN(nDel)(dedges),
-                col("par") === col("u") && col("node_id") === col("v"))
-              .select(col("node_id")), count(lit(1)))
-          waveCks += frontier
-          var dirty = frontier
-          var waves = 0
-          while (n > 0L) {
-            waves += 1
-            if (waves > 100)
-              throw new IllegalStateException(
-                "bfsIvmDelBuild: dirty walk still growing after 100 waves " +
-                  "— the parent forest has a cycle; the state is corrupt")
-            val (next, n2) = truncateObserved(
-              st.join(pickN(n)(frontier.select(col("node_id").as("dn"))),
-                  col("par") === col("dn"))
-                .select(col("node_id")), count(lit(1)))
-            waveCks += next
-            frontier = next
-            dirty = dirty.unionByName(next)
-            n = n2
-          }
-          // distinct: a node whose own parent edge was deleted AND whose
-          // ancestor is also dirty enters via the seed and via a wave —
-          // duplicated dirty rows would multiply the init join below
-          val (dirtyCk, nDirty) = truncateObserved(dirty.distinct(), count(lit(1)))
-          waveCks.foreach(graft.Checkpoints.release)
-          val pickD = pickN(nDirty) _
-          val bcastV = GraphAdaptive.broadcastOk(spark, vCnt)
+          val (dirtyCk, nDirty) =
+            bfsDirtyWalk(spark, "bfsIvmDelBuild", st, dedges, nDel)
           val edgesFin0 = spark.read.parquet(s"$stateRoot/edges")
-            .join(pickN(nDel)(dedges.select(col("u").as("src"),
+            .join(pickN(spark, nDel)(dedges.select(col("u").as("src"),
               col("v").as("dst"))), Seq("src", "dst"), "left_anti")
-          val edgesFin =
-            if (bcastV) edgesFin0.truncateLineage
-            else edgesFin0.repartition(col("src")).truncateLineagePartitioned
-          // clean frontier: clean nodes with a surviving edge into a
-          // dirty node — the only vertices that need to push in round 1
-          val (cfCk, nCf) = truncateObserved(edgesFin
-            .join(pickD(dirtyCk.select(col("node_id").as("dst"))),
-              Seq("dst"))
-            .select(col("src").as("node_id")).distinct()
-            .join(pickD(dirtyCk), Seq("node_id"), "left_anti"), count(lit(1)))
-          val init = st
-            .join(pickD(dirtyCk.withColumn("isd", lit(true))),
-              Seq("node_id"), "left")
-            .join(pickN(nCf)(cfCk.withColumn("isf", lit(true))),
-              Seq("node_id"), "left")
-            .select(col("node_id"),
-              when(col("isd"), lit(BfsInf)).otherwise(col("dist")).as("dist"),
-              when(col("isd"), lit(BfsInf))
-                .otherwise(when(col("isf"), col("dist") + 1L)
-                  .otherwise(col("dist"))).as("pd"))
-          val g = PrGraph(edgesFin, st.select(col("node_id")),
-            GraphAdaptive.pick(bcastV) _)
-          val (d2, r2) = bfsRelaxLoop(spark, g, init)
-          mark(s"recompute:r1=$r1:r2=$r2:dirty=$nDirty")
-          val out = ArtifactStore.spillResult(spark, "bfsivmd_res",
-            d2.filter(col("dist") < BfsInf)
-              .select(col("node_id"), col("dist").as("hop")))
-          Seq(d2, edgesFin, dirtyCk, cfCk).foreach(graft.Checkpoints.release)
-          // ADVICE r19: deletes LENGTHEN hops, but the DuckDB oracle's
-          // recursive CTE is capped at BfsOracleWaves — if maintenance
-          // ever pushes a shortest path to the cap, fail loudly here
-          // instead of silently hash-mismatching the gate
-          val maxHop = out
-            .agg(coalesce(max(col("hop")), lit(0L))).head().getLong(0)
-          require(maxHop < BfsOracleWaves,
-            s"bfsIvmDelBuild: maintained max hop $maxHop reached the " +
-              s"oracle cap BfsOracleWaves=$BfsOracleWaves — raise the cap " +
-              "(builder and gate SQL together) for this corpus")
-          out.orderBy("hop", "node_id")
+          bfsRegrow(spark, "bfsIvmDelBuild", "bfsivmd_res", st, vCnt,
+              edgesFin0, (dirtyCk, nDirty)) {
+            // only the clean frontier needs to push in round 1
+            truncateObserved(_, count(lit(1)))
+          } { r2 =>
+            mark(s"recompute:r1=$r1:r2=$r2:dirty=$nDirty")
+          }
         }
       Seq(dpairs, dedges).foreach(graft.Checkpoints.release)
       res
@@ -2284,104 +2257,42 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
             .select(col("node_id"), col("dist").as("hop"))
             .orderBy("hop", "node_id")
         } else {
-          // dirty walk down the parent forest, exactly the delete verb.
-          // As in bfsIvmDelBuild, every dirty/frontier/activation join is
-          // size-gated through GraphAdaptive.pick (VERDICT r18 #1): a
-          // root-adjacent delete makes the dirty SP-subtree O(V), where
-          // only the SHUFFLE_HASH build degrades gracefully.
-          def pickN(sz: Long)(df: DataFrame): DataFrame =
-            GraphAdaptive.pick(GraphAdaptive.broadcastOk(spark, sz))(df)
+          // dirty walk down the parent forest, exactly the delete verb
           val nDelE = dedgesD.count()
-          val waveCks = scala.collection.mutable.ListBuffer.empty[DataFrame]
-          // wave counts observed on the wave's own checkpoint job, as in
-          // bfsIvmDelBuild
-          var (frontier, n) = truncateObserved(
-            st.join(pickN(nDelE)(dedgesD),
-                col("par") === col("u") && col("node_id") === col("v"))
-              .select(col("node_id")), count(lit(1)))
-          waveCks += frontier
-          var dirty = frontier
-          var waves = 0
-          while (n > 0L) {
-            waves += 1
-            if (waves > 100)
-              throw new IllegalStateException(
-                "bfsIvmMixedBuild: dirty walk still growing after 100 " +
-                  "waves — the parent forest has a cycle; the state is corrupt")
-            val (next, n2) = truncateObserved(
-              st.join(pickN(n)(frontier.select(col("node_id").as("dn"))),
-                  col("par") === col("dn"))
-                .select(col("node_id")), count(lit(1)))
-            waveCks += next
-            frontier = next
-            dirty = dirty.unionByName(next)
-            n = n2
-          }
-          val (dirtyCk, nDirty) = truncateObserved(dirty.distinct(), count(lit(1)))
-          waveCks.foreach(graft.Checkpoints.release)
-          val pickD = pickN(nDirty) _
-          val bcastV = GraphAdaptive.broadcastOk(spark, vCnt)
+          val (dirtyCk, nDirty) =
+            bfsDirtyWalk(spark, "bfsIvmMixedBuild", st, dedgesD, nDelE)
           val edgesFin0 = spark.read.parquet(s"$stateRoot/edges")
-            .join(pickN(nDelE)(dedgesD.select(col("u").as("src"),
+            .join(pickN(spark, nDelE)(dedgesD.select(col("u").as("src"),
               col("v").as("dst"))), Seq("src", "dst"), "left_anti")
             .unionByName(dedgesA
               .select(col("u").as("src"), col("v").as("dst")))
-          val edgesFin =
-            if (bcastV) edgesFin0.truncateLineage
-            else edgesFin0.repartition(col("src")).truncateLineagePartitioned
-          val cleanFrontier = edgesFin
-            .join(pickD(dirtyCk.select(col("node_id").as("dst"))),
-              Seq("dst"))
-            .select(col("src").as("node_id")).distinct()
-            .join(pickD(dirtyCk), Seq("node_id"), "left_anti")
-          // activation = clean frontier ∪ add endpoints (both roles —
-          // the directed frame carries each endpoint as a src). Both the
-          // activation count (gating) and the add-endpoint count (mark
-          // telemetry) ride ONE checkpoint job: the addV leg carries its
-          // own observe, and both metrics are read from the EXECUTED
-          // frame's QueryExecution (a child frame's own QE never runs,
-          // so reading the metric off addV would yield 0).
-          val addVName = graft.Checkpoints.observedName("bfs_addv")
-          val actName = graft.Checkpoints.observedName("bfs_act_ct")
-          val addV = dedgesA.select(col("u").as("node_id")).distinct()
-            .observe(addVName, count(lit(1)).as("v"))
-          val actObs = cleanFrontier.unionByName(addV).distinct()
-            .observe(actName, count(lit(1)).as("v"))
-          val actCk = graft.Checkpoints.truncate(actObs)
-          def obsCount(name: String, fallback: => Long): Long =
-            actObs.queryExecution.observedMetrics.get(name)
-              .map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
-              .getOrElse(fallback)
-          val nAct = obsCount(actName, actCk.count())
-          val nAddV = obsCount(addVName,
-            dedgesA.select(col("u")).distinct().count())
-          val init = st
-            .join(pickD(dirtyCk.withColumn("isd", lit(true))),
-              Seq("node_id"), "left")
-            .join(pickN(nAct)(actCk.withColumn("isf", lit(true))),
-              Seq("node_id"), "left")
-            .select(col("node_id"),
-              when(col("isd"), lit(BfsInf)).otherwise(col("dist")).as("dist"),
-              when(col("isd"), lit(BfsInf))
-                .otherwise(when(col("isf"), col("dist") + 1L)
-                  .otherwise(col("dist"))).as("pd"))
-          val g = PrGraph(edgesFin, st.select(col("node_id")),
-            GraphAdaptive.pick(bcastV) _)
-          val (d2, r2) = bfsRelaxLoop(spark, g, init)
-          mark(s"recompute:r1=$r1:r2=$r2:dirty=$nDirty:addv=$nAddV")
-          val out = ArtifactStore.spillResult(spark, "bfsivmmx_res",
-            d2.filter(col("dist") < BfsInf)
-              .select(col("node_id"), col("dist").as("hop")))
-          Seq(d2, edgesFin, dirtyCk, actCk).foreach(graft.Checkpoints.release)
-          // ADVICE r19: same cap guard as bfsIvmDelBuild — the delete
-          // verb can lengthen hops past the oracle's recursive-CTE cap
-          val maxHop = out
-            .agg(coalesce(max(col("hop")), lit(0L))).head().getLong(0)
-          require(maxHop < BfsOracleWaves,
-            s"bfsIvmMixedBuild: maintained max hop $maxHop reached the " +
-              s"oracle cap BfsOracleWaves=$BfsOracleWaves — raise the cap " +
-              "(builder and gate SQL together) for this corpus")
-          out.orderBy("hop", "node_id")
+          var nAddV = 0L
+          bfsRegrow(spark, "bfsIvmMixedBuild", "bfsivmmx_res", st, vCnt,
+              edgesFin0, (dirtyCk, nDirty)) { cleanFrontier =>
+            // activation = clean frontier ∪ add endpoints (both roles —
+            // the directed frame carries each endpoint as a src). Both the
+            // activation count (gating) and the add-endpoint count (mark
+            // telemetry) ride ONE checkpoint job: the addV leg carries its
+            // own observe, and both metrics are read from the EXECUTED
+            // frame's QueryExecution (a child frame's own QE never runs,
+            // so reading the metric off addV would yield 0).
+            val addVName = graft.Checkpoints.observedName("bfs_addv")
+            val actName = graft.Checkpoints.observedName("bfs_act_ct")
+            val addV = dedgesA.select(col("u").as("node_id")).distinct()
+              .observe(addVName, count(lit(1)).as("v"))
+            val actObs = cleanFrontier.unionByName(addV).distinct()
+              .observe(actName, count(lit(1)).as("v"))
+            val actCk = graft.Checkpoints.truncate(actObs)
+            def obsCount(name: String, fallback: => Long): Long =
+              actObs.queryExecution.observedMetrics.get(name)
+                .map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
+                .getOrElse(fallback)
+            nAddV = obsCount(addVName,
+              dedgesA.select(col("u")).distinct().count())
+            (actCk, obsCount(actName, actCk.count()))
+          } { r2 =>
+            mark(s"recompute:r1=$r1:r2=$r2:dirty=$nDirty:addv=$nAddV")
+          }
         }
       Seq(dpairs, dedgesD, dedgesA).foreach(graft.Checkpoints.release)
       res
