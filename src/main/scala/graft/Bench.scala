@@ -366,8 +366,8 @@ object Bench {
         else if (forks > 0) "fresh_jvm_partial" else "in_suite_jvm"}""""
 
     // Full per-query breakdown → file (the judge reads it from the repo).
-    val fullPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json"))
+    val fullName = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")
+    val fullPath = java.nio.file.Paths.get(fullName)
     val fullLine = (jsonLine(results,
       s""","n_queries":${results.size}$errTag$isoTag$gapTag$shufTag$modeTag""") + "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -385,7 +385,9 @@ object Bench {
         .replaceFirst("\\.json$", "") + s"_c$cpusTag.json")
     java.nio.file.Files.write(byCores, fullLine)
     // Headline subset → stdout (must fit the driver's bounded tail capture).
+    // It names the record file this run wrote, JSON-escaped.
+    val fullJson = fullName.replace("\\", "\\\\").replace("\"", "\\\"")
     println(jsonLine(results.filter(r => headline(r.name) || !r.ok),
-      s""","n_queries":${results.size}$errTag,"full":"BENCH_FULL.json""""))
+      s""","n_queries":${results.size}$errTag,"full":"$fullJson""""))
   }
 }

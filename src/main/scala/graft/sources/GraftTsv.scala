@@ -113,16 +113,16 @@ final class GraftTsvDataSource extends TableProvider with DataSourceRegister {
       schema: StructType,
       partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
-    new GraftTsvTable(schema, new CaseInsensitiveStringMap(properties))
+    new GraftTsvTable(schema, GraftTsvOptions(properties.asScala.toMap))
 }
 
-final class GraftTsvTable(tableSchema: StructType, options: CaseInsensitiveStringMap)
+final class GraftTsvTable(tableSchema: StructType, opts: GraftTsvOptions)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
-  override def name(): String = s"graft-tsv ${options.get("path")}"
+  override def name(): String = s"graft-tsv ${opts.location.orNull}"
   override def schema(): StructType = tableSchema
 
   /** `_file` — the row's source file path, split-constant in the readers;
@@ -140,95 +140,25 @@ final class GraftTsvTable(tableSchema: StructType, options: CaseInsensitiveStrin
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
-    require(!headerOn,
+    require(!opts.header,
       s"graft-tsv: row-level ${info.command()} is not supported on headered " +
         "tables (a rewrite would have to re-thread per-file header lines; " +
         "catalog tables never write headers)")
-    () => new GraftTsvRowLevelOperation(
-      info.command(),
-      tableSchema,
-      Option(options.get("path")).getOrElse(
-        throw new IllegalArgumentException("graft-tsv: no path given")),
-      Option(options.get("delimiter")).getOrElse("\t").charAt(0),
-      declaredPartCols,
-      tableRetain,
-      tablePinned)
+    () => new GraftTsvRowLevelOperation(info.command(), tableSchema, opts)
   }
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.MICRO_BATCH_READ, TableCapability.STREAMING_WRITE)
 
-  private def headerOn: Boolean =
-    Option(options.get("header")).exists(_.equalsIgnoreCase("true"))
-  private def declaredPartCols: Seq[String] =
-    Option(options.get("partition.columns")).toSeq
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-  /** Table-level generation retention (time-travel history depth); catalog
-    * tables carry it from the descriptor, path tables from a read/write
-    * option. Per-write `retain.generations` options still win. Catalog
-    * DDL validates the value; a path table's option is arbitrary user
-    * input, so parse failures name the option instead of surfacing as a
-    * bare NumberFormatException. */
-  private def tableRetain: Int =
-    Option(options.get("retain.generations")).map { v =>
-      v.toIntOption.filter(_ >= 1).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-tsv: retain.generations must be an integer >= 1, got '$v'"))
-    }.getOrElse(1)
-
-  /** Commit-time AUTO-COMPACTION (`compact.auto.files` — the Delta-style
-    * auto-optimize knob, default off): when a BATCH commit leaves at
-    * least this many live files, the same byte-concatenation compaction
-    * `CALL g.system.compact` runs fires as a follow-up generation, so an
-    * ingest table's file count — and with it every downstream
-    * metadata cost (manifest/checkpoint size, scan planning, keep-set
-    * width) — stays bounded without an external scheduler. */
-  private def tableAutoCompactFiles: Int =
-    Option(options.get("compact.auto.files")).map { v =>
-      v.toIntOption.filter(_ >= 2).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-tsv: compact.auto.files must be an integer >= 2, got '$v'"))
-    }.getOrElse(0)
-
-  private def tableAutoCompactBytes: Long =
-    Option(options.get("compact.auto.target.bytes")).map { v =>
-      v.toLongOption.filter(_ >= 1).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-tsv: compact.auto.target.bytes must be a positive byte " +
-            s"count, got '$v'"))
-    }.getOrElse(128L * 1024 * 1024)
-
-  /** Tag-pinned generations (`tags.pinned`, CSV of generation numbers —
-    * set by [[GraftTsvCatalog]] from the descriptor's tag map): every
-    * publish path retains these manifests and their parts regardless of
-    * the `retain.generations` window, so a tagged snapshot stays
-    * resolvable until untagged. */
-  private def tablePinned: Set[Long] =
-    Option(options.get("tags.pinned")).toSeq
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-      .map(v => v.toLongOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-tsv: tags.pinned must be a CSV of generation numbers, got '$v'")))
-      .toSet
-
   /** Row-level DELETE (`DELETE FROM cat.ns.t WHERE ...` through
     * [[GraftTsvCatalog]]): copy-on-write generation rewrite of only the
     * files the predicate can touch — see [[GraftTsvDelete]]. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    GraftTsvDelete.canDelete(tableSchema, headerOn, filters)
+    GraftTsvDelete.canDelete(tableSchema, opts.header, filters)
 
   override def deleteWhere(filters: Array[Filter]): Unit =
-    GraftTsvDelete.deleteWhere(
-      tableSchema,
-      Option(options.get("path")).getOrElse(
-        throw new IllegalArgumentException("graft-tsv: no path given")),
-      Option(options.get("delimiter")).getOrElse("\t").charAt(0),
-      declaredPartCols,
-      headerOn,
-      filters,
-      retainGenerations = tableRetain,
-      pinnedGens = tablePinned)
+    GraftTsvDelete.deleteWhere(tableSchema, opts, filters)
 
   /** Write path in GraftTsvWrite.scala: two-phase commit (dot-prefixed
     * staging files, driver-side rename) — only committed task output
@@ -238,24 +168,11 @@ final class GraftTsvTable(tableSchema: StructType, options: CaseInsensitiveStrin
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new GraftTsvWriteBuilder(
-      info.schema(),
-      Option(options.get("path")).getOrElse(
-        throw new IllegalArgumentException("graft-tsv: no path given")),
-      Option(options.get("delimiter")).getOrElse("\t").charAt(0),
-      info,
-      tablePartCols = declaredPartCols,
-      tableRetain = tableRetain,
-      tablePinned = tablePinned,
-      tableAutoCompactFiles = tableAutoCompactFiles,
-      tableAutoCompactBytes = tableAutoCompactBytes)
-  override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder = {
-    // DataFrameReader merges load(path) and .option(...) into the TABLE
-    // properties; per-scan options arrive here. Prefer scan-time values.
-    val merged = new java.util.HashMap[String, String](options.asCaseSensitiveMap())
-    merged.putAll(caseInsensitiveOptions.asCaseSensitiveMap())
-    new GraftTsvScanBuilder(tableSchema, new CaseInsensitiveStringMap(merged))
-  }
+    new GraftTsvWriteBuilder(info.schema(), opts, info)
+  // DataFrameReader merges load(path) and .option(...) into the TABLE
+  // properties; per-scan options arrive here and win.
+  override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder =
+    new GraftTsvScanBuilder(tableSchema, opts.forScan(caseInsensitiveOptions))
 }
 
 /** The predicate machinery shared by the reader (per-line evaluation),
@@ -476,7 +393,7 @@ private[sources] object GraftTsvPushdown {
   }
 }
 
-final class GraftTsvScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
+final class GraftTsvScanBuilder(fullSchema: StructType, opts: GraftTsvOptions)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit {
 
@@ -552,10 +469,8 @@ final class GraftTsvScanBuilder(fullSchema: StructType, options: CaseInsensitive
     if (pushed.nonEmpty) return None
     // a headered table can only have gotten a manifest by hand (the
     // writer never writes headers) — its row counts are untrusted
-    if (Option(options.get("header")).exists(_.equalsIgnoreCase("true")))
-      return None
-    val partCols = Option(options.get("partition.columns")).toSeq
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
+    if (opts.header) return None
+    val partCols = opts.partCols
     def refOf(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
       case nr: NamedReference if nr.fieldNames().length == 1 =>
@@ -591,7 +506,7 @@ final class GraftTsvScanBuilder(fullSchema: StructType, options: CaseInsensitive
       try mkScan(fullSchema, countOnly = false).listFiles()
       catch { case _: Exception => return None } // unreadable: let the scan surface it
     if (!entries.forall(_.rows.isDefined)) return None // unknown provenance
-    val aliases = aliasMap
+    val aliases = opts.aliases
     def dtOf(c: String): DataType = fullSchema(fullSchema.fieldIndex(c)).dataType
     def minMax(es: Seq[GraftTsvFileEntry], c: String, wantMin: Boolean)
         : Option[Any] = {
@@ -655,13 +570,6 @@ final class GraftTsvScanBuilder(fullSchema: StructType, options: CaseInsensitive
     }
   }
 
-  private def aliasMap: Map[String, Seq[String]] =
-    Option(options.get("column.aliases")).toSeq
-      .flatMap(_.split(";").toSeq.filter(_.contains(">")).map { e =>
-        val i = e.indexOf('>')
-        e.take(i) -> e.drop(i + 1).split(",").toSeq.filter(_.nonEmpty)
-      }).toMap
-
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (sup, residual) =
       filters.partition(GraftTsvPushdown.supported(fullSchema, _))
@@ -683,7 +591,7 @@ final class GraftTsvScanBuilder(fullSchema: StructType, options: CaseInsensitive
         override def rows(): Array[InternalRow] =
           outRows.map(r => new GenericInternalRow(r): InternalRow).toArray
         override def description(): String =
-          s"GraftTsvMetaAggScan path=${options.get("path")}, " +
+          s"GraftTsvMetaAggScan path=${opts.path}, " +
             s"PushedAggregation(metadata-complete): " +
             s"[${aggSchema.fieldNames.mkString(", ")}]"
       }
@@ -692,111 +600,38 @@ final class GraftTsvScanBuilder(fullSchema: StructType, options: CaseInsensitive
 
   private def mkScan(requiredSchema: StructType, countOnly: Boolean)
       : GraftTsvScan = {
-    val splitBytes = Option(options.get("split.bytes")).map(_.toLong)
-      .getOrElse(64L * 1024 * 1024)
-    // a non-positive split size would make every by-splitBytes range empty
-    // and the scan silently return ZERO rows — fail loudly instead
-    require(splitBytes > 0,
-      s"graft-tsv: split.bytes must be positive, got $splitBytes")
-    val partCols = Option(options.get("partition.columns")).toSeq
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-    partCols.foreach { c =>
+    opts.partCols.foreach { c =>
       require(fullSchema.fieldNames.contains(c),
         s"graft-tsv: partition column '$c' is not in the schema")
       require(GraftTsvPushdown.supportedType(
         fullSchema(fullSchema.fieldIndex(c)).dataType),
         s"graft-tsv: partition column '$c' has an unsupported type")
     }
-    new GraftTsvScan(
-      fullSchema, requiredSchema, pushed,
-      path = Option(options.get("path")).getOrElse(
-        throw new IllegalArgumentException("graft-tsv: no path given")),
-      delimiter = Option(options.get("delimiter")).getOrElse("\t").charAt(0),
-      splitBytes = splitBytes,
-      header = Option(options.get("header")).exists(_.equalsIgnoreCase("true")),
-      countOnly = countOnly,
-      hconf = SerializableHadoopConf.fromSession(),
-      partCols = partCols,
-      vectorized = !Option(options.get("vectorized.read"))
-        .exists(_.equalsIgnoreCase("false")),
-      generation = Option(options.get("generation")).map(_.toLong),
-      // BRANCH READS: resolve the `_gen-N.b-<name>` manifest chain the
-      // branch procedure + branch writes maintain, instead of the main
-      // chain — main resolution is branch-blind by construction
-      // (branch manifests fail genNumber's parse)
-      branch = Option(options.get("branch")).map { b =>
-        require(GraftTsvManifest.validBranchName(b),
-          s"graft-tsv: invalid branch name '$b' (letters, digits, '_', '-')")
-        b
-      },
-      // CHANGES (generation diff): list only files NOT also present in
-      // this other generation's manifest — copy-on-write part files are
-      // content-immutable, so a shared relpath cannot contribute changes
-      excludeGeneration = Option(options.get("diff.exclude.generation"))
-        .map(v => v.toLongOption.getOrElse(
-          throw new IllegalArgumentException(
-            s"graft-tsv: diff.exclude.generation must be an integer " +
-              s"generation number, got '$v'"))),
-      // CROSS-LINEAGE DIFF: resolve the EXCLUDED generation's manifest in
-      // a named lineage instead of the read side's — `main` or
-      // `branch:<name>`. This is what lets a branch-vs-main diff use the
-      // branch chain's retained BASE manifest as the main-side exclusion
-      // endpoint after main's own copy of that generation slid out of
-      // retention (branchConflicts).
-      excludeLineage = Option(options.get("diff.exclude.lineage")).map { v =>
-        require(v == "main" || v.startsWith("branch:"),
-          s"graft-tsv: diff.exclude.lineage must be 'main' or " +
-            s"'branch:<name>', got '$v'")
-        v
-      },
-      // RENAME COLUMN name map (catalog-provided): current name → the
-      // historical names old manifests may key stats under
-      aliases = aliasMap,
-      // per-scan option first, then the table-level default the catalog
-      // passes through as `stream.max.files.per.trigger` (TBLPROPERTIES
-      // — SCALE.md §36's operating point pinned to the table)
-      maxFilesPerTrigger = Option(options.get("max.files.per.trigger"))
-        .orElse(Option(options.get("stream.max.files.per.trigger")))
-        .map(v => v.toIntOption.filter(_ >= 1).getOrElse(
-          throw new IllegalArgumentException(
-            s"graft-tsv: max.files.per.trigger must be an integer >= 1, " +
-              s"got '$v'"))),
-      pushedLimit = limit,
-      streamByGeneration = Option(options.get("stream.by.generation"))
-        .exists(_.equalsIgnoreCase("true")),
-      streamAllowRewrites = Option(options.get("stream.allow.rewrites"))
-        .exists(_.equalsIgnoreCase("true")),
-      streamChanges = Option(options.get("stream.changes"))
-        .exists(_.equalsIgnoreCase("true")))
+    new GraftTsvScan(fullSchema, requiredSchema, pushed, opts,
+      countOnly = countOnly, pushedLimit = limit)
   }
 }
 
+/** One planned graft-tsv read. `opts` carries every option-derived
+  * setting (location, layout, pins, diff endpoints, stream modes). A
+  * `fileFilterOnly` scan is a copy-on-write rewrite's: it accepts only the
+  * `_file` group filter and reads through the row reader (the `_file`
+  * constant rides the row path). */
 final class GraftTsvScan(
     fullSchema: StructType,
     required: StructType,
     pushed: Array[Filter],
-    path: String,
-    delimiter: Char,
-    splitBytes: Long,
-    header: Boolean,
+    opts: GraftTsvOptions,
     countOnly: Boolean = false,
     hconf: SerializableHadoopConf = SerializableHadoopConf.fromSession(),
-    partCols: Seq[String] = Seq.empty,
-    vectorized: Boolean = true,
-    generation: Option[Long] = None,
-    excludeGeneration: Option[Long] = None,
-    branch: Option[String] = None,
     fileFilterOnly: Boolean = false,
     onPlanned: Option[Seq[String] => Unit] = None,
-    aliases: Map[String, Seq[String]] = Map.empty,
-    maxFilesPerTrigger: Option[Int] = None,
-    pushedLimit: Option[Int] = None,
-    streamByGeneration: Boolean = false,
-    streamAllowRewrites: Boolean = false,
-    excludeLineage: Option[String] = None,
-    streamChanges: Boolean = false)
+    pushedLimit: Option[Int] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeV2Filtering with SupportsReportPartitioning {
+  import opts.{aliases, branch, delimiter, excludeGeneration, excludeLineage,
+    generation, header, maxFilesPerTrigger, partCols, path, splitBytes,
+    streamAllowRewrites, streamByGeneration, streamChanges}
 
   // CHANGE-FEED streaming contract checks run at scan build so misuse
   // fails before any job is planned: the mode rides the generation
@@ -1323,7 +1158,7 @@ final class GraftTsvScan(
       // through the SAME machinery as hive partition values (in the
       // schema, never in the data lines, value carried by the split)
       if (streamChanges) partCols :+ GraftTsvMeta.ChangeCol else partCols,
-      vectorized)
+      opts.vectorized && !fileFilterOnly)
 
   override def createReaderFactory(): PartitionReaderFactory = factory
 

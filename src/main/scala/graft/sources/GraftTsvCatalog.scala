@@ -117,15 +117,15 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     * `#renames:` + `historical>current` pairs joined by `;`. Older
     * shorter descriptors read as propertyless / rename-free —
     * forward-compatible. */
-  private case class Descriptor(schema: StructType, partColsCsv: String,
-      delimLine: String, props: Map[String, String],
+  private case class Descriptor(schema: StructType, partCols: Seq[String],
+      delimiter: Char, props: Map[String, String],
       renames: Seq[(String, String)] = Seq.empty,
       tags: Map[String, Long] = Map.empty,
       drops: Seq[String] = Seq.empty) {
     def serialized: String = {
       // the k=v;k=v and old>new;old>new lines have no escaping, so the
       // separators must not appear in keys or values — today
-      // validateProps/alterTable restrict the content, but the invariant
+      // checkTableProperties/alterTable restrict the content, but the invariant
       // is enforced HERE, where it is relied on, so a future property or
       // exotic column name cannot silently corrupt the descriptor
       props.foreach { case (k, v) =>
@@ -147,7 +147,8 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
           s"graft catalog: tag '$t' must match [A-Za-z0-9._-]+ and not be " +
             "all digits (a numeric VERSION AS OF names a generation)")
       }
-      val base = schema.json + "\n" + partColsCsv + "\n" + delimLine + "\n"
+      val base = schema.json + "\n" + partCols.mkString(",") + "\n" +
+        delimiter.toInt + "\n"
       if (props.isEmpty && renames.isEmpty && tags.isEmpty && drops.isEmpty)
         base
       else {
@@ -182,8 +183,8 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     val trailing = lines.drop(3)
     Descriptor(
       DataType.fromJson(lines.head).asInstanceOf[StructType],
-      lines.lift(1).getOrElse(""),
-      lines.lift(2).getOrElse('\t'.toInt.toString),
+      lines.lift(1).toSeq.flatMap(_.split(",")).filter(_.nonEmpty),
+      lines.lift(2).fold('\t')(_.toInt.toChar),
       trailing.headOption.filterNot(_.startsWith("#")).toSeq
         .flatMap(_.split(";").filter(_.contains("=")).map { kv =>
           val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1)
@@ -215,43 +216,6 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
       dir.toUri, SparkSession.active.sparkContext.hadoopConfiguration)
     fc.rename(tmp, metaPath(dir), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
-
-  /** The table properties with storage-level meaning; anything else is
-    * rejected loudly rather than silently recorded and ignored. */
-  private val RetainKey = "retain.generations"
-  private val AutoCompactKey = "compact.auto.files"
-  private val AutoCompactBytesKey = "compact.auto.target.bytes"
-  /** Table-level default for the generation stream's admission budget
-    * (SCALE.md §36's operating point, pinned to the table instead of
-    * re-decided by every consumer): flows into the scan options via
-    * `tableOptions`, where a per-scan `max.files.per.trigger` read
-    * option still overrides it. */
-  private val StreamMaxFilesKey = "stream.max.files.per.trigger"
-  private def validateProps(props: Map[String, String]): Unit =
-    props.foreach {
-      case (RetainKey, v) =>
-        require(v.toIntOption.exists(_ >= 1),
-          s"graft catalog: $RetainKey must be an integer >= 1, got '$v'")
-      case (AutoCompactKey, v) =>
-        require(v.toIntOption.exists(_ >= 2),
-          s"graft catalog: $AutoCompactKey must be an integer >= 2 " +
-            s"(live-file threshold that triggers commit-time compaction), got '$v'")
-      case (AutoCompactBytesKey, v) =>
-        require(v.toLongOption.exists(_ >= 1),
-          s"graft catalog: $AutoCompactBytesKey must be a positive byte " +
-            s"count, got '$v'")
-      case (StreamMaxFilesKey, v) =>
-        require(v.toIntOption.exists(_ >= 1),
-          s"graft catalog: $StreamMaxFilesKey must be an integer >= 1, " +
-            s"got '$v'")
-      case (k, _) =>
-        throw new IllegalArgumentException(
-          s"graft catalog: unsupported table property '$k' — supported: " +
-            s"$RetainKey (time-travel history depth), $AutoCompactKey " +
-            s"(auto-compaction live-file threshold), $AutoCompactBytesKey " +
-            s"(auto-compaction output size target), $StreamMaxFilesKey " +
-            "(generation-stream admission budget, per-scan option overrides)")
-    }
 
   // ---- tables ----
 
@@ -307,8 +271,8 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
           case (Some(g), false) => loadTableAt(ident, Some(g))
           case (None, true) =>
             val (d2, opts) = tableOptions(ident, None)
-            new GraftTsvTable(d2.schema, new CaseInsensitiveStringMap(
-              (opts + ("branch" -> version)).asJava))
+            new GraftTsvTable(d2.schema,
+              GraftTsvOptions(opts + (GraftTsvOptions.Branch -> version)))
           case (None, false) =>
             throw new IllegalArgumentException(
               s"graft catalog: VERSION AS OF '$version' — no such tag or " +
@@ -357,7 +321,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
 
   private def loadTableAt(ident: Identifier, generation: Option[Long]): Table = {
     val (d, opts) = tableOptions(ident, generation)
-    new GraftTsvTable(d.schema, new CaseInsensitiveStringMap(opts.asJava))
+    new GraftTsvTable(d.schema, GraftTsvOptions(opts))
   }
 
   /** The reader option map `loadTableAt` hands the table — factored out so
@@ -370,27 +334,8 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     val mp = metaPath(dir)
     if (!f.exists(mp)) throw noSuchTable(ident)
     val d = readDescriptor(f, mp)
-    val partCols = d.partColsCsv.split(",").filter(_.nonEmpty)
-    val delim = d.delimLine.toInt.toChar
-    // rename history → the scan's stats-alias option: for each CURRENT
-    // name, the historical names old-generation manifest cells may be
-    // keyed under (`cur>hist1,hist2;...`)
-    val aliasOpt =
-      if (d.renames.isEmpty) Map.empty[String, String]
-      else Map("column.aliases" -> d.renames.groupBy(_._2).toSeq.sortBy(_._1)
-        .map { case (cur, hist) => s"$cur>${hist.map(_._1).mkString(",")}" }
-        .mkString(";"))
-    val opts = Map(
-      "path" -> dir.toString,
-      "delimiter" -> delim.toString) ++
-      (if (partCols.nonEmpty) Map("partition.columns" -> partCols.mkString(","))
-       else Map.empty) ++
-      d.props ++ aliasOpt ++
-      (if (d.tags.isEmpty) Map.empty
-       else Map("tags.pinned" ->
-         d.tags.values.toSeq.distinct.sorted.mkString(","))) ++
-      generation.map(g => Map("generation" -> g.toString)).getOrElse(Map.empty)
-    (d, opts)
+    (d, GraftTsvOptions.catalogTable(dir.toString, d.delimiter, d.partCols,
+      d.props, d.renames, d.tags.values, generation))
   }
 
   /** CHANGES FEED (generation diff): the net row-level difference between
@@ -452,7 +397,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
       val (d, opts) = tableOptions(ident, Some(gen))
       spark.read.format("graft-tsv").schema(d.schema)
         .options(opts ++ extraOpts
-          + ("diff.exclude.generation" -> excl.toString))
+          + (GraftTsvOptions.ExcludeGeneration -> excl.toString))
         .load() // `path` rides the option map, same as loadTableAt
     }
     val removed = side(fromGen, toGen) // rows of files dropped from→to
@@ -489,7 +434,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
            else s" (branches: ${known.mkString(", ")})"))
     }
     val (base, head) = (gens.min, gens.max)
-    diffOf(spark, ident, base, head, Map("branch" -> name))
+    diffOf(spark, ident, base, head, Map(GraftTsvOptions.Branch -> name))
   }
 
   /** BRANCH CONFLICT REPORT — the row-level reconciliation assist
@@ -531,7 +476,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
           s"${ident.name()}")
     val (base, head) = (gens.min, gens.max)
     val mainCur = rootNames.flatMap(GraftTsvManifest.genNumber).max
-    val branchDelta = diffOf(spark, ident, base, head, Map("branch" -> name))
+    val branchDelta = diffOf(spark, ident, base, head, Map(GraftTsvOptions.Branch -> name))
     // main's net delta since the branch point, with CROSS-LINEAGE
     // endpoints (same removed/added/exceptAll shape as diffOf): the
     // branch-point side reads the branch chain's base manifest, the
@@ -542,12 +487,12 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
       spark.read.format("graft-tsv").schema(d.schema)
         .options(opts ++ extra).load()
     }
-    val atBranchPoint = sideAt(base, Map("branch" -> name,
-      "diff.exclude.generation" -> mainCur.toString,
-      "diff.exclude.lineage" -> "main"))
+    val atBranchPoint = sideAt(base, Map(GraftTsvOptions.Branch -> name,
+      GraftTsvOptions.ExcludeGeneration -> mainCur.toString,
+      GraftTsvOptions.ExcludeLineage -> "main"))
     val atMainHead = sideAt(mainCur, Map(
-      "diff.exclude.generation" -> base.toString,
-      "diff.exclude.lineage" -> s"branch:$name"))
+      GraftTsvOptions.ExcludeGeneration -> base.toString,
+      GraftTsvOptions.ExcludeLineage -> s"branch:$name"))
     val mainDelta =
       atMainHead.exceptAll(atBranchPoint)
         .withColumn("_change_type", lit("insert"))
@@ -629,7 +574,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
         s"graft-tsv tables support only identity partitioning, got $t")
       t.references()(0).fieldNames()(0)
     }
-    val delim = Option(properties.get("delimiter")).getOrElse("\t").charAt(0)
+    val delim = GraftTsvOptions(properties.asScala.toMap).delimiter
     // storage-meaningful TBLPROPERTIES persist in the descriptor; Spark's
     // own bookkeeping keys (provider, owner, ...) are not table semantics
     val sparkInternal = Set("provider", "owner", "delimiter",
@@ -638,8 +583,8 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
       .filter { case (k, _) => !sparkInternal.contains(k) &&
         !k.startsWith("option.") && k != "location" && k != "external" &&
         k != "comment" }
-    validateProps(props)
-    Descriptor(schema, partCols.mkString(","), delim.toInt.toString, props)
+    GraftTsvOptions.checkTableProperties(props)
+    Descriptor(schema, partCols.toSeq, delim, props)
   }
 
   override def createTable(
@@ -762,14 +707,9 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
         java.util.UUID.randomUUID().toString.take(8))
     f.mkdirs(stageDir)
     writeDescriptor(f, stageDir, desc)
-    val opts = Map(
-      "path" -> stageDir.toString,
-      "delimiter" -> desc.delimLine.toInt.toChar.toString) ++
-      (if (desc.partColsCsv.nonEmpty)
-         Map("partition.columns" -> desc.partColsCsv) else Map.empty) ++
-      desc.props
-    val inner = new GraftTsvTable(desc.schema,
-      new CaseInsensitiveStringMap(opts.asJava))
+    val inner = new GraftTsvTable(desc.schema, GraftTsvOptions(
+      GraftTsvOptions.catalogTable(stageDir.toString, desc.delimiter,
+        desc.partCols, desc.props)))
     val commit: () => Unit = () => {
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(
         root.toUri, SparkSession.active.sparkContext.hadoopConfiguration)
@@ -880,7 +820,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     var props = d0.props
     var renames = d0.renames
     var drops = d0.drops
-    val partSet = d0.partColsCsv.split(",").filter(_.nonEmpty).toSet
+    val partSet = d0.partCols.toSet
     changes.foreach {
       case del: TableChange.DeleteColumn =>
         require(del.fieldNames().length == 1,
@@ -938,7 +878,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
         } :+ (oldName -> newName)
       case set: TableChange.SetProperty =>
         // (fallthrough to the shared handling below)
-        validateProps(Map(set.property() -> set.value()))
+        GraftTsvOptions.checkTableProperties(Map(set.property() -> set.value()))
         props = props + (set.property() -> set.value())
       case rm: TableChange.RemoveProperty =>
         props = props - rm.property()
@@ -1023,9 +963,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     val mp = metaPath(dir)
     if (!f.exists(mp)) throw noSuchTable(ident)
     val d = readDescriptor(f, mp)
-    val partCols = d.partColsCsv.split(",").filter(_.nonEmpty).toSeq
-    val retain = d.props.get(RetainKey).flatMap(_.toIntOption).getOrElse(1)
-    (dir, partCols, retain, d.tags.values.toSet)
+    (dir, d.partCols, GraftTsvOptions(d.props).retainGenerations, d.tags.values.toSet)
   }
 
   /** tag/untag backends for the SQL procedures: descriptor rewrite is the

@@ -62,16 +62,10 @@ object GraftTsvDelete {
       case f => GraftTsvPushdown.supported(schema, f)
     }
 
-  def deleteWhere(
-      schema: StructType,
-      path: String,
-      delimiter: Char,
-      partCols: Seq[String],
-      header: Boolean,
-      filters: Array[Filter],
-      retainGenerations: Int = 1,
-      pinnedGens: Set[Long] = Set.empty): Unit = {
-    require(canDelete(schema, header, filters),
+  def deleteWhere(schema: StructType, table: GraftTsvOptions, filters: Array[Filter]): Unit = {
+    // plain values: the per-file rewrite closure ships them to executors
+    val (path, delimiter, partCols) = (table.path, table.delimiter, table.partCols)
+    require(canDelete(schema, table.header, filters),
       s"graft-tsv DELETE: unsupported predicate in [${filters.mkString(", ")}]")
     // a FALSE conjunct makes the whole conjunction false: nothing matches
     if (filters.exists(_.isInstanceOf[AlwaysFalse])) return
@@ -85,9 +79,7 @@ object GraftTsvDelete {
 
     // the scan owns listing + pruning; reuse it verbatim so DELETE's idea
     // of "cannot match" is exactly the read path's (conservative, typed)
-    val scan = new GraftTsvScan(schema, schema, Array.empty, path, delimiter,
-      splitBytes = 64L * 1024 * 1024, header = false, countOnly = false,
-      hconf = hconf, partCols = partCols)
+    val scan = new GraftTsvScan(schema, schema, Array.empty, table, hconf = hconf)
     val files = scan.listFiles()
     if (files.isEmpty) return
 
@@ -95,8 +87,8 @@ object GraftTsvDelete {
       // DELETE without WHERE: publish an empty generation, rewrite nothing
       GraftTsvPublisher.publish(fs, dir, Seq.empty, lbl, epochMarker = None,
         truncate = true, dropped = Set.empty, partCols,
-        sweepPrefix = s".staging-$lbl", retainGenerations = retainGenerations,
-        pinnedGens = pinnedGens)
+        sweepPrefix = s".staging-$lbl", retainGenerations = table.retainGenerations,
+        pinnedGens = table.pinned)
       return
     }
 
@@ -132,8 +124,8 @@ object GraftTsvDelete {
 
     GraftTsvPublisher.publish(fs, dir, staged, lbl, epochMarker = None,
       truncate = false, dropped = affected.map(_.rel).toSet, partCols,
-      sweepPrefix = s".staging-$lbl", retainGenerations = retainGenerations,
-      pinnedGens = pinnedGens)
+      sweepPrefix = s".staging-$lbl", retainGenerations = table.retainGenerations,
+      pinnedGens = table.pinned)
   }
 
   /** Task-side copy-on-write of one file: stream lines, keep those whose

@@ -81,11 +81,8 @@ object GraftTsvMeta {
 final class GraftTsvRowLevelOperation(
     cmd: RowLevelOperation.Command,
     schema: StructType,
-    path: String,
-    delimiter: Char,
-    partCols: Seq[String],
-    retainGenerations: Int,
-    pinnedGens: Set[Long] = Set.empty) extends RowLevelOperation {
+    table: GraftTsvOptions) extends RowLevelOperation {
+  import table.{delimiter, partCols, path}
 
   /** Root-relative paths of the files the rewrite scan planned — the
     * groups whose rows the ReplaceData query read and whose replacement
@@ -117,17 +114,15 @@ final class GraftTsvRowLevelOperation(
     * semantics forbid dropping rows of an affected file), column pruning
     * only (Spark still prunes to the columns the rewrite projects, which
     * includes `_file`). Row-based readers (the `_file` constant rides
-    * the row path; the rewrite is write-dominated anyway). */
+    * the row path; the rewrite is write-dominated anyway) — the
+    * `fileFilterOnly` scan selects them. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder with SupportsPushDownRequiredColumns {
       private var required: StructType = GraftTsvMeta.augment(schema)
       override def pruneColumns(requiredSchema: StructType): Unit =
         required = requiredSchema
       override def build(): Scan =
-        new GraftTsvScan(schema, required, Array.empty, path, delimiter,
-          splitBytes = 64L * 1024 * 1024, header = false, countOnly = false,
-          hconf = SerializableHadoopConf.fromSession(), partCols = partCols,
-          vectorized = false, generation = None,
+        new GraftTsvScan(schema, required, Array.empty, table,
           fileFilterOnly = true, onPlanned = Some(record))
     }
 
@@ -186,7 +181,7 @@ final class GraftTsvRowLevelOperation(
         GraftTsvPublisher.publish(f, dir, staged, label, epochMarker = None,
           truncate = false, dropped = dropped, partCols,
           sweepPrefix = s".staging-$queryId",
-          retainGenerations = retainGenerations, pinnedGens = pinnedGens)
+          retainGenerations = table.retainGenerations, pinnedGens = table.pinned)
       }
     }
 

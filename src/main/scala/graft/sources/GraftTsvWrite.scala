@@ -57,75 +57,33 @@ import org.apache.spark.sql.types._
   */
 final class GraftTsvWriteBuilder(
     schema: StructType,
-    path: String,
-    delimiter: Char,
-    info: LogicalWriteInfo,
-    tablePartCols: Seq[String] = Seq.empty,
-    tableRetain: Int = 1,
-    tablePinned: Set[Long] = Set.empty,
-    tableAutoCompactFiles: Int = 0,
-    tableAutoCompactBytes: Long = 128L * 1024 * 1024)
+    table: GraftTsvOptions,
+    info: LogicalWriteInfo)
     extends WriteBuilder with SupportsTruncate {
 
-  /** Generation-history depth kept by commit cleanup (time travel window).
-    * Write option wins over the table's own `retain.generations` property
-    * (catalog tables persist it in the descriptor); floor 1 = the
-    * concurrent-reader safety minimum, enforced at publish. */
-  private val retainGenerations: Int =
-    Option(info.options().get("retain.generations")).map { v =>
-      v.toIntOption.filter(_ >= 1).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-tsv: retain.generations must be an integer >= 1, got '$v'"))
-    }.getOrElse(tableRetain)
-
-  /** Commit-time auto-compaction threshold (write option wins over the
-    * table property; 0 = off). Applies to BATCH commits on the main
-    * lineage only — a streaming epoch sink keeps its per-epoch latency
-    * (schedule `CALL g.system.compact` out of band, or read via the
-    * changes feed which is rewrite-exact anyway), and a branch commit
-    * never mutates main's layout. */
-  private val autoCompactFiles: Int =
-    Option(info.options().get("compact.auto.files")).map { v =>
-      v.toIntOption.filter(_ >= 2).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-tsv: compact.auto.files must be an integer >= 2, got '$v'"))
-    }.getOrElse(tableAutoCompactFiles)
-
-  private val autoCompactBytes: Long =
-    Option(info.options().get("compact.auto.target.bytes")).map { v =>
-      v.toLongOption.filter(_ >= 1).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-tsv: compact.auto.target.bytes must be a positive byte " +
-            s"count, got '$v'"))
-    }.getOrElse(tableAutoCompactBytes)
+  /** The table's options under this write's: per-write retention,
+    * auto-compaction, stats block size, branch and (non-empty) partition
+    * columns win; location and delimiter are the table's. Auto-compaction
+    * applies to BATCH commits on the main lineage only — a streaming
+    * epoch sink keeps its per-epoch latency (schedule `CALL
+    * g.system.compact` out of band, or read via the changes feed which is
+    * rewrite-exact anyway), and a branch commit never mutates main's
+    * layout. BRANCH WRITES (`.option("branch", name)`) publish a
+    * `_gen-N.b-<name>` manifest over the branch's own lineage; the branch
+    * must already exist (the branch procedure seeds its base manifest). */
+  private val opts = table.forWrite(info.options())
+  import opts.{blockBytes, branch, delimiter, partCols, path, pinned, retainGenerations}
 
   private var truncateOnCommit = false
 
-  /** BRANCH WRITES (`.option("branch", name)`): the commit publishes a
-    * `_gen-N.b-<name>` manifest over the branch's own lineage — main
-    * readers stay on the unsuffixed chain and never see it. The branch
-    * must already exist (the branch procedure seeds its base manifest);
-    * name charset is validated here so a typo fails at plan time. */
-  private val branchOpt: Option[String] =
-    Option(info.options().get("branch")).map { b =>
-      require(GraftTsvManifest.validBranchName(b),
-        s"graft-tsv: invalid branch name '$b' (letters, digits, '_', '-')")
-      b
-    }
-
   override def truncate(): WriteBuilder = { truncateOnCommit = true; this }
 
-  /** Hive-partitioned OUTPUT layout: `.option("partition.columns", ...)`
-    * on the write (the DSv2 path-based writer has no partitionBy seam
-    * without a catalog, so the option carries it — symmetric with the
-    * read side), or the TABLE's declared partitioning when writing
-    * through the graft catalog (`tablePartCols` — SQL INSERTs carry no
-    * write options, the table metadata is authoritative). */
-  private val partCols: Seq[String] = {
-    val opt = Option(info.options().get("partition.columns")).toSeq
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-    if (opt.nonEmpty) opt else tablePartCols
-  }
+  /** Hive-partitioned OUTPUT layout: `partition.columns` on the write
+    * (the DSv2 path-based writer has no partitionBy seam without a
+    * catalog, so the option carries it — symmetric with the read side),
+    * or the TABLE's declared partitioning when writing through the graft
+    * catalog (SQL INSERTs carry no write options, the table metadata is
+    * authoritative). */
   partCols.foreach { c =>
     require(schema.fieldNames.contains(c),
       s"graft-tsv: partition column '$c' is not in the write schema")
@@ -162,8 +120,8 @@ final class GraftTsvWriteBuilder(
     override def toBatch: BatchWrite =
       new GraftTsvBatchWrite(schema, path, delimiter, truncateOnCommit,
         info.queryId(), SerializableHadoopConf.fromSession(), partCols,
-        blockBytes, retainGenerations, tablePinned, branchOpt,
-        autoCompactFiles, autoCompactBytes)
+        blockBytes, retainGenerations, pinned, branch,
+        opts.autoCompactFiles, opts.autoCompactBytes)
     /** Streaming sink = the SAME commit protocol per epoch (Complete mode
       * arrives as truncate, Append as append), with the epoch id recorded
       * in the generation manifest as the replay-idempotence token. */
@@ -172,26 +130,14 @@ final class GraftTsvWriteBuilder(
       // refuse branch targets at PLAN time — the commit-time check stays
       // as belt-and-braces, but firing there is after every task has
       // already staged the epoch's files (residue until a later sweep)
-      require(branchOpt.isEmpty,
+      require(branch.isEmpty,
         "graft-tsv: a streaming sink cannot target a branch — the epoch " +
           "replay-idempotence marker rides the MAIN manifest chain; write " +
           "to the main lineage or use foreachBatch with a batch write")
       new GraftTsvBatchWrite(schema, path, delimiter, truncateOnCommit,
         info.queryId(), SerializableHadoopConf.fromSession(), partCols,
-        blockBytes, retainGenerations, tablePinned, branchOpt)
+        blockBytes, retainGenerations, pinned, branch)
     }
-  }
-
-  /** Block-stats granularity (`stats.block.bytes`): how often the writer
-    * closes a stats block inside each file — the split-skipping
-    * resolution for large sorted files. The default trades manifest size
-    * (one escaped cell per ~4 MiB of data) for sub-file pruning at any
-    * read split size above it. */
-  private val blockBytes: Long = {
-    val b = Option(info.options().get("stats.block.bytes")).map(_.toLong)
-      .getOrElse(4L * 1024 * 1024)
-    require(b > 0, s"graft-tsv: stats.block.bytes must be positive, got $b")
-    b
   }
 }
 

@@ -232,14 +232,12 @@ class Dsv2CatalogSpec extends SparkSuite {
     // doc_id must look stats up under the historical name `id`. Prove at
     // the planning seam: only the covering file's splits are planned.
     import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
     val rootTable = s"$rootDir/ren/t"
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("v", StringType)))
     def plannedSplits(opts: Map[String, String]): Int = {
       val b = new graft.sources.GraftTsvScanBuilder(schema,
-        new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-          (opts + ("path" -> rootTable)).asJava))
+        graft.sources.GraftTsvOptions(opts + ("path" -> rootTable)))
       b.pushFilters(Array(
         org.apache.spark.sql.sources.GreaterThanOrEqual("doc_id", 150L)))
       b.build().asInstanceOf[org.apache.spark.sql.connector.read.Batch]

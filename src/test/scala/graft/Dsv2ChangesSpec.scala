@@ -44,14 +44,13 @@ class Dsv2ChangesSpec extends SparkSuite {
     // and the planning seam proves the shared files never entered the
     // scan: gen 2 excluding gen 1 plans only the appended file's splits,
     // gen 1 excluding gen 2 plans ZERO (every gen-1 file is shared)
-    import scala.jdk.CollectionConverters._
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("v", StringType)))
     def planned(gen: Long, excl: Long): Int =
       new graft.sources.GraftTsvScanBuilder(schema,
-        new org.apache.spark.sql.util.CaseInsensitiveStringMap(Map(
+        graft.sources.GraftTsvOptions(Map(
           "path" -> s"$rootDir/db/a", "generation" -> gen.toString,
-          "diff.exclude.generation" -> excl.toString).asJava))
+          "diff.exclude.generation" -> excl.toString)))
         .build().asInstanceOf[org.apache.spark.sql.connector.read.Batch]
         .planInputPartitions().length
     assert(planned(2L, 1L) >= 1)

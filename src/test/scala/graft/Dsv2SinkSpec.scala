@@ -110,7 +110,8 @@ class Dsv2SinkSpec extends SparkSuite {
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(
           java.util.Collections.emptyMap())
     }
-    val write = new graft.sources.GraftTsvWriteBuilder(s, dir, '\t', info)
+    val write = new graft.sources.GraftTsvWriteBuilder(s,
+      graft.sources.GraftTsvOptions(Map("path" -> dir)), info)
       .build().toBatch
     val factory = write.createBatchWriterFactory(null)
     def row(id: Long, name: String) =
@@ -273,7 +274,8 @@ class Dsv2SinkSpec extends SparkSuite {
           new org.apache.spark.sql.util.CaseInsensitiveStringMap(
             java.util.Collections.emptyMap())
       }
-      new graft.sources.GraftTsvWriteBuilder(s, dir, '\t', info).build().toBatch
+      new graft.sources.GraftTsvWriteBuilder(s,
+        graft.sources.GraftTsvOptions(Map("path" -> dir)), info).build().toBatch
     }
     def commitOne(qid: String, id: Long, name: String): Unit = {
       val write = mkWrite(qid)

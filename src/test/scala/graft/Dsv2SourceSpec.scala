@@ -237,7 +237,7 @@ class Dsv2SourceSpec extends SparkSuite {
   }
 
   test("non-positive split.bytes is rejected, not an empty scan") {
-    Seq("-1", "0").foreach { v =>
+    Seq("-1", "0", "abc").foreach { v =>
       val e = intercept[Exception] {
         read(Map("split.bytes" -> v)).collect()
       }
@@ -245,6 +245,25 @@ class Dsv2SourceSpec extends SparkSuite {
         Option(e.getCause).exists(_.getMessage.contains("split.bytes must be positive")),
         s"split.bytes=$v: ${e.getMessage}")
     }
+  }
+
+  test("malformed option values fail with an IllegalArgumentException naming the option") {
+    def rejects(key: String)(run: => Any): Unit = {
+      val e = intercept[Exception](run)
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        Option(c.getMessage).exists(_.contains(key))), s"$key: $e")
+    }
+    val out = Files.createTempDirectory("graft_dsv2_badopt").toString
+    val s = spark
+    import s.implicits._
+    rejects("stats.block.bytes") {
+      Seq((1L, "a")).toDF("id", "v").write.format("graft-tsv")
+        .option("stats.block.bytes", "abc").mode("append").save(out)
+    }
+    rejects("generation")(read(Map("generation" -> "abc")).collect())
+    rejects("delimiter")(read(Map("delimiter" -> "")).collect())
+    rejects("delimiter")(read(Map("delimiter" -> "||")).collect())
   }
 
   test("vectorized read: ColumnarToRow above the scan, results equal the row path") {

@@ -211,18 +211,16 @@ class Dsv2StatsSpec extends SparkSuite {
     // row per split — estimateStatistics must not keep reporting the
     // manifest's table numRows (orders of magnitude above the relation's
     // post-pushdown cardinality, poisoning CBO estimates above it)
-    import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
     import org.apache.spark.sql.connector.expressions.Expression
     import org.apache.spark.sql.connector.read.SupportsReportStatistics
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
     val dir = freshDir()
     write(src(120).repartitionByRange(4, col("id")), dir)
     val nFiles = new java.io.File(dir).listFiles()
       .count(f => f.getName.startsWith("part-") && f.length > 0)
     def scanStats(pushCount: Boolean) = {
       val b = new graft.sources.GraftTsvScanBuilder(schema,
-        new CaseInsensitiveStringMap(Map("path" -> dir).asJava))
+        graft.sources.GraftTsvOptions(Map("path" -> dir)))
       if (pushCount)
         assert(b.pushAggregation(new Aggregation(
           Array(new CountStar), Array.empty[Expression])))

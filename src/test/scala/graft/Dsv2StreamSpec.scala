@@ -115,7 +115,8 @@ class Dsv2StreamSpec extends SparkSuite {
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(
           java.util.Collections.emptyMap())
     }
-    val write = new graft.sources.GraftTsvWriteBuilder(s, out, '\t', info)
+    val write = new graft.sources.GraftTsvWriteBuilder(s,
+      graft.sources.GraftTsvOptions(Map("path" -> out)), info)
       .build().toStreaming
     def commitEpoch(epoch: Long, ids: Seq[Long]): Unit = {
       val factory = write.createStreamingWriterFactory(null)
@@ -153,7 +154,8 @@ class Dsv2StreamSpec extends SparkSuite {
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(
           java.util.Collections.emptyMap())
     }
-    val write = new graft.sources.GraftTsvWriteBuilder(s, out, '\t', info)
+    val write = new graft.sources.GraftTsvWriteBuilder(s,
+      graft.sources.GraftTsvOptions(Map("path" -> out)), info)
       .build().toStreaming
     Seq(9L, 10L).foreach { epoch =>
       val w = write.createStreamingWriterFactory(null).createWriter(0, epoch, epoch)
@@ -173,8 +175,6 @@ class Dsv2StreamSpec extends SparkSuite {
     // deleted from INSIDE the window (external compaction) was silently
     // omitted from the replayed batch. The slice must hold exactly
     // end.n - start.n files or fail the monotonic contract by name.
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
     val root = Files.createTempDirectory("graft_dsv2_replay_del").toFile
     root.deleteOnExit()
     val dir = new java.io.File(root, "in"); dir.mkdirs()
@@ -182,7 +182,7 @@ class Dsv2StreamSpec extends SparkSuite {
     writeFile(dir.getAbsolutePath, "f-001.tsv", 5 until 10)
     writeFile(dir.getAbsolutePath, "f-002.tsv", 10 until 15)
     def mkStream() = new graft.sources.GraftTsvScanBuilder(schema,
-      new CaseInsensitiveStringMap(Map("path" -> dir.getAbsolutePath).asJava))
+      graft.sources.GraftTsvOptions(Map("path" -> dir.getAbsolutePath)))
       .build().toMicroBatchStream("unused")
     val s1 = mkStream()
     val start = s1.initialOffset()

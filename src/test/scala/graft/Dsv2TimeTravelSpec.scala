@@ -174,10 +174,10 @@ class Dsv2TimeTravelSpec extends SparkSuite {
             // no-match delete publishes no generation, which the model
             // does not track — guaranteed-hit keeps gen counting aligned)
             val cutoff = current.map(_._1).min + 1
-            graft.sources.GraftTsvDelete.deleteWhere(
-              schema, out, '\t', Seq.empty, header = false,
-              Array(org.apache.spark.sql.sources.LessThan("id", cutoff)),
-              retainGenerations = 3)
+            graft.sources.GraftTsvDelete.deleteWhere(schema,
+              graft.sources.GraftTsvOptions(
+                Map("path" -> out, "retain.generations" -> "3")),
+              Array(org.apache.spark.sql.sources.LessThan("id", cutoff)))
             current = current.filterNot(_._1 < cutoff)
             true
           case _ => false // delete drawn on an empty table: no commit, redraw
@@ -278,5 +278,45 @@ class Dsv2TimeTravelSpec extends SparkSuite {
     assert(q("SELECT * FROM gtt.db.t VERSION AS OF 3") == Set((9L, "z")))
     val e4 = intercept[Exception](q("SELECT * FROM gtt.db.t VERSION AS OF 1"))
     assert(e4.getMessage.contains("not available"), e4.getMessage)
+  }
+
+  test("an out-of-range retain.generations fails with one message through DDL, path table and write") {
+    val s = spark
+    import s.implicits._
+    val rootDir = Files.createTempDirectory("graft_tt_retain").toString
+    s.conf.set("spark.sql.catalog.gttr", classOf[graft.sources.GraftTsvCatalog].getName)
+    s.conf.set("spark.sql.catalog.gttr.root", rootDir)
+    s.sql("CREATE NAMESPACE gttr.db")
+    s.sql("CREATE TABLE gttr.db.t (id BIGINT, v STRING) USING `graft-tsv`")
+    val df = Seq((1L, "a")).toDF("id", "v")
+    val viaDdl = intercept[IllegalArgumentException](s.sql(
+      """CREATE TABLE gttr.db.bad (id BIGINT) USING `graft-tsv`
+        TBLPROPERTIES ('retain.generations' = '0')"""))
+    val viaPath = intercept[IllegalArgumentException](
+      df.write.format("graft-tsv").option("retain.generations", "0")
+        .mode("append").save(tmp()))
+    val viaWrite = intercept[IllegalArgumentException](
+      df.writeTo("gttr.db.t").option("retain.generations", "0").append())
+    val msgs = Seq(viaDdl, viaPath, viaWrite).map(_.getMessage)
+    assert(msgs.distinct.size == 1 && msgs.head.contains("retain.generations"),
+      msgs.mkString("\n"))
+  }
+
+  test("a per-write retain.generations beats the table's TBLPROPERTIES value") {
+    val s = spark
+    import s.implicits._
+    val rootDir = Files.createTempDirectory("graft_tt_retain_win").toString
+    s.conf.set("spark.sql.catalog.gttw", classOf[graft.sources.GraftTsvCatalog].getName)
+    s.conf.set("spark.sql.catalog.gttw.root", rootDir)
+    s.sql("CREATE NAMESPACE gttw.db")
+    s.sql("""CREATE TABLE gttw.db.t (id BIGINT, v STRING) USING `graft-tsv`
+      TBLPROPERTIES ('retain.generations' = '1')""")
+    (1L to 3L).foreach { i =>
+      Seq((i, "x")).toDF("id", "v").writeTo("gttw.db.t")
+        .option("retain.generations", "3").append()                  // gen i
+    }
+    // the table alone (retain 1) would have reclaimed generation 1 at gen 3
+    assert(s.sql("SELECT id FROM gttw.db.t VERSION AS OF 1").collect()
+      .map(_.getLong(0)).toSeq == Seq(1L))
   }
 }

@@ -35,11 +35,10 @@ class Dsv2ZorderSpec extends SparkSuite {
     * at `gen` — the planning seam the rewrite is supposed to move. */
   private def plannedFiles(table: String, gen: Long, c: String,
       lo: Long, hi: Long): Int = {
-    import scala.jdk.CollectionConverters._
     val b = new graft.sources.GraftTsvScanBuilder(schema,
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(Map(
+      graft.sources.GraftTsvOptions(Map(
         "path" -> s"$rootDir/db/$table",
-        "generation" -> gen.toString).asJava))
+        "generation" -> gen.toString)))
     b.pushFilters(Array(
       org.apache.spark.sql.sources.GreaterThanOrEqual(c, lo),
       org.apache.spark.sql.sources.LessThanOrEqual(c, hi)))
