@@ -7,14 +7,14 @@ import org.apache.spark.sql.SparkSession
   * and the trained BPE merge table (q_bpe_encode).
   *
   * The artifact root is a STABLE temp path keyed by the source parquet's
-  * length+mtime (the SourceParity.roundTrip scheme) AND a hash of the
-  * build recipe's constants: regenerated testdata or a changed build
-  * parameter can never be served a stale artifact, because either change
-  * simply keys a fresh root. The done-marker is written only after EVERY build
-  * step committed, so a crashed build is rebuilt, never half-read. In
-  * production the root would be a table location in the catalog; the
-  * lifecycle (signature → build-or-reuse → marker) is the part that
-  * carries over.
+  * length+mtime (the SourceParity.roundTrip scheme) AND a digest of the
+  * data dir and the build recipe's constants: regenerated testdata or a
+  * changed build parameter can never be served a stale artifact, because
+  * either change simply keys a fresh root. The done-marker is written only
+  * after EVERY build step committed, so a crashed build is rebuilt, never
+  * half-read. In production the root would be a table location in the
+  * catalog; the lifecycle (signature → build-or-reuse → marker) is the
+  * part that carries over.
   */
 object ArtifactStore {
 
@@ -22,20 +22,25 @@ object ArtifactStore {
     *
     * `recipe` is a string spelling out every constant/expression the build
     * depends on (merge count, quantization expr, seed pools, probe
-    * widths…): the artifact is keyed by its hash exactly as it is keyed by
-    * the source signature, so a CODE or parameter change with unchanged
+    * widths…): the artifact is keyed by it exactly as it is keyed by the
+    * source signature, so a CODE or parameter change with unchanged
     * testdata keys a fresh root instead of serving a stale /tmp artifact
     * built by the old recipe (which would surface as a confusing oracle
-    * mismatch in the serving-path query, ADVICE r14). */
+    * mismatch in the serving-path query, ADVICE r14). The data dir's
+    * canonical path, the table and the recipe enter through one SHA-256
+    * digest, printed in full: two dirs or recipes that merely share a
+    * 32-bit hash (`…/Aa` and `…/BB` have equal `String.hashCode`) key
+    * distinct roots. */
   def root(dir: String, table: String, name: String, recipe: String): String = {
     val src = new java.io.File(graft.sources.Tables.path(dir, table))
     val sig = java.lang.Long.toHexString(
       src.length * 1000003L + src.lastModified)
-    val rec = java.lang.Long.toHexString(
-      recipe.foldLeft(1125899906842597L)((h, c) => h * 31 + c) & 0xffffffffL)
+    val key = java.security.MessageDigest.getInstance("SHA-256").digest(
+      Seq(new java.io.File(dir).getCanonicalPath, table, recipe)
+        .mkString("\u0000").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
     java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_${name}_${Integer.toHexString(dir.hashCode)}_${sig}_$rec")
-      .toString
+      s"graft_${name}_${key}_$sig").toString
   }
 
   private def marker(root: String) =

@@ -1297,35 +1297,6 @@ object Catalog {
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .distinct()
 
-  /** Net (doc_id, text) change weights since the base snapshot of
-    * graft-tsv table `tn`, from the changes feed — the documents twin of
-    * Graph's privmNetDelta. w > 0 = net insert, w < 0 = net delete; an
-    * UPDATE nets to (-1 old text, +1 new text). Shared with the BM25
-    * index maintenance (both signs) and the multimodal pipeline
-    * maintenance (adds only — the caller filters). */
-  private[queries] def docsNetDelta(
-      spark: SparkSession, root: String, tn: String): DataFrame = {
-    val tdir = new org.apache.hadoop.fs.Path(s"$root/db/$tn")
-    val tfs = tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val headGen = tfs.listStatus(tdir).map(_.getPath.getName)
-      .flatMap(graft.sources.GraftTsvManifest.genNumber).max
-    if (headGen <= 1L)
-      spark.range(0).select(col("id").as("doc_id"), lit("").as("text"),
-        col("id").as("w"))
-    else {
-      val cat = spark.sessionState.catalogManager.catalog("gparity")
-        .asInstanceOf[graft.sources.GraftTsvCatalog]
-      cat.changes(spark,
-          org.apache.spark.sql.connector.catalog.Identifier.of(
-            Array("db"), tn), "1", headGen.toString)
-        .select(col("doc_id"), col("text"),
-          when(col(graft.sources.GraftTsvMeta.ChangeCol) === "insert",
-            lit(1L)).otherwise(lit(-1L)).as("sgn0"))
-        .groupBy("doc_id", "text").agg(sum(col("sgn0")).as("w"))
-        .filter(col("w") =!= 0)
-    }
-  }
-
   /** q_pipeline_multimodal_ivm's builder. `mark`: "p1" (state served),
     * "delta" (delta edge sets materialized),
     * "resume:r1=<cold rounds>:r2=<resume rounds>:dt=<delta text
@@ -1352,7 +1323,8 @@ object Catalog {
     base.writeTo(t).append()                                       // gen 1
     docs.filter(col("doc_id") >= cutoff).writeTo(t).append()       // gen 2
     val net = graft.Checkpoints.truncate(
-      docsNetDelta(spark, root, tn).filter(col("w") > 0))
+      Graph.netDelta(spark, root, tn, Seq("doc_id", "text"), "w")
+        .filter(col("w") > 0))
 
     // delta TEXT edges: new docs' band memberships, old members fetched
     // from the index by bucket key, pairs kept only with >= 1 new side

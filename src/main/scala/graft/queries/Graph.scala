@@ -632,34 +632,32 @@ ORDER BY pr DESC, node_id LIMIT 50"""
     (s"gparity.db.$tn", tn, root)
   }
 
-  /** Net row delta of table `tn` since the base snapshot (gen 1),
-    * learned from the CHANGES FEED — reads the changed files only; a
-    * no-op mutation pair (possible at a degenerate SF) nets to an empty
-    * delta. Shared by the gate and the served path. */
-  private def privmNetDelta(
-      spark: SparkSession, root: String, tn: String): DataFrame = {
+  /** Net row delta of fresh table `tn` (columns exactly `keys`) since its
+    * base snapshot (gen 1), read off the SIGNED changes feed
+    * ([[graft.sources.GraftTsvCatalog.netChanges]] — the changed files
+    * only, one aggregate): (`keys`…, `sgn`), sgn > 0 net inserted copies,
+    * < 0 net deleted. A no-op mutation pair (possible at a degenerate SF)
+    * nets to an empty delta. The one delta read every IVM window shares. */
+  private[queries] def netDelta(spark: SparkSession, root: String, tn: String,
+      keys: Seq[String], sgn: String = "sgn"): DataFrame = {
     val tdir = new org.apache.hadoop.fs.Path(s"$root/db/$tn")
-    val tfs = tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val headGen = tfs.listStatus(tdir).map(_.getPath.getName)
+    val headGen = tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(tdir).map(_.getPath.getName)
       .flatMap(graft.sources.GraftTsvManifest.genNumber).max
-    if (headGen <= 1L)
-      spark.range(0).select(col("id").as("p"), col("id").as("s"),
-        col("id").as("sgn"))
-    else {
-      val cat = spark.sessionState.catalogManager.catalog("gparity")
-        .asInstanceOf[graft.sources.GraftTsvCatalog]
-      cat.changes(spark,
-          org.apache.spark.sql.connector.catalog.Identifier.of(
-            Array("db"), tn), "1", headGen.toString)
-        .select(col("p"), col("s"),
-          when(col(graft.sources.GraftTsvMeta.ChangeCol) === "insert",
-            lit(1L)).otherwise(lit(-1L)).as("sgn0"))
-        .groupBy("p", "s").agg(sum(col("sgn0")).as("sgn"))
-        .filter(col("sgn") =!= 0L)
-    }
+    val net =
+      if (headGen <= 1L)
+        spark.table(s"gparity.db.$tn")
+          .withColumn(graft.sources.GraftTsvMeta.NetCol, lit(0L)).limit(0)
+      else
+        spark.sessionState.catalogManager.catalog("gparity")
+          .asInstanceOf[graft.sources.GraftTsvCatalog]
+          .netChanges(spark, org.apache.spark.sql.connector.catalog
+            .Identifier.of(Array("db"), tn), "1", headGen.toString)
+    net.select(keys.map(col) :+
+      col(graft.sources.GraftTsvMeta.NetCol).as(sgn): _*)
   }
 
-  /** O(delta) directed-edge frame + the state patch off it: [[privmNetDelta]]'s
+  /** O(delta) directed-edge frame + the state patch off it: [[netDelta]]'s
     * net pairs expanded to both directions, then the converged state s1
     * patched by broadcast joins — restores the telescoped-cin invariant
     * over the FINAL edge set (class doc); lpu carries, so the resumed
@@ -783,7 +781,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       val eps = Scale / (PrEpsDiv * vCnt)
       val prBase = (Scale * 15L) / (100L * vCnt)
       val dpairs = graft.Checkpoints.truncate(
-        privmNetDelta(spark, root, tn))                 // O(delta) rows
+        netDelta(spark, root, tn, Seq("p", "s")))  // O(delta) rows
       mark("feed")
 
       val s1 = spark.read.parquet(s"$stateRoot/state")
@@ -889,9 +887,9 @@ ORDER BY pr DESC, node_id LIMIT 50"""
         graft.Checkpoints.release(ac) // last reader was the gen-3 append
 
         // the delta from the changes feed, then the O(delta) broadcast
-        // patch of the converged state (privmNetDelta/privmPatch — shared
+        // patch of the converged state (netDelta/privmPatch — shared
         // with the served path, which ScaleStress phases prices separately)
-        val dpairs = privmNetDelta(spark, root, tn)
+        val dpairs = netDelta(spark, root, tn, Seq("p", "s"))
         val (patched, dedges) = privmPatch(s1, dpairs, prBase)
 
         // phase 2: resume on the FINAL graph (the table read is now the
@@ -1562,7 +1560,7 @@ ORDER BY f.node_id"""
     adds.writeTo(t).append()                                      // gen 2
     graft.Checkpoints.release(ac)
     val dpairs = graft.Checkpoints.truncate(
-      privmNetDelta(spark, root, tn))
+      netDelta(spark, root, tn, Seq("p", "s")))
     val dedges = dpairs
       .select(col("p").as("u"), (col("s") + Off).as("v"))
       .unionByName(dpairs.select((col("s") + Off).as("u"), col("p").as("v")))
@@ -1653,7 +1651,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
     spark.catalog.dropTempView(dv)
     graft.Checkpoints.release(ef)
     val dpairs = graft.Checkpoints.truncate(
-      privmNetDelta(spark, root, tn))                  // all sgn = -1
+      netDelta(spark, root, tn, Seq("p", "s")))  // all sgn = -1
     val dedges = graft.Checkpoints.truncate(dpairs
       .select(col("p").as("u"), (col("s") + Off).as("v"))
       .unionByName(dpairs.select((col("s") + Off).as("u"),
@@ -1843,7 +1841,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
       adds.writeTo(t).append()                                    // gen 2
       graft.Checkpoints.release(ac)
       val dpairs = graft.Checkpoints.truncate(
-        privmNetDelta(spark, root, tn))
+        netDelta(spark, root, tn, Seq("p", "s")))
       val dedges = dpairs
         .select(col("p").as("u"), (col("s") + Off).as("v"))
         .unionByName(dpairs.select((col("s") + Off).as("u"),
@@ -2147,7 +2145,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       spark.catalog.dropTempView(dv)
       graft.Checkpoints.release(ef)
       val dpairs = graft.Checkpoints.truncate(
-        privmNetDelta(spark, root, tn))                   // all sgn = -1
+        netDelta(spark, root, tn, Seq("p", "s")))  // all sgn = -1
       val dedges = graft.Checkpoints.truncate(dpairs
         .select(col("p").as("u"), (col("s") + Off).as("v"))
         .unionByName(dpairs.select((col("s") + Off).as("u"),
@@ -2240,7 +2238,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       adds.writeTo(t).append()                                      // gen 3
       graft.Checkpoints.release(ac)
       val dpairs = graft.Checkpoints.truncate(
-        privmNetDelta(spark, root, tn))                  // BOTH signs
+        netDelta(spark, root, tn, Seq("p", "s")))  // BOTH signs
       def directed(df: DataFrame): DataFrame = df
         .select(col("p").as("u"), (col("s") + Off).as("v"))
         .unionByName(df.select((col("s") + Off).as("u"), col("p").as("v")))
@@ -2389,127 +2387,122 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
   // telescope back to the full pair set — is q_triangles' own SQL.
   // =========================================================================
 
-  private[graft] val triIvmRecipe: String = "triivm-v1:add=31/41"
+  private[graft] val triIvmRecipe: String = "triivm-v2:add=31/41"
 
   /** q_triangles_ivm's builder. `mark`: "p1", "delta",
     * "apply:dt=<delta triangles>". */
   private[graft] def trianglesIvmBuild(
       spark: SparkSession, dir: String,
       mark: String => Unit = _ => ()): DataFrame = {
-    // the co-purchase pair set is the EXPENSIVE prologue here (per-order
-    // collect_set + pair explosion + distinct — q_triangles' own first
-    // stage): materialized once (OPTIMIZATION r19) instead of re-run by
-    // each of the two appends below; released after the last
-    val ef = graft.Checkpoints.truncate(triPairs(spark, dir))
-    val ac = ef.withColumn("held", (col("u") * 31L + col("v")) % 41L === 0)
-    val base0 = ac.filter(!col("held")).select("u", "v")
-    val adds = ac.filter(col("held")).select("u", "v")
+    val held = (col("u") * 31L + col("v")) % 41L === 0
+    // the artifact holds the FULL co-purchase pair set and the base
+    // counts; the pair prologue (per-order collect_set + pair explosion +
+    // distinct — q_triangles' own first stage) runs only when it is built
     val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
       "triivm_state", triIvmRecipe) { r =>
-      val (counts, d) = triCountsFrom(spark, base0)
+      val ef = graft.Checkpoints.truncate(triPairs(spark, dir))
+      val (counts, d) = triCountsFrom(spark, ef.filter(!held))
       counts.write.mode("overwrite").parquet(s"$r/counts")
       graft.Checkpoints.release(d)
-      base0.write.mode("overwrite").parquet(s"$r/edges")
+      ef.write.mode("overwrite").parquet(s"$r/edges")
+      graft.Checkpoints.release(ef)
     }
     mark("p1")
 
+    val edges = spark.read.parquet(s"$stateRoot/edges")
+    val base0 = edges.filter(!held)
     val (t, tn, root) = privmFreshTable(spark, dir, "triivm")
     spark.sql(s"""CREATE TABLE $t (u BIGINT, v BIGINT) USING `graft-tsv`
       TBLPROPERTIES ('retain.generations' = '4')""")
     base0.writeTo(t).append()                                       // gen 1
-    adds.writeTo(t).append()                                        // gen 2
-    graft.Checkpoints.release(ef)
-    // the (u, v) twin of privmNetDelta: net inserted pairs since gen 1
-    val dedges = graft.Checkpoints.truncate {
-      val tdir = new org.apache.hadoop.fs.Path(s"$root/db/$tn")
-      val tfs = tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val headGen = tfs.listStatus(tdir).map(_.getPath.getName)
-        .flatMap(graft.sources.GraftTsvManifest.genNumber).max
-      if (headGen <= 1L)
-        spark.range(0).select(col("id").as("u"), col("id").as("v"))
-      else {
-        val cat = spark.sessionState.catalogManager.catalog("gparity")
-          .asInstanceOf[graft.sources.GraftTsvCatalog]
-        cat.changes(spark,
-            org.apache.spark.sql.connector.catalog.Identifier.of(
-              Array("db"), tn), "1", headGen.toString)
-          .select(col("u"), col("v"),
-            when(col(graft.sources.GraftTsvMeta.ChangeCol) === "insert",
-              lit(1L)).otherwise(lit(-1L)).as("sgn0"))
-          .groupBy("u", "v").agg(sum(col("sgn0")).as("sgn"))
-          .filter(col("sgn") > 0).select(col("u"), col("v"))
-      }
-    }
-    val baseCnt = spark.read.parquet(s"$stateRoot/counts")
+    edges.filter(held).writeTo(t).append()                          // gen 2
+    // the FINAL graph is the base pairs plus the net inserted ones
+    triApply(spark, root, tn, 1L, spark.read.parquet(s"$stateRoot/counts"),
+      mark)(base0.unionByName(_))
+  }
+
+  /** The delta window both triangle builders share, after the mutations
+    * committed to fresh table `tn`: the net delta edges of sign `sign`
+    * (+1 inserted, −1 deleted) come off the changes feed, their
+    * emptiness off the same checkpoint job (a max flag, exact in both
+    * checkpoint modes). A non-empty delta counts, per node, the triangles
+    * of `graph(delta)` — the FINAL graph for adds, the PRE-delete graph
+    * for deletes — that contain >= 1 delta edge, each attributed to its
+    * SMALLEST delta edge, and splices them onto `baseCnt` with that sign.
+    * Returns the top-20 (node, n_tri). */
+  private def triApply(spark: SparkSession, root: String, tn: String,
+      sign: Long, baseCnt: DataFrame, mark: String => Unit)(
+      graph: DataFrame => DataFrame): DataFrame = {
+    val (dedges, nonEmpty) = truncateObserved(
+      netDelta(spark, root, tn, Seq("u", "v"))
+        .filter(col("sgn") * sign > 0L).select("u", "v"),
+      max(lit(1L)))
     mark("delta")
-    val res =
-      if (dedges.head(1).isEmpty) {
-        mark("apply:dt=0")
-        // released on BOTH branches (ADVICE r19) — the non-empty arm
-        // releases after the bounded top-20 is localized
-        graft.Checkpoints.release(dedges)
-        baseCnt.orderBy(desc("n_tri"), asc("node")).limit(20)
-      } else {
-        // FINAL-graph adjacency, restricted to the delta endpoints: the
-        // corpus-sized edge frame is touched by one map-only scan +
-        // broadcast semi-join — the maintenance never re-closes it
-        val ends = dedges.select(col("u").as("n"))
-          .unionByName(dedges.select(col("v").as("n"))).distinct()
-        val finE = spark.read.parquet(s"$stateRoot/edges")
-          .unionByName(dedges)
-        val touched = finE.select(col("u").as("src"), col("v").as("dst"))
-          .unionByName(finE.select(col("v").as("src"), col("u").as("dst")))
-          .join(broadcast(ends), col("src") === col("n"), "left_semi")
-        val adj = touched.groupBy("src")
-          .agg(sort_array(collect_set(col("dst"))).as("nb"))
-        // per delta edge: common neighbors in the final graph = the new
-        // triangles through it; attribute each to its SMALLEST delta edge
-        val cand = dedges
-          .join(adj.select(col("src").as("au"), col("nb").as("nu")),
-            col("u") === col("au"))
-          .join(adj.select(col("src").as("av"), col("nb").as("nv")),
-            col("v") === col("av"))
-          .select(col("u"), col("v"),
-            explode(expr("array_intersect(nu, nv)")).as("w"))
-        val d1 = dedges.select(col("u").as("du1"), col("v").as("dv1"))
-          .withColumn("e1", lit(true))
-        val d2 = dedges.select(col("u").as("du2"), col("v").as("dv2"))
-          .withColumn("e2", lit(true))
-        val mine = cand
-          .join(broadcast(d1),
-            least(col("u"), col("w")) === col("du1") &&
-              greatest(col("u"), col("w")) === col("dv1"), "left")
-          .join(broadcast(d2),
-            least(col("v"), col("w")) === col("du2") &&
-              greatest(col("v"), col("w")) === col("dv2"), "left")
-          .filter(
-            !(coalesce(col("e1"), lit(false)) &&
-              struct(least(col("u"), col("w")),
-                greatest(col("u"), col("w"))) <
-                struct(col("u"), col("v"))) &&
-            !(coalesce(col("e2"), lit(false)) &&
-              struct(least(col("v"), col("w")),
-                greatest(col("v"), col("w"))) <
-                struct(col("u"), col("v"))))
-        val dCk = graft.Checkpoints.truncate(mine
-          .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
-          .groupBy("node").agg(count(lit(1)).as("dn")))
-        val nDt = dCk.agg(sum(col("dn"))).head() // 3 rows per triangle
-        mark(s"apply:dt=${if (nDt.isNullAt(0)) 0L else nDt.getLong(0) / 3}")
-        val out = baseCnt
-          .join(dCk, baseCnt("node") === dCk("node"), "full_outer")
-          .select(coalesce(baseCnt("node"), dCk("node")).as("node"),
-            (coalesce(col("n_tri"), lit(0L)) +
-              coalesce(col("dn"), lit(0L))).as("n_tri"))
-          .filter(col("n_tri") > 0)
-          .orderBy(desc("n_tri"), asc("node")).limit(20)
-        val rows = out.collect().toSeq // bounded top-20 — fine to localize
-        Seq(dCk, dedges).foreach(graft.Checkpoints.release)
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), out.schema)
-          .orderBy(desc("n_tri"), asc("node"))
-      }
-    res
+    if (nonEmpty == 0L) {
+      mark("apply:dt=0")
+      // released on BOTH branches (ADVICE r19) — the non-empty arm
+      // releases after the bounded top-20 is localized
+      graft.Checkpoints.release(dedges)
+      baseCnt.orderBy(desc("n_tri"), asc("node")).limit(20)
+    } else {
+      // adjacency restricted to the delta endpoints: the corpus-sized
+      // edge frame is touched by one map-only scan + broadcast semi-join
+      // — the maintenance never re-closes it
+      val ends = dedges.select(col("u").as("n"))
+        .unionByName(dedges.select(col("v").as("n"))).distinct()
+      val g = graph(dedges)
+      val touched = g.select(col("u").as("src"), col("v").as("dst"))
+        .unionByName(g.select(col("v").as("src"), col("u").as("dst")))
+        .join(broadcast(ends), col("src") === col("n"), "left_semi")
+      val adj = touched.groupBy("src")
+        .agg(sort_array(collect_set(col("dst"))).as("nb"))
+      // per delta edge: common neighbors = the triangles through it;
+      // attribute each to its SMALLEST delta edge
+      val cand = dedges
+        .join(adj.select(col("src").as("au"), col("nb").as("nu")),
+          col("u") === col("au"))
+        .join(adj.select(col("src").as("av"), col("nb").as("nv")),
+          col("v") === col("av"))
+        .select(col("u"), col("v"),
+          explode(expr("array_intersect(nu, nv)")).as("w"))
+      val d1 = dedges.select(col("u").as("du1"), col("v").as("dv1"))
+        .withColumn("e1", lit(true))
+      val d2 = dedges.select(col("u").as("du2"), col("v").as("dv2"))
+        .withColumn("e2", lit(true))
+      val mine = cand
+        .join(broadcast(d1),
+          least(col("u"), col("w")) === col("du1") &&
+            greatest(col("u"), col("w")) === col("dv1"), "left")
+        .join(broadcast(d2),
+          least(col("v"), col("w")) === col("du2") &&
+            greatest(col("v"), col("w")) === col("dv2"), "left")
+        .filter(
+          !(coalesce(col("e1"), lit(false)) &&
+            struct(least(col("u"), col("w")),
+              greatest(col("u"), col("w"))) <
+              struct(col("u"), col("v"))) &&
+          !(coalesce(col("e2"), lit(false)) &&
+            struct(least(col("v"), col("w")),
+              greatest(col("v"), col("w"))) <
+              struct(col("u"), col("v"))))
+      val dCk = graft.Checkpoints.truncate(mine
+        .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
+        .groupBy("node").agg(count(lit(1)).as("dn")))
+      val nDt = dCk.agg(sum(col("dn"))).head() // 3 rows per triangle
+      mark(s"apply:dt=${if (nDt.isNullAt(0)) 0L else nDt.getLong(0) / 3}")
+      val out = baseCnt
+        .join(dCk, baseCnt("node") === dCk("node"), "full_outer")
+        .select(coalesce(baseCnt("node"), dCk("node")).as("node"),
+          (coalesce(col("n_tri"), lit(0L)) +
+            coalesce(col("dn"), lit(0L)) * sign).as("n_tri"))
+        .filter(col("n_tri") > 0)
+        .orderBy(desc("n_tri"), asc("node")).limit(20)
+      val rows = out.collect().toSeq // bounded top-20 — fine to localize
+      Seq(dCk, dedges).foreach(graft.Checkpoints.release)
+      spark.createDataFrame(
+          spark.sparkContext.parallelize(rows, 1), out.schema)
+        .orderBy(desc("n_tri"), asc("node"))
+    }
   }
 
   /** Incremental triangle gate — final pair set = base + adds = the full
@@ -2536,117 +2529,34 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
   private[graft] def trianglesIvmDelBuild(
       spark: SparkSession, dir: String,
       mark: String => Unit = _ => ()): DataFrame = {
-    // pair prologue materialized once (OPTIMIZATION r19) — re-run by the
-    // gen-1 append AND the MERGE's delete source before; released after
-    // the MERGE commits
-    val ef = graft.Checkpoints.truncate(triPairs(spark, dir))
-    val dels = ef.filter((col("u") * 37L + col("v")) % 43L === 0)
+    // the artifact holds the pair set and its counts; the pair prologue
+    // runs only when it is built
     val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
       "triivm_del_state", triIvmDelRecipe) { r =>
+      val ef = graft.Checkpoints.truncate(triPairs(spark, dir))
       val (counts, d) = triCountsFrom(spark, ef)
       counts.write.mode("overwrite").parquet(s"$r/counts")
       graft.Checkpoints.release(d)
       ef.write.mode("overwrite").parquet(s"$r/edges")
+      graft.Checkpoints.release(ef)
     }
     mark("p1")
 
+    val edges = spark.read.parquet(s"$stateRoot/edges")
     val (t, tn, root) = privmFreshTable(spark, dir, "triivmd")
     spark.sql(s"""CREATE TABLE $t (u BIGINT, v BIGINT) USING `graft-tsv`
       TBLPROPERTIES ('retain.generations' = '4')""")
-    ef.writeTo(t).append()                                          // gen 1
+    edges.writeTo(t).append()                                       // gen 1
     val dv = s"triivmd_dels_$tn"
-    dels.createOrReplaceTempView(dv)
+    edges.filter((col("u") * 37L + col("v")) % 43L === 0)
+      .createOrReplaceTempView(dv)
     spark.sql(s"""MERGE INTO $t tgt USING $dv d
       ON tgt.u = d.u AND tgt.v = d.v
       WHEN MATCHED THEN DELETE""")                                  // gen 2
     spark.catalog.dropTempView(dv)
-    graft.Checkpoints.release(ef)
-    // net DELETED pairs since gen 1, from the changes feed
-    val dedges = graft.Checkpoints.truncate {
-      val tdir = new org.apache.hadoop.fs.Path(s"$root/db/$tn")
-      val tfs = tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val headGen = tfs.listStatus(tdir).map(_.getPath.getName)
-        .flatMap(graft.sources.GraftTsvManifest.genNumber).max
-      if (headGen <= 1L)
-        spark.range(0).select(col("id").as("u"), col("id").as("v"))
-      else {
-        val cat = spark.sessionState.catalogManager.catalog("gparity")
-          .asInstanceOf[graft.sources.GraftTsvCatalog]
-        cat.changes(spark,
-            org.apache.spark.sql.connector.catalog.Identifier.of(
-              Array("db"), tn), "1", headGen.toString)
-          .select(col("u"), col("v"),
-            when(col(graft.sources.GraftTsvMeta.ChangeCol) === "insert",
-              lit(1L)).otherwise(lit(-1L)).as("sgn0"))
-          .groupBy("u", "v").agg(sum(col("sgn0")).as("sgn"))
-          .filter(col("sgn") < 0).select(col("u"), col("v"))
-      }
-    }
-    val baseCnt = spark.read.parquet(s"$stateRoot/counts")
-    mark("delta")
-    val res =
-      if (dedges.head(1).isEmpty) {
-        mark("apply:dt=0")
-        // released on BOTH branches (ADVICE r19) — the non-empty arm
-        // releases after the bounded top-20 is localized
-        graft.Checkpoints.release(dedges)
-        baseCnt.orderBy(desc("n_tri"), asc("node")).limit(20)
-      } else {
-        // PRE-delete adjacency restricted to the deleted edges' endpoints
-        val ends = dedges.select(col("u").as("n"))
-          .unionByName(dedges.select(col("v").as("n"))).distinct()
-        val touched = spark.read.parquet(s"$stateRoot/edges")
-          .select(col("u").as("src"), col("v").as("dst"))
-          .unionByName(spark.read.parquet(s"$stateRoot/edges")
-            .select(col("v").as("src"), col("u").as("dst")))
-          .join(broadcast(ends), col("src") === col("n"), "left_semi")
-        val adj = touched.groupBy("src")
-          .agg(sort_array(collect_set(col("dst"))).as("nb"))
-        val cand = dedges
-          .join(adj.select(col("src").as("au"), col("nb").as("nu")),
-            col("u") === col("au"))
-          .join(adj.select(col("src").as("av"), col("nb").as("nv")),
-            col("v") === col("av"))
-          .select(col("u"), col("v"),
-            explode(expr("array_intersect(nu, nv)")).as("w"))
-        val d1 = dedges.select(col("u").as("du1"), col("v").as("dv1"))
-          .withColumn("e1", lit(true))
-        val d2 = dedges.select(col("u").as("du2"), col("v").as("dv2"))
-          .withColumn("e2", lit(true))
-        val mine = cand
-          .join(broadcast(d1),
-            least(col("u"), col("w")) === col("du1") &&
-              greatest(col("u"), col("w")) === col("dv1"), "left")
-          .join(broadcast(d2),
-            least(col("v"), col("w")) === col("du2") &&
-              greatest(col("v"), col("w")) === col("dv2"), "left")
-          .filter(
-            !(coalesce(col("e1"), lit(false)) &&
-              struct(least(col("u"), col("w")),
-                greatest(col("u"), col("w"))) <
-                struct(col("u"), col("v"))) &&
-            !(coalesce(col("e2"), lit(false)) &&
-              struct(least(col("v"), col("w")),
-                greatest(col("v"), col("w"))) <
-                struct(col("u"), col("v"))))
-        val dCk = graft.Checkpoints.truncate(mine
-          .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
-          .groupBy("node").agg(count(lit(1)).as("dn")))
-        val nDt = dCk.agg(sum(col("dn"))).head()
-        mark(s"apply:dt=${if (nDt.isNullAt(0)) 0L else nDt.getLong(0) / 3}")
-        val out = baseCnt
-          .join(dCk, baseCnt("node") === dCk("node"), "left")
-          .select(baseCnt("node").as("node"),
-            (col("n_tri") - coalesce(col("dn"), lit(0L))).as("n_tri"))
-          .filter(col("n_tri") > 0)
-          .orderBy(desc("n_tri"), asc("node")).limit(20)
-        val rows = out.collect().toSeq // bounded top-20
-        Seq(dCk, dedges).foreach(graft.Checkpoints.release)
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), out.schema)
-          .orderBy(desc("n_tri"), asc("node"))
-      }
-    res
+    // the PRE-delete graph is the base pair set itself
+    triApply(spark, root, tn, -1L, spark.read.parquet(s"$stateRoot/counts"),
+      mark)(_ => edges)
   }
 
   /** Delete-side triangle gate: the oracle is the cold kernel over the
@@ -2769,7 +2679,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       adds.writeTo(t).append()                                      // gen 2
       graft.Checkpoints.release(ac)
       val dpairs = graft.Checkpoints.truncate(
-        privmNetDelta(spark, root, tn))
+        netDelta(spark, root, tn, Seq("p", "s")))
       val lpBase = spark.read.parquet(s"$stateRoot/lp")
       mark("delta")
       val res =

@@ -1615,7 +1615,7 @@ object SourceParity {
     * sized by the DELTA, not the table — at 100 TB, "what changed since
     * the tagged snapshot my last training run read?" reads the changed
     * files, never the corpus. The deleted segment's rewritten survivors
-    * cancel in the exceptAll pair; the oracle reconstructs both arms from
+    * cancel in the signed diff; the oracle reconstructs both arms from
     * the original parquet. Planning seam, net semantics, multiplicity,
     * compact-invisibility, tags: Dsv2ChangesSpec. */
   private val qDsv2Changes = QueryDef(
@@ -2262,7 +2262,7 @@ object SourceParity {
     * (the data-engineering pull request). The branch here OVERWRITES its
     * lineage with a curated view (BUILDING segment dropped, derived BR_X
     * rows added), so the diff must show ONLY the net change — the
-    * carried-over rows cancel in the exceptAll refinement even though
+    * carried-over rows cancel in the signed-diff refinement even though
     * the overwrite physically rewrote every file. Both diff endpoints
     * resolve inside the branch manifest chain (base = the seed copy =
     * main at the branch point), so a concurrent main append after the

@@ -579,8 +579,8 @@ object TextAnalysis {
     spark.sql(
       s"UPDATE $t SET text = concat(text, ' upd42') WHERE doc_id % 7 = 4"
     )                                                               // gen 4
-    val net = graft.Checkpoints.truncate(
-      Catalog.docsNetDelta(spark, root, tn))           // (doc_id, text, w)
+    val net = graft.Checkpoints.truncate(               // (doc_id, text, w)
+      Graph.netDelta(spark, root, tn, Seq("doc_id", "text"), "w"))
     mark("delta")
 
     // tokenize ONLY the net-changed versions, signed — Σw over a

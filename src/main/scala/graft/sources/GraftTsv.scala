@@ -871,7 +871,7 @@ final class GraftTsvScan(
           // 100 TB this is what makes a changes read scale with the size
           // of the DELTA, not the table: an append's diff plans only the
           // appended files, and only rewritten files ever reach the
-          // exceptAll refinement.
+          // signed-diff aggregate (one shuffle of the changed-file rows).
           excludeGeneration match {
             case None => present
             case Some(x) =>
@@ -1521,8 +1521,8 @@ final class GraftTsvMicroBatchStream(scan: GraftTsvScan, splitBytes: Long,
   * `stream.allow.rewrites=true` opt-out accepts that re-emission
   * (downstream dedup by key, or layout-only compacts where re-reads are
   * tolerable); row-exact rewrite diffs are the batch changes feed's job
-  * (`GraftTsvCatalog.changes` — exceptAll needs two complete sides and
-  * is not expressible inside a streaming scan).
+  * (`GraftTsvCatalog.changes` — its signed aggregate needs both sides
+  * complete and is not expressible inside a streaming scan).
   *
   * CHANGE-FEED MODE (`stream.changes=true`): every batch emits BOTH
   * diff directions — added files' rows signed `insert`, dropped files'
@@ -1634,7 +1634,7 @@ final class GraftTsvGenerationStream(scan: GraftTsvScan, allowRewrites: Boolean,
     // rows appear once with each sign and CANCEL under any commutative
     // signed aggregate, so a downstream view maintained as
     // sum(sign)/sum(sign·x) is row-exact without the batch feed's
-    // two-sided exceptAll — the streaming IVM contract (q_stream_ivm).
+    // net-count aggregate — the streaming IVM contract (q_stream_ivm).
     // Compaction/zorder (pure layout rewrites) cancel to zero net effect.
     // The sign rides each split like a hive partition value
     // (GraftTsvMeta.ChangeCol is in the factory's const-column set).

@@ -343,6 +343,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     * table's rows plus a `_change_type` column (`insert` | `delete`) —
     * what Delta's CDF / Iceberg's changelog read answer, reconstructed
     * from the copy-on-write file history instead of logged change rows.
+    * It is [[netChanges]] with each row repeated |n| times.
     *
     * Plan shape (the 100 TB story): each side scans ONLY the part files
     * its manifest lists that the other's does not (`diff.exclude
@@ -350,11 +351,12 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     * byte-identical in both snapshots under the commit protocol and never
     * leaves the driver's metadata. An append's diff therefore reads just
     * the appended files; a DELETE/MERGE diff reads the rewritten files
-    * plus their originals, and the `exceptAll` pair cancels the surviving
-    * rows that were merely copied over. Multiplicity is preserved
-    * (exceptAll, not except): a row appearing twice and deleted once
-    * diffs as ONE delete. Net semantics over [from, to]: a row inserted
-    * then deleted between the endpoints does not appear.
+    * plus their originals, and ONE signed aggregate (see [[signedDiff]])
+    * cancels the surviving rows that were merely copied over — one
+    * shuffle of the changed-file rows. Multiplicity is preserved, as
+    * with `exceptAll`: a row appearing twice and deleted once diffs as
+    * ONE delete. Net semantics over [from, to]: a row inserted then
+    * deleted between the endpoints does not appear.
     *
     * This is a DataFrame API rather than a `CALL` procedure deliberately:
     * procedures return driver-materialized rows, and a changes feed is
@@ -364,8 +366,17 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     * the endpoints diffs as a value change where the data differs, not a
     * schema error. Tag names (VERSION AS OF's named pins) resolve too. */
   def changes(spark: org.apache.spark.sql.SparkSession, ident: Identifier,
-      from: String, to: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.lit
+      from: String, to: String): org.apache.spark.sql.DataFrame =
+    changeRows(netChanges(spark, ident, from, to))
+
+  /** The SIGNED changes feed: each distinct changed row of [[changes]]
+    * once, plus its net copy count [[GraftTsvMeta.NetCol]] (> 0 net
+    * inserted, < 0 net deleted, never 0). Incremental consumers that fold
+    * the delta into a sum read this directly instead of expanding and
+    * re-grouping the `_change_type` rows. */
+  private[graft] def netChanges(spark: org.apache.spark.sql.SparkSession,
+      ident: Identifier, from: String, to: String)
+      : org.apache.spark.sql.DataFrame = {
     val f = fs()
     val mp = metaPath(tableDir(ident))
     if (!f.exists(mp)) throw noSuchTable(ident)
@@ -382,9 +393,9 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     diffOf(spark, ident, fromGen, toGen, Map.empty)
   }
 
-  /** The diff scaffolding [[changes]] and [[branchChanges]] share: each
-    * side scans only the files the other endpoint's manifest lacks
-    * (`diff.exclude.generation` at file listing), the exceptAll pair
+  /** The signed diff scaffolding [[netChanges]] and [[branchChanges]]
+    * share: each side scans only the files the other endpoint's manifest
+    * lacks (`diff.exclude.generation` at file listing), [[signedDiff]]
     * refines file-level novelty to row-level change, `extraOpts` selects
     * the lineage the endpoint generations resolve in (empty = main,
     * `branch` = that branch's chain). One implementation, so the diff
@@ -392,7 +403,6 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
   private def diffOf(spark: org.apache.spark.sql.SparkSession,
       ident: Identifier, fromGen: Long, toGen: Long,
       extraOpts: Map[String, String]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.lit
     def side(gen: Long, excl: Long): org.apache.spark.sql.DataFrame = {
       val (d, opts) = tableOptions(ident, Some(gen))
       spark.read.format("graft-tsv").schema(d.schema)
@@ -400,10 +410,37 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
           + (GraftTsvOptions.ExcludeGeneration -> excl.toString))
         .load() // `path` rides the option map, same as loadTableAt
     }
-    val removed = side(fromGen, toGen) // rows of files dropped from→to
-    val added = side(toGen, fromGen)   // rows of files new in to
-    added.exceptAll(removed).withColumn("_change_type", lit("insert"))
-      .unionByName(removed.exceptAll(added).withColumn("_change_type", lit("delete")))
+    signedDiff(added = side(toGen, fromGen), removed = side(fromGen, toGen))
+  }
+
+  /** Multiset difference `added − removed` in ONE aggregate: union the
+    * sides tagged +1 / −1, group by every column, keep the rows whose
+    * summed tag is non-zero, as (row columns, [[GraftTsvMeta.NetCol]]).
+    * This is Spark's own `exceptAll` rewrite (RewriteExceptAll) with the
+    * two directions sharing one sign, so NULL grouping and NaN / −0.0
+    * normalisation are exactly `exceptAll`'s — but both sides are scanned
+    * and shuffled once, where the `exceptAll` pair scanned and shuffled
+    * each twice. */
+  private def signedDiff(added: org.apache.spark.sql.DataFrame,
+      removed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, sum}
+    val n = GraftTsvMeta.NetCol
+    added.withColumn(n, lit(1L))
+      .unionByName(removed.withColumn(n, lit(-1L)))
+      .groupBy(added.columns.toSeq.map(col): _*).agg(sum(col(n)).as(n))
+      .filter(col(n) =!= 0L)
+  }
+
+  /** A signed diff as `_change_type` rows: |n| copies of each row, tagged
+    * `insert` for n > 0 and `delete` for n < 0. */
+  private def changeRows(signed: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    val n = col(GraftTsvMeta.NetCol)
+    signed.select(signed.columns.toSeq.filter(_ != GraftTsvMeta.NetCol)
+      .map(col) :+ explode(array_repeat(
+        when(n > 0L, lit("insert")).otherwise(lit("delete")),
+        abs(n).cast("int"))).as(GraftTsvMeta.ChangeCol): _*)
   }
 
   /** BRANCH DIFF — the data-engineering code review: the net row-level
@@ -419,7 +456,6 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     * branch's own delta, never the table. */
   def branchChanges(spark: org.apache.spark.sql.SparkSession,
       ident: Identifier, name: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.lit
     val f = fs()
     val dir = tableDir(ident)
     if (!f.exists(metaPath(dir))) throw noSuchTable(ident)
@@ -434,7 +470,8 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
            else s" (branches: ${known.mkString(", ")})"))
     }
     val (base, head) = (gens.min, gens.max)
-    diffOf(spark, ident, base, head, Map(GraftTsvOptions.Branch -> name))
+    changeRows(
+      diffOf(spark, ident, base, head, Map(GraftTsvOptions.Branch -> name)))
   }
 
   /** BRANCH CONFLICT REPORT — the row-level reconciliation assist
@@ -478,33 +515,29 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     val mainCur = rootNames.flatMap(GraftTsvManifest.genNumber).max
     val branchDelta = diffOf(spark, ident, base, head, Map(GraftTsvOptions.Branch -> name))
     // main's net delta since the branch point, with CROSS-LINEAGE
-    // endpoints (same removed/added/exceptAll shape as diffOf): the
-    // branch-point side reads the branch chain's base manifest, the
-    // current side reads main's head — each excluding the other.
+    // endpoints (the same signedDiff as diffOf): the branch-point side
+    // reads the branch chain's base manifest, the current side reads
+    // main's head — each excluding the other.
     def sideAt(gen: Long, extra: Map[String, String])
         : org.apache.spark.sql.DataFrame = {
       val (d, opts) = tableOptions(ident, Some(gen))
       spark.read.format("graft-tsv").schema(d.schema)
         .options(opts ++ extra).load()
     }
-    val atBranchPoint = sideAt(base, Map(GraftTsvOptions.Branch -> name,
-      GraftTsvOptions.ExcludeGeneration -> mainCur.toString,
-      GraftTsvOptions.ExcludeLineage -> "main"))
-    val atMainHead = sideAt(mainCur, Map(
-      GraftTsvOptions.ExcludeGeneration -> base.toString,
-      GraftTsvOptions.ExcludeLineage -> s"branch:$name"))
-    val mainDelta =
-      atMainHead.exceptAll(atBranchPoint)
-        .withColumn("_change_type", lit("insert"))
-        .unionByName(atBranchPoint.exceptAll(atMainHead)
-          .withColumn("_change_type", lit("delete")))
+    val mainDelta = signedDiff(
+      added = sideAt(mainCur, Map(
+        GraftTsvOptions.ExcludeGeneration -> base.toString,
+        GraftTsvOptions.ExcludeLineage -> s"branch:$name")),
+      removed = sideAt(base, Map(GraftTsvOptions.Branch -> name,
+        GraftTsvOptions.ExcludeGeneration -> mainCur.toString,
+        GraftTsvOptions.ExcludeLineage -> "main")))
+    // per key: inserted rows = Σ positive net counts, deleted = Σ |negative|
+    val net = col(GraftTsvMeta.NetCol)
     def summary(delta: org.apache.spark.sql.DataFrame, side: String) =
       delta.groupBy(keys.map(col): _*)
         .agg(
-          sum(when(col("_change_type") === "insert", 1L).otherwise(0L))
-            .as("ins"),
-          sum(when(col("_change_type") === "delete", 1L).otherwise(0L))
-            .as("del"))
+          sum(when(net > 0L, net).otherwise(0L)).as("ins"),
+          sum(when(net < 0L, -net).otherwise(0L)).as("del"))
         .select(keys.map(col) ++ Seq(
           when(col("ins") > 0 && col("del") > 0, "update")
             .when(col("ins") > 0, "insert").otherwise("delete")

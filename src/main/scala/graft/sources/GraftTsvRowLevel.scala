@@ -26,6 +26,11 @@ object GraftTsvMeta {
     * the split). See [[GraftTsvGenerationStream]]. */
   val ChangeCol = "_change_type"
 
+  /** Net multiplicity column of the batch changes feed's SIGNED form
+    * (`GraftTsvCatalog.netChanges`): each distinct row of the diff once,
+    * with its net copy count — > 0 net inserted, < 0 net deleted. */
+  val NetCol = "_change_n"
+
   /** `fullSchema` + the virtual `_file` column appended (identity when a
     * real column already shadows the name — `SupportsMetadataColumns`
     * hides the metadata column in that case, `canRenameConflictingMetadataColumns`

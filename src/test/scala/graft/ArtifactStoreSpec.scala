@@ -77,4 +77,15 @@ class ArtifactStoreSpec extends SparkSuite {
     assert(a != b, "a changed build recipe must key a fresh root " +
       "(stale-artifact hazard, ADVICE r14)")
   }
+
+  test("the root is keyed by the full data dir path — equal String.hashCode, different roots") {
+    val base = java.nio.file.Files.createTempDirectory("graft_artifact_keys")
+    val (aa, bb) = (base.resolve("Aa").toString, base.resolve("BB").toString)
+    assert(aa.hashCode == bb.hashCode,
+      "precondition: the two dirs collide in hashCode")
+    val a = ArtifactStore.root(aa, "documents", "spec_f", "r1")
+    val b = ArtifactStore.root(bb, "documents", "spec_f", "r1")
+    assert(a != b, "two data dirs with equal hashCode must key different roots")
+    java.nio.file.Files.delete(base)
+  }
 }

@@ -3,6 +3,9 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** CHANGES FEED (generation diff) on the graft catalog
@@ -12,10 +15,11 @@ import org.apache.spark.sql.types._
   * `diff.exclude.generation`: each side lists ONLY the part files its
   * manifest has that the other's does not, so an append's diff scans just
   * the appended files and a rewrite's diff scans the rewritten pair, never
-  * the table. Correctness of the exceptAll refinement (surviving rows of a
+  * the table. Correctness of the signed-diff refinement (surviving rows of a
   * rewritten file cancel), net semantics over the interval, multiplicity,
-  * compaction invisibility, tag endpoints, and the error surface. */
-class Dsv2ChangesSpec extends SparkSuite {
+  * compaction invisibility, tag endpoints, the error surface, and the
+  * one-shuffle plan of the signed diff. */
+class Dsv2ChangesSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private val rootDir = Files.createTempDirectory("graft_changes").toString
   spark.conf.set("spark.sql.catalog.gchg",
@@ -65,7 +69,7 @@ class Dsv2ChangesSpec extends SparkSuite {
       "INSERT INTO gchg.db.d VALUES (1, 'a'), (2, 'b'), (3, 'c')") // gen 1
     spark.sql("DELETE FROM gchg.db.d WHERE id = 2")                // gen 2
     // the copy-on-write rewrite produced a NEW file holding 1 and 3; the
-    // exceptAll pair must cancel those carried-over rows
+    // signed diff must cancel those carried-over rows
     assert(diff("d", "1", "2") == Seq(("delete", 2L, "b")))
   }
 
@@ -88,6 +92,51 @@ class Dsv2ChangesSpec extends SparkSuite {
     spark.sql("INSERT INTO gchg.db.m VALUES (1, 'a')")           // gen 1
     spark.sql("INSERT INTO gchg.db.m VALUES (1, 'a'), (1, 'a')") // gen 2
     assert(diff("m", "1", "2") == Seq(("insert", 1L, "a"), ("insert", 1L, "a")))
+  }
+
+  test("NULL-bearing rows cancel and surface exactly as exceptAll did") {
+    // BIGINT columns: a NULL string field reads back as '' in the text
+    // format, a NULL number stays NULL
+    spark.sql("""CREATE TABLE gchg.db.z (id BIGINT, v BIGINT)
+      USING `graft-tsv` TBLPROPERTIES ('retain.generations' = '6')""")
+    spark.sql("INSERT INTO gchg.db.z VALUES (1, NULL), (NULL, 10), " +
+      "(NULL, NULL), (NULL, NULL), (2, 20)")                    // gen 1
+    // the rewrite carries every NULL-bearing row over: they must cancel
+    spark.sql("DELETE FROM gchg.db.z WHERE id = 2")            // gen 2
+    spark.sql("INSERT INTO gchg.db.z VALUES (NULL, NULL), (3, NULL)") // gen 3
+    spark.sql("DELETE FROM gchg.db.z WHERE v = 10")            // gen 4
+    def opt(r: org.apache.spark.sql.Row, i: Int) =
+      Option.when(!r.isNullAt(i))(r.getLong(i))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(2), opt(r, 0), opt(r, 1))).toSeq.sorted
+    def snap(g: Int) = spark.sql(s"SELECT id, v FROM gchg.db.z VERSION AS OF $g")
+    for (a <- 1 to 3; b <- (a + 1) to 4) {
+      val viaExceptAll = snap(b).exceptAll(snap(a))
+        .withColumn("_change_type", lit("insert"))
+        .unionByName(snap(a).exceptAll(snap(b))
+          .withColumn("_change_type", lit("delete")))
+      assert(rows(cat.changes(spark, ident("z"), a.toString, b.toString)) ==
+        rows(viaExceptAll), s"($a,$b)")
+    }
+    assert(rows(cat.changes(spark, ident("z"), "1", "4")) == Seq(
+      ("delete", None, Some(10L)), ("delete", Some(2L), Some(20L)),
+      ("insert", None, None), ("insert", Some(3L), None)))
+  }
+
+  test("plan shape: a copy-on-write rewrite's diff runs ONE shuffle") {
+    spark.sql("""CREATE TABLE gchg.db.s (id BIGINT, v STRING)
+      USING `graft-tsv` TBLPROPERTIES ('retain.generations' = '4')""")
+    spark.sql(
+      "INSERT INTO gchg.db.s VALUES (1, 'a'), (2, 'b'), (3, 'c')") // gen 1
+    spark.sql("DELETE FROM gchg.db.s WHERE id = 2")                // gen 2
+    val df = cat.changes(spark, ident("s"), "1", "2")
+    assert(df.collect().map(r => (r.getString(2), r.getLong(0))).toSeq ==
+      Seq(("delete", 2L)))
+    // the final AQE plan: both sides feed one signed aggregate, so one
+    // exchange (an exceptAll pair plans two)
+    val plan = df.queryExecution.executedPlan
+    val exchanges = collect(plan) { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size == 1, s"expected one shuffle:\n$plan")
   }
 
   test("compaction is layout-only: diff across a compact generation is empty") {

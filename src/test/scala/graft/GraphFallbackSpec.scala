@@ -248,6 +248,39 @@ class GraphFallbackSpec extends SparkSuite {
       s"deletes RAISED triangle counts for ${raised.take(5)}")
   }
 
+  // Each triangle window seeds from its persisted artifact: a warm run
+  // (artifact reused) must return the cold run's rows and apply mark
+  // while shuffling less — the pair prologue runs only in the cold build.
+  for ((q, build, artifact, recipe) <- Seq(
+      ("q_triangles_ivm", queries.Graph.trianglesIvmBuild _,
+        "triivm_state", queries.Graph.triIvmRecipe),
+      ("q_triangles_ivm_del", queries.Graph.trianglesIvmDelBuild _,
+        "triivm_del_state", queries.Graph.triIvmDelRecipe)))
+    test(s"$q: a warm window returns the cold window's rows and shuffles less") {
+      val root = new org.apache.hadoop.fs.Path(
+        queries.ArtifactStore.root(sfDir, "lineitem", artifact, recipe))
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(root, true)
+      val tally = new Measure.Tally(spark)
+      def run(): (Seq[Row], Seq[String], Long) = {
+        val marks = scala.collection.mutable.ArrayBuffer.empty[String]
+        val s0 = tally.snap()
+        val rows = build(spark, sfDir, marks += _).collect().toSeq
+        (rows, marks.filter(_.startsWith("apply:")).toSeq,
+          (tally.snap() - s0).shuffleBytes)
+      }
+      try {
+        val (coldRows, coldApply, coldBytes) = run()
+        val (warmRows, warmApply, warmBytes) = run()
+        assert(warmRows == coldRows,
+          s"warm rows diverged:\n$warmRows\nvs\n$coldRows")
+        assert(warmApply == coldApply && warmApply.size == 1,
+          s"$warmApply vs $coldApply")
+        assert(warmBytes < coldBytes,
+          s"warm window shuffled $warmBytes bytes, cold $coldBytes")
+      } finally spark.sparkContext.removeSparkListener(tally)
+    }
+
   // Incremental label propagation: the oracle proves the spliced
   // labeling equals the cold global fixpoint (component locality); this
   // pins the SCOPING — the recompute touches a real, proper subset of
