@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 /** Dev/reporting tool: dump the FORMATTED physical plan of a representative
   * query per operator family to PLANS.md, so the plan-hygiene claims made
   * in SCALE.md (pushdown reaching the scan, broadcast build sides, SMJ
@@ -9,6 +14,12 @@ package graft
   * the human-readable evidence.
   *
   *   sbt "runMain graft.Plans [sfDir] [outFile]"
+  *
+  * FINAL mode runs each named query once and writes its final AQE plan,
+  * followed by every exchange's `shuffleBytesWritten`, to `<outDir>/<q>.txt`
+  * — the before/after evidence a plan-changing optimization lands with:
+  *
+  *   sbt "runMain graft.Plans final <sfDir> <outDir> <queries...>"
   */
 object Plans {
   private val representative = Seq(
@@ -52,7 +63,7 @@ object Plans {
     "q_pq_topk"           -> "product quantization ANN: broadcast codebooks/ADC tables, one 3-long-per-row shuffle",
     "q_domain_mix"        -> "domain mixture reweighting: one tokenize+agg pass, 1-row budget frame broadcast back",
     "q_span_dedup"        -> "span-level exact-substring dedup: map-only window generation, ONE gram-keyed rank exchange, dup-tail-bounded doc rollup",
-    "q_prefix_join"       -> "prefix-filtered exact set-similarity join: df-annotated sorted keys, prefix-only candidate equi-join, SHJ verify (pair side builds)",
+    "q_prefix_join"       -> "prefix-filtered exact set-similarity join: one hp-keyed df window, only shared (df ≥ 2) elements regrouped, prefix-only candidate equi-join, SHJ verify over shared arrays (pair side builds)",
     "q_sorted_neighborhood" -> "sorted-neighborhood dedup: distributed global rank (range partition + offset cumsum), rank-equi-join window pairs",
     "q_label_prop"        -> "label propagation: per-round (dst,lbl) vote exchange + struct-argmin hash agg, no window sort",
     "q_bpe_pairs"         -> "BPE pair counts: corpus touched once (word-freq agg), symbol explosion over the VOCABULARY",
@@ -68,7 +79,42 @@ object Plans {
     "q_blob_neardup"      -> "perceptual blob near-dup: aHash fingerprints from the decode seam, banded-Hamming bucket pairs, bit_count(xor) rerank",
     "q_ann_recall_clustered" -> "clustered-corpus ANN recall: derived jittered copies unioned in-plan, LSH + IVF candidate paths vs broadcast exact top-k")
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    if (args.headOption.contains("final")) finalPlans(args(1), args(2), args.drop(3))
+    else formatted(args)
+
+  /** The executed (final) AQE plan of `df` in formatted mode, then one line
+    * per distinct shuffle exchange: its partitioning, origin and
+    * shuffle-write bytes. Runs `df`. */
+  private def finalPlan(df: DataFrame): String = {
+    df.collect()
+    val plan = df.queryExecution.explainString(FormattedMode)
+    val exchanges = new AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+      .distinct
+    val lines = exchanges.map { e =>
+      s"Exchange ${e.outputPartitioning}, ${e.shuffleOrigin}: " +
+        s"shuffleBytesWritten = ${e.metrics("shuffleBytesWritten").value}"
+    }
+    val total = exchanges.map(_.metrics("shuffleBytesWritten").value).sum
+    plan + "\n== Exchanges ==\n" + lines.mkString("", "\n", "\n") +
+      s"total shuffleBytesWritten = $total\n"
+  }
+
+  private def finalPlans(sfDir: String, outDir: String, names: Seq[String]): Unit = {
+    val spark = Measure.session("graft-plans", cpus = 4)
+    spark.sparkContext.setLogLevel("ERROR")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    names.foreach { name =>
+      val out = java.nio.file.Paths.get(outDir, s"$name.txt")
+      java.nio.file.Files.write(out, finalPlan(SparkEntry.queries(name)(spark, sfDir))
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      println(s"[plans] wrote $out")
+    }
+    spark.stop()
+  }
+
+  private def formatted(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
     // a fixed core count, so the plans' partition counts do not depend
@@ -83,8 +129,7 @@ object Plans {
     sb.append("broadcast builds, pinned pushdown/broadcast/top-k shapes).\n")
     representative.foreach { case (name, why) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = df.queryExecution.explainString(FormattedMode)
       sb.append(s"\n## $name — $why\n\n```\n$plan```\n")
     }
     java.nio.file.Files.write(java.nio.file.Paths.get(out),

@@ -56,7 +56,8 @@ object ScaleStress {
     "q_cosine_topk", "q_ann_recall", "q_pagerank",
     "q_stream_join", "q_stream_join_outer", "q_sessionize_native",
     "q_kmeans_assign", "q_semdedup", "q_triangles", "q_crossdoc_ngrams",
-    "q_stream_lsh_ivm", "q_blob_neardup", "q_ann_recall_clustered")
+    "q_stream_lsh_ivm", "q_blob_neardup", "q_ann_recall_clustered",
+    "q_prefix_join")
 
   private def consume(spark: SparkSession, name: String, dir: String): Unit =
     Measure.consume(SparkEntry.queries(name)(spark, dir))
@@ -148,7 +149,7 @@ object ScaleStress {
     val dir =
       if (mult <= 1) base
       else {
-        val out = s"/tmp/graft_scale_x$mult"
+        val out = corpusDir(mult)
         build(spark, base, out, mult)
         out
       }
@@ -171,6 +172,10 @@ object ScaleStress {
     }
     spark.stop()
   }
+
+  /** Where the `mult`× corpus is built and cached: under java.io.tmpdir. */
+  private def corpusDir(mult: Int): String =
+    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), s"graft_scale_x$mult").toString
 
   private def build(spark: SparkSession, base: String, out: String, mult: Int): Unit = {
     val done = new java.io.File(s"$out/_SUCCESS")
@@ -257,7 +262,7 @@ object ScaleStress {
     val queries =
       if (args.length > 1) args.drop(1).toSeq else DefaultQueries
     val base = "/root/testdata/sf0.1"
-    val out = s"/tmp/graft_scale_x$mult"
+    val out = corpusDir(mult)
 
     // SPARK_GRAFT_SCALE_FORK=1: run EVERY query in its own fresh JVM
     // (parent builds the corpus once, then forks `ScaleStress <mult> <q>`

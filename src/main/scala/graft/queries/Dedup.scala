@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Checkpoints.TruncateOps
@@ -930,7 +931,6 @@ GROUP BY t.doc_id ORDER BY doc_id"""),
       |ORDER BY name_a, name_b
       |""".stripMargin.trim),
     (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val names = tbl(spark, dir, "part")
         .groupBy(col("p_name").as("name"))
         .agg(count(lit(1)).as("n_parts"))
@@ -1006,19 +1006,30 @@ GROUP BY t.doc_id ORDER BY doc_id"""),
     * windows), which is the operator's own similarity definition, mirrored
     * exactly by the oracle.
     *
-    * Scale shape: two corpus-sized exchanges build the df-annotated
-    * per-doc sorted key arrays (hp-keyed df join, doc-keyed regroup) —
-    * the same budget the MinHash signature path pays. Candidate
+    * Scale shape: ONE corpus-sized exchange annotates document frequency
+    * (a window count by hp over the exploded sets — the window buffer
+    * spills, so a skewed df costs memory pressure, not a per-key array),
+    * and only SHARED elements (df ≥ 2) go on to the doc-keyed regroup: a
+    * df = 1 element can sit in no intersection and generate no candidate
+    * (the reference TopkCommonWords' keep-only-common-words step, applied
+    * to set elements), so singletons never leave their document. The
+    * rarest-first order puts a doc's s1 singletons first, so its shared
+    * prefix is the first p − s1 shared elements and ranks are offset by
+    * s1 — the filters see exactly the full-set n and rank. Candidate
     * generation joins ONLY prefix elements (the rarest ~20% per doc), so
     * each hp-group's pair fan-out is df²-bounded by construction of the
     * ordering — rare elements have small df; the frequent tail never
     * enters a prefix unless a doc is so small that everything is prefix,
     * and then the length filter bounds its partners. Verification joins
-    * attach the two doc-set arrays per surviving candidate — SHUFFLE_HASH
-    * pinned with the pair side as build (see the inline comment; at 16
-    * chars candidates == true pairs at sf0.1, 256/256). The doc-set frame
-    * is localCheckpoint'ed once; three consumers (df explode + both
-    * verify sides) read the materialized blocks. */
+    * attach the two docs' SHARED-element arrays per surviving candidate
+    * (exact |A∩B|: every common element has df ≥ 2; |A| + |B| from the
+    * full sizes) — SHUFFLE_HASH pinned with the pair side as build (see
+    * the inline comment; at 16 chars candidates == true pairs at sf0.1,
+    * 256/256) over the regroup's own exchange, so the array side is never
+    * re-shuffled. The doc-set frame is localCheckpoint'ed once; the df
+    * explode and the full-size lookup (16 bytes per doc) read the
+    * materialized blocks. Measured (SCALE.md §56): shuffle 7.50 → 3.86 MB
+    * at sf0.01 and 757 → 422 MB at 10× sf0.1. */
   private val PrefixShingleLen = 16
 
   private val prefixShingleSql =
@@ -1057,24 +1068,33 @@ ORDER BY doc_a, doc_b"""),
           .select(col("doc_id"), PortableHash.hash60(col("sh")).as("hp")))
         .select("doc_id", "hs")
         .truncateLineage
-      val ex = docsets.select(col("doc_id"), explode(col("hs")).as("hp"))
-      val dfreq = ex.groupBy("hp").agg(count(lit(1)).as("d"))
-      // per-doc keys sorted rarest-first: ONE doc-keyed aggregation after
-      // the hp-keyed df join; no global rank materialization — the (d, hp)
-      // tuple IS the total order, so the sort is doc-local. The df join is
-      // SHUFFLE_HASH with the no-array (hp, d) side as build: an SMJ here
-      // sorts the full exploded corpus on hp twice (measured dominant at
-      // 30× — the §13 SMJ trap at corpus width).
-      val keyed = ex.join(dfreq.hint("shuffle_hash"), "hp")
+      // df annotation in ONE hp-keyed exchange: a window count over the
+      // exploded sets (its buffer spills, so a skewed df is safe) — and
+      // only SHARED elements (df ≥ 2) travel on to the doc-keyed regroup.
+      // A df = 1 element sits in no intersection and pairs with nothing,
+      // so it never leaves its document (a doc with nothing shared has no
+      // keyed row). The per-doc sort order (d, hp) puts all s1 = n − |ks|
+      // singletons first, which makes the shared prefix
+      // `slice(ks, 1, p − s1)` and an element's rank s1 + pos + 1 — the
+      // length and position filters see the full n and rank. The size
+      // lookup is SHUFFLE_HASH with the 16-byte-per-doc size side as
+      // build, so the regrouped arrays keep their doc partitioning: an AQE
+      // broadcast of the ARRAY side (its pick at sf0.1) re-shuffles them.
+      val keyed = docsets.select(col("doc_id"), explode(col("hs")).as("hp"))
+        .withColumn("d", count(lit(1)).over(Window.partitionBy("hp")))
+        .filter(col("d") >= 2)
         .groupBy("doc_id")
         .agg(sort_array(collect_list(struct(col("d"), col("hp")))).as("ks"))
-        .select(col("doc_id"), col("ks"), size(col("ks")).cast("long").as("n"))
+        .join(docsets.select(col("doc_id"),
+          size(col("hs")).cast("long").as("n")).hint("shuffle_hash"), "doc_id")
+        .select(col("doc_id"), col("ks"), col("n"),
+          (col("n") - size(col("ks"))).as("s1"))
       val pref = keyed
-        .select(col("doc_id"), col("n"),
+        .select(col("doc_id"), col("n"), col("s1"),
           posexplode(expr(
-            "slice(ks, 1, cast(n - ((8 * n + 9) div 10) + 1 as int))")))
+            "slice(ks, 1, cast(greatest(n - ((8 * n + 9) div 10) + 1 - s1, 0) as int))")))
         .select(col("doc_id"), col("n"),
-          (col("pos") + 1).cast("long").as("rk"), col("col.hp").as("hp"))
+          (col("s1") + col("pos") + 1).as("rk"), col("col.hp").as("hp"))
       val cand = pref
         .select(col("doc_id").as("doc_a"), col("n").as("na"),
           col("rk").as("rka"), col("hp"))
@@ -1086,22 +1106,25 @@ ORDER BY doc_a, doc_b"""),
           "least(na - rka, nb - rkb) + 1 >= (4 * (na + nb) + 8) div 9"))
         .select("doc_a", "doc_b").distinct()
       // Verify joins are SHUFFLE_HASH with the pair side as build: the
-      // doc-set stream carries the shingle arrays, and the alternatives
-      // both lose — an SMJ sorts the array stream (the §13 trap), and an
-      // AQE broadcast of the ARRAY side is a corpus-sized driver collect
-      // (measured 51 s at 30×). The built side is candidates (first join)
-      // then candidates+one array (second) — pair-count-bounded, and the
-      // measured candidate:true-pair ratio is ~1 (see scaladoc).
+      // doc stream carries the shared-element arrays, and the
+      // alternatives both lose — an SMJ sorts the array stream (the §13
+      // trap), and an AQE broadcast of the ARRAY side is a corpus-sized
+      // driver collect (measured 51 s at 30×). The built side is
+      // candidates (first join) then candidates+one array (second) —
+      // pair-count-bounded, and the measured candidate:true-pair ratio is
+      // ~1 (see scaladoc). The shared arrays give the exact |A∩B| (every
+      // common element has df ≥ 2); |A| + |B| comes from the full sizes.
+      val sides = keyed.select(col("doc_id"), col("ks.hp").as("h"), col("n"))
       cand.hint("shuffle_hash")
-        .join(docsets.select(col("doc_id").as("doc_a"), col("hs").as("ha")),
-          "doc_a")
+        .join(sides.select(col("doc_id").as("doc_a"), col("h").as("ha"),
+          col("n").as("na")), "doc_a")
         .hint("shuffle_hash")
-        .join(docsets.select(col("doc_id").as("doc_b"), col("hs").as("hb")),
-          "doc_b")
+        .join(sides.select(col("doc_id").as("doc_b"), col("h").as("hb"),
+          col("n").as("nb")), "doc_b")
         .select(col("doc_a"), col("doc_b"),
           size(array_intersect(col("ha"), col("hb"))).cast("long")
             .as("n_inter"),
-          (size(col("ha")) + size(col("hb"))).cast("long").as("n_ab"))
+          (col("na") + col("nb")).as("n_ab"))
         .filter(expr("10 * n_inter >= 8 * (n_ab - n_inter)"))
         .select(col("doc_a"), col("doc_b"), col("n_inter"),
           (col("n_ab") - col("n_inter")).as("n_union"),
