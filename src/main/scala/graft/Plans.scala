@@ -16,8 +16,9 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   *   sbt "runMain graft.Plans [sfDir] [outFile]"
   *
   * FINAL mode runs each named query once and writes its final AQE plan,
-  * followed by every exchange's `shuffleBytesWritten`, to `<outDir>/<q>.txt`
-  * — the before/after evidence a plan-changing optimization lands with:
+  * followed by every exchange's `shuffleBytesWritten` and the shuffle-write
+  * total of all the query's jobs, to `<outDir>/<q>.txt` — the before/after
+  * evidence a plan-changing optimization lands with:
   *
   *   sbt "runMain graft.Plans final <sfDir> <outDir> <queries...>"
   */
@@ -62,8 +63,8 @@ object Plans {
     "q_bfs_hops"          -> "frontier BFS: per-wave materialized frontier, O(V) anti-join, edges never move",
     "q_pq_topk"           -> "product quantization ANN: broadcast codebooks/ADC tables, one 3-long-per-row shuffle",
     "q_domain_mix"        -> "domain mixture reweighting: one tokenize+agg pass, 1-row budget frame broadcast back",
-    "q_span_dedup"        -> "span-level exact-substring dedup: map-only window generation, ONE gram-keyed rank exchange, dup-tail-bounded doc rollup",
-    "q_prefix_join"       -> "prefix-filtered exact set-similarity join: one hp-keyed df window, only shared (df ≥ 2) elements regrouped, prefix-only candidate equi-join, SHJ verify over shared arrays (pair side builds)",
+    "q_span_dedup"        -> "span-level exact-substring dedup: map-only window generation, ONE rank exchange keyed on the 16-byte binary digest, dup-tail-bounded doc rollup",
+    "q_prefix_join"       -> "prefix-filtered exact set-similarity join: scan rows straight into one hp-keyed dedup + df window, only shared (df ≥ 2) elements regrouped, prefix-only candidate equi-join, SHJ verify over shared arrays (pair side builds)",
     "q_sorted_neighborhood" -> "sorted-neighborhood dedup: distributed global rank (range partition + offset cumsum), rank-equi-join window pairs",
     "q_label_prop"        -> "label propagation: per-round (dst,lbl) vote exchange + struct-argmin hash agg, no window sort",
     "q_bpe_pairs"         -> "BPE pair counts: corpus touched once (word-freq agg), symbol explosion over the VOCABULARY",
@@ -83,11 +84,17 @@ object Plans {
     if (args.headOption.contains("final")) finalPlans(args(1), args(2), args.drop(3))
     else formatted(args)
 
-  /** The executed (final) AQE plan of `df` in formatted mode, then one line
-    * per distinct shuffle exchange: its partitioning, origin and
-    * shuffle-write bytes. Runs `df`. */
-  private def finalPlan(df: DataFrame): String = {
+  /** The executed (final) AQE plan of the query `build` returns, in
+    * formatted mode, then one line per distinct shuffle exchange (its
+    * partitioning, origin and shuffle-write bytes), their total, and the
+    * shuffle-write total of EVERY job the query ran — building it
+    * (checkpoints, loop rounds) included, which the final plan does not
+    * show. Builds and runs the query. */
+  private def finalPlan(tally: Measure.Tally, build: => DataFrame): String = {
+    val before = tally.snap()
+    val df = build
     df.collect()
+    val allJobs = (tally.snap() - before).shuffleBytes
     val plan = df.queryExecution.explainString(FormattedMode)
     val exchanges = new AdaptiveSparkPlanHelper {}
       .collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
@@ -98,17 +105,20 @@ object Plans {
     }
     val total = exchanges.map(_.metrics("shuffleBytesWritten").value).sum
     plan + "\n== Exchanges ==\n" + lines.mkString("", "\n", "\n") +
-      s"total shuffleBytesWritten = $total\n"
+      s"total shuffleBytesWritten = $total\n" +
+      s"all jobs shuffleBytesWritten = $allJobs\n"
   }
 
   private def finalPlans(sfDir: String, outDir: String, names: Seq[String]): Unit = {
     val spark = Measure.session("graft-plans", cpus = 4)
     spark.sparkContext.setLogLevel("ERROR")
+    val tally = new Measure.Tally(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val out = java.nio.file.Paths.get(outDir, s"$name.txt")
-      java.nio.file.Files.write(out, finalPlan(SparkEntry.queries(name)(spark, sfDir))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.file.Files.write(out,
+        finalPlan(tally, SparkEntry.queries(name)(spark, sfDir))
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       println(s"[plans] wrote $out")
     }
     spark.stop()

@@ -204,9 +204,10 @@ SELECT doc_a, doc_b, n_bands FROM cand ORDER BY doc_a, doc_b"""),
     * 2^16 longs = 512 KB/row worst case — comfortably inside any executor's
     * row budget. The slice keeps the SMALLEST hashes (arrays are sorted
     * ascending), so a truncated doc degrades to "Jaccard over a bounded
-    * min-hash sample of its shingles" rather than failing. Visibility of
-    * the degradation lives in [[cappedShingleSets]]'s `n_truncated`
-    * column and in ShingleCapSpec's corpus assertion — the production
+    * min-hash sample of its shingles" rather than failing (q_prefix_join
+    * caps window POSITIONS instead, map-side: see `prefixWindowStarts`).
+    * Visibility of the degradation lives in [[cappedShingleSets]]'s
+    * `n_truncated` column and in ShingleCapSpec's corpus assertion — the production
     * pipeline itself projects the column away (counting truncated docs
     * inline would cost an extra aggregation pass on the hot path), so an
     * operator auditing a new corpus should query `cappedShingleSets(...)
@@ -1006,42 +1007,61 @@ GROUP BY t.doc_id ORDER BY doc_id"""),
     * windows), which is the operator's own similarity definition, mirrored
     * exactly by the oracle.
     *
-    * Scale shape: ONE corpus-sized exchange annotates document frequency
-    * (a window count by hp over the exploded sets — the window buffer
-    * spills, so a skewed df costs memory pressure, not a per-key array),
-    * and only SHARED elements (df ≥ 2) go on to the doc-keyed regroup: a
-    * df = 1 element can sit in no intersection and generate no candidate
-    * (the reference TopkCommonWords' keep-only-common-words step, applied
-    * to set elements), so singletons never leave their document. The
-    * rarest-first order puts a doc's s1 singletons first, so its shared
-    * prefix is the first p − s1 shared elements and ranks are offset by
-    * s1 — the filters see exactly the full-set n and rank. Candidate
-    * generation joins ONLY prefix elements (the rarest ~20% per doc), so
-    * each hp-group's pair fan-out is df²-bounded by construction of the
-    * ordering — rare elements have small df; the frequent tail never
-    * enters a prefix unless a doc is so small that everything is prefix,
-    * and then the length filter bounds its partners. Verification joins
-    * attach the two docs' SHARED-element arrays per surviving candidate
-    * (exact |A∩B|: every common element has df ≥ 2; |A| + |B| from the
-    * full sizes) — SHUFFLE_HASH pinned with the pair side as build (see
-    * the inline comment; at 16 chars candidates == true pairs at sf0.1,
-    * 256/256) over the regroup's own exchange, so the array side is never
-    * re-shuffled. The doc-set frame is localCheckpoint'ed once; the df
-    * explode and the full-size lookup (16 bytes per doc) read the
-    * materialized blocks. Measured (SCALE.md §56): shuffle 7.50 → 3.86 MB
-    * at sf0.01 and 757 → 422 MB at 10× sf0.1. */
+    * Scale shape: the corpus moves TWICE. The exploded (doc_id, hp) rows
+    * go straight from the scan into ONE hp-keyed exchange, where a window
+    * ordered by doc_id dedups each (hp, doc) and counts the df (its
+    * buffer spills, so a skewed df costs memory pressure, not a per-key
+    * array) — no per-doc set is built before it. Only SHARED elements
+    * (df ≥ 2) go on to the one doc-keyed regroup: a df = 1 element can
+    * sit in no intersection and generate no candidate (the reference
+    * TopkCommonWords' keep-only-common-words step, applied to set
+    * elements), so singletons never leave their hp partition. The full
+    * per-doc size n is the doc's window count (a scan projection, 16
+    * bytes per doc) minus its in-doc duplicates, which the regroup
+    * counts. The rarest-first order puts a doc's s1 singletons first, so
+    * its shared prefix is the first p − s1 shared elements and ranks are
+    * offset by s1 — the filters see exactly the full-set n and rank.
+    * Candidate generation joins ONLY prefix elements (the rarest ~20% per
+    * doc), so each hp-group's pair fan-out is df²-bounded by construction
+    * of the ordering — rare elements have small df; the frequent tail
+    * never enters a prefix unless a doc is so small that everything is
+    * prefix, and then the length filter bounds its partners. Verification
+    * joins attach the two docs' SHARED-element arrays per surviving
+    * candidate (exact |A∩B|: every common element has df ≥ 2; |A| + |B|
+    * from the full sizes) — SHUFFLE_HASH pinned with the pair side as
+    * build (see the inline comment; at 16 chars candidates == true pairs
+    * at sf0.1, 256/256) over the regroup's own exchange, so the array
+    * side is never re-shuffled. Building the query runs no job: every
+    * byte it writes is in its final plan. Each of the four regroup
+    * readers (both candidate sides, both verify sides) runs its own final
+    * merge over the one reused exchange; sharing that result costs
+    * shuffle bytes in every form measured (SCALE.md §57). Measured
+    * (SCALE.md §56, §57): shuffle 7.50 → 3.86 → 2.70 MB at sf0.01 and
+    * 757 → 422 → 307 MB at 10× sf0.1. */
   private val PrefixShingleLen = 16
 
   private val prefixShingleSql =
     s"""SELECT doc_id, substr(text, CAST(i AS INT), $PrefixShingleLen) AS sh FROM (
     SELECT doc_id, text, unnest(range(1, greatest(length(text)-${PrefixShingleLen - 2}, 2))) AS i FROM documents)"""
 
+  /** The start positions of a doc's 16-char windows (over `text`), with
+    * the [[MaxShinglesPerDoc]] guard applied map-side as a POSITION cap —
+    * a doc explodes at most its first 2^16 windows, so its distinct
+    * set (and every per-doc array built from it) stays ≤ the cap with no
+    * per-doc grouping ahead of the hp exchange. This differs from
+    * [[cappedShingleSets]]' smallest-hash slice: a truncated doc is
+    * represented by the shingles of its leading ~64 KB of text, so two
+    * oversized docs that agree there and differ only past it compare
+    * equal. Inert on the tested corpus (ShingleCapSpec). */
+  private val prefixWindowStarts: Column =
+    sequence(lit(1), least(
+      greatest(length(col("text")) - (PrefixShingleLen - 2), lit(2)) - 1,
+      lit(MaxShinglesPerDoc)))
+
+  /** (doc_id, sh) for every window of every doc. */
   private def prefixShingles(spark: SparkSession, dir: String): DataFrame =
     tblWide(spark, dir, "documents")
-      .select(col("doc_id"), col("text"),
-        explode(sequence(lit(1),
-          greatest(length(col("text")) - (PrefixShingleLen - 2), lit(2)) - 1))
-          .as("i"))
+      .select(col("doc_id"), col("text"), explode(prefixWindowStarts).as("i"))
       .select(col("doc_id"),
         expr(s"substring(text, i, $PrefixShingleLen)").as("sh"))
 
@@ -1063,32 +1083,48 @@ JOIN sz sb ON sb.doc_id = p.doc_b
 WHERE 10 * p.n_inter >= 8 * (sa.n + sb.n - p.n_inter)
 ORDER BY doc_a, doc_b"""),
     (spark, dir) => {
-      val docsets = cappedShingleSets(
-        prefixShingles(spark, dir)
-          .select(col("doc_id"), PortableHash.hash60(col("sh")).as("hp")))
-        .select("doc_id", "hs")
-        .truncateLineage
-      // df annotation in ONE hp-keyed exchange: a window count over the
-      // exploded sets (its buffer spills, so a skewed df is safe) — and
-      // only SHARED elements (df ≥ 2) travel on to the doc-keyed regroup.
-      // A df = 1 element sits in no intersection and pairs with nothing,
-      // so it never leaves its document (a doc with nothing shared has no
-      // keyed row). The per-doc sort order (d, hp) puts all s1 = n − |ks|
+      // The exploded (doc_id, hp) rows go straight from the scan into the
+      // ONE hp-keyed exchange. Inside each hp group, ordered by doc_id, a
+      // row whose predecessor has the same doc is a duplicate, and the
+      // count of the other rows is the df d (both windows share the
+      // exchange and the (hp, doc_id) sort; their buffers spill, so a
+      // skewed df costs memory pressure, not a per-key array). Only
+      // SHARED elements (d ≥ 2) and duplicates travel on to the doc-keyed
+      // regroup: a d = 1 element sits in no intersection and pairs with
+      // nothing, so it never leaves its hp partition.
+      val byHp = Window.partitionBy("hp")
+      val dshp = prefixShingles(spark, dir)
+        .select(col("doc_id"), PortableHash.hash60(col("sh")).as("hp"))
+        .withColumn("dup", coalesce(
+          lag(col("doc_id"), 1).over(byHp.orderBy("doc_id")) === col("doc_id"),
+          lit(false)))
+        .withColumn("d", count(when(!col("dup"), 1)).over(byHp))
+        .filter(col("d") >= 2 || col("dup"))
+      // n = the doc's window count (a projection of the scan: no hashing,
+      // no sort) minus its duplicates, counted in the regroup. That count
+      // sits beside the array build but sees only shared and duplicate
+      // rows, never the singletons (counting every exploded row there
+      // spilled 805 MB at 10×, SCALE.md §56(a)); a separate count over the
+      // distinct rows re-sorted every hp partition a second time
+      // (§57). The per-doc sort order (d, hp) puts all s1 = n − |ks|
       // singletons first, which makes the shared prefix
       // `slice(ks, 1, p − s1)` and an element's rank s1 + pos + 1 — the
       // length and position filters see the full n and rank. The size
       // lookup is SHUFFLE_HASH with the 16-byte-per-doc size side as
       // build, so the regrouped arrays keep their doc partitioning: an AQE
       // broadcast of the ARRAY side (its pick at sf0.1) re-shuffles them.
-      val keyed = docsets.select(col("doc_id"), explode(col("hs")).as("hp"))
-        .withColumn("d", count(lit(1)).over(Window.partitionBy("hp")))
-        .filter(col("d") >= 2)
+      // A doc with no shared element has an empty ks and yields no pair.
+      val keyed = dshp
         .groupBy("doc_id")
-        .agg(sort_array(collect_list(struct(col("d"), col("hp")))).as("ks"))
-        .join(docsets.select(col("doc_id"),
-          size(col("hs")).cast("long").as("n")).hint("shuffle_hash"), "doc_id")
-        .select(col("doc_id"), col("ks"), col("n"),
-          (col("n") - size(col("ks"))).as("s1"))
+        .agg(
+          sort_array(collect_list(when(!col("dup"), struct(col("d"), col("hp")))))
+            .as("ks"),
+          count(when(col("dup"), 1)).as("n_dup"))
+        .join(tblWide(spark, dir, "documents")
+          .select(col("doc_id"), size(prefixWindowStarts).cast("long").as("n_raw"))
+          .hint("shuffle_hash"), "doc_id")
+        .select(col("doc_id"), col("ks"), (col("n_raw") - col("n_dup")).as("n"))
+        .withColumn("s1", col("n") - size(col("ks")))
       val pref = keyed
         .select(col("doc_id"), col("n"), col("s1"),
           posexplode(expr(

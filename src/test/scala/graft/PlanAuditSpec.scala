@@ -1,11 +1,18 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.types.BinaryType
+
 /** Automated physical-plan guard for EVERY catalog query: no accidental
   * cartesian products, and nested-loop joins only where the operator's
   * semantics require one (tiny broadcast build sides). A regression that
   * turns an equi-join into a cross product at 100 TB is fatal — this
   * catches it at plan-build time, before any driver round. */
-class PlanAuditSpec extends SparkSuite {
+class PlanAuditSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   /** Queries whose plans legitimately contain BroadcastNestedLoopJoin:
     * range join (5-row range dim), cosine top-k (broadcast query set,
@@ -126,6 +133,28 @@ class PlanAuditSpec extends SparkSuite {
     val p = plan("q_ivf_assign")
     assert(p.contains("TakeOrderedAndProject(limit=64"),
       s"seed pool must be a per-partition heap:\n$p")
+  }
+
+  test("q21_waiting_supplier is one fact shuffle: no (l_orderkey, l_suppkey) distinct exchange") {
+    val p = plan("q21_waiting_supplier")
+    assert(!"hashpartitioning\\(l_orderkey#\\d+L, l_suppkey#".r.findFirstIn(p).isDefined,
+      s"the supplier count must not expand into a distinct-key exchange:\n$p")
+    assert("hashpartitioning\\(l_orderkey#".r.findAllIn(p).size == 1,
+      s"expected exactly one fact exchange, on l_orderkey:\n$p")
+  }
+
+  test("q_span_dedup ranks its windows on a 16-byte binary digest") {
+    val exec = SparkEntry.queries("q_span_dedup")(spark, sfDir).queryExecution.executedPlan
+    val windows = collect(exec) { case w: WindowExec => w }
+    assert(windows.nonEmpty, s"expected the gram-keyed rank window:\n$exec")
+    windows.foreach { w =>
+      assert(w.partitionSpec.map(_.dataType) == Seq(BinaryType),
+        s"rank key must be the packed digest:\n$w")
+    }
+    val gramKeyed = collect(exec) { case e: ShuffleExchangeLike => e.outputPartitioning }
+      .collect { case HashPartitioning(Seq(a: AttributeReference), _) if a.name == "g" => a }
+    assert(gramKeyed.nonEmpty && gramKeyed.forall(_.dataType == BinaryType),
+      s"gram exchange key:\n$exec")
   }
 
   test("q_sessionize_native runs through the custom Sessionize operator") {

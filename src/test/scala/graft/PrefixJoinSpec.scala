@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BinaryType}
 
 /** q_prefix_join (PPJoin-style exact set-similarity join) — the value the
   * oracle gate can't test alone: COMPLETENESS of the prefix + length +
@@ -92,6 +93,9 @@ class PrefixJoinSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     val copy = rows.find(r => r.getAs[Long]("doc_a") == 1L &&
       r.getAs[Long]("doc_b") == 3L).get
     assert(copy.getAs[Long]("n_inter") == copy.getAs[Long]("n_union"))
+    // the repeated sentence makes most windows in-doc duplicates: the
+    // sizes must still be the distinct-set sizes
+    assertComplete(dir)
   }
 
   test("q_prefix_join: complete vs in-test brute force on the sf corpus") {
@@ -141,17 +145,65 @@ class PrefixJoinSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   }
 
   test("plan shape: ONE hp-keyed exchange annotates df, no sort-merge join") {
-    val df = queries.Catalog.queries("q_prefix_join")(spark, sfDir)
-    df.collect()
-    val plan = df.queryExecution.executedPlan
-    val hpKeyed = collect(plan) { case e: ShuffleExchangeLike => e }.distinct
-      .filter(_.outputPartitioning match {
-        case HashPartitioning(Seq(a: AttributeReference), _) => a.name == "hp"
+    val tally = new Measure.Tally(spark)
+    try {
+      val before = tally.snap()
+      val df = queries.Catalog.queries("q_prefix_join")(spark, sfDir)
+      df.collect()
+      val allJobs = (tally.snap() - before).shuffleBytes
+      val plan = df.queryExecution.executedPlan
+      def keyedOn(name: String)(p: Partitioning): Boolean = p match {
+        case HashPartitioning(Seq(a: AttributeReference), _) => a.name == name
         case _ => false
-      })
-    assert(hpKeyed.size == 1, s"expected one hp-keyed exchange:\n$plan")
-    assert(collect(plan) { case j: SortMergeJoinExec => j }.isEmpty,
-      s"no sort-merge join expected:\n$plan")
+      }
+      val exchanges = collect(plan) { case e: ShuffleExchangeLike => e }.distinct
+      // building the query runs no job of its own: every shuffle byte the
+      // query writes is written by an exchange of its final plan
+      assert(allJobs == exchanges.map(_.metrics("shuffleBytesWritten").value).sum,
+        s"shuffle bytes written outside the final plan:\n$plan")
+      val hpKeyed = exchanges.filter(e => keyedOn("hp")(e.outputPartitioning))
+      assert(hpKeyed.size == 1, s"expected one hp-keyed exchange:\n$plan")
+      // the exploded (doc_id, hp) rows go straight from the scan into it
+      assert(collect(hpKeyed.head.child) { case e: ShuffleExchangeLike => e }.isEmpty,
+        s"the hp exchange must read the scan, not an earlier exchange:\n$plan")
+      // no doc-keyed exchange carries a doc's full set: each one either
+      // reads the df-annotated hp partitions (the d ≥ 2 regroup) or moves
+      // no element at all (the per-doc window count)
+      val docKeyed = exchanges.filter(e => keyedOn("doc_id")(e.outputPartitioning))
+      assert(docKeyed.nonEmpty, s"expected the doc-keyed regroup:\n$plan")
+      docKeyed.foreach { e =>
+        val afterDf = collect(e.child) {
+          case x: ShuffleExchangeLike if keyedOn("hp")(x.outputPartitioning) => x
+          case r: ReusedExchangeExec if keyedOn("hp")(r.outputPartitioning) => r
+        }.nonEmpty
+        val noElements = !e.output.exists(a => a.name == "hp" ||
+          a.dataType.isInstanceOf[ArrayType] || a.dataType == BinaryType)
+        assert(afterDf || noElements,
+          s"doc-keyed exchange carries elements ahead of the df annotation:\n$e")
+      }
+      assert(collect(plan) { case j: SortMergeJoinExec => j }.isEmpty,
+        s"no sort-merge join expected:\n$plan")
+    } finally spark.sparkContext.removeSparkListener(tally)
+  }
+
+  test("shingle cap: an oversized doc explodes only its first MaxShinglesPerDoc windows") {
+    val cap = queries.Dedup.MaxShinglesPerDoc
+    val rnd = new scala.util.Random(11)
+    def text(n: Int) = Seq.fill(n)(('a' + rnd.nextInt(26)).toChar).mkString
+    // windows 1..cap cover the first cap + 15 characters
+    val lead = text(cap + 15)
+    val dir = writeDocs(Seq(
+      1L -> (lead + text(100)),
+      2L -> (lead + text(100)),
+      3L -> lead,
+      4L -> text(200)))
+    val leadSet = shingleSets(writeDocs(Seq(1L -> lead))).count()
+    assert(leadSet > cap - 10, s"random text should have ~$cap distinct windows: $leadSet")
+    // uncapped, docs 1 and 2 hold 100 windows each that nobody else has;
+    // capped, all three docs are exactly their leading windows
+    val result = prefixJoin(dir)
+    assert(result == Map((1L, 2L) -> (leadSet, leadSet), (1L, 3L) -> (leadSet, leadSet),
+      (2L, 3L) -> (leadSet, leadSet)), s"capped result: $result")
   }
 
   test("verify joins stay SHUFFLE_HASH — arrays never sorted, never broadcast") {
