@@ -2,9 +2,12 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.graftbridge.GraftPlanBridge
 
 /** The measurement spine every dev main shares: one session factory, one
@@ -62,20 +65,59 @@ object Measure {
         spillDisk - o.spillDisk)
   }
 
+  /** One job's shuffle-write bytes, labelled with the call site of the
+    * SQL execution it ran for (plus the first `graft.queries` frame of
+    * that execution's stack, which names the kernel step when the call
+    * site is a shared helper), else its own call site. */
+  final case class JobBytes(jobId: Int, label: String, shuffleBytes: Long)
+
   /** Shuffle-write bytes and memory/disk spill of every completed stage —
     * the repo's cross-run signal: wall-clock drifts with host load, bytes
     * don't (SCALE.md §13, OPTIMIZATION_r20.md). A window's cost is the
-    * difference of two [[snap]]s. */
+    * difference of two [[snap]]s; [[jobsSince]] splits its bytes by job.
+    * A stage's bytes go to the first job that listed it (a later job
+    * that reuses its shuffle skips it). */
   final class Tally(spark: SparkSession) extends SparkListener {
     private val shuffle, spillMem, spillDisk = new AtomicLong
+    // written on the listener thread, read after a bus flush
+    private val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]
+    private val jobs =
+      new java.util.concurrent.ConcurrentSkipListMap[Int, (String, AtomicLong)]
+    private val executions =
+      new java.util.concurrent.ConcurrentHashMap[Long, String]
     spark.sparkContext.addSparkListener(this)
+
+    // AQE submits a query's stage jobs from its own threads, so a job's
+    // own call site names a thread pool; the execution's names the action
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        val step = s.details.linesIterator.map(_.trim)
+          .find(_.startsWith("graft.queries."))
+        executions.put(s.executionId,
+          s.description + step.fold("")(f => s" [$f]"))
+      case s: SparkListenerSQLExecutionEnd => executions.remove(s.executionId)
+      case _ =>
+    }
+
+    override def onJobStart(js: SparkListenerJobStart): Unit = {
+      val label = Option(js.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .flatMap(id => Option(executions.get(id.toLong)))
+        .orElse(js.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
+        .getOrElse("")
+      jobs.put(js.jobId, (label.replace('\n', ' '), new AtomicLong))
+      js.stageIds.foreach(stageJob.putIfAbsent(_, js.jobId))
+    }
 
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       val m = sc.stageInfo.taskMetrics
       if (m != null) {
-        shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        val bytes = m.shuffleWriteMetrics.bytesWritten
+        shuffle.addAndGet(bytes)
         spillMem.addAndGet(m.memoryBytesSpilled)
         spillDisk.addAndGet(m.diskBytesSpilled)
+        Option(stageJob.get(sc.stageInfo.stageId)).flatMap(j => Option(jobs.get(j)))
+          .foreach(_._2.addAndGet(bytes))
       }
     }
 
@@ -84,6 +126,21 @@ object Measure {
     def snap(): Snap = {
       GraftPlanBridge.flushListenerBus(spark.sparkContext)
       Snap(shuffle.get, spillMem.get, spillDisk.get)
+    }
+
+    /** The id the next job started after this call will get at least. */
+    def nextJob(): Int = {
+      GraftPlanBridge.flushListenerBus(spark.sparkContext)
+      if (jobs.isEmpty) 0 else jobs.lastKey + 1
+    }
+
+    /** Every job started since [[nextJob]] returned `from`, in id order. */
+    def jobsSince(from: Int): Seq[JobBytes] = {
+      import scala.jdk.CollectionConverters._
+      GraftPlanBridge.flushListenerBus(spark.sparkContext)
+      jobs.tailMap(from).asScala.toSeq.map { case (id, (label, b)) =>
+        JobBytes(id, label, b.get)
+      }
     }
   }
 

@@ -16,9 +16,11 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   *   sbt "runMain graft.Plans [sfDir] [outFile]"
   *
   * FINAL mode runs each named query once and writes its final AQE plan,
-  * followed by every exchange's `shuffleBytesWritten` and the shuffle-write
-  * total of all the query's jobs, to `<outDir>/<q>.txt` — the before/after
-  * evidence a plan-changing optimization lands with:
+  * followed by every exchange's `shuffleBytesWritten`, the shuffle-write
+  * total of all the query's jobs and that total split by job (each
+  * writing job's bytes with its description or call site), to
+  * `<outDir>/<q>.txt` — the before/after evidence a plan-changing
+  * optimization lands with:
   *
   *   sbt "runMain graft.Plans final <sfDir> <outDir> <queries...>"
   */
@@ -50,7 +52,7 @@ object Plans {
     "q_dsv2_source"      -> "custom DSv2 connector (in-reader pushdown + pruned read schema)",
     "q_dsv2_runtime_join" -> "runtime V2 filtering (realized join keys dropped in-reader)",
     "q_dsv2_partitioned"  -> "hive-partitioned TSV read (partition predicates prune files at planning)",
-    "q_dsv2_changes"      -> "changes feed (each diff side lists only the other endpoint's missing files — DiffExcludeGeneration on the scan)",
+    "q_dsv2_changes"      -> "changes feed (each diff side lists only the other endpoint's missing files — DiffExcludeGeneration on the scan; changed files under the broadcast threshold net out in one partition, no exchange)",
     "q_dsv2_zorder"       -> "z-order rewrite read-back (2-dim box predicate over the clustered table)",
     "q_kmeans_assign"     -> "Lloyd k-means: broadcast-centroid assignment + (cid, dim)-keyed update aggregate",
     "q_semdedup"          -> "semantic dedup: two-level k-means, (cid, scid)-local pair join bounds the quadratic at any corpus size",
@@ -89,12 +91,15 @@ object Plans {
     * partitioning, origin and shuffle-write bytes), their total, and the
     * shuffle-write total of EVERY job the query ran — building it
     * (checkpoints, loop rounds) included, which the final plan does not
-    * show. Builds and runs the query. */
+    * show — followed by one line per job that wrote shuffle bytes.
+    * Builds and runs the query. */
   private def finalPlan(tally: Measure.Tally, build: => DataFrame): String = {
     val before = tally.snap()
+    val firstJob = tally.nextJob()
     val df = build
     df.collect()
     val allJobs = (tally.snap() - before).shuffleBytes
+    val jobs = tally.jobsSince(firstJob)
     val plan = df.queryExecution.explainString(FormattedMode)
     val exchanges = new AdaptiveSparkPlanHelper {}
       .collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
@@ -106,7 +111,11 @@ object Plans {
     val total = exchanges.map(_.metrics("shuffleBytesWritten").value).sum
     plan + "\n== Exchanges ==\n" + lines.mkString("", "\n", "\n") +
       s"total shuffleBytesWritten = $total\n" +
-      s"all jobs shuffleBytesWritten = $allJobs\n"
+      s"all jobs shuffleBytesWritten = $allJobs\n" +
+      "== Jobs ==\n" + jobs.filter(_.shuffleBytes > 0L).map { j =>
+        f"job ${j.jobId}%d: shuffleBytesWritten = ${j.shuffleBytes}%d, ${j.label}\n"
+      }.mkString +
+      s"${jobs.size} jobs, ${jobs.count(_.shuffleBytes == 0L)} without shuffle writes\n"
   }
 
   private def finalPlans(sfDir: String, outDir: String, names: Seq[String]): Unit = {

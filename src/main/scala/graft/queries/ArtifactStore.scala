@@ -35,13 +35,18 @@ object ArtifactStore {
     val src = new java.io.File(graft.sources.Tables.path(dir, table))
     val sig = java.lang.Long.toHexString(
       src.length * 1000003L + src.lastModified)
-    val key = java.security.MessageDigest.getInstance("SHA-256").digest(
-      Seq(new java.io.File(dir).getCanonicalPath, table, recipe)
+    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+      s"graft_${name}_${dirDigest(dir, table, recipe)}_$sig").toString
+  }
+
+  /** The full SHA-256, in hex, of the data dir's canonical path and
+    * `parts`, NUL-separated: the one key for anything named after a data
+    * dir (artifact roots, the IVM windows' fresh tables). */
+  def dirDigest(dir: String, parts: String*): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(
+      (new java.io.File(dir).getCanonicalPath +: parts)
         .mkString("\u0000").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map(b => f"${b & 0xff}%02x").mkString
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_${name}_${key}_$sig").toString
-  }
 
   private def marker(root: String) =
     new org.apache.hadoop.fs.Path(root, "_GRAFT_ARTIFACT_DONE")

@@ -1426,6 +1426,7 @@ object Catalog {
       .select(col("doc_id"),
         coalesce(col("component_id"), col("doc_id")).as("component_id")))
     Seq(labels2, edges, dt, db, net).foreach(graft.Checkpoints.release)
+    Graph.privmDropTable(spark, tn)
 
     // per-stage audit — the cold pipeline's aggregates verbatim
     val keepers = graft.Checkpoints.truncate(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Checkpoints.{TruncateOps, truncateObserved}
@@ -602,12 +602,16 @@ ORDER BY pr DESC, node_id LIMIT 50"""
 
   /** Fresh nonce-keyed graft-tsv table for an ivm run + stale-sibling
     * sweep (the q_stream_ivm lesson — bench can overlap verify), shared
-    * by the gate and the served path. Returns (qualified name, table
-    * name, catalog root). */
+    * by the gate and the served path. The name is keyed by the data
+    * dir's SHA-256 digest ([[ArtifactStore.dirDigest]]), so two dirs
+    * whose paths share a 32-bit `hashCode` never sweep each other's
+    * tables. A window whose result no longer reads its table drops it
+    * ([[privmDropTable]]). Returns (qualified name, table name, catalog
+    * root). */
   private[queries] def privmFreshTable(
       spark: SparkSession, dir: String,
       prefix: String = "privm"): (String, String, String) = {
-    val h = Integer.toHexString(dir.hashCode)
+    val h = ArtifactStore.dirDigest(dir)
     val nonce = java.lang.Long.toHexString(
       System.nanoTime() ^ (Thread.currentThread().getId << 48))
     val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
@@ -631,6 +635,14 @@ ORDER BY pr DESC, node_id LIMIT 50"""
     val tn = s"${prefix}_${h}_$nonce"
     (s"gparity.db.$tn", tn, root)
   }
+
+  /** Drop a [[privmFreshTable]] table through its catalog, once the
+    * window's result no longer reads it. */
+  private[queries] def privmDropTable(spark: SparkSession, tn: String): Unit =
+    spark.sessionState.catalogManager.catalog("gparity")
+      .asInstanceOf[graft.sources.GraftTsvCatalog]
+      .dropTable(org.apache.spark.sql.connector.catalog
+        .Identifier.of(Array("db"), tn))
 
   /** Net row delta of fresh table `tn` (columns exactly `keys`) since its
     * base snapshot (gen 1), read off the SIGNED changes feed
@@ -814,6 +826,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       val rows = res.collect().toSeq
       Seq(s2, dedges, dpairs, patchedCk, edgesFin)
         .foreach(graft.Checkpoints.release)
+      privmDropTable(spark, tn)
       spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 1), res.schema)
         .orderBy(desc("pr"), asc("node_id"))
@@ -868,6 +881,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       val (r1, vCnt) = (metaRow.getLong(0), metaRow.getLong(1))
       if (vCnt == 0L) {
         graft.Checkpoints.release(ac)
+        privmDropTable(spark, tn)
         spark.range(0).select(col("id").as("node_id"), col("id").as("pr"),
           col("id").as("r1"), col("id").as("r2"))
       } else {
@@ -914,6 +928,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
         val rows = res.collect().toSeq
         Seq(s2, g2.edgesW, g2.nodes, dedges)
           .foreach(graft.Checkpoints.release)
+        privmDropTable(spark, tn)
         spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 1), res.schema)
           .orderBy(desc("pr"), asc("node_id"))
@@ -1587,6 +1602,7 @@ ORDER BY f.node_id"""
     val out = ArtifactStore.spillResult(spark, "civm_res", labels2
       .select(col("u").as("node_id"), col("lbl").as("component_id")))
     Seq(labels2, edgesFin, dpairs).foreach(graft.Checkpoints.release)
+    privmDropTable(spark, tn)
     out.orderBy("node_id")
   }
 
@@ -1697,6 +1713,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
     // released on BOTH branches (ADVICE r18): the no-op branch returned
     // the base labeling while leaking the just-created delta checkpoints
     Seq(dpairs, dedges).foreach(graft.Checkpoints.release)
+    privmDropTable(spark, tn)
     res
   }
 
@@ -1872,6 +1889,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
         d2.filter(col("dist") < BfsInf)
           .select(col("node_id"), col("dist").as("hop")))
       Seq(d2, edgesFin, dpairs).foreach(graft.Checkpoints.release)
+      privmDropTable(spark, tn)
       out.orderBy("hop", "node_id")
     }
   }
@@ -2175,6 +2193,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           }
         }
       Seq(dpairs, dedges).foreach(graft.Checkpoints.release)
+      privmDropTable(spark, tn)
       res
     }
   }
@@ -2293,6 +2312,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           }
         }
       Seq(dpairs, dedgesD, dedgesA).foreach(graft.Checkpoints.release)
+      privmDropTable(spark, tn)
       res
     }
   }
@@ -2387,7 +2407,32 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
   // telescope back to the full pair set — is q_triangles' own SQL.
   // =========================================================================
 
-  private[graft] val triIvmRecipe: String = "triivm-v2:add=31/41"
+  /** v3: the artifact also holds the base graph's adjacency
+    * ([[triAdjacency]] of the base pairs), so the delta window reads it
+    * instead of rebuilding it through an exchange. */
+  private[graft] val triIvmRecipe: String = "triivm-v3:add=31/41"
+
+  /** The adjacency both triangle artifacts persist and the add window
+    * patches with: (src, nb = sort_array(collect_set(dst))) over both
+    * directions of a (u, v) pair frame. */
+  private def triAdjacency(pairs: DataFrame): DataFrame =
+    pairs.select(col("u").as("src"), col("v").as("dst"))
+      .unionByName(pairs.select(col("v").as("src"), col("u").as("dst")))
+      .groupBy("src").agg(sort_array(collect_set(col("dst"))).as("nb"))
+
+  /** Persist a triangle artifact's base state under root `r`: the full
+    * pair set `ef` as `edges`, and the per-node counts and adjacency of
+    * the base graph `ef.filter(base)`. */
+  private def triBuildState(spark: SparkSession, dir: String,
+      base: Column)(r: String): Unit = {
+    val ef = graft.Checkpoints.truncate(triPairs(spark, dir))
+    val (counts, d) = triCountsFrom(spark, ef.filter(base))
+    counts.write.mode("overwrite").parquet(s"$r/counts")
+    graft.Checkpoints.release(d)
+    triAdjacency(ef.filter(base)).write.mode("overwrite").parquet(s"$r/adj")
+    ef.write.mode("overwrite").parquet(s"$r/edges")
+    graft.Checkpoints.release(ef)
+  }
 
   /** q_triangles_ivm's builder. `mark`: "p1", "delta",
     * "apply:dt=<delta triangles>". */
@@ -2396,29 +2441,23 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       mark: String => Unit = _ => ()): DataFrame = {
     val held = (col("u") * 31L + col("v")) % 41L === 0
     // the artifact holds the FULL co-purchase pair set and the base
-    // counts; the pair prologue (per-order collect_set + pair explosion +
-    // distinct — q_triangles' own first stage) runs only when it is built
+    // counts and adjacency; the pair prologue (per-order collect_set +
+    // pair explosion + distinct — q_triangles' own first stage) runs
+    // only when it is built
     val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
-      "triivm_state", triIvmRecipe) { r =>
-      val ef = graft.Checkpoints.truncate(triPairs(spark, dir))
-      val (counts, d) = triCountsFrom(spark, ef.filter(!held))
-      counts.write.mode("overwrite").parquet(s"$r/counts")
-      graft.Checkpoints.release(d)
-      ef.write.mode("overwrite").parquet(s"$r/edges")
-      graft.Checkpoints.release(ef)
-    }
+      "triivm_state", triIvmRecipe)(triBuildState(spark, dir, !held))
     mark("p1")
 
     val edges = spark.read.parquet(s"$stateRoot/edges")
-    val base0 = edges.filter(!held)
     val (t, tn, root) = privmFreshTable(spark, dir, "triivm")
     spark.sql(s"""CREATE TABLE $t (u BIGINT, v BIGINT) USING `graft-tsv`
       TBLPROPERTIES ('retain.generations' = '4')""")
-    base0.writeTo(t).append()                                       // gen 1
+    edges.filter(!held).writeTo(t).append()                         // gen 1
     edges.filter(held).writeTo(t).append()                          // gen 2
     // the FINAL graph is the base pairs plus the net inserted ones
-    triApply(spark, root, tn, 1L, spark.read.parquet(s"$stateRoot/counts"),
-      mark)(base0.unionByName(_))
+    val out = triApply(spark, root, tn, 1L, stateRoot, mark)
+    privmDropTable(spark, tn)
+    out
   }
 
   /** The delta window both triangle builders share, after the mutations
@@ -2426,13 +2465,22 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     * (+1 inserted, −1 deleted) come off the changes feed, their
     * emptiness off the same checkpoint job (a max flag, exact in both
     * checkpoint modes). A non-empty delta counts, per node, the triangles
-    * of `graph(delta)` — the FINAL graph for adds, the PRE-delete graph
-    * for deletes — that contain >= 1 delta edge, each attributed to its
-    * SMALLEST delta edge, and splices them onto `baseCnt` with that sign.
+    * containing >= 1 delta edge — of the FINAL graph for adds, of the
+    * PRE-delete graph for deletes — each attributed to its SMALLEST delta
+    * edge, and splices them onto the artifact's `counts` with that sign.
+    *
+    * The adjacency is the artifact's (`adj`, the base graph's, built
+    * once with the artifact) restricted to the delta endpoints by a
+    * broadcast semi-join — a map-only read, no exchange. For deletes the
+    * base graph IS the pre-delete graph; for adds each endpoint's base
+    * neighbours are unioned (`array_union`) with its neighbours in the
+    * delta itself, an O(delta) adjacency, and endpoints the base graph
+    * lacks take the delta neighbours alone. The result's top-20 is
+    * localized, so it reads neither the table nor the delta checkpoint.
     * Returns the top-20 (node, n_tri). */
   private def triApply(spark: SparkSession, root: String, tn: String,
-      sign: Long, baseCnt: DataFrame, mark: String => Unit)(
-      graph: DataFrame => DataFrame): DataFrame = {
+      sign: Long, stateRoot: String, mark: String => Unit): DataFrame = {
+    val baseCnt = spark.read.parquet(s"$stateRoot/counts")
     val (dedges, nonEmpty) = truncateObserved(
       netDelta(spark, root, tn, Seq("u", "v"))
         .filter(col("sgn") * sign > 0L).select("u", "v"),
@@ -2445,17 +2493,25 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       graft.Checkpoints.release(dedges)
       baseCnt.orderBy(desc("n_tri"), asc("node")).limit(20)
     } else {
-      // adjacency restricted to the delta endpoints: the corpus-sized
-      // edge frame is touched by one map-only scan + broadcast semi-join
-      // — the maintenance never re-closes it
       val ends = dedges.select(col("u").as("n"))
         .unionByName(dedges.select(col("v").as("n"))).distinct()
-      val g = graph(dedges)
-      val touched = g.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(g.select(col("v").as("src"), col("u").as("dst")))
+      val baseAdj = spark.read.parquet(s"$stateRoot/adj")
         .join(broadcast(ends), col("src") === col("n"), "left_semi")
-      val adj = touched.groupBy("src")
-        .agg(sort_array(collect_set(col("dst"))).as("nb"))
+      val adj =
+        if (sign < 0L) baseAdj
+        else {
+          // every endpoint has a delta neighbour, so dAdj's keys are
+          // exactly `ends`: patch the base rows, add the missing ones
+          val dAdj = triAdjacency(dedges)
+            .select(col("src").as("dsrc"), col("nb").as("dnb"))
+          baseAdj.join(broadcast(dAdj), col("src") === col("dsrc"), "left")
+            .select(col("src"), array_union(col("nb"),
+              coalesce(col("dnb"), col("nb"))).as("nb"))
+            .unionByName(dAdj
+              .join(broadcast(baseAdj.select(col("src"))),
+                col("dsrc") === col("src"), "left_anti")
+              .select(col("dsrc").as("src"), col("dnb").as("nb")))
+        }
       // per delta edge: common neighbors = the triangles through it;
       // attribute each to its SMALLEST delta edge
       val cand = dedges
@@ -2522,24 +2578,20 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
   // No recompute verb at all: deletion of graph statistics is exact
   // arithmetic, which neither components nor BFS could claim.
 
-  private[graft] val triIvmDelRecipe: String = "triivmdel-v1:del=37/43"
+  /** v2: the artifact also holds the pair set's adjacency, the
+    * PRE-delete graph's, which the delete window reads as is. */
+  private[graft] val triIvmDelRecipe: String = "triivmdel-v2:del=37/43"
 
   /** q_triangles_ivm_del's builder. `mark`: "p1", "delta",
     * "apply:dt=<triangles removed>". */
   private[graft] def trianglesIvmDelBuild(
       spark: SparkSession, dir: String,
       mark: String => Unit = _ => ()): DataFrame = {
-    // the artifact holds the pair set and its counts; the pair prologue
-    // runs only when it is built
+    // the artifact holds the pair set and its counts and adjacency; the
+    // pair prologue runs only when it is built
     val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
-      "triivm_del_state", triIvmDelRecipe) { r =>
-      val ef = graft.Checkpoints.truncate(triPairs(spark, dir))
-      val (counts, d) = triCountsFrom(spark, ef)
-      counts.write.mode("overwrite").parquet(s"$r/counts")
-      graft.Checkpoints.release(d)
-      ef.write.mode("overwrite").parquet(s"$r/edges")
-      graft.Checkpoints.release(ef)
-    }
+      "triivm_del_state", triIvmDelRecipe)(
+      triBuildState(spark, dir, lit(true)))
     mark("p1")
 
     val edges = spark.read.parquet(s"$stateRoot/edges")
@@ -2555,8 +2607,9 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       WHEN MATCHED THEN DELETE""")                                  // gen 2
     spark.catalog.dropTempView(dv)
     // the PRE-delete graph is the base pair set itself
-    triApply(spark, root, tn, -1L, spark.read.parquet(s"$stateRoot/counts"),
-      mark)(_ => edges)
+    val out = triApply(spark, root, tn, -1L, stateRoot, mark)
+    privmDropTable(spark, tn)
+    out
   }
 
   /** Delete-side triangle gate: the oracle is the cold kernel over the
@@ -2743,6 +2796,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           out.orderBy("node_id")
         }
       graft.Checkpoints.release(dpairs)
+      privmDropTable(spark, tn)
       res
     }
   }

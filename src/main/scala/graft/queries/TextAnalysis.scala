@@ -615,6 +615,7 @@ object TextAnalysis {
             .as("tf"))
         .filter(col("tf") > 0))
     graft.Checkpoints.release(net)
+    Graph.privmDropTable(spark, tn)
     val nDocs = nBase + dN
     val stats = dl1.agg(sum(col("dl")).as("t_tok"))
       .select(lit(nDocs).as("n_docs"),

@@ -871,7 +871,8 @@ final class GraftTsvScan(
           // 100 TB this is what makes a changes read scale with the size
           // of the DELTA, not the table: an append's diff plans only the
           // appended files, and only rewritten files ever reach the
-          // signed-diff aggregate (one shuffle of the changed-file rows).
+          // signed-diff aggregate (at most one shuffle of the
+          // changed-file rows, none when they are small).
           excludeGeneration match {
             case None => present
             case Some(x) =>

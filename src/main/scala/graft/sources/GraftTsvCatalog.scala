@@ -352,7 +352,9 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     * leaves the driver's metadata. An append's diff therefore reads just
     * the appended files; a DELETE/MERGE diff reads the rewritten files
     * plus their originals, and ONE signed aggregate (see [[signedDiff]])
-    * cancels the surviving rows that were merely copied over — one
+    * cancels the surviving rows that were merely copied over — with no
+    * exchange at all when the changed files fit under
+    * `spark.sql.autoBroadcastJoinThreshold` (one partition), else one
     * shuffle of the changed-file rows. Multiplicity is preserved, as
     * with `exceptAll`: a row appearing twice and deleted once diffs as
     * ONE delete. Net semantics over [from, to]: a row inserted then
@@ -396,10 +398,12 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
   /** The signed diff scaffolding [[netChanges]] and [[branchChanges]]
     * share: each side scans only the files the other endpoint's manifest
     * lacks (`diff.exclude.generation` at file listing), [[signedDiff]]
-    * refines file-level novelty to row-level change, `extraOpts` selects
-    * the lineage the endpoint generations resolve in (empty = main,
-    * `branch` = that branch's chain). One implementation, so the diff
-    * semantics cannot silently diverge between the two entry points. */
+    * refines file-level novelty to row-level change (in one partition
+    * with no exchange when the changed files are small, else over one
+    * hash exchange), `extraOpts` selects the lineage the endpoint
+    * generations resolve in (empty = main, `branch` = that branch's
+    * chain). One implementation, so the diff semantics and plan shape
+    * cannot silently diverge between the two entry points. */
   private def diffOf(spark: org.apache.spark.sql.SparkSession,
       ident: Identifier, fromGen: Long, toGen: Long,
       extraOpts: Map[String, String]): org.apache.spark.sql.DataFrame = {
@@ -419,15 +423,37 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     * This is Spark's own `exceptAll` rewrite (RewriteExceptAll) with the
     * two directions sharing one sign, so NULL grouping and NaN / −0.0
     * normalisation are exactly `exceptAll`'s — but both sides are scanned
-    * and shuffled once, where the `exceptAll` pair scanned and shuffled
-    * each twice. */
+    * once, where the `exceptAll` pair scanned each twice.
+    *
+    * Exchange: when the changed files of both sides together fit under
+    * `spark.sql.autoBroadcastJoinThreshold` — the size below which Spark
+    * already treats a relation as needing no shuffle — the union is
+    * planned as ONE partition (`coalesce(1)`), so the aggregate runs
+    * with ZERO exchanges; above the bound (or with the threshold
+    * disabled, −1) it keeps one hash exchange of the changed-file rows.
+    * The size is the scans' own statistic (file bytes of the manifest
+    * entries each side lists), read off the optimized union, and the
+    * aggregate is built over that same optimized plan, so each side's
+    * scan lists its files once — when the frame is built, not when it
+    * runs (the generation pins make the two the same listing). The bound
+    * is read from the calling session's conf; nothing is set on it. */
   private def signedDiff(added: org.apache.spark.sql.DataFrame,
       removed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, sum}
+    val spark = added.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val n = GraftTsvMeta.NetCol
-    added.withColumn(n, lit(1L))
+    val planned = added.withColumn(n, lit(1L))
       .unionByName(removed.withColumn(n, lit(-1L)))
-      .groupBy(added.columns.toSeq.map(col): _*).agg(sum(col(n)).as(n))
+      .queryExecution.optimizedPlan
+    val bytes = planned.collectLeaves().map(_.stats.sizeInBytes).sum
+    val union = org.apache.spark.sql.graftbridge.GraftPlanBridge
+      .ofRows(spark, planned)
+    val rows =
+      if (bytes <= spark.sessionState.conf.autoBroadcastJoinThreshold)
+        union.coalesce(1)
+      else union
+    rows.groupBy(added.columns.toSeq.map(col): _*).agg(sum(col(n)).as(n))
       .filter(col(n) =!= 0L)
   }
 

@@ -18,7 +18,8 @@ import org.apache.spark.sql.types._
   * the table. Correctness of the signed-diff refinement (surviving rows of a
   * rewritten file cancel), net semantics over the interval, multiplicity,
   * compaction invisibility, tag endpoints, the error surface, and the
-  * one-shuffle plan of the signed diff. */
+  * plan of the signed diff: no exchange while the changed files fit under
+  * the broadcast threshold, one above it (same rows either way). */
 class Dsv2ChangesSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private val rootDir = Files.createTempDirectory("graft_changes").toString
@@ -32,6 +33,21 @@ class Dsv2ChangesSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       .asInstanceOf[graft.sources.GraftTsvCatalog]
 
   private def ident(t: String) = Identifier.of(Array("db"), t)
+
+  /** A session whose broadcast threshold (1 B) sits below every diff's
+    * changed-file bytes, so its signed diffs keep their hash exchange. */
+  private lazy val shuffled = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.catalog.gchg",
+      classOf[graft.sources.GraftTsvCatalog].getName)
+    s.conf.set("spark.sql.catalog.gchg.root", rootDir)
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+    s
+  }
+
+  /** The diff's shuffle exchanges in its final AQE plan. */
+  private def exchanges(df: org.apache.spark.sql.DataFrame) =
+    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeLike => e }
 
   /** (change_type, id, v) triples of changes(from, to). */
   private def diff(t: String, from: String, to: String): Seq[(String, Long, String)] =
@@ -91,7 +107,16 @@ class Dsv2ChangesSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       USING `graft-tsv` TBLPROPERTIES ('retain.generations' = '4')""")
     spark.sql("INSERT INTO gchg.db.m VALUES (1, 'a')")           // gen 1
     spark.sql("INSERT INTO gchg.db.m VALUES (1, 'a'), (1, 'a')") // gen 2
-    assert(diff("m", "1", "2") == Seq(("insert", 1L, "a"), ("insert", 1L, "a")))
+    spark.sql("INSERT INTO gchg.db.m VALUES (1, 'a')")           // gen 3
+    spark.sql("DELETE FROM gchg.db.m WHERE id = 1")              // gen 4
+    def rows(s: org.apache.spark.sql.SparkSession, a: Int, b: Int) =
+      cat.changes(s, ident("m"), a.toString, b.toString).collect()
+        .map(r => (r.getString(2), r.getLong(0), r.getString(1))).toSeq.sorted
+    assert(rows(spark, 1, 2) == Seq(("insert", 1L, "a"), ("insert", 1L, "a")))
+    assert(rows(spark, 1, 4) == Seq(("delete", 1L, "a")))
+    assert(rows(spark, 2, 4) == Seq.fill(3)(("delete", 1L, "a")))
+    for (a <- 1 to 3; b <- (a + 1) to 4)
+      assert(rows(spark, a, b) == rows(shuffled, a, b), s"($a,$b)")
   }
 
   test("NULL-bearing rows cancel and surface exactly as exceptAll did") {
@@ -115,15 +140,45 @@ class Dsv2ChangesSpec extends SparkSuite with AdaptiveSparkPlanHelper {
         .withColumn("_change_type", lit("insert"))
         .unionByName(snap(a).exceptAll(snap(b))
           .withColumn("_change_type", lit("delete")))
-      assert(rows(cat.changes(spark, ident("z"), a.toString, b.toString)) ==
-        rows(viaExceptAll), s"($a,$b)")
+      for (s <- Seq(spark, shuffled))
+        assert(rows(cat.changes(s, ident("z"), a.toString, b.toString)) ==
+          rows(viaExceptAll), s"($a,$b) ${s eq shuffled}")
     }
     assert(rows(cat.changes(spark, ident("z"), "1", "4")) == Seq(
       ("delete", None, Some(10L)), ("delete", Some(2L), Some(20L)),
       ("insert", None, None), ("insert", Some(3L), None)))
   }
 
-  test("plan shape: a copy-on-write rewrite's diff runs ONE shuffle") {
+  test("NaN and -0.0 rows cancel and surface exactly as exceptAll did, in both plans") {
+    spark.sql("""CREATE TABLE gchg.db.x (id BIGINT, x DOUBLE)
+      USING `graft-tsv` TBLPROPERTIES ('retain.generations' = '6')""")
+    spark.sql("INSERT INTO gchg.db.x VALUES (1, CAST('NaN' AS DOUBLE)), " +
+      "(2, -0.0), (3, 0.0), (4, 1.5), (5, CAST('NaN' AS DOUBLE))")  // gen 1
+    // the rewrite carries the NaN and signed-zero rows over: they cancel
+    spark.sql("DELETE FROM gchg.db.x WHERE id = 4")                 // gen 2
+    spark.sql("INSERT INTO gchg.db.x VALUES (2, 0.0), " +
+      "(6, CAST('NaN' AS DOUBLE))")                                 // gen 3
+    spark.sql("DELETE FROM gchg.db.x WHERE id = 5 OR x = 0.0")      // gen 4
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(2), r.getLong(0), r.getDouble(1).toString))
+      .toSeq.sorted
+    def snap(g: Int) = spark.sql(s"SELECT id, x FROM gchg.db.x VERSION AS OF $g")
+    for (a <- 1 to 3; b <- (a + 1) to 4) {
+      val viaExceptAll = snap(b).exceptAll(snap(a))
+        .withColumn("_change_type", lit("insert"))
+        .unionByName(snap(a).exceptAll(snap(b))
+          .withColumn("_change_type", lit("delete")))
+      val want = rows(viaExceptAll)
+      assert(rows(cat.changes(spark, ident("x"), a.toString, b.toString)) ==
+        want, s"($a,$b)")
+      assert(rows(cat.changes(shuffled, ident("x"), a.toString, b.toString)) ==
+        want, s"($a,$b) above the bound")
+    }
+    assert(rows(cat.changes(spark, ident("x"), "1", "2")) ==
+      Seq(("delete", 4L, "1.5")))
+  }
+
+  test("plan shape: a rewrite's diff under the broadcast threshold runs NO shuffle") {
     spark.sql("""CREATE TABLE gchg.db.s (id BIGINT, v STRING)
       USING `graft-tsv` TBLPROPERTIES ('retain.generations' = '4')""")
     spark.sql(
@@ -132,11 +187,25 @@ class Dsv2ChangesSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     val df = cat.changes(spark, ident("s"), "1", "2")
     assert(df.collect().map(r => (r.getString(2), r.getLong(0))).toSeq ==
       Seq(("delete", 2L)))
-    // the final AQE plan: both sides feed one signed aggregate, so one
-    // exchange (an exceptAll pair plans two)
-    val plan = df.queryExecution.executedPlan
-    val exchanges = collect(plan) { case e: ShuffleExchangeLike => e }
-    assert(exchanges.size == 1, s"expected one shuffle:\n$plan")
+    // both sides' changed files (a few bytes) fit under the threshold:
+    // the signed aggregate runs in one partition, no exchange
+    assert(exchanges(df).isEmpty,
+      s"expected no shuffle:\n${df.queryExecution.executedPlan}")
+  }
+
+  test("plan shape: the same diff above the broadcast threshold runs ONE shuffle") {
+    spark.sql("""CREATE TABLE gchg.db.s1 (id BIGINT, v STRING)
+      USING `graft-tsv` TBLPROPERTIES ('retain.generations' = '4')""")
+    spark.sql(
+      "INSERT INTO gchg.db.s1 VALUES (1, 'a'), (2, 'b'), (3, 'c')") // gen 1
+    spark.sql("DELETE FROM gchg.db.s1 WHERE id = 2")                // gen 2
+    val df = cat.changes(shuffled, ident("s1"), "1", "2")
+    assert(df.collect().map(r => (r.getString(2), r.getLong(0))).toSeq ==
+      Seq(("delete", 2L)))
+    // both sides feed one signed aggregate, so one exchange (an
+    // exceptAll pair plans two)
+    assert(exchanges(df).size == 1,
+      s"expected one shuffle:\n${df.queryExecution.executedPlan}")
   }
 
   test("compaction is layout-only: diff across a compact generation is empty") {

@@ -29,6 +29,24 @@ class MeasureSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     } finally spark.sparkContext.removeSparkListener(tally)
   }
 
+  test("Tally.jobsSince splits a window's bytes by job, labelled with the action's call site") {
+    val tally = new Measure.Tally(spark)
+    try {
+      val b0 = tally.snap()
+      val j0 = tally.nextJob()
+      spark.range(0, 20000, 1, 4).repartition(3, col("id")).collect()
+      spark.range(0, 20000, 1, 4).selectExpr("id * 2 AS x").collect()
+      val window = (tally.snap() - b0).shuffleBytes
+      val jobs = tally.jobsSince(j0)
+      assert(jobs.size >= 2 && jobs.map(_.jobId) == jobs.map(_.jobId).sorted)
+      assert(jobs.map(_.shuffleBytes).sum == window && window > 0L)
+      val writers = jobs.filter(_.shuffleBytes > 0L)
+      assert(writers.nonEmpty && writers.forall(_.label.contains("MeasureSpec.scala")),
+        writers.mkString("\n"))
+      assert(tally.jobsSince(tally.nextJob()).isEmpty)
+    } finally spark.sparkContext.removeSparkListener(tally)
+  }
+
   test("SPARK_GRAFT_CONF parsing keeps a value that contains commas") {
     assert(Measure.devSessionConf("a.b=1,c.d=x,y,e=2") ==
       Seq("a.b" -> "1", "c.d" -> "x,y", "e" -> "2"))
