@@ -62,7 +62,7 @@ object Plans {
     "q_dsv2_ivm"          -> "incremental view maintenance: changes-feed delta scans only the diff files",
     "q_seq_packing"       -> "sequence packing: shard-local window cumsum (bounded partitions), integer pack assignment",
     "q_fuzzy_join"        -> "deletion-neighborhood fuzzy join (variant-keyed candidates, exact levenshtein verify)",
-    "q_bfs_hops"          -> "frontier BFS: per-wave materialized frontier, O(V) anti-join, edges never move",
+    "q_bfs_hops"          -> "frontier BFS over the raw pair multiset (no distinct): per-wave materialized frontier, O(V) anti-join, edges never move",
     "q_pq_topk"           -> "product quantization ANN: broadcast codebooks/ADC tables, one 3-long-per-row shuffle",
     "q_domain_mix"        -> "domain mixture reweighting: one tokenize+agg pass, 1-row budget frame broadcast back",
     "q_span_dedup"        -> "span-level exact-substring dedup: map-only window generation, ONE rank exchange keyed on the 16-byte binary digest, dup-tail-bounded doc rollup",

@@ -101,6 +101,20 @@ $iters
 SELECT node_id, pr FROM pr$Iters ORDER BY pr DESC, node_id LIMIT 50"""
   }
 
+  /** The smallest part id (None = no pairs) and V of a (p, s) pair frame,
+    * off ONE distinct over the node ids: both are the same over a
+    * multiset and its set, V counts each node space once (they are
+    * disjoint by the Off shift), and the min is a part's (parts sit below
+    * Off). Not `countDistinct(p)` + `countDistinct(s)`: Spark plans two
+    * distinct groups through an Expand that numbers them in the hash
+    * order of their attributes' exprIds, which change with every query a
+    * session plans, so that job's shuffle bytes flipped between runs. */
+  private def nodeStats(pairs: DataFrame): (Option[Long], Long) = {
+    val r = pairs.select(explode(array(col("p"), col("s") + Off)).as("n"))
+      .distinct().agg(min(col("n")), count(col("n"))).head()
+    (if (r.isNullAt(0)) None else Some(r.getLong(0)), r.getLong(1))
+  }
+
   /** Shared PageRank graph layout: the distinct bipartite pair set
     * materialized once, both edge directions with the out-degree
     * pre-joined (co-partitioned on src in the fallback), the node set,
@@ -138,14 +152,10 @@ SELECT node_id, pr FROM pr$Iters ORDER BY pr DESC, node_id LIMIT 50"""
       .select(col("p"), col("s"))
       .distinct()
       .truncateLineage
-    // V exactly, off the materialized pair set (node spaces are
-    // disjoint by the Off shift, so V = |distinct p| + |distinct s|) —
-    // one metadata-cheap job that decides the join strategy BEFORE the
-    // edge list is laid down, so the fallback can bake its
-    // co-partitioning into the checkpoint
-    val vRow = e0.agg(countDistinct(col("p")).as("np"),
-      countDistinct(col("s")).as("ns")).head()
-    val bcast = GraphAdaptive.broadcastOk(spark, vRow.getLong(0) + vRow.getLong(1))
+    // V exactly, off the materialized pair set — one job that decides
+    // the join strategy BEFORE the edge list is laid down, so the
+    // fallback can bake its co-partitioning into the checkpoint
+    val bcast = GraphAdaptive.broadcastOk(spark, nodeStats(e0)._2)
     val edges0 = e0
       .select(col("p").as("src"), (col("s") + Off).as("dst"))
       .unionByName(e0.select((col("s") + Off).as("src"), col("p").as("dst")))
@@ -1129,31 +1139,12 @@ $waves
 SELECT node_id, hop FROM d$BfsHops ORDER BY hop, node_id"""
   }
 
-  /** Breadth-first shortest-path hops from a fixed source over the same
-    * bipartite part↔supplier graph as q_pagerank — the third iterative
-    * kernel shape next to the fixpoint loop (q_dedup_components) and the
-    * fixed-damping recurrence (q_pagerank): FRONTIER EXPANSION, where
-    * each wave's work is proportional to the frontier's adjacency, not
-    * to the whole graph. The source is the smallest part node, the
-    * result is every node within $BfsHops hops with its exact hop count.
-    *
-    * Scale shape (100 TB): the edge list is laid down ONCE — broadcast
-    * path at bench SF, or hash-partitioned on `src` and checkpointed
-    * above the [[GraphAdaptive]] ceiling so no wave ever exchanges it —
-    * and each wave moves only two O(V)-bounded frames: the new-frontier
-    * distinct and the visited-set anti-join. An O(diameter) unroll with
-    * the frontier SHRINKING to empty is exactly how Pregel-style BFS
-    * behaves; 4 waves are unrolled here so the plan stays static and
-    * oracle-comparable (the DuckDB oracle runs the identical wave
-    * recurrence with NOT EXISTS visited filtering). */
-  /** Shared bipartite edge layout for the BFS/label-prop kernels: the
-    * distinct (part, supplier) pair set materialized once, both edge
-    * directions with the fallback's src co-partitioning baked into the
-    * checkpoint, the seed frame released, plus the two scalars every
-    * kernel's strategy choice needs — V (node spaces are disjoint by
-    * the Off shift) and the smallest part node (the BFS source; None =
-    * empty graph). One metadata-cheap job over the materialized pair
-    * blocks. PageRank's [[prGraph]] stays separate only because it
+  /** Shared bipartite edge layout for the BFS/label-prop kernels: both
+    * edge directions of a (p, s) pair frame, with the fallback's src
+    * co-partitioning baked into the checkpoint, plus the two scalars
+    * every kernel's strategy choice needs — V (node spaces are disjoint
+    * by the Off shift) and the smallest part node (the BFS source; None =
+    * empty graph). PageRank's [[prGraph]] stays separate only because it
     * additionally pre-joins the out-degree onto the edge list. */
   private final case class EdgeLayout(
       edges: DataFrame, minP: Option[Long], v: Long,
@@ -1167,21 +1158,15 @@ SELECT node_id, hop FROM d$BfsHops ORDER BY hop, node_id"""
     * aggregate cannot ride it (q_label_prop_converged's self-vote UNION
     * erases the partitioning, so it would pay the layout for nothing).
     * The fallback path keeps src (the SHUFFLE_HASH probes need it). */
-  private def edgeLayout(spark: SparkSession, dir: String,
+  private def edgeLayout(pairs: DataFrame,
       dstLayout: Boolean = true): EdgeLayout = {
-    val e0 = tbl(spark, dir, "lineitem")
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-      .distinct()
-      .truncateLineage
-    val head = e0.agg(min(col("p")).as("src0"),
-      countDistinct(col("p")).as("np"),
-      countDistinct(col("s")).as("ns")).head()
-    val v = head.getLong(1) + head.getLong(2)
+    val spark = pairs.sparkSession
+    val (minP, v) = nodeStats(pairs)
     val bcast = GraphAdaptive.broadcastOk(spark, v)
     val pv = GraphAdaptive.pick(bcast) _
-    val edges0 = e0
+    val edges0 = pairs
       .select(col("p").as("src"), (col("s") + Off).as("dst"))
-      .unionByName(e0.select((col("s") + Off).as("src"), col("p").as("dst")))
+      .unionByName(pairs.select((col("s") + Off).as("src"), col("p").as("dst")))
     // partitioned truncate where a layout was applied (the AQE-capture
     // fix, see Checkpoints.truncate(df, Boolean)); plain where not
     val edges = (if (!bcast)
@@ -1189,27 +1174,61 @@ SELECT node_id, hop FROM d$BfsHops ORDER BY hop, node_id"""
       else if (dstLayout)
         edges0.repartition(col("dst")).truncateLineagePartitioned
       else edges0.truncateLineage)
-    graft.Checkpoints.release(e0)
-    EdgeLayout(edges,
-      if (head.isNullAt(0)) None else Some(head.getLong(0)), v, pv)
+    graft.Checkpoints.release(pairs)
+    EdgeLayout(edges, minP, v, pv)
   }
 
+  /** lineitem's (part, supplier) pairs, one per line: a multiset. Each
+    * kernel chooses its edge frame at its call site. BFS lays out the raw
+    * multiset: a wave's reached set `{dst | (src, dst) ∈ E, src ∈
+    * frontier}` does not change with edge multiplicity, and the wave's
+    * own `distinct()` folds duplicates in its map-side partial aggregate.
+    * Label propagation lays out the distinct set, materialized once (the
+    * stats job and both edge directions read it), because its vote
+    * counts depend on multiplicity. */
+  private def linePairs(spark: SparkSession, dir: String): DataFrame =
+    tbl(spark, dir, "lineitem")
+      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
+
+  /** Breadth-first shortest-path hops from a fixed source over the same
+    * bipartite part↔supplier graph as q_pagerank — the third iterative
+    * kernel shape next to the fixpoint loop (q_dedup_components) and the
+    * fixed-damping recurrence (q_pagerank): FRONTIER EXPANSION, where
+    * each wave's work is proportional to the frontier's adjacency, not
+    * to the whole graph. The source is the smallest part node, the
+    * result is every node within $BfsHops hops with its exact hop count.
+    *
+    * Scale shape (100 TB): the edge list is laid down ONCE from the raw
+    * pair multiset (no O(E) distinct: see [[linePairs]]) — map-only on
+    * the broadcast path at bench SF, or hash-partitioned on `src` and
+    * checkpointed above the [[GraphAdaptive]] ceiling (the build's one
+    * O(E) exchange) so no wave ever exchanges it —
+    * and each wave moves only two O(V)-bounded frames: the new-frontier
+    * distinct and the visited-set anti-join. An O(diameter) unroll with
+    * the frontier SHRINKING to empty is exactly how Pregel-style BFS
+    * behaves; 4 waves are unrolled here so the plan stays static and
+    * oracle-comparable (the DuckDB oracle runs the identical wave
+    * recurrence with NOT EXISTS visited filtering). */
   private val qBfsHops = QueryDef(
     "q_bfs_hops",
     Some(bfsSql),
-    (spark, dir) => {
-      // dstLayout=false: per-wave frontier distincts are tiny — the O(E)
-      // dst layout measured 8.0 → 16.7 MB shuffled (reverted)
-      val g = edgeLayout(spark, dir, dstLayout = false)
-      g.minP match {
-        case None =>
-          // empty edge set: no source to start from — zero rows, matching
-          // the oracle's guarded d0 (min over nothing must not seed a
-          // NULL-node wave)
-          spark.range(0).select(col("id").as("node_id"), col("id").as("hop"))
-        case Some(srcId) => bfsFrom(spark, g, srcId)
-      }
-    })
+    (spark, dir) => bfsHops(linePairs(spark, dir)))
+
+  /** [[qBfsHops]] over a (p, s) pair frame of any multiplicity. */
+  private[graft] def bfsHops(pairs: DataFrame): DataFrame = {
+    // dstLayout=false: per-wave frontier distincts are tiny — the O(E)
+    // dst layout measured 8.0 → 16.7 MB shuffled (reverted)
+    val g = edgeLayout(pairs, dstLayout = false)
+    g.minP match {
+      case None =>
+        // empty edge set: no source to start from — zero rows, matching
+        // the oracle's guarded d0 (min over nothing must not seed a
+        // NULL-node wave)
+        pairs.sparkSession.range(0)
+          .select(col("id").as("node_id"), col("id").as("hop"))
+      case Some(srcId) => bfsFrom(pairs.sparkSession, g, srcId)
+    }
+  }
 
   /** The non-empty-graph body of [[qBfsHops]]. */
   private def bfsFrom(spark: SparkSession,
@@ -1275,46 +1294,50 @@ it(node_id, hop) AS (
 )
 SELECT node_id, CAST(min(hop) AS BIGINT) AS hop
 FROM it GROUP BY node_id ORDER BY hop, node_id"""),
-    (spark, dir) => {
-      // dstLayout=false — same frontier-sized-wave argument as q_bfs_hops
-      val g = edgeLayout(spark, dir, dstLayout = false)
-      if (g.minP.isEmpty) {
-        spark.range(0).select(col("id").as("node_id"), col("id").as("hop"))
-      } else {
-        val (edges, pv) = (g.edges, g.pv)
-        var dist = spark.range(1)
-          .select(lit(g.minP.get).as("node_id"), lit(0L).as("hop"))
-        var frontier = dist.select("node_id")
-        var fSize = 1L
-        var h = 0L
-        while (fSize > 0L) {
-          h += 1
-          if (h > BfsFullCap)
-            throw new IllegalStateException(
-              s"q_bfs_full: frontier still non-empty after $BfsFullCap waves " +
-                "— the visited-set anti-join is broken " +
-                "(min-hop BFS terminates in <= diameter+1 waves)")
-          val reached = edges.join(pv(frontier), col("src") === col("node_id"))
-            .select(col("dst").as("node_id")).distinct()
-          // non-emptiness flag, NOT a count: max(1) is exact in both
-          // checkpoint modes (0 on an empty frontier), and the loop only
-          // consumes emptiness
-          val (f, n) = truncateObserved(
-            reached.join(pv(dist.select("node_id")), Seq("node_id"), "left_anti"),
-            max(lit(1L)))
-          frontier = f
-          fSize = n
-          if (fSize > 0L)
-            dist = dist.unionByName(
-              frontier.select(col("node_id"), lit(h).as("hop")))
-        }
-        // the TERMINAL frontier is empty and never joined dist — it is
-        // the one wave checkpoint unreachable from the result's lineage,
-        // so reclaim it (every earlier wave stays referenced by dist)
-        graft.Checkpoints.release(frontier)
-        dist.orderBy("hop", "node_id")
+    (spark, dir) => bfsFull(linePairs(spark, dir)))
+
+  /** [[qBfsFull]] over a (p, s) pair frame of any multiplicity. */
+  private[graft] def bfsFull(pairs: DataFrame): DataFrame = {
+    // dstLayout=false — same frontier-sized-wave argument as q_bfs_hops
+    val g = edgeLayout(pairs, dstLayout = false)
+    val spark = pairs.sparkSession
+    if (g.minP.isEmpty) {
+      spark.range(0).select(col("id").as("node_id"), col("id").as("hop"))
+    } else {
+      val (edges, pv) = (g.edges, g.pv)
+      var dist = spark.range(1)
+        .select(lit(g.minP.get).as("node_id"), lit(0L).as("hop"))
+      var frontier = dist.select("node_id")
+      var fSize = 1L
+      var h = 0L
+      while (fSize > 0L) {
+        h += 1
+        if (h > BfsFullCap)
+          throw new IllegalStateException(
+            s"q_bfs_full: frontier still non-empty after $BfsFullCap waves " +
+              "— the visited-set anti-join is broken " +
+              "(min-hop BFS terminates in <= diameter+1 waves)")
+        val reached = edges.join(pv(frontier), col("src") === col("node_id"))
+          .select(col("dst").as("node_id")).distinct()
+        // non-emptiness flag, NOT a count: max(1) is exact in both
+        // checkpoint modes (0 on an empty frontier), and the loop only
+        // consumes emptiness
+        val (f, n) = truncateObserved(
+          reached.join(pv(dist.select("node_id")), Seq("node_id"), "left_anti"),
+          max(lit(1L)))
+        frontier = f
+        fSize = n
+        if (fSize > 0L)
+          dist = dist.unionByName(
+            frontier.select(col("node_id"), lit(h).as("hop")))
       }
-    })
+      // the TERMINAL frontier is empty and never joined dist — it is
+      // the one wave checkpoint unreachable from the result's lineage,
+      // so reclaim it (every earlier wave stays referenced by dist)
+      graft.Checkpoints.release(frontier)
+      dist.orderBy("hop", "node_id")
+    }
+  }
 
   private val LpRounds = 3
 
@@ -1368,7 +1391,7 @@ ORDER BY node_id"""
     "q_label_prop",
     Some(labelPropSql),
     (spark, dir) => {
-      val g = edgeLayout(spark, dir)
+      val g = edgeLayout(linePairs(spark, dir).distinct().truncateLineage)
       val (edges, pv) = (g.edges, g.pv)
       var lbl = edges.select(col("src").as("node_id")).distinct()
         .select(col("node_id"), col("node_id").as("lbl"))
@@ -1486,7 +1509,8 @@ ORDER BY f.node_id"""
       // dstLayout=false: the self-vote UNION erases any edge partitioning
       // before the vote aggregate, so the dst layout would cost an O(E)
       // exchange at build and save nothing per round
-      val g = edgeLayout(spark, dir, dstLayout = false)
+      val g = edgeLayout(linePairs(spark, dir).distinct().truncateLineage,
+        dstLayout = false)
       val (lblCk, rounds) = lpLoop(g.edges, g.pv)
       val lbl = lblCk.select("node_id", "lbl")
       val sz = lbl.groupBy("lbl").agg(count(lit(1)).as("comm_size"))
@@ -2475,7 +2499,9 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     * base graph IS the pre-delete graph; for adds each endpoint's base
     * neighbours are unioned (`array_union`) with its neighbours in the
     * delta itself, an O(delta) adjacency, and endpoints the base graph
-    * lacks take the delta neighbours alone. The result's top-20 is
+    * lacks take the delta neighbours alone. The splice ([[triSplice]])
+    * broadcasts the O(delta) per-node counts into the artifact's, so the
+    * O(V) counts are read but never exchanged. The result's top-20 is
     * localized, so it reads neither the table nor the delta checkpoint.
     * Returns the top-20 (node, n_tri). */
   private def triApply(spark: SparkSession, root: String, tn: String,
@@ -2546,12 +2572,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
         .groupBy("node").agg(count(lit(1)).as("dn")))
       val nDt = dCk.agg(sum(col("dn"))).head() // 3 rows per triangle
       mark(s"apply:dt=${if (nDt.isNullAt(0)) 0L else nDt.getLong(0) / 3}")
-      val out = baseCnt
-        .join(dCk, baseCnt("node") === dCk("node"), "full_outer")
-        .select(coalesce(baseCnt("node"), dCk("node")).as("node"),
-          (coalesce(col("n_tri"), lit(0L)) +
-            coalesce(col("dn"), lit(0L)) * sign).as("n_tri"))
-        .filter(col("n_tri") > 0)
+      val out = triSplice(baseCnt, dCk, sign)
         .orderBy(desc("n_tri"), asc("node")).limit(20)
       val rows = out.collect().toSeq // bounded top-20 — fine to localize
       Seq(dCk, dedges).foreach(graft.Checkpoints.release)
@@ -2559,6 +2580,28 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           spark.sparkContext.parallelize(rows, 1), out.schema)
         .orderBy(desc("n_tri"), asc("node"))
     }
+  }
+
+  /** Per-node triangle counts `base` (node, n_tri) plus `sign` times the
+    * delta's (node, dn), keeping the nodes whose count stays positive —
+    * the full outer join of the two, without exchanging the O(V) side:
+    * the base rows take their delta through a broadcast left join; for
+    * adds, the delta nodes the base lacks are unioned in (found by an
+    * anti join against the O(delta) base rows the delta hits). A deleted
+    * triangle existed in the base, so a delete's nodes are all there. */
+  private[graft] def triSplice(base: DataFrame, delta: DataFrame,
+      sign: Long): DataFrame = {
+    val dB = broadcast(delta.select(col("node").as("dnode"), col("dn")))
+    val spliced = base.join(dB, col("node") === col("dnode"), "left")
+      .select(col("node"),
+        (col("n_tri") + coalesce(col("dn"), lit(0L)) * sign).as("n_tri"))
+    val all =
+      if (sign < 0L) spliced
+      else spliced.unionByName(delta
+        .join(broadcast(base.join(dB, col("node") === col("dnode"),
+          "left_semi").select("node")), Seq("node"), "left_anti")
+        .select(col("node"), col("dn").as("n_tri")))
+    all.filter(col("n_tri") > 0)
   }
 
   /** Incremental triangle gate — final pair set = base + adds = the full

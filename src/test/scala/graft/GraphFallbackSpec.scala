@@ -57,14 +57,16 @@ class GraphFallbackSpec extends SparkSuite {
     }
   }
 
-  // The CONVERGENCE-LOOP kernels (r13): every per-round join runs during
-  // the loop's eager checkpoint materialization, so the returned plan is
-  // just the final fold over the last round's LogicalRDD — it may contain
-  // no join at all. The forced-path witness is therefore (a) the returned
-  // plan never broadcast-hash-joins and (b) the RESULT — including the
-  // converged round count column, which any per-round plan divergence
-  // would shift — is identical to the default path.
-  for (q <- Seq("q_pagerank_converged", "q_label_prop_converged", "q_bfs_full")) {
+  // The CONVERGENCE-LOOP kernels (r13), and q_bfs_hops' fixed waves:
+  // every per-round join runs during the loop's eager checkpoint
+  // materialization, so the returned plan is just the final fold over the
+  // last round's LogicalRDD — it may contain no join at all. The
+  // forced-path witness is therefore (a) the returned plan never
+  // broadcast-hash-joins and (b) the RESULT — including the converged
+  // round count column, which any per-round plan divergence would shift —
+  // is identical to the default path.
+  for (q <- Seq("q_pagerank_converged", "q_label_prop_converged", "q_bfs_full",
+      "q_bfs_hops")) {
     test(s"$q: forced no-broadcast loop converges to the identical result") {
       val default = collectSorted(q)
       // build ONCE under the forced conf: the builder itself runs the

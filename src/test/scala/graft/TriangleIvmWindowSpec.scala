@@ -1,12 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.col
 
 /** The triangle IVM windows after their artifact is served: the delta
   * window moves O(delta) bytes (the changes-feed diff and the adjacency no
-  * longer shuffle the pair set), and each window drops its fresh table. */
-class TriangleIvmWindowSpec extends SparkSuite {
+  * longer shuffle the pair set), the splice onto the artifact's counts
+  * exchanges neither side, and each window drops its fresh table. */
+class TriangleIvmWindowSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private val windows
       : Seq[(String, (SparkSession, String, String => Unit) => DataFrame,
@@ -52,5 +55,32 @@ class TriangleIvmWindowSpec extends SparkSuite {
       build(spark, sfDir, _ => ()).collect()
     assert(tables -- before == Set.empty[String],
       s"windows left ${(tables -- before).mkString(", ")}")
+  }
+
+  test("triSplice: base counts plus signed delta counts, with no exchange") {
+    import spark.implicits._
+    val base = Seq(1L -> 3L, 2L -> 1L, 3L -> 2L, 5L -> 4L)
+    // the full outer join the splice replaces, node by node
+    def reference(delta: Seq[(Long, Long)], sign: Long): Set[(Long, Long)] = {
+      val (b, d) = (base.toMap, delta.toMap)
+      (b.keySet ++ d.keySet)
+        .map(n => n -> (b.getOrElse(n, 0L) + sign * d.getOrElse(n, 0L)))
+        .filter(_._2 > 0L)
+    }
+    for ((delta, sign) <- Seq(
+        // adds: nodes 4 and 6 have no base triangle
+        (Seq(2L -> 1L, 3L -> 2L, 4L -> 2L, 6L -> 1L), 1L),
+        // deletes: node 2 loses its only triangle
+        (Seq(2L -> 1L, 3L -> 1L), -1L))) {
+      val out = queries.Graph.triSplice(base.toDF("node", "n_tri"),
+        delta.toDF("node", "dn"), sign)
+      val rows = out.collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(rows.toSet == reference(delta, sign), s"sign $sign")
+      assert(rows.length == rows.toSet.size, s"sign $sign: a node twice")
+      val exchanges = collect(out.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e
+      }
+      assert(exchanges.isEmpty, s"sign $sign splice exchanged:\n$exchanges")
+    }
   }
 }
