@@ -1,20 +1,30 @@
 package graft.queries
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.connector.catalog.Identifier
 
-/** Signature-keyed persistence for DERIVED ARTIFACTS the engine builds
-  * once and serves many times — the ANN index (q_ivf_build/q_ivf_probe)
-  * and the trained BPE merge table (q_bpe_encode).
+import graft.sources.GraftTsvCatalog
+
+/** The one owner of every name the engine derives from a data dir: the
+  * signature-keyed roots of DERIVED ARTIFACTS built once and served many
+  * times (the ANN index, the trained BPE merge table, the IVM states),
+  * the pay-once exports the parity queries read as pre-existing sources,
+  * the per-dir work dirs of write-path exhibits, the parity queries'
+  * shared-name tables, the IVM windows' fresh per-run tables, and the
+  * registration of the `gparity` catalog those tables live in. Every one
+  * of them is keyed by [[dirDigest]], the SHA-256 of the dir's canonical
+  * path, never by a 32-bit `String.hashCode`: two dirs that collide there
+  * (`…/Aa` and `…/BB`) never share a table, an export or an artifact.
   *
-  * The artifact root is a STABLE temp path keyed by the source parquet's
-  * length+mtime (the SourceParity.roundTrip scheme) AND a digest of the
-  * data dir and the build recipe's constants: regenerated testdata or a
-  * changed build parameter can never be served a stale artifact, because
-  * either change simply keys a fresh root. The done-marker is written only
-  * after EVERY build step committed, so a crashed build is rebuilt, never
-  * half-read. In production the root would be a table location in the
-  * catalog; the lifecycle (signature → build-or-reuse → marker) is the
-  * part that carries over.
+  * An artifact root is a STABLE temp path keyed by the source parquet's
+  * length+mtime AND a digest of the data dir and the build recipe's
+  * constants: regenerated testdata or a changed build parameter can never
+  * be served a stale artifact, because either change simply keys a fresh
+  * root. The done-marker is written only after EVERY build step
+  * committed, so a crashed build is rebuilt, never half-read. In
+  * production the root would be a table location in the catalog; the
+  * lifecycle (signature → build-or-reuse → marker) is the part that
+  * carries over.
   */
 object ArtifactStore {
 
@@ -41,12 +51,105 @@ object ArtifactStore {
 
   /** The full SHA-256, in hex, of the data dir's canonical path and
     * `parts`, NUL-separated: the one key for anything named after a data
-    * dir (artifact roots, the IVM windows' fresh tables). */
+    * dir. */
   def dirDigest(dir: String, parts: String*): String =
     java.security.MessageDigest.getInstance("SHA-256").digest(
       (new java.io.File(dir).getCanonicalPath +: parts)
         .mkString("\u0000").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map(b => f"${b & 0xff}%02x").mkString
+
+  /** Stable per-dir path `java.io.tmpdir/graft_<name>_<dirDigest>` for a
+    * write-path exhibit that rewrites it on every call (the write is what
+    * the query shows, so no source signature or marker is kept). */
+  def workDir(dir: String, name: String): String =
+    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+      s"graft_${name}_${dirDigest(dir)}").toString
+
+  /** A table of the shared `gparity` catalog: `sql` is its qualified
+    * name, `ref` the `'db.<name>'` argument its procedures take, `dir`
+    * its directory under the catalog `root`. */
+  final case class ParityTable(name: String, root: String) {
+    def sql: String = s"gparity.db.$name"
+    def ref: String = s"db.$name"
+    def dir: String = s"$root/db/$name"
+    def ident: Identifier = Identifier.of(Array("db"), name)
+  }
+
+  private val ParityConf = "spark.sql.catalog.gparity"
+
+  /** Registers the `gparity` catalog (a [[GraftTsvCatalog]] rooted at
+    * `java.io.tmpdir/graft_parity_catalog`) on `spark` unless the session
+    * already has one, creates its `db` namespace, and returns its root. A
+    * session that registered `gparity` itself keeps its own catalog. */
+  private def parityRoot(spark: SparkSession): String = {
+    if (spark.conf.getOption(ParityConf).isEmpty) {
+      spark.conf.set(ParityConf, classOf[GraftTsvCatalog].getName)
+      spark.conf.set(s"$ParityConf.root", java.nio.file.Paths.get(
+        sys.props("java.io.tmpdir"), "graft_parity_catalog").toString)
+    }
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
+    spark.conf.get(s"$ParityConf.root")
+  }
+
+  /** The session's `gparity` catalog, for the calls SQL has no verb for
+    * (changes feeds, branch diffs, drops by identifier), once a
+    * [[parityTable]] or [[freshTable]] has registered it. */
+  def parityCatalog(spark: SparkSession): GraftTsvCatalog =
+    spark.sessionState.catalogManager.catalog("gparity")
+      .asInstanceOf[GraftTsvCatalog]
+
+  /** Table `gparity.db.<name>_<dirDigest>`, dropped if it exists: the
+    * shared-name table a parity query over `dir` rebuilds on every call.
+    * Warm-up and measured runs over different dirs never collide. */
+  def parityTable(spark: SparkSession, dir: String, name: String)
+      : ParityTable = {
+    val t = ParityTable(s"${name}_${dirDigest(dir)}", parityRoot(spark))
+    spark.sql(s"DROP TABLE IF EXISTS ${t.sql}")
+    t
+  }
+
+  /** A fresh per-run table `gparity.db.<prefix>_<dirDigest>_<nonce>`,
+    * not yet created: a multi-step stateful builder that two concurrent
+    * runs over one dir (bench overlapping verify) must not share. Siblings
+    * older than any live run are swept ([[sweepStale]]); a run drops its
+    * own table through [[dropTable]] once its result no longer reads it. */
+  def freshTable(spark: SparkSession, dir: String, prefix: String)
+      : ParityTable = {
+    val root = parityRoot(spark)
+    val stem = s"${prefix}_${dirDigest(dir)}_"
+    sweepStale(spark, new java.io.File(root, "db"), stem)
+    ParityTable(stem + nonce(), root)
+  }
+
+  /** A fresh per-run work dir under `java.io.tmpdir`, named
+    * `graft_<prefix>_<dirDigest>_<nonce>` (a stream's checkpoint and sink
+    * next to a [[freshTable]]), with the same stale-sibling sweep. */
+  def freshDir(spark: SparkSession, dir: String, prefix: String): String = {
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    val stem = s"graft_${prefix}_${dirDigest(dir)}_"
+    sweepStale(spark, tmp, stem)
+    new java.io.File(tmp, stem + nonce()).toString
+  }
+
+  /** Drops a [[freshTable]] table through its catalog. */
+  def dropTable(spark: SparkSession, t: ParityTable): Unit =
+    parityCatalog(spark).dropTable(t.ident)
+
+  private def nonce(): String = java.lang.Long.toHexString(
+    System.nanoTime() ^ (Thread.currentThread().getId << 48))
+
+  /** Deletes the children of `parent` named `prefix*` that are older than
+    * 30 minutes, far past any live run: what a crashed or killed run left. */
+  private def sweepStale(spark: SparkSession, parent: java.io.File,
+      prefix: String): Unit = {
+    val cutoff = System.currentTimeMillis() - 30 * 60 * 1000L
+    Option(parent.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.startsWith(prefix) && f.lastModified < cutoff)
+      .foreach { f =>
+        val p = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      }
+  }
 
   private def marker(root: String) =
     new org.apache.hadoop.fs.Path(root, "_GRAFT_ARTIFACT_DONE")
@@ -94,8 +197,7 @@ object ArtifactStore {
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val base = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft_results").toString
-    val nonce = java.lang.Long.toHexString(
-      System.nanoTime() ^ (Thread.currentThread().getId << 48))
+    val run = nonce()
     val pidTag = s"p${ProcessHandle.current().pid()}"
     val PidDir = s"""${java.util.regex.Pattern.quote(prefix)}_p(\\d+)_.*""".r
     locally {
@@ -112,7 +214,7 @@ object ArtifactStore {
               !ProcessHandle.of(pid.toLong)
                 .map[java.lang.Boolean](h => h.isAlive)
                 .orElse(java.lang.Boolean.FALSE)
-            case _ => !f.getName.contains(nonce) && f.lastModified < cutoff
+            case _ => !f.getName.contains(run) && f.lastModified < cutoff
           }
         }
         .foreach { f =>
@@ -121,7 +223,7 @@ object ArtifactStore {
             .delete(p, true)
         }
     }
-    val path = s"$base/${prefix}_${pidTag}_$nonce"
+    val path = s"$base/${prefix}_${pidTag}_$run"
     df.write.mode("overwrite").parquet(path)
     registerSpillForExit(path)
     spark.read.parquet(path)

@@ -834,9 +834,9 @@ object Catalog {
     * of frames) gets capped near its healthy-bucket ceiling instead of
     * at a fixed constant 256× too generous, bounding the pair expansion
     * at O(p99²) per bucket while leaving every ≤p99 cluster's recall
-    * untouched — the CapScale §40 measurement, now wired into the
-    * operator instead of hand-picked. `cap_used` rides every output row,
-    * so the gate proves the tuning arithmetic too. */
+    * untouched — the bucket-bomb measurement of SCALE.md §40 and §47,
+    * now wired into the operator instead of hand-picked. `cap_used` rides
+    * every output row, so the gate proves the tuning arithmetic too. */
   private val qFrameNeardupTuned = QueryDef(
     "q_frame_neardup_tuned",
     Some(("""
@@ -1317,13 +1317,14 @@ object Catalog {
 
     // exhibit: commit base then the new batch, learn the delta from the
     // changes feed (reads the changed files only)
-    val (t, tn, root) = Graph.privmFreshTable(spark, dir, "pmm")
+    val ft = ArtifactStore.freshTable(spark, dir, "pmm")
+    val t = ft.sql
     spark.sql(s"""CREATE TABLE $t (doc_id BIGINT, text STRING)
       USING `graft-tsv` TBLPROPERTIES ('retain.generations' = '4')""")
     base.writeTo(t).append()                                       // gen 1
     docs.filter(col("doc_id") >= cutoff).writeTo(t).append()       // gen 2
     val net = graft.Checkpoints.truncate(
-      Graph.netDelta(spark, root, tn, Seq("doc_id", "text"), "w")
+      Graph.netDelta(spark, ft, Seq("doc_id", "text"), "w")
         .filter(col("w") > 0))
 
     // delta TEXT edges: new docs' band memberships, old members fetched
@@ -1426,7 +1427,7 @@ object Catalog {
       .select(col("doc_id"),
         coalesce(col("component_id"), col("doc_id")).as("component_id")))
     Seq(labels2, edges, dt, db, net).foreach(graft.Checkpoints.release)
-    Graph.privmDropTable(spark, tn)
+    ArtifactStore.dropTable(spark, ft)
 
     // per-stage audit — the cold pipeline's aggregates verbatim
     val keepers = graft.Checkpoints.truncate(

@@ -650,10 +650,10 @@ FROM cand ORDER BY hamming, doc_a, doc_b LIMIT 20"""),
 
   /** The banded-Hamming pairing kernel behind q_simhash_pairs, with the
     * per-bucket cap as a PARAMETER (cap <= 0 ⇒ uncapped): the gate runs
-    * it at [[SimPairCap]]; CapScale sweeps the cap on a bucket-bomb
-    * corpus to price the recall the guard costs when it BINDS (VERDICT
-    * r17 task 3). Input: (doc_id, simhash); output: distinct candidate
-    * pairs with exact Hamming distance, unordered. */
+    * it at [[SimPairCap]]; a sweep of the cap on a bucket-bomb corpus
+    * priced the recall the guard costs when it BINDS (SCALE.md §40).
+    * Input: (doc_id, simhash); output: distinct candidate pairs with
+    * exact Hamming distance, unordered. */
   private[graft] def simhashBandedPairs(
       sim: DataFrame, cap: Int): DataFrame = {
     val capped =

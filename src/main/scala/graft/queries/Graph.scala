@@ -610,71 +610,26 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       .coalesce(1).write.mode("overwrite").parquet(s"$r/meta")
   }
 
-  /** Fresh nonce-keyed graft-tsv table for an ivm run + stale-sibling
-    * sweep (the q_stream_ivm lesson — bench can overlap verify), shared
-    * by the gate and the served path. The name is keyed by the data
-    * dir's SHA-256 digest ([[ArtifactStore.dirDigest]]), so two dirs
-    * whose paths share a 32-bit `hashCode` never sweep each other's
-    * tables. A window whose result no longer reads its table drops it
-    * ([[privmDropTable]]). Returns (qualified name, table name, catalog
-    * root). */
-  private[queries] def privmFreshTable(
-      spark: SparkSession, dir: String,
-      prefix: String = "privm"): (String, String, String) = {
-    val h = ArtifactStore.dirDigest(dir)
-    val nonce = java.lang.Long.toHexString(
-      System.nanoTime() ^ (Thread.currentThread().getId << 48))
-    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      "graft_parity_catalog").toString
-    spark.conf.set("spark.sql.catalog.gparity",
-      classOf[graft.sources.GraftTsvCatalog].getName)
-    spark.conf.set("spark.sql.catalog.gparity.root", root)
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-    locally {
-      val cutoff = System.currentTimeMillis() - 30 * 60 * 1000L
-      Option(new java.io.File(root, "db").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith(s"${prefix}_${h}_") &&
-          !f.getName.contains(nonce) && f.lastModified < cutoff)
-        .foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-        }
-    }
-    val tn = s"${prefix}_${h}_$nonce"
-    (s"gparity.db.$tn", tn, root)
-  }
-
-  /** Drop a [[privmFreshTable]] table through its catalog, once the
-    * window's result no longer reads it. */
-  private[queries] def privmDropTable(spark: SparkSession, tn: String): Unit =
-    spark.sessionState.catalogManager.catalog("gparity")
-      .asInstanceOf[graft.sources.GraftTsvCatalog]
-      .dropTable(org.apache.spark.sql.connector.catalog
-        .Identifier.of(Array("db"), tn))
-
-  /** Net row delta of fresh table `tn` (columns exactly `keys`) since its
+  /** Net row delta of fresh table `t` (columns exactly `keys`) since its
     * base snapshot (gen 1), read off the SIGNED changes feed
     * ([[graft.sources.GraftTsvCatalog.netChanges]] — the changed files
     * only, one aggregate): (`keys`…, `sgn`), sgn > 0 net inserted copies,
     * < 0 net deleted. A no-op mutation pair (possible at a degenerate SF)
     * nets to an empty delta. The one delta read every IVM window shares. */
-  private[queries] def netDelta(spark: SparkSession, root: String, tn: String,
-      keys: Seq[String], sgn: String = "sgn"): DataFrame = {
-    val tdir = new org.apache.hadoop.fs.Path(s"$root/db/$tn")
+  private[queries] def netDelta(spark: SparkSession,
+      t: ArtifactStore.ParityTable, keys: Seq[String],
+      sgn: String = "sgn"): DataFrame = {
+    val tdir = new org.apache.hadoop.fs.Path(t.dir)
     val headGen = tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(tdir).map(_.getPath.getName)
       .flatMap(graft.sources.GraftTsvManifest.genNumber).max
     val net =
       if (headGen <= 1L)
-        spark.table(s"gparity.db.$tn")
+        spark.table(t.sql)
           .withColumn(graft.sources.GraftTsvMeta.NetCol, lit(0L)).limit(0)
       else
-        spark.sessionState.catalogManager.catalog("gparity")
-          .asInstanceOf[graft.sources.GraftTsvCatalog]
-          .netChanges(spark, org.apache.spark.sql.connector.catalog
-            .Identifier.of(Array("db"), tn), "1", headGen.toString)
+        ArtifactStore.parityCatalog(spark)
+          .netChanges(spark, t.ident, "1", headGen.toString)
     net.select(keys.map(col) :+
       col(graft.sources.GraftTsvMeta.NetCol).as(sgn): _*)
   }
@@ -775,7 +730,8 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       spark.range(0).select(col("id").as("node_id"), col("id").as("pr"),
         col("id").as("r1"), col("id").as("r2"))
     } else {
-      val (t, tn, root) = privmFreshTable(spark, dir)
+      val ft = ArtifactStore.freshTable(spark, dir, "privm")
+      val t = ft.sql
       spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '4')""")
       val dels = localFrac match {
@@ -791,7 +747,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
           val cut = b.getLong(0) + (b.getLong(1) - b.getLong(0) + 1) / f
           dels0.filter(col("p") < cut)
       }
-      val dv = s"privm_dels_srv_$tn"
+      val dv = s"privm_dels_srv_${ft.name}"
       dels.createOrReplaceTempView(dv)
       spark.sql(s"""MERGE INTO $t tgt USING $dv d
         ON tgt.p = d.p AND tgt.s = d.s
@@ -803,7 +759,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       val eps = Scale / (PrEpsDiv * vCnt)
       val prBase = (Scale * 15L) / (100L * vCnt)
       val dpairs = graft.Checkpoints.truncate(
-        netDelta(spark, root, tn, Seq("p", "s")))  // O(delta) rows
+        netDelta(spark, ft, Seq("p", "s")))  // O(delta) rows
       mark("feed")
 
       val s1 = spark.read.parquet(s"$stateRoot/state")
@@ -836,7 +792,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       val rows = res.collect().toSeq
       Seq(s2, dedges, dpairs, patchedCk, edgesFin)
         .foreach(graft.Checkpoints.release)
-      privmDropTable(spark, tn)
+      ArtifactStore.dropTable(spark, ft)
       spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 1), res.schema)
         .orderBy(desc("pr"), asc("node_id"))
@@ -870,7 +826,8 @@ ORDER BY pr DESC, node_id LIMIT 50"""
 
       // per-run nonce + stale-sibling sweep: the q_stream_ivm lesson —
       // this is a multi-step stateful builder and bench can overlap verify
-      val (t, tn, root) = privmFreshTable(spark, dir)
+      val ft = ArtifactStore.freshTable(spark, dir, "privm")
+      val t = ft.sql
       spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '4')""")
       base0.writeTo(t).append()                                    // gen 1
@@ -891,7 +848,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       val (r1, vCnt) = (metaRow.getLong(0), metaRow.getLong(1))
       if (vCnt == 0L) {
         graft.Checkpoints.release(ac)
-        privmDropTable(spark, tn)
+        ArtifactStore.dropTable(spark, ft)
         spark.range(0).select(col("id").as("node_id"), col("id").as("pr"),
           col("id").as("r1"), col("id").as("r2"))
       } else {
@@ -901,7 +858,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
         mark("p1")
 
         // mutate: MERGE-delete (gen 2), append the held-out adds (gen 3)
-        val dv = s"privm_dels_$tn"
+        val dv = s"privm_dels_${ft.name}"
         dels.createOrReplaceTempView(dv)
         spark.sql(s"""MERGE INTO $t tgt USING $dv d
           ON tgt.p = d.p AND tgt.s = d.s
@@ -913,7 +870,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
         // the delta from the changes feed, then the O(delta) broadcast
         // patch of the converged state (netDelta/privmPatch — shared
         // with the served path, which ScaleStress phases prices separately)
-        val dpairs = netDelta(spark, root, tn, Seq("p", "s"))
+        val dpairs = netDelta(spark, ft, Seq("p", "s"))
         val (patched, dedges) = privmPatch(s1, dpairs, prBase)
 
         // phase 2: resume on the FINAL graph (the table read is now the
@@ -938,7 +895,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
         val rows = res.collect().toSeq
         Seq(s2, g2.edgesW, g2.nodes, dedges)
           .foreach(graft.Checkpoints.release)
-        privmDropTable(spark, tn)
+        ArtifactStore.dropTable(spark, ft)
         spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 1), res.schema)
           .orderBy(desc("pr"), asc("node_id"))
@@ -1592,14 +1549,15 @@ ORDER BY f.node_id"""
     val r1 = spark.read.parquet(s"$stateRoot/meta").head().getLong(0)
     mark("p1")
 
-    val (t, tn, root) = privmFreshTable(spark, dir, "civm")
+    val ft = ArtifactStore.freshTable(spark, dir, "civm")
+    val t = ft.sql
     spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
       TBLPROPERTIES ('retain.generations' = '4')""")
     base0.writeTo(t).append()                                     // gen 1
     adds.writeTo(t).append()                                      // gen 2
     graft.Checkpoints.release(ac)
     val dpairs = graft.Checkpoints.truncate(
-      netDelta(spark, root, tn, Seq("p", "s")))
+      netDelta(spark, ft, Seq("p", "s")))
     val dedges = dpairs
       .select(col("p").as("u"), (col("s") + Off).as("v"))
       .unionByName(dpairs.select((col("s") + Off).as("u"), col("p").as("v")))
@@ -1626,7 +1584,7 @@ ORDER BY f.node_id"""
     val out = ArtifactStore.spillResult(spark, "civm_res", labels2
       .select(col("u").as("node_id"), col("lbl").as("component_id")))
     Seq(labels2, edgesFin, dpairs).foreach(graft.Checkpoints.release)
-    privmDropTable(spark, tn)
+    ArtifactStore.dropTable(spark, ft)
     out.orderBy("node_id")
   }
 
@@ -1679,11 +1637,12 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
     val r1 = spark.read.parquet(s"$stateRoot/meta").head().getLong(0)
     mark("p1")
 
-    val (t, tn, root) = privmFreshTable(spark, dir, "civmd")
+    val ft = ArtifactStore.freshTable(spark, dir, "civmd")
+    val t = ft.sql
     spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
       TBLPROPERTIES ('retain.generations' = '4')""")
     ef.writeTo(t).append()                                        // gen 1
-    val dv = s"civmd_dels_$tn"
+    val dv = s"civmd_dels_${ft.name}"
     dels.createOrReplaceTempView(dv)
     spark.sql(s"""MERGE INTO $t tgt USING $dv d
       ON tgt.p = d.p AND tgt.s = d.s
@@ -1691,7 +1650,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
     spark.catalog.dropTempView(dv)
     graft.Checkpoints.release(ef)
     val dpairs = graft.Checkpoints.truncate(
-      netDelta(spark, root, tn, Seq("p", "s")))  // all sgn = -1
+      netDelta(spark, ft, Seq("p", "s")))  // all sgn = -1
     val dedges = graft.Checkpoints.truncate(dpairs
       .select(col("p").as("u"), (col("s") + Off).as("v"))
       .unionByName(dpairs.select((col("s") + Off).as("u"),
@@ -1737,7 +1696,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
     // released on BOTH branches (ADVICE r18): the no-op branch returned
     // the base labeling while leaking the just-created delta checkpoints
     Seq(dpairs, dedges).foreach(graft.Checkpoints.release)
-    privmDropTable(spark, tn)
+    ArtifactStore.dropTable(spark, ft)
     res
   }
 
@@ -1875,14 +1834,15 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
       graft.Checkpoints.release(ac)
       spark.range(0).select(col("id").as("node_id"), col("id").as("hop"))
     } else {
-      val (t, tn, root) = privmFreshTable(spark, dir, "bfsivm")
+      val ft = ArtifactStore.freshTable(spark, dir, "bfsivm")
+      val t = ft.sql
       spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '4')""")
       base0.writeTo(t).append()                                   // gen 1
       adds.writeTo(t).append()                                    // gen 2
       graft.Checkpoints.release(ac)
       val dpairs = graft.Checkpoints.truncate(
-        netDelta(spark, root, tn, Seq("p", "s")))
+        netDelta(spark, ft, Seq("p", "s")))
       val dedges = dpairs
         .select(col("p").as("u"), (col("s") + Off).as("v"))
         .unionByName(dpairs.select((col("s") + Off).as("u"),
@@ -1913,7 +1873,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
         d2.filter(col("dist") < BfsInf)
           .select(col("node_id"), col("dist").as("hop")))
       Seq(d2, edgesFin, dpairs).foreach(graft.Checkpoints.release)
-      privmDropTable(spark, tn)
+      ArtifactStore.dropTable(spark, ft)
       out.orderBy("hop", "node_id")
     }
   }
@@ -2175,11 +2135,12 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       graft.Checkpoints.release(ef)
       spark.range(0).select(col("id").as("node_id"), col("id").as("hop"))
     } else {
-      val (t, tn, root) = privmFreshTable(spark, dir, "bfsivmd")
+      val ft = ArtifactStore.freshTable(spark, dir, "bfsivmd")
+      val t = ft.sql
       spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '4')""")
       ef.writeTo(t).append()                                        // gen 1
-      val dv = s"bfsivmd_dels_$tn"
+      val dv = s"bfsivmd_dels_${ft.name}"
       dels.createOrReplaceTempView(dv)
       spark.sql(s"""MERGE INTO $t tgt USING $dv d
         ON tgt.p = d.p AND tgt.s = d.s
@@ -2187,7 +2148,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       spark.catalog.dropTempView(dv)
       graft.Checkpoints.release(ef)
       val dpairs = graft.Checkpoints.truncate(
-        netDelta(spark, root, tn, Seq("p", "s")))  // all sgn = -1
+        netDelta(spark, ft, Seq("p", "s")))  // all sgn = -1
       val dedges = graft.Checkpoints.truncate(dpairs
         .select(col("p").as("u"), (col("s") + Off).as("v"))
         .unionByName(dpairs.select((col("s") + Off).as("u"),
@@ -2217,7 +2178,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           }
         }
       Seq(dpairs, dedges).foreach(graft.Checkpoints.release)
-      privmDropTable(spark, tn)
+      ArtifactStore.dropTable(spark, ft)
       res
     }
   }
@@ -2268,11 +2229,12 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       graft.Checkpoints.release(ac)
       spark.range(0).select(col("id").as("node_id"), col("id").as("hop"))
     } else {
-      val (t, tn, root) = privmFreshTable(spark, dir, "bfsivmmx")
+      val ft = ArtifactStore.freshTable(spark, dir, "bfsivmmx")
+      val t = ft.sql
       spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '4')""")
       base0.writeTo(t).append()                                     // gen 1
-      val dv = s"bfsivmmx_dels_$tn"
+      val dv = s"bfsivmmx_dels_${ft.name}"
       dels.createOrReplaceTempView(dv)
       spark.sql(s"""MERGE INTO $t tgt USING $dv d
         ON tgt.p = d.p AND tgt.s = d.s
@@ -2281,7 +2243,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       adds.writeTo(t).append()                                      // gen 3
       graft.Checkpoints.release(ac)
       val dpairs = graft.Checkpoints.truncate(
-        netDelta(spark, root, tn, Seq("p", "s")))  // BOTH signs
+        netDelta(spark, ft, Seq("p", "s")))  // BOTH signs
       def directed(df: DataFrame): DataFrame = df
         .select(col("p").as("u"), (col("s") + Off).as("v"))
         .unionByName(df.select((col("s") + Off).as("u"), col("p").as("v")))
@@ -2336,7 +2298,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           }
         }
       Seq(dpairs, dedgesD, dedgesA).foreach(graft.Checkpoints.release)
-      privmDropTable(spark, tn)
+      ArtifactStore.dropTable(spark, ft)
       res
     }
   }
@@ -2473,19 +2435,20 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     mark("p1")
 
     val edges = spark.read.parquet(s"$stateRoot/edges")
-    val (t, tn, root) = privmFreshTable(spark, dir, "triivm")
+    val ft = ArtifactStore.freshTable(spark, dir, "triivm")
+    val t = ft.sql
     spark.sql(s"""CREATE TABLE $t (u BIGINT, v BIGINT) USING `graft-tsv`
       TBLPROPERTIES ('retain.generations' = '4')""")
     edges.filter(!held).writeTo(t).append()                         // gen 1
     edges.filter(held).writeTo(t).append()                          // gen 2
     // the FINAL graph is the base pairs plus the net inserted ones
-    val out = triApply(spark, root, tn, 1L, stateRoot, mark)
-    privmDropTable(spark, tn)
+    val out = triApply(spark, ft, 1L, stateRoot, mark)
+    ArtifactStore.dropTable(spark, ft)
     out
   }
 
   /** The delta window both triangle builders share, after the mutations
-    * committed to fresh table `tn`: the net delta edges of sign `sign`
+    * committed to fresh table `ft`: the net delta edges of sign `sign`
     * (+1 inserted, −1 deleted) come off the changes feed, their
     * emptiness off the same checkpoint job (a max flag, exact in both
     * checkpoint modes). A non-empty delta counts, per node, the triangles
@@ -2504,11 +2467,11 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     * O(V) counts are read but never exchanged. The result's top-20 is
     * localized, so it reads neither the table nor the delta checkpoint.
     * Returns the top-20 (node, n_tri). */
-  private def triApply(spark: SparkSession, root: String, tn: String,
+  private def triApply(spark: SparkSession, ft: ArtifactStore.ParityTable,
       sign: Long, stateRoot: String, mark: String => Unit): DataFrame = {
     val baseCnt = spark.read.parquet(s"$stateRoot/counts")
     val (dedges, nonEmpty) = truncateObserved(
-      netDelta(spark, root, tn, Seq("u", "v"))
+      netDelta(spark, ft, Seq("u", "v"))
         .filter(col("sgn") * sign > 0L).select("u", "v"),
       max(lit(1L)))
     mark("delta")
@@ -2638,11 +2601,12 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     mark("p1")
 
     val edges = spark.read.parquet(s"$stateRoot/edges")
-    val (t, tn, root) = privmFreshTable(spark, dir, "triivmd")
+    val ft = ArtifactStore.freshTable(spark, dir, "triivmd")
+    val t = ft.sql
     spark.sql(s"""CREATE TABLE $t (u BIGINT, v BIGINT) USING `graft-tsv`
       TBLPROPERTIES ('retain.generations' = '4')""")
     edges.writeTo(t).append()                                       // gen 1
-    val dv = s"triivmd_dels_$tn"
+    val dv = s"triivmd_dels_${ft.name}"
     edges.filter((col("u") * 37L + col("v")) % 43L === 0)
       .createOrReplaceTempView(dv)
     spark.sql(s"""MERGE INTO $t tgt USING $dv d
@@ -2650,8 +2614,8 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       WHEN MATCHED THEN DELETE""")                                  // gen 2
     spark.catalog.dropTempView(dv)
     // the PRE-delete graph is the base pair set itself
-    val out = triApply(spark, root, tn, -1L, stateRoot, mark)
-    privmDropTable(spark, tn)
+    val out = triApply(spark, ft, -1L, stateRoot, mark)
+    ArtifactStore.dropTable(spark, ft)
     out
   }
 
@@ -2768,14 +2732,15 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       spark.range(0).select(col("id").as("node_id"), col("id").as("lbl"),
         col("id").as("comm_size"))
     } else {
-      val (t, tn, root) = privmFreshTable(spark, dir, "lpivm")
+      val ft = ArtifactStore.freshTable(spark, dir, "lpivm")
+      val t = ft.sql
       spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '4')""")
       base0.writeTo(t).append()                                     // gen 1
       adds.writeTo(t).append()                                      // gen 2
       graft.Checkpoints.release(ac)
       val dpairs = graft.Checkpoints.truncate(
-        netDelta(spark, root, tn, Seq("p", "s")))
+        netDelta(spark, ft, Seq("p", "s")))
       val lpBase = spark.read.parquet(s"$stateRoot/lp")
       mark("delta")
       val res =
@@ -2839,7 +2804,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           out.orderBy("node_id")
         }
       graft.Checkpoints.release(dpairs)
-      privmDropTable(spark, tn)
+      ArtifactStore.dropTable(spark, ft)
       res
     }
   }

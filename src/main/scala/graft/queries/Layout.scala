@@ -148,8 +148,7 @@ object Layout {
   /** Ingest-many-small-files then compact; returns the compacted path.
     * Shared by the catalog query and CompactionSpec. */
   private[graft] def compactRoot(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_compact_${Integer.toHexString(dir.hashCode)}").toString
+    ArtifactStore.workDir(dir, "compact")
 
   private[graft] def compactedOrdersPath(spark: SparkSession, dir: String): String = {
     val tmpRoot = compactRoot(dir)

@@ -25,35 +25,26 @@ import Parity._
   */
 object SourceParity {
 
-  /** Write `table` out as `format` into a STABLE temp path (keyed by
-    * format/table/source dir — a fresh `createTempDirectory` per build
-    * leaked one dir per bench/verify run), read it back with the SAME
-    * explicit schema (no inference pass); overwrite mode makes reuse
-    * idempotent. The path also carries a CONTENT fingerprint of the source
-    * parquet (length + mtime), so a `cached` reuse can never join a stale
-    * export against regenerated testdata at the same path (ADVICE r05) —
-    * a signature change simply keys a fresh export directory. */
+  /** Write `table` out as `format` into a STABLE [[ArtifactStore]] root
+    * (keyed by source dir and signature, format, table and options — a
+    * fresh `createTempDirectory` per build leaked one dir per
+    * bench/verify run, and a stale export can never be joined against
+    * regenerated testdata), read it back with the SAME explicit schema
+    * (no inference pass). `cached` callers treat the exported file as a
+    * PRE-EXISTING source (q_federated_join: the CSV/JSON "arrived" from an
+    * external system; the operator under test is the cross-format join,
+    * not the export), so a completed export is reused. The round-trip
+    * queries keep cached=false — there the write path IS half the
+    * exhibit, so it is rebuilt on every call. */
   private def roundTrip(
       spark: SparkSession, dir: String, table: String,
       format: String, options: Map[String, String],
       cached: Boolean = false): DataFrame = {
     val src = tbl(spark, dir, table)
-    val srcFile = new java.io.File(graft.sources.Tables.path(dir, table))
-    val sig = java.lang.Long.toHexString(
-      srcFile.length * 1000003L + srcFile.lastModified)
-    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_src_${format}_${table}_${Integer.toHexString(dir.hashCode)}_$sig")
-      .toString
-    // `cached` callers treat the exported file as a PRE-EXISTING source
-    // (q_federated_join: the CSV/JSON "arrived" from an external system;
-    // the operator under test is the cross-format join, not the export),
-    // so the write happens once per machine and a completed export
-    // (_SUCCESS) is reused. The round-trip queries keep cached=false —
-    // there the write path IS half the exhibit.
-    val done = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-    val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!cached || !fs.exists(done))
-      src.write.format(format).options(options).mode("overwrite").save(tmp)
+    val store = if (cached) ArtifactStore.ensure _ else ArtifactStore.rebuild _
+    val tmp = store(spark, dir, table, s"src_$format",
+      options.toSeq.sorted.mkString(","))(
+      src.write.format(format).options(options).mode("overwrite").save(_))
     spark.read.format(format).options(options).schema(src.schema).load(tmp)
   }
 
@@ -133,9 +124,7 @@ object SourceParity {
       |""".stripMargin.trim),
     (spark, dir) => {
       val src = tbl(spark, dir, "orders")
-      val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_sink_part_orders_${Integer.toHexString(dir.hashCode)}")
-        .toString
+      val tmp = ArtifactStore.workDir(dir, "sink_part_orders")
       src.write.partitionBy("o_orderpriority").mode("overwrite").parquet(tmp)
       spark.read.parquet(tmp)
         .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
@@ -154,8 +143,8 @@ object SourceParity {
     * for a 100 TB fact-to-fact join: pay the bucketing once at write
     * time, then every subsequent join on that key is shuffle-free.
     * External-table paths (stable tmp) keep the repo clean; table names
-    * carry the source-dir hash so warmup (sf0.001) and the measured run
-    * (sf0.1) never collide in one session. */
+    * carry the source dir's digest so warmup (sf0.001) and the measured
+    * run (sf0.1) never collide in one session. */
   private val qBucketedJoin = QueryDef(
     "q_bucketed_join",
     Some(s"""
@@ -165,16 +154,14 @@ object SourceParity {
       |GROUP BY o_orderpriority ORDER BY o_orderpriority
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_bucketed_$h").toString
+      val tmp = ArtifactStore.workDir(dir, "bucketed")
       def bucketed(table: String, key: String, cols: Seq[String]): DataFrame = {
-        val name = s"graft_${table}_bk_$h"
+        val name = s"graft_${table}_bk_${ArtifactStore.dirDigest(dir)}"
         // Write the layout ONCE per session (the catalog check is the
         // guard): bucketing is a pay-once-at-write decision, and re-paying
         // it on every execution of the query mis-measured the join as 3×
         // its real cost. The source testdata is immutable within a session,
-        // and the table name carries the source-dir hash, so a hit is
+        // and the table name carries the source dir's digest, so a hit is
         // always the right layout.
         if (!spark.catalog.tableExists(name)) {
           tbl(spark, dir, table).select(cols.map(col): _*)
@@ -218,8 +205,7 @@ object SourceParity {
       |""".stripMargin.trim),
     (spark, dir) => {
       val part = tbl(spark, dir, "part")
-      val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_evolve_part_${Integer.toHexString(dir.hashCode)}").toString
+      val tmp = ArtifactStore.workDir(dir, "evolve_part")
       part.filter(col("p_partkey") % 2 === 0)
         .select("p_partkey", "p_brand", "p_retailprice")
         .write.mode("overwrite").parquet(s"$tmp/batch1")
@@ -245,8 +231,8 @@ object SourceParity {
     * At 100 TB this is THE mechanism that makes `fact JOIN dim WHERE
     * dim.attr = x` scan only the matching date/tenant slices without the
     * query author inlining partition values. The partitioned layout is
-    * written once per machine (same _SUCCESS pay-once guard as the
-    * federated exports); PlanAuditSpec asserts the dynamic-pruning
+    * written once per machine ([[ArtifactStore.ensure]]); PlanAuditSpec
+    * asserts the dynamic-pruning
     * expression and that the static plan carries no literal priority
     * filter. Oracle: the same join over the original table with the
     * dimension inlined as VALUES. */
@@ -264,27 +250,20 @@ object SourceParity {
       |""".stripMargin.trim),
     (spark, dir) => {
       import spark.implicits._
-      val src = tbl(spark, dir, "orders")
-      val srcFile = new java.io.File(graft.sources.Tables.path(dir, "orders"))
-      val sig = java.lang.Long.toHexString(
-        srcFile.length * 1000003L + srcFile.lastModified)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_dpp_${Integer.toHexString(dir.hashCode)}_$sig").toString
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/orders/_SUCCESS")))
-        src.write.partitionBy("o_orderpriority").mode("overwrite")
-          .parquet(s"$root/orders")
-      // the dimension must be a FILE source (not an in-memory relation):
-      // ConvertToLocalRelation would constant-fold the filter away and the
-      // pruning rule needs a surviving selective Filter on the dim side —
-      // which is also the realistic shape (dims live in the lake too)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/svc/_SUCCESS")))
+      val root = ArtifactStore.ensure(spark, dir, "orders", "dpp",
+          "orders by o_orderpriority; svc 5 rows") { r =>
+        tbl(spark, dir, "orders").write.partitionBy("o_orderpriority")
+          .mode("overwrite").parquet(s"$r/orders")
+        // the dimension must be a FILE source (not an in-memory relation):
+        // ConvertToLocalRelation would constant-fold the filter away and
+        // the pruning rule needs a surviving selective Filter on the dim
+        // side — which is also the realistic shape (dims live in the lake)
         Seq(
           ("1-URGENT", "expedite"), ("2-HIGH", "expedite"),
           ("3-MEDIUM", "standard"), ("4-NOT SPECIFIED", "standard"),
           ("5-LOW", "standard")).toDF("prio", "svc_class")
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/svc")
+          .coalesce(1).write.mode("overwrite").parquet(s"$r/svc")
+      }
       val svc = spark.read.parquet(s"$root/svc")
       spark.read.parquet(s"$root/orders")
         .join(broadcast(svc.filter($"svc_class" === "expedite")),
@@ -474,61 +453,38 @@ object SourceParity {
     })
 
   /** Pay-once hive-partitioned graft-tsv export for q_dsv2_agg_group. */
-  private def metaAggGroupExport(spark: SparkSession, dir: String): String = {
-    val srcFile = new java.io.File(graft.sources.Tables.path(dir, "orders"))
-    val sig = java.lang.Long.toHexString(
-      srcFile.length * 1000003L + srcFile.lastModified)
-    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_dsv2_metagrp_${Integer.toHexString(dir.hashCode)}_$sig").toString
-    val done = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-    val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(done))
+  private def metaAggGroupExport(spark: SparkSession, dir: String): String =
+    ArtifactStore.ensure(spark, dir, "orders", "dsv2_metagrp",
+        "o_orderkey; by o_orderpriority") {
       tbl(spark, dir, "orders").select(col("o_orderkey"), col("o_orderpriority"))
         .write.format("graft-tsv").mode("overwrite")
-        .option("partition.columns", "o_orderpriority").save(tmp)
-    tmp
-  }
+        .option("partition.columns", "o_orderpriority").save(_)
+    }
 
   /** Pay-once graft-tsv-written export for q_dsv2_agg_meta (the write
     * must go through the connector so the manifest records the stats the
-    * metadata path answers from; `_SUCCESS` + fingerprint cache as for
-    * the other exports). */
-  private def metaAggExport(spark: SparkSession, dir: String): String = {
-    val srcFile = new java.io.File(graft.sources.Tables.path(dir, "orders"))
-    val sig = java.lang.Long.toHexString(
-      srcFile.length * 1000003L + srcFile.lastModified)
-    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_dsv2_meta_${Integer.toHexString(dir.hashCode)}_$sig").toString
-    val done = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-    val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(done))
+    * metadata path answers from). */
+  private def metaAggExport(spark: SparkSession, dir: String): String =
+    ArtifactStore.ensure(spark, dir, "orders", "dsv2_meta",
+        "o_orderkey, o_orderpriority, o_orderdate_ms") {
       tbl(spark, dir, "orders").select(
         col("o_orderkey"), col("o_orderpriority"),
         unix_millis(col("o_orderdate").cast("timestamp")).as("o_orderdate_ms"))
-        .write.format("graft-tsv").mode("overwrite").save(tmp)
-    tmp
-  }
+        .write.format("graft-tsv").mode("overwrite").save(_)
+    }
 
-  /** Pay-once hive-layout TSV export for q_dsv2_partitioned (same
-    * _SUCCESS + source-fingerprint cache as the other exports). */
-  private def dsv2PartitionedExport(spark: SparkSession, dir: String): String = {
-    val srcFile = new java.io.File(graft.sources.Tables.path(dir, "orders"))
-    val sig = java.lang.Long.toHexString(
-      srcFile.length * 1000003L + srcFile.lastModified)
-    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_dsv2_part_${Integer.toHexString(dir.hashCode)}_$sig").toString
-    val done = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-    val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(done))
+  /** Pay-once hive-layout TSV export for q_dsv2_partitioned. */
+  private def dsv2PartitionedExport(spark: SparkSession, dir: String): String =
+    ArtifactStore.ensure(spark, dir, "orders", "dsv2_part",
+        "o_orderkey, o_orderstatus, o_totalprice_str; by o_orderpriority") {
       tbl(spark, dir, "orders").select(
         col("o_orderkey"), col("o_orderstatus"),
         dec("o_totalprice").cast("string").as("o_totalprice_str"),
         col("o_orderpriority"))
         .write.partitionBy("o_orderpriority")
         .option("sep", "\t").option("header", "false")
-        .mode("overwrite").csv(tmp)
-    tmp
-  }
+        .mode("overwrite").csv(_)
+    }
 
   /** STORAGE-PARTITIONED JOIN through the DSv2 connector under the
     * oracle gate: customer and supplier both exported hive-partitioned
@@ -585,24 +541,15 @@ object SourceParity {
         .orderBy("nationkey")
     })
 
-  /** Pay-once nationkey-partitioned TSV export for q_dsv2_spj (same
-    * _SUCCESS + source-fingerprint cache as the other exports). */
+  /** Pay-once nationkey-partitioned TSV export for q_dsv2_spj. */
   private def spjExport(spark: SparkSession, dir: String, table: String,
-      partCol: String)(sel: DataFrame => DataFrame): String = {
-    val srcFile = new java.io.File(graft.sources.Tables.path(dir, table))
-    val sig = java.lang.Long.toHexString(
-      srcFile.length * 1000003L + srcFile.lastModified)
-    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_dsv2_spj_${table}_${Integer.toHexString(dir.hashCode)}_$sig")
-      .toString
-    val done = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-    val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(done))
+      partCol: String)(sel: DataFrame => DataFrame): String =
+    ArtifactStore.ensure(spark, dir, table, "dsv2_spj",
+        s"key, acctbal_str; by $partCol") {
       sel(tbl(spark, dir, table)).write.partitionBy(partCol)
         .option("sep", "\t").option("header", "false")
-        .mode("overwrite").csv(tmp)
-    tmp
-  }
+        .mode("overwrite").csv(_)
+    }
 
   /** WRITE path of the DSv2 connector under the oracle gate — the sink
     * twin of q_dsv2_source, and the catalog's distributed restatement of
@@ -624,8 +571,7 @@ object SourceParity {
       |""".stripMargin.trim),
     (spark, dir) => {
       import org.apache.spark.sql.types._
-      val out = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_dsv2_sink_${Integer.toHexString(dir.hashCode)}").toString
+      val out = ArtifactStore.workDir(dir, "dsv2_sink")
       tbl(spark, dir, "customer").select(
         col("c_custkey"), col("c_mktsegment"),
         dec("c_acctbal").cast("string").as("c_acctbal_str"))
@@ -661,8 +607,7 @@ object SourceParity {
       |""".stripMargin.trim),
     (spark, dir) => {
       import org.apache.spark.sql.types._
-      val out = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_dsv2_stats_${Integer.toHexString(dir.hashCode)}").toString
+      val out = ArtifactStore.workDir(dir, "dsv2_stats")
       tbl(spark, dir, "orders").select(
         col("o_orderkey"), col("o_orderstatus"),
         dec("o_totalprice").cast("string").as("o_totalprice_str"))
@@ -701,8 +646,7 @@ object SourceParity {
       |""".stripMargin.trim),
     (spark, dir) => {
       import org.apache.spark.sql.types._
-      val out = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_dsv2_split_${Integer.toHexString(dir.hashCode)}").toString
+      val out = ArtifactStore.workDir(dir, "dsv2_split")
       tbl(spark, dir, "orders").select(
         col("o_orderkey"), col("o_orderstatus"),
         dec("o_totalprice").cast("string").as("o_totalprice_str"))
@@ -743,24 +687,17 @@ object SourceParity {
       |GROUP BY o_orderpriority ORDER BY o_orderpriority
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.orders_ctas_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "orders_ctas")
+      val t = pt.sql
       tbl(spark, dir, "orders")
         .filter(col("o_orderkey") % 4 =!= 0)
         .select(col("o_orderkey"), col("o_orderpriority"),
           dec("o_totalprice").cast("string").as("o_totalprice_str"))
-        .createOrReplaceTempView(s"ctas_src_$h")
+        .createOrReplaceTempView(s"ctas_src_${pt.name}")
       spark.sql(s"""CREATE TABLE $t USING `graft-tsv`
         PARTITIONED BY (o_orderpriority)
         AS SELECT o_orderkey, o_totalprice_str, o_orderpriority
-        FROM ctas_src_$h""")
+        FROM ctas_src_${pt.name}""")
       spark.table(t)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),
@@ -792,15 +729,7 @@ object SourceParity {
       |GROUP BY o_orderstatus ORDER BY o_orderstatus
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.orders_del_$h" // warmup/measure SFs never collide
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val t = ArtifactStore.parityTable(spark, dir, "orders_del").sql
       spark.sql(s"""CREATE TABLE $t (o_orderkey BIGINT, o_orderstatus STRING,
         o_totalprice_str STRING) USING `graft-tsv`""")
       tbl(spark, dir, "orders").select(
@@ -840,15 +769,7 @@ object SourceParity {
       |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.cust_evolve_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val t = ArtifactStore.parityTable(spark, dir, "cust_evolve").sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`""")
       val cust = tbl(spark, dir, "customer").select(
@@ -887,15 +808,7 @@ object SourceParity {
       |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.cust_narrow_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val t = ArtifactStore.parityTable(spark, dir, "cust_narrow").sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`""")
       val cust = tbl(spark, dir, "customer").select(
@@ -940,15 +853,7 @@ object SourceParity {
       |ORDER BY snapshot, c_mktsegment
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.cust_tt_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val t = ArtifactStore.parityTable(spark, dir, "cust_tt").sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '2')""")
@@ -994,22 +899,15 @@ object SourceParity {
       |ORDER BY snapshot, c_mktsegment
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.cust_tag_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "cust_tag")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`""")
       tbl(spark, dir, "customer").select(
         col("c_custkey"), col("c_mktsegment"),
         dec("c_acctbal").cast("string").as("c_acctbal_str"))
         .writeTo(t).append()                                   // generation 1
-      spark.sql(s"CALL gparity.system.tag(`table` => 'db.cust_tag_$h', " +
+      spark.sql(s"CALL gparity.system.tag(`table` => '${pt.ref}', " +
         "tag => 'known_good', generation => 1)")
       // two curation mutations: with default retain=1 the window alone
       // keeps only generation 2 — generation 1 lives on the tag's pin
@@ -1068,15 +966,8 @@ object SourceParity {
       |FROM merged GROUP BY st ORDER BY st
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.orders_merge_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "orders_merge")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (o_orderkey BIGINT, o_orderstatus STRING,
         o_totalprice_str STRING) USING `graft-tsv`""")
       val orders = tbl(spark, dir, "orders")
@@ -1088,9 +979,9 @@ object SourceParity {
       orders.filter(col("o_orderkey") % 2 === 0).select(
         col("o_orderkey"), col("o_orderstatus"),
         (dec("o_totalprice") * 2).cast("string").as("price2_str"))
-        .createOrReplaceTempView(s"mrg_src_$h")
+        .createOrReplaceTempView(s"mrg_src_${pt.name}")
       spark.sql(s"""
-        MERGE INTO $t t USING mrg_src_$h s ON t.o_orderkey = s.o_orderkey
+        MERGE INTO $t t USING mrg_src_${pt.name} s ON t.o_orderkey = s.o_orderkey
         WHEN MATCHED AND s.o_orderstatus = 'F' THEN
           UPDATE SET o_orderstatus = 'X', o_totalprice_str = s.price2_str
         WHEN MATCHED AND s.o_orderstatus = 'P' THEN DELETE
@@ -1149,15 +1040,8 @@ object SourceParity {
       |FROM merged GROUP BY st ORDER BY st
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.orders_sync_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "orders_sync")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (o_orderkey BIGINT, o_orderstatus STRING,
         o_totalprice_str STRING) USING `graft-tsv`""")
       val orders = tbl(spark, dir, "orders")
@@ -1169,9 +1053,9 @@ object SourceParity {
       orders.filter(col("o_orderkey") % 2 === 0).select(
         col("o_orderkey"), col("o_orderstatus"),
         (dec("o_totalprice") * 2).cast("string").as("price2_str"))
-        .createOrReplaceTempView(s"sync_src_$h")
+        .createOrReplaceTempView(s"sync_src_${pt.name}")
       spark.sql(s"""
-        MERGE INTO $t t USING sync_src_$h s ON t.o_orderkey = s.o_orderkey
+        MERGE INTO $t t USING sync_src_${pt.name} s ON t.o_orderkey = s.o_orderkey
         WHEN MATCHED AND s.o_orderstatus = 'F' THEN
           UPDATE SET o_orderstatus = 'X', o_totalprice_str = s.price2_str
         WHEN NOT MATCHED THEN
@@ -1209,15 +1093,7 @@ object SourceParity {
       |FROM customer GROUP BY 1 ORDER BY 1
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.cust_upd_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val t = ArtifactStore.parityTable(spark, dir, "cust_upd").sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`""")
       tbl(spark, dir, "customer").select(
@@ -1257,15 +1133,8 @@ object SourceParity {
       |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.cust_compact_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "cust_compact")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`""")
       tbl(spark, dir, "customer").select(
@@ -1274,7 +1143,7 @@ object SourceParity {
         .repartition(12)
         .writeTo(t).append()
       val res = spark.sql(
-        s"CALL gparity.system.compact(`table` => 'db.cust_compact_$h')")
+        s"CALL gparity.system.compact(`table` => '${pt.ref}')")
         .collect().head
       require(res.getLong(1) < res.getLong(0),
         s"compaction must reduce the file count, got $res")
@@ -1327,28 +1196,8 @@ object SourceParity {
       // (bench overlapping verify) would clobber each other mid-build —
       // the q_stream_ivm lesson (ADVICE r14) applied at birth. Stale
       // siblings (> 30 min, far past any live run) are swept instead.
-      val h = Integer.toHexString(dir.hashCode)
-      val nonce = java.lang.Long.toHexString(
-        System.nanoTime() ^ (Thread.currentThread().getId << 48))
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      locally {
-        val cutoff = System.currentTimeMillis() - 30 * 60 * 1000L
-        Option(new java.io.File(root, "db").listFiles())
-          .getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith(s"cust_mfd_${h}_") &&
-            !f.getName.contains(nonce) && f.lastModified < cutoff)
-          .foreach { f =>
-            val p = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-          }
-      }
-      val t = s"gparity.db.cust_mfd_${h}_$nonce"
+      val pt = ArtifactStore.freshTable(spark, dir, "cust_mfd")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '2')""")
@@ -1369,7 +1218,7 @@ object SourceParity {
       }
       // structural proof that the NEW manifest forms are what the read
       // below resolves (guarded: a tiny SF may stay under the threshold)
-      val tdir = new org.apache.hadoop.fs.Path(s"$root/db/cust_mfd_${h}_$nonce")
+      val tdir = new org.apache.hadoop.fs.Path(pt.dir)
       val fs = tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val names = fs.listStatus(tdir).map(_.getPath.getName).toSeq
       val liveParts = graft.sources.GraftTsvManifest.readEntries(fs,
@@ -1422,22 +1271,15 @@ object SourceParity {
       |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.cust_vac_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "cust_vac")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`""")
       tbl(spark, dir, "customer").select(
         col("c_custkey"), col("c_mktsegment"),
         dec("c_acctbal").cast("string").as("c_acctbal_str"))
         .writeTo(t).append()
-      val tdir = new java.io.File(s"$root/db/cust_vac_$h")
+      val tdir = new java.io.File(pt.dir)
       val before = tdir.listFiles().map(_.getName).toSet
       // the two orphan classes of a crashed attempt
       java.nio.file.Files.writeString(
@@ -1445,7 +1287,7 @@ object SourceParity {
       java.nio.file.Files.writeString(
         tdir.toPath.resolve("part-99999-orphan"), "1\tX\t0.00\n")
       val res = spark.sql(
-        s"CALL gparity.system.vacuum(`table` => 'db.cust_vac_$h', " +
+        s"CALL gparity.system.vacuum(`table` => '${pt.ref}', " +
           "older_than_ms => 0)").collect().head
       require(res.getLong(0) == 2L,
         s"vacuum must reclaim exactly the two planted orphans, got $res")
@@ -1480,15 +1322,8 @@ object SourceParity {
       |ORDER BY generation
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.cust_hist_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "cust_hist")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '3')""")
@@ -1498,7 +1333,7 @@ object SourceParity {
       cust.filter(col("c_custkey") % 3 =!= 0).writeTo(t).append()  // gen 1
       cust.filter(col("c_custkey") % 3 === 0).writeTo(t).append()  // gen 2
       spark.sql(s"DELETE FROM $t WHERE c_custkey % 7 = 1")         // gen 3
-      spark.sql(s"CALL gparity.system.history(`table` => 'db.cust_hist_$h')")
+      spark.sql(s"CALL gparity.system.history(`table` => '${pt.ref}')")
         .select(col("generation"), col("n_rows"))
         .orderBy("generation")
     })
@@ -1519,15 +1354,8 @@ object SourceParity {
       |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.cust_rb_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "cust_rb")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '3')""")
@@ -1536,7 +1364,7 @@ object SourceParity {
         dec("c_acctbal").cast("string").as("c_acctbal_str"))
         .writeTo(t).append()                                      // gen 1
       spark.sql(s"DELETE FROM $t WHERE c_mktsegment = 'BUILDING'") // gen 2: bad
-      spark.sql(s"CALL gparity.system.rollback(`table` => 'db.cust_rb_$h', " +
+      spark.sql(s"CALL gparity.system.rollback(`table` => '${pt.ref}', " +
         "to_generation => 1)")                                     // gen 3 = gen 1
       spark.table(t)
         .groupBy("c_mktsegment")
@@ -1545,23 +1373,15 @@ object SourceParity {
         .orderBy("c_mktsegment")
     })
 
-  /** Pay-once TSV export for q_dsv2_source (same _SUCCESS + source
-    * fingerprint guard as the federated exports): project orders to the
+  /** Pay-once TSV export for q_dsv2_source: project orders to the
     * connector's text conventions — exact decimal STRING for the price
     * (double→decimal→string is the lossless hop, see oracle-parity
     * rules), epoch-ms long for the date. Tab-free columns by
     * construction. */
-  private def dsv2OrdersExport(spark: SparkSession, dir: String): String = {
-    val src = tbl(spark, dir, "orders")
-    val srcFile = new java.io.File(graft.sources.Tables.path(dir, "orders"))
-    val sig = java.lang.Long.toHexString(
-      srcFile.length * 1000003L + srcFile.lastModified)
-    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_dsv2_orders_${Integer.toHexString(dir.hashCode)}_$sig").toString
-    val done = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-    val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(done))
-      src.select(
+  private def dsv2OrdersExport(spark: SparkSession, dir: String): String =
+    ArtifactStore.ensure(spark, dir, "orders", "dsv2_orders",
+        "key, custkey, status, totalprice_str, orderdate_ms, priority") {
+      tbl(spark, dir, "orders").select(
         col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         dec("o_totalprice").cast("string").as("o_totalprice_str"),
         // o_orderdate is TIMESTAMP_NTZ; cast is instant-identity under
@@ -1569,9 +1389,8 @@ object SourceParity {
         unix_millis(col("o_orderdate").cast("timestamp")).as("o_orderdate_ms"),
         col("o_orderpriority"))
         .write.option("sep", "\t").option("header", "false")
-        .mode("overwrite").csv(tmp)
-    tmp
-  }
+        .mode("overwrite").csv(_)
+    }
 
   /** Federated three-format join: parquet fact (lineitem) ⋈ CSV orders ⋈
     * JSON customer in ONE plan — Catalyst plans across sources uniformly
@@ -1635,15 +1454,8 @@ object SourceParity {
       |ORDER BY change_type, c_mktsegment
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.cust_chg_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "cust_chg")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '4')""")
@@ -1653,11 +1465,7 @@ object SourceParity {
       cust.filter(col("c_custkey") % 3 =!= 0).writeTo(t).append()   // gen 1
       spark.sql(s"DELETE FROM $t WHERE c_mktsegment = 'BUILDING'")  // gen 2
       cust.filter(col("c_custkey") % 3 === 0).writeTo(t).append()   // gen 3
-      val cat = spark.sessionState.catalogManager.catalog("gparity")
-        .asInstanceOf[graft.sources.GraftTsvCatalog]
-      cat.changes(spark,
-          org.apache.spark.sql.connector.catalog.Identifier.of(
-            Array("db"), s"cust_chg_$h"), "1", "3")
+      ArtifactStore.parityCatalog(spark).changes(spark, pt.ident, "1", "3")
         .groupBy(col("_change_type").as("change_type"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
           dsum(dec(col("c_acctbal_str"))).as("sum_bal"))
@@ -1690,15 +1498,8 @@ object SourceParity {
       |GROUP BY o_orderstatus ORDER BY o_orderstatus
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.ord_zo_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "ord_zo")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (o_orderkey BIGINT, o_custkey BIGINT,
         o_orderstatus STRING, o_totalprice_str STRING) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '2')""")
@@ -1706,7 +1507,7 @@ object SourceParity {
         col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         dec("o_totalprice").cast("string").as("o_totalprice_str"))
         .writeTo(t).append()                                  // generation 1
-      spark.sql(s"CALL gparity.system.zorder(`table` => 'db.ord_zo_$h', " +
+      spark.sql(s"CALL gparity.system.zorder(`table` => '${pt.ref}', " +
         "columns => 'o_orderkey,o_custkey', target_bytes => 262144)") // gen 2
       val bounds = spark.table(t)
         .agg(max("o_orderkey").as("km"), max("o_custkey").as("cm"))
@@ -1740,15 +1541,8 @@ object SourceParity {
       |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.cust_gs_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "cust_gs")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '3')""")
@@ -1765,10 +1559,10 @@ object SourceParity {
         org.apache.spark.sql.types.StructField("c_acctbal_str",
           org.apache.spark.sql.types.StringType)))
       val ss = spark.newSession()
-      val sink = s"gen_stream_sink_$h"
+      val sink = s"gen_stream_sink_${pt.name}"
       val q = ss.readStream.format("graft-tsv").schema(schema)
         .option("stream.by.generation", "true")
-        .load(s"$root/db/cust_gs_$h")
+        .load(pt.dir)
         .writeStream.format("memory").queryName(sink)
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1810,15 +1604,8 @@ object SourceParity {
       |ORDER BY commit_gen, change_type, c_mktsegment
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.cust_cl_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "cust_cl")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '4')""")
@@ -1828,11 +1615,8 @@ object SourceParity {
       cust.filter(col("c_custkey") % 3 =!= 0).writeTo(t).append()   // gen 1
       spark.sql(s"DELETE FROM $t WHERE c_mktsegment = 'BUILDING'")  // gen 2
       cust.filter(col("c_custkey") % 3 === 0).writeTo(t).append()   // gen 3
-      val cat = spark.sessionState.catalogManager.catalog("gparity")
-        .asInstanceOf[graft.sources.GraftTsvCatalog]
-      cat.changesByCommit(spark,
-          org.apache.spark.sql.connector.catalog.Identifier.of(
-            Array("db"), s"cust_cl_$h"), "1", "3")
+      ArtifactStore.parityCatalog(spark)
+        .changesByCommit(spark, pt.ident, "1", "3")
         .groupBy(col("_commit_generation").cast("int").as("commit_gen"),
           col("_change_type").as("change_type"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
@@ -1873,15 +1657,8 @@ object SourceParity {
       |FROM final_rows GROUP BY seg ORDER BY seg
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.cust_ivm_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "cust_ivm")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '5')""")
@@ -1904,13 +1681,10 @@ object SourceParity {
         .agg(count(lit(1)).as("n0"),
           sum(dec(col("c_acctbal_str"))).as("s0"))
       // the net delta since: signed count/sum over the changes feed
-      val cat = spark.sessionState.catalogManager.catalog("gparity")
-        .asInstanceOf[graft.sources.GraftTsvCatalog]
       val sign = when(col("_change_type") === "insert", lit(1))
         .otherwise(lit(-1))
-      val delta = cat.changes(spark,
-          org.apache.spark.sql.connector.catalog.Identifier.of(
-            Array("db"), s"cust_ivm_$h"), "1", "4")
+      val delta = ArtifactStore.parityCatalog(spark)
+        .changes(spark, pt.ident, "1", "4")
         .groupBy(col("c_mktsegment").as("seg"))
         .agg(sum(sign.cast("long")).as("dn"),
           sum(sign.cast("decimal(18,2)") * dec(col("c_acctbal_str")))
@@ -1969,28 +1743,8 @@ object SourceParity {
       // SIBLING runs' state older than 30 minutes — far past any live
       // invocation, so a concurrent run is never touched and at most a
       // bounded handful of recent copies exist at once.
-      val h = Integer.toHexString(dir.hashCode)
-      val nonce = java.lang.Long.toHexString(
-        System.nanoTime() ^ (Thread.currentThread().getId << 48))
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      def sweepStale(parent: java.io.File, prefix: String): Unit = {
-        val cutoff = System.currentTimeMillis() - 30 * 60 * 1000L
-        Option(parent.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith(prefix) &&
-            !f.getName.contains(nonce) && f.lastModified < cutoff)
-          .foreach { f =>
-            val p = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-          }
-      }
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      sweepStale(new java.io.File(root, "db"), s"cust_sivm_${h}_")
-      val t = s"gparity.db.cust_sivm_${h}_$nonce"
+      val pt = ArtifactStore.freshTable(spark, dir, "cust_sivm")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`
         TBLPROPERTIES ('retain.generations' = '6')""")
@@ -2015,16 +1769,13 @@ object SourceParity {
       // checkpoint is exactly what phase 2 exercises, and the memory sink
       // does not support recovery). The nonce'd path plus the stale sweep
       // bounds leakage to the last half hour of runs.
-      sweepStale(new java.io.File(sys.props("java.io.tmpdir")),
-        s"graft_sivm_${h}_")
-      val work = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_sivm_${h}_$nonce").toString
+      val work = ArtifactStore.freshDir(spark, dir, "sivm")
       val (ckpt, out) = (s"$work/ckpt", s"$work/out")
       def drain(): Unit = {
         val q = ss.readStream.format("graft-tsv").schema(schema)
           .option("stream.by.generation", "true")
           .option("stream.changes", "true")
-          .load(s"$root/db/cust_sivm_${h}_$nonce")
+          .load(pt.dir)
           .writeStream.format("parquet").option("path", out)
           .outputMode("append")
           .option("checkpointLocation", ckpt)
@@ -2088,28 +1839,8 @@ object SourceParity {
       |FROM b GROUP BY band, bucket ORDER BY band, bucket
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val nonce = java.lang.Long.toHexString(
-        System.nanoTime() ^ (Thread.currentThread().getId << 48))
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      def sweepStale(parent: java.io.File, prefix: String): Unit = {
-        val cutoff = System.currentTimeMillis() - 30 * 60 * 1000L
-        Option(parent.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith(prefix) &&
-            !f.getName.contains(nonce) && f.lastModified < cutoff)
-          .foreach { f =>
-            val p = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-          }
-      }
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      sweepStale(new java.io.File(root, "db"), s"docs_slsh_${h}_")
-      val t = s"gparity.db.docs_slsh_${h}_$nonce"
+      val pt = ArtifactStore.freshTable(spark, dir, "docs_slsh")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (doc_id BIGINT, text STRING)
         USING `graft-tsv` TBLPROPERTIES ('retain.generations' = '6')""")
       val docs = tbl(spark, dir, "documents").select(col("doc_id"), col("text"))
@@ -2123,10 +1854,7 @@ object SourceParity {
           graft.sources.GraftTsvMeta.ChangeCol,
           org.apache.spark.sql.types.StringType)))
       val ss = spark.newSession()
-      sweepStale(new java.io.File(sys.props("java.io.tmpdir")),
-        s"graft_slsh_${h}_")
-      val work = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_slsh_${h}_$nonce").toString
+      val work = ArtifactStore.freshDir(spark, dir, "slsh")
       val (ckpt, out) = (s"$work/ckpt", s"$work/out")
       def drain(): Unit = {
         // dev sweep knob (SCALE.md §29 follow-up): when set, the drain
@@ -2140,7 +1868,7 @@ object SourceParity {
           .option("stream.by.generation", "true")
           .option("stream.changes", "true")
         val q = maxFiles.fold(rs)(n => rs.option("max.files.per.trigger", n))
-          .load(s"$root/db/docs_slsh_${h}_$nonce")
+          .load(pt.dir)
           .writeStream.format("parquet").option("path", out)
           .outputMode("append")
           .option("checkpointLocation", ckpt)
@@ -2215,13 +1943,6 @@ object SourceParity {
       |ORDER BY snapshot, c_mktsegment
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
       val base = tbl(spark, dir, "customer").select(
         col("c_custkey"), col("c_mktsegment"),
         dec("c_acctbal").cast("string").as("c_acctbal_str"))
@@ -2229,21 +1950,20 @@ object SourceParity {
         base.filter(col("c_custkey") % mod === 0)
           .select((col("c_custkey") + off).as("c_custkey"),
             lit(seg).as("c_mktsegment"), col("c_acctbal_str"))
-      def mk(name: String): String = {
-        val t = s"gparity.db.${name}_$h"
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
-          c_acctbal_str STRING) USING `graft-tsv`""")
-        base.writeTo(t).append()                               // generation 1
-        spark.sql(s"CALL gparity.system.branch('db.${name}_$h', 'cur')")
+      def mk(name: String): ArtifactStore.ParityTable = {
+        val pt = ArtifactStore.parityTable(spark, dir, name)
+        spark.sql(s"""CREATE TABLE ${pt.sql} (c_custkey BIGINT,
+          c_mktsegment STRING, c_acctbal_str STRING) USING `graft-tsv`""")
+        base.writeTo(pt.sql).append()                          // generation 1
+        spark.sql(s"CALL gparity.system.branch('${pt.ref}', 'cur')")
         extra(7, "BR_X", 2000000L)
-          .writeTo(t).option("branch", "cur").append()         // branch head
-        t
+          .writeTo(pt.sql).option("branch", "cur").append()    // branch head
+        pt
       }
-      val t1 = mk("cust_br")                // live branch, then main diverges
+      val t1 = mk("cust_br").sql            // live branch, then main diverges
       extra(5, "MAIN_X", 1000000L).writeTo(t1).append()
       val t2 = mk("cust_brm")               // fast-forward merged
-      spark.sql(s"CALL gparity.system.merge_branch('db.cust_brm_$h', 'cur')")
+      spark.sql(s"CALL gparity.system.merge_branch('${t2.ref}', 'cur')")
       def agg(df: org.apache.spark.sql.DataFrame, tag: String) =
         df.groupBy("c_mktsegment")
           .agg(count(lit(1)).as("n"),
@@ -2253,7 +1973,7 @@ object SourceParity {
       agg(spark.table(t1), "main")
         .unionAll(agg(
           spark.read.option("branch", "cur").table(t1), "branch"))
-        .unionAll(agg(spark.table(t2), "merged"))
+        .unionAll(agg(spark.table(t2.sql), "merged"))
         .orderBy("snapshot", "c_mktsegment")
     })
 
@@ -2283,22 +2003,15 @@ object SourceParity {
       |ORDER BY _change_type, c_mktsegment
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.cust_brd_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "cust_brd")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
         c_acctbal_str STRING) USING `graft-tsv`""")
       val base = tbl(spark, dir, "customer").select(
         col("c_custkey"), col("c_mktsegment"),
         dec("c_acctbal").cast("string").as("c_acctbal_str"))
       base.writeTo(t).append()                                 // generation 1
-      spark.sql(s"CALL gparity.system.branch('db.cust_brd_$h', 'rev')")
+      spark.sql(s"CALL gparity.system.branch('${pt.ref}', 'rev')")
       val curated = base.filter(col("c_mktsegment") =!= "BUILDING")
         .unionByName(base.filter(col("c_custkey") % 7 === 0)
           .select((col("c_custkey") + 2000000L).as("c_custkey"),
@@ -2306,11 +2019,7 @@ object SourceParity {
       curated.writeTo(t).option("branch", "rev").overwrite(lit(true))
       // main advances AFTER the branch point — must not appear in the diff
       spark.sql(s"INSERT INTO $t SELECT 9000000, 'MAIN_X', '1.00'")
-      val cat = spark.sessionState.catalogManager.catalog("gparity")
-        .asInstanceOf[graft.sources.GraftTsvCatalog]
-      cat.branchChanges(spark,
-          org.apache.spark.sql.connector.catalog.Identifier.of(
-            Array("db"), s"cust_brd_$h"), "rev")
+      ArtifactStore.parityCatalog(spark).branchChanges(spark, pt.ident, "rev")
         .groupBy("_change_type", "c_mktsegment")
         .agg(count(lit(1)).as("n"))
         .orderBy("_change_type", "c_mktsegment")

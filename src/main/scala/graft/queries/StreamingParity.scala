@@ -574,15 +574,8 @@ object StreamingParity {
       |FROM merged GROUP BY st ORDER BY st
       |""".stripMargin.trim),
     (spark, dir) => {
-      val h = Integer.toHexString(dir.hashCode)
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_parity_catalog").toString
-      spark.conf.set("spark.sql.catalog.gparity",
-        classOf[graft.sources.GraftTsvCatalog].getName)
-      spark.conf.set("spark.sql.catalog.gparity.root", root)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS gparity.db")
-      val t = s"gparity.db.orders_sup_$h"
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val pt = ArtifactStore.parityTable(spark, dir, "orders_sup")
+      val t = pt.sql
       spark.sql(s"""CREATE TABLE $t (o_orderkey BIGINT, o_orderstatus STRING,
         o_totalprice_str STRING) USING `graft-tsv`""")
       val orders = tbl(spark, dir, "orders")
@@ -609,7 +602,7 @@ object StreamingParity {
         .option("checkpointLocation", s"$tmp/ckpt")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val view = s"up_batch_${h}_$batchId"
+          val view = s"up_batch_${pt.name}_$batchId"
           batch.createOrReplaceTempView(view)
           batch.sparkSession.sql(s"""
             MERGE INTO $t t USING $view s ON t.o_orderkey = s.o_orderkey

@@ -570,7 +570,8 @@ object TextAnalysis {
 
     // the CDC lifecycle: snapshot → DELETE → append → text-rewriting
     // UPDATE (the q_stream_lsh_ivm exhibit, batch feed)
-    val (t, tn, root) = Graph.privmFreshTable(spark, dir, "bm25ivm")
+    val ft = ArtifactStore.freshTable(spark, dir, "bm25ivm")
+    val t = ft.sql
     spark.sql(s"""CREATE TABLE $t (doc_id BIGINT, text STRING)
       USING `graft-tsv` TBLPROPERTIES ('retain.generations' = '6')""")
     base.writeTo(t).append()                                        // gen 1
@@ -580,7 +581,7 @@ object TextAnalysis {
       s"UPDATE $t SET text = concat(text, ' upd42') WHERE doc_id % 7 = 4"
     )                                                               // gen 4
     val net = graft.Checkpoints.truncate(               // (doc_id, text, w)
-      Graph.netDelta(spark, root, tn, Seq("doc_id", "text"), "w"))
+      Graph.netDelta(spark, ft, Seq("doc_id", "text"), "w"))
     mark("delta")
 
     // tokenize ONLY the net-changed versions, signed — Σw over a
@@ -615,7 +616,7 @@ object TextAnalysis {
             .as("tf"))
         .filter(col("tf") > 0))
     graft.Checkpoints.release(net)
-    Graph.privmDropTable(spark, tn)
+    ArtifactStore.dropTable(spark, ft)
     val nDocs = nBase + dN
     val stats = dl1.agg(sum(col("dl")).as("t_tok"))
       .select(lit(nDocs).as("n_docs"),
@@ -1937,13 +1938,12 @@ $steps"""
       BpeMerges)
 
   /** [[bpeTrainLoop]] over ANY weighted vocabulary frame (w, n_w) — the
-    * gate trains on the corpus word counts; BpeScale's distributed mode
-    * trains on a ≥10⁶-type synthetic vocabulary to prove the loop's
-    * driver state stays O(merges) when the vocabulary is far past
-    * driver-collect territory (VERDICT r17 task 4). Per round: one
-    * vocabulary-bounded distributed pair aggregate, a 1-ROW argmax
-    * collect, one map-only merge fold — the driver never holds more than
-    * the merge list. */
+    * gate trains on the corpus word counts; a ≥10⁶-type synthetic
+    * vocabulary showed the loop's driver state stays O(merges) when the
+    * vocabulary is far past driver-collect territory (SCALE.md §42, §51).
+    * Per round: one vocabulary-bounded distributed pair aggregate, a 1-ROW
+    * argmax collect, one map-only merge fold — the driver never holds more
+    * than the merge list. */
   private[graft] def bpeTrainLoopOver(
       spark: SparkSession, wc: DataFrame, nMerges: Int)
       : (Seq[(Long, String, String, Long)], DataFrame) = {

@@ -807,7 +807,10 @@ final class GraftTsvScan(
         // manifest lists the current files as ROOT-RELATIVE paths (plain
         // names for unpartitioned tables, `col=v/part-...` for
         // partitioned ones), so ONE swap governs every partition
-        // atomically. No manifest = plain listing (legacy dirs).
+        // atomically. No manifest = plain listing (legacy path dirs), but
+        // a catalog table before its first commit is EMPTY: the part
+        // files a first writer has renamed in are not visible until its
+        // manifest publishes them.
         val rootChildren = fs.listStatus(st.getPath).toSeq
         val entries = walk(rootChildren, 0, "", Nil)
         val gens = rootChildren.flatMap { c =>
@@ -835,7 +838,10 @@ final class GraftTsvScan(
               s"graft-tsv: generation $g requested but ${st.getPath} has no " +
                 "generation manifests (plain directory, no time-travel history)")
           }
-          entries.map(e => (e._1, e._2, e._3, ""))
+          val isCatalogTable = rootChildren
+            .exists(_.getPath.getName == GraftTsvCatalog.MetaName)
+          if (isCatalogTable) Seq.empty
+          else entries.map(e => (e._1, e._2, e._3, ""))
         } else {
           // TIME TRAVEL: a pinned generation resolves ITS manifest instead of
           // the latest — the snapshot a reproducible training run pins. Only

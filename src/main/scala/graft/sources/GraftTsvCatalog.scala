@@ -106,7 +106,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
   private def tableDir(ident: Identifier): Path =
     new Path(nsDir(ident.namespace()), ident.name())
 
-  private val MetaName = "_graft_table"
+  import GraftTsvCatalog.MetaName
 
   private def metaPath(dir: Path): Path = new Path(dir, MetaName)
 
@@ -1150,6 +1150,10 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
 }
 
 object GraftTsvCatalog {
+
+  /** The table descriptor's file name: a directory holding one is a
+    * catalog table, whose rows are only ever what its manifest lists. */
+  private[sources] val MetaName = "_graft_table"
 
   /** Generation history of a graft-tsv table directory — the time-travel
     * discovery surface (what DESCRIBE HISTORY is to a Delta table): one

@@ -86,6 +86,23 @@ class ArtifactStoreSpec extends SparkSuite {
     val a = ArtifactStore.root(aa, "documents", "spec_f", "r1")
     val b = ArtifactStore.root(bb, "documents", "spec_f", "r1")
     assert(a != b, "two data dirs with equal hashCode must key different roots")
+    assert(ArtifactStore.parityTable(spark, aa, "spec_f").sql !=
+      ArtifactStore.parityTable(spark, bb, "spec_f").sql,
+      "two data dirs with equal hashCode must key different parity tables")
+    assert(queries.Layout.compactRoot(aa) != queries.Layout.compactRoot(bb),
+      "two data dirs with equal hashCode must key different export roots")
     java.nio.file.Files.delete(base)
+  }
+
+  test("a session without the gparity catalog runs q_dsv2_delete to the oracle's rows") {
+    val s2 = spark.newSession()
+    assert(s2.conf.getOption("spark.sql.catalog.gparity").isEmpty,
+      "precondition: the session has no gparity catalog of its own")
+    val got = SparkEntry.queries("q_dsv2_delete")(s2, sfDir).collect().toSeq
+    // the oracle's own SQL, run by Spark over the original parquet
+    val o = spark.newSession()
+    graft.sources.Tables.load(o, sfDir, "orders").createOrReplaceTempView("orders")
+    val want = o.sql(SparkEntry.oracleSql("q_dsv2_delete")).collect().toSeq
+    assert(want.nonEmpty && got == want)
   }
 }
