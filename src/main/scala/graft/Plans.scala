@@ -77,7 +77,7 @@ object Plans {
     "q_quality_classifier" -> "learned quality gate: 4096-bounded training exchange, one-row weight-map broadcast, map-only inference",
     "q_chunking"          -> "RAG chunking: overlapping token windows + fingerprints as ONE map-only codegen projection, zero shuffle",
     "q_hard_negatives"    -> "triplet mining: broadcast anchors, both directions in one window pass (sign-flipped sort key)",
-    "q_dsv2_manifest_delta" -> "delta/checkpoint manifest read path: scan resolves one _mseg segment + #del/inline delta lines",
+    "q_dsv2_manifest_delta" -> "delta/checkpoint manifest read path: the window's scan resolves one _mseg segment + #del/inline delta lines; the bounded result returns localized",
     "q_embed_decontam"    -> "embedding-space decontamination: fixed broadcast benchmark list, map-only integer threshold audit",
     "q_blob_neardup"      -> "perceptual blob near-dup: aHash fingerprints from the decode seam, banded-Hamming bucket pairs, bit_count(xor) rerank",
     "q_ann_recall_clustered" -> "clustered-corpus ANN recall: derived jittered copies unioned in-plan, LSH + IVF candidate paths vs broadcast exact top-k")

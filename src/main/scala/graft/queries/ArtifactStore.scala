@@ -111,8 +111,9 @@ object ArtifactStore {
   /** A fresh per-run table `gparity.db.<prefix>_<dirDigest>_<nonce>`,
     * not yet created: a multi-step stateful builder that two concurrent
     * runs over one dir (bench overlapping verify) must not share. Siblings
-    * older than any live run are swept ([[sweepStale]]); a run drops its
-    * own table through [[dropTable]] once its result no longer reads it. */
+    * older than any live run are swept ([[sweepStale]]). [[IvmWindow]]
+    * creates it and drops it through [[dropTable]] when its window
+    * closes. */
   def freshTable(spark: SparkSession, dir: String, prefix: String)
       : ParityTable = {
     val root = parityRoot(spark)
@@ -123,7 +124,8 @@ object ArtifactStore {
 
   /** A fresh per-run work dir under `java.io.tmpdir`, named
     * `graft_<prefix>_<dirDigest>_<nonce>` (a stream's checkpoint and sink
-    * next to a [[freshTable]]), with the same stale-sibling sweep. */
+    * next to a [[freshTable]], deleted with it by [[IvmWindow]]), with
+    * the same stale-sibling sweep. */
   def freshDir(spark: SparkSession, dir: String, prefix: String): String = {
     val tmp = new java.io.File(sys.props("java.io.tmpdir"))
     val stem = s"graft_${prefix}_${dirDigest(dir)}_"

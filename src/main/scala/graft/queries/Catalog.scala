@@ -1317,95 +1317,92 @@ object Catalog {
 
     // exhibit: commit base then the new batch, learn the delta from the
     // changes feed (reads the changed files only)
-    val ft = ArtifactStore.freshTable(spark, dir, "pmm")
-    val t = ft.sql
-    spark.sql(s"""CREATE TABLE $t (doc_id BIGINT, text STRING)
-      USING `graft-tsv` TBLPROPERTIES ('retain.generations' = '4')""")
-    base.writeTo(t).append()                                       // gen 1
-    docs.filter(col("doc_id") >= cutoff).writeTo(t).append()       // gen 2
-    val net = graft.Checkpoints.truncate(
-      Graph.netDelta(spark, ft, Seq("doc_id", "text"), "w")
-        .filter(col("w") > 0))
+    val (tcand, bpair, nDt, nDb) = IvmWindow.run(spark, dir, "pmm",
+        "doc_id BIGINT, text STRING") { w =>
+      w.append(base)                                               // gen 1
+      w.append(docs.filter(col("doc_id") >= cutoff))               // gen 2
+      val net = w.hold(graft.Checkpoints.truncate(
+        w.netDelta(Seq("doc_id", "text"), "w").filter(col("w") > 0)))
 
-    // delta TEXT edges: new docs' band memberships, old members fetched
-    // from the index by bucket key, pairs kept only with >= 1 new side
-    val newB = Dedup.bandsWeighted(net.select(col("doc_id"), col("text"),
-        col("w")))
-      .select(col("doc_id"), col("band"), col("bucket"))
-    val baseB = spark.read.parquet(s"$stateRoot/tband")
-    val touched = newB.select("band", "bucket").distinct()
-    val memT = baseB.join(broadcast(touched), Seq("band", "bucket"),
-        "left_semi")
-      .withColumn("nw", lit(false))
-      .unionByName(newB.withColumn("nw", lit(true)))
-    val dt = graft.Checkpoints.truncate(memT.groupBy("band", "bucket")
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("nw"))))
-        .as("docs"))
-      .filter(size(col("docs")) > 1)
-      .select(explode(expr(
-        """flatten(transform(docs, (x, i) ->
-          |  transform(slice(docs, i + 2, size(docs)), y ->
-          |    struct(x.doc_id AS doc_a, y.doc_id AS doc_b,
-          |           x.nw AS anw, y.nw AS bnw))))""".stripMargin)).as("p"))
-      .filter(col("p.anw") || col("p.bnw"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .distinct())
+      // delta TEXT edges: new docs' band memberships, old members fetched
+      // from the index by bucket key, pairs kept only with >= 1 new side
+      val newB = Dedup.bandsWeighted(net.select(col("doc_id"), col("text"),
+          col("w")))
+        .select(col("doc_id"), col("band"), col("bucket"))
+      val baseB = spark.read.parquet(s"$stateRoot/tband")
+      val touched = newB.select("band", "bucket").distinct()
+      val memT = baseB.join(broadcast(touched), Seq("band", "bucket"),
+          "left_semi")
+        .withColumn("nw", lit(false))
+        .unionByName(newB.withColumn("nw", lit(true)))
+      val dt = w.hold(graft.Checkpoints.truncate(memT.groupBy("band", "bucket")
+        .agg(sort_array(collect_list(struct(col("doc_id"), col("nw"))))
+          .as("docs"))
+        .filter(size(col("docs")) > 1)
+        .select(explode(expr(
+          """flatten(transform(docs, (x, i) ->
+            |  transform(slice(docs, i + 2, size(docs)), y ->
+            |    struct(x.doc_id AS doc_a, y.doc_id AS doc_b,
+            |           x.nw AS anw, y.nw AS bnw))))""".stripMargin)).as("p"))
+        .filter(col("p.anw") || col("p.bnw"))
+        .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+        .distinct()))
 
-    // delta BLOB edges: aHash the new docs only; per touched bucket the
-    // capped membership = base members ++ new (ids ascending — the
-    // decomposition contract), so re-slicing the union reproduces the
-    // cold kernel's capped list exactly and the >=1-new filter yields
-    // precisely the pairs the persisted base edge set lacks
-    val newMedia = net.select(col("doc_id").as("media_id"),
-        lit("text").as("kind"), encode(col("text"), "UTF-8").as("media"))
-      .as[graft.operators.MultimodalOps.MediaRecord]
-    val newPh = graft.operators.MultimodalOps.perceptualHash(newMedia).toDF()
-      .select("media_id", "b0", "b1", "b2", "b3")
-    def exploded(ph: DataFrame): DataFrame = ph
-      .select(col("media_id"), col("b0"), col("b1"), col("b2"), col("b3"),
-        explode(array((0 until 4).map { i =>
-          struct(lit(i).as("band"), col(s"b$i").as("bits"))
-        }: _*)).as("bb"))
-      .select(col("media_id"), col("b0"), col("b1"), col("b2"), col("b3"),
-        col("bb.band").as("band"), col("bb.bits").as("bits"))
-    val newM = exploded(newPh)
-    val touchedB = newM.select("band", "bits").distinct()
-    val memB = exploded(spark.read.parquet(s"$stateRoot/bhash"))
-      .join(broadcast(touchedB), Seq("band", "bits"), "left_semi")
-      .withColumn("nw", lit(false))
-      .unionByName(newM.withColumn("nw", lit(true)))
-    val db = graft.Checkpoints.truncate(memB.groupBy("band", "bits")
-      .agg(expr(s"""slice(sort_array(collect_list(
-        struct(media_id, b0, b1, b2, b3, nw))), 1, ${Dedup.SimPairCap})""")
-        .as("docs"))
-      .filter(size(col("docs")) > 1)
-      .select(explode(expr(
-        """flatten(transform(docs, (x, i) ->
-          |  transform(slice(docs, i + 2, size(docs)), y ->
-          |    struct(x.media_id AS a, y.media_id AS b,
-          |           x.nw AS anw, y.nw AS bnw,
-          |           x.b0 AS a0, x.b1 AS a1, x.b2 AS a2, x.b3 AS a3,
-          |           y.b0 AS c0, y.b1 AS c1, y.b2 AS c2, y.b3 AS c3))))"""
-          .stripMargin)).as("p"))
-      .filter(col("p.anw") || col("p.bnw"))
-      .select(col("p.a").as("a"), col("p.b").as("b"),
-        (bit_count(col("p.a0").bitwiseXOR(col("p.c0"))) +
-          bit_count(col("p.a1").bitwiseXOR(col("p.c1"))) +
-          bit_count(col("p.a2").bitwiseXOR(col("p.c2"))) +
-          bit_count(col("p.a3").bitwiseXOR(col("p.c3")))).cast("long")
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= BlobDupHam)
-      .select(col("a"), col("b")))
-    mark("delta")
+      // delta BLOB edges: aHash the new docs only; per touched bucket the
+      // capped membership = base members ++ new (ids ascending — the
+      // decomposition contract), so re-slicing the union reproduces the
+      // cold kernel's capped list exactly and the >=1-new filter yields
+      // precisely the pairs the persisted base edge set lacks
+      val newMedia = net.select(col("doc_id").as("media_id"),
+          lit("text").as("kind"), encode(col("text"), "UTF-8").as("media"))
+        .as[graft.operators.MultimodalOps.MediaRecord]
+      val newPh = graft.operators.MultimodalOps.perceptualHash(newMedia).toDF()
+        .select("media_id", "b0", "b1", "b2", "b3")
+      def exploded(ph: DataFrame): DataFrame = ph
+        .select(col("media_id"), col("b0"), col("b1"), col("b2"), col("b3"),
+          explode(array((0 until 4).map { i =>
+            struct(lit(i).as("band"), col(s"b$i").as("bits"))
+          }: _*)).as("bb"))
+        .select(col("media_id"), col("b0"), col("b1"), col("b2"), col("b3"),
+          col("bb.band").as("band"), col("bb.bits").as("bits"))
+      val newM = exploded(newPh)
+      val touchedB = newM.select("band", "bits").distinct()
+      val memB = exploded(spark.read.parquet(s"$stateRoot/bhash"))
+        .join(broadcast(touchedB), Seq("band", "bits"), "left_semi")
+        .withColumn("nw", lit(false))
+        .unionByName(newM.withColumn("nw", lit(true)))
+      val db = w.hold(graft.Checkpoints.truncate(memB.groupBy("band", "bits")
+        .agg(expr(s"""slice(sort_array(collect_list(
+          struct(media_id, b0, b1, b2, b3, nw))), 1, ${Dedup.SimPairCap})""")
+          .as("docs"))
+        .filter(size(col("docs")) > 1)
+        .select(explode(expr(
+          """flatten(transform(docs, (x, i) ->
+            |  transform(slice(docs, i + 2, size(docs)), y ->
+            |    struct(x.media_id AS a, y.media_id AS b,
+            |           x.nw AS anw, y.nw AS bnw,
+            |           x.b0 AS a0, x.b1 AS a1, x.b2 AS a2, x.b3 AS a3,
+            |           y.b0 AS c0, y.b1 AS c1, y.b2 AS c2, y.b3 AS c3))))"""
+            .stripMargin)).as("p"))
+        .filter(col("p.anw") || col("p.bnw"))
+        .select(col("p.a").as("a"), col("p.b").as("b"),
+          (bit_count(col("p.a0").bitwiseXOR(col("p.c0"))) +
+            bit_count(col("p.a1").bitwiseXOR(col("p.c1"))) +
+            bit_count(col("p.a2").bitwiseXOR(col("p.c2"))) +
+            bit_count(col("p.a3").bitwiseXOR(col("p.c3")))).cast("long")
+            .as("hamming"))
+        .distinct()
+        .filter(col("hamming") <= BlobDupHam)
+        .select(col("a"), col("b"))))
+      mark("delta")
 
-    // full edge sets = persisted base ∪ delta (disjoint by construction)
-    val tcand = graft.Checkpoints.truncate(
-      spark.read.parquet(s"$stateRoot/tedges").unionByName(dt))
-    val bpair = graft.Checkpoints.truncate(
-      spark.read.parquet(s"$stateRoot/bedges").unionByName(db))
-    val nDt = dt.count()
-    val nDb = db.count()
+      // full edge sets = persisted base ∪ delta (disjoint by construction)
+      val tcand = graft.Checkpoints.truncate(
+        spark.read.parquet(s"$stateRoot/tedges").unionByName(dt))
+      val bpair = graft.Checkpoints.truncate(
+        spark.read.parquet(s"$stateRoot/bedges").unionByName(db))
+      (tcand, bpair, dt.count(), db.count())
+    }
 
     // monotone min-label resume from the base labeling (adds only merge)
     val pairsAll = tcand.unionByName(
@@ -1426,8 +1423,7 @@ object Catalog {
         col("lbl").as("component_id")), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("component_id"), col("doc_id")).as("component_id")))
-    Seq(labels2, edges, dt, db, net).foreach(graft.Checkpoints.release)
-    ArtifactStore.dropTable(spark, ft)
+    Seq(labels2, edges).foreach(graft.Checkpoints.release)
 
     // per-stage audit — the cold pipeline's aggregates verbatim
     val keepers = graft.Checkpoints.truncate(

@@ -533,6 +533,26 @@ ORDER BY pr DESC, node_id LIMIT 50"""
         col("cand") && col("ncp") >= 1 && col("ncs") >= 1)
   }
 
+  /** Column definitions of the graph windows' (p, s) pair tables. */
+  private val PairCols = "p BIGINT, s BIGINT"
+
+  /** The add windows' split of the pair set `ef` into (base0, adds = the
+    * held-out pairs). The held-out layering is materialized once
+    * (OPTIMIZATION r19) and held by `w`: the base append, the adds append
+    * and any delete source read it, and each would otherwise re-run the
+    * full scan→distinct→2-window lineage. */
+  private def addSplit(w: IvmWindow, ef: DataFrame): (DataFrame, DataFrame) = {
+    val ac = w.hold(graft.Checkpoints.truncate(heldOut(ef, 31L, 41L)))
+    (ac.filter(!col("held")).select("p", "s"),
+      ac.filter(col("held")).select("p", "s"))
+  }
+
+  /** A (p, s) pair frame's directed edges (u, v), both directions, with
+    * the supplier side shifted by `Off`. */
+  private def bothWays(pairs: DataFrame): DataFrame =
+    pairs.select(col("p").as("u"), (col("s") + Off).as("v"))
+      .unionByName(pairs.select((col("s") + Off).as("u"), col("p").as("v")))
+
   /** COLD full recompute on q_pagerank_ivm's FINAL mutated graph — the
     * comparison frame GraphFallbackSpec's ε-closeness assertion needs.
     * The ivm exhibit's final pair set telescopes to `ef − dels` (base0 =
@@ -547,9 +567,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
     * state as local rows (node_id, pr), ε). */
   private[graft] def pagerankIvmColdFinal(
       spark: SparkSession, dir: String): (Seq[(Long, Long)], Long) = {
-    val ef = tbl(spark, dir, "lineitem")
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-      .distinct()
+    val ef = linePairs(spark, dir).distinct()
     val ac = heldOut(ef, 31L, 41L)
     val base0 = ac.filter(!col("held")).select("p", "s")
     val dels = heldOut(base0, 37L, 43L).filter(col("held")).select("p", "s")
@@ -610,36 +628,12 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       .coalesce(1).write.mode("overwrite").parquet(s"$r/meta")
   }
 
-  /** Net row delta of fresh table `t` (columns exactly `keys`) since its
-    * base snapshot (gen 1), read off the SIGNED changes feed
-    * ([[graft.sources.GraftTsvCatalog.netChanges]] — the changed files
-    * only, one aggregate): (`keys`…, `sgn`), sgn > 0 net inserted copies,
-    * < 0 net deleted. A no-op mutation pair (possible at a degenerate SF)
-    * nets to an empty delta. The one delta read every IVM window shares. */
-  private[queries] def netDelta(spark: SparkSession,
-      t: ArtifactStore.ParityTable, keys: Seq[String],
-      sgn: String = "sgn"): DataFrame = {
-    val tdir = new org.apache.hadoop.fs.Path(t.dir)
-    val headGen = tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(tdir).map(_.getPath.getName)
-      .flatMap(graft.sources.GraftTsvManifest.genNumber).max
-    val net =
-      if (headGen <= 1L)
-        spark.table(t.sql)
-          .withColumn(graft.sources.GraftTsvMeta.NetCol, lit(0L)).limit(0)
-      else
-        ArtifactStore.parityCatalog(spark)
-          .netChanges(spark, t.ident, "1", headGen.toString)
-    net.select(keys.map(col) :+
-      col(graft.sources.GraftTsvMeta.NetCol).as(sgn): _*)
-  }
-
-  /** O(delta) directed-edge frame + the state patch off it: [[netDelta]]'s
-    * net pairs expanded to both directions, then the converged state s1
-    * patched by broadcast joins — restores the telescoped-cin invariant
-    * over the FINAL edge set (class doc); lpu carries, so the resumed
-    * loop reactivates exactly the shifted vertices. Returns (patched
-    * state, dedges — checkpointed, caller releases). */
+  /** O(delta) directed-edge frame + the state patch off it: the net
+    * delta pairs `dpairs` expanded to both directions, then the converged
+    * state s1 patched by broadcast joins — restores the telescoped-cin
+    * invariant over the FINAL edge set (class doc); lpu carries, so the
+    * resumed loop reactivates exactly the shifted vertices. Returns
+    * (patched state, dedges — checkpointed, caller releases). */
   private def privmPatch(
       s1: DataFrame, dpairs: DataFrame,
       prBase: Long): (DataFrame, DataFrame) = {
@@ -715,10 +709,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       spark: SparkSession, dir: String,
       mark: String => Unit = _ => (),
       localFrac: Option[Int] = None): DataFrame = {
-    val ef = tbl(spark, dir, "lineitem")
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-      .distinct()
-    val ac = heldOut(ef, 31L, 41L)
+    val ac = heldOut(linePairs(spark, dir).distinct(), 31L, 41L)
     val base0 = ac.filter(!col("held")).select("p", "s")
     val adds = ac.filter(col("held")).select("p", "s")
     val dels0 = heldOut(base0, 37L, 43L).filter(col("held")).select("p", "s")
@@ -726,44 +717,33 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       "privm_state", privmRecipe)(privmBuildState(spark, base0))
     val metaRow = spark.read.parquet(s"$stateRoot/meta").head()
     val (r1, vCnt) = (metaRow.getLong(0), metaRow.getLong(1))
-    if (vCnt == 0L) {
-      spark.range(0).select(col("id").as("node_id"), col("id").as("pr"),
-        col("id").as("r1"), col("id").as("r2"))
-    } else {
-      val ft = ArtifactStore.freshTable(spark, dir, "privm")
-      val t = ft.sql
-      spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
-        TBLPROPERTIES ('retain.generations' = '4')""")
+    if (vCnt == 0L) prIvmEmpty(spark)
+    else IvmWindow.run(spark, dir, "privm", PairCols) { w =>
       val dels = localFrac match {
         case None =>
-          base0.writeTo(t).append()                               // gen 1
+          w.append(base0)                                         // gen 1
           dels0
         case Some(f) =>
           // sorted layout: each file covers a contiguous p range, so the
           // p-localized MERGE below rewrites only the covering files
-          base0.orderBy("p", "s").writeTo(t).append()             // gen 1
+          w.append(base0.orderBy("p", "s"))                       // gen 1
           val b = base0.agg(min(col("p")).as("lo"), max(col("p")).as("hi"))
             .head()
           val cut = b.getLong(0) + (b.getLong(1) - b.getLong(0) + 1) / f
           dels0.filter(col("p") < cut)
       }
-      val dv = s"privm_dels_srv_${ft.name}"
-      dels.createOrReplaceTempView(dv)
-      spark.sql(s"""MERGE INTO $t tgt USING $dv d
-        ON tgt.p = d.p AND tgt.s = d.s
-        WHEN MATCHED THEN DELETE""")                              // gen 2
-      spark.catalog.dropTempView(dv)
-      if (localFrac.isEmpty) adds.writeTo(t).append()             // gen 3
+      w.deleteMatching(dels, "p", "s")                            // gen 2
+      if (localFrac.isEmpty) w.append(adds)                       // gen 3
       mark("setup")
 
       val eps = Scale / (PrEpsDiv * vCnt)
       val prBase = (Scale * 15L) / (100L * vCnt)
-      val dpairs = graft.Checkpoints.truncate(
-        netDelta(spark, ft, Seq("p", "s")))  // O(delta) rows
+      val dpairs = w.delta(Seq("p", "s"))  // O(delta) rows
       mark("feed")
 
       val s1 = spark.read.parquet(s"$stateRoot/state")
       val (patched, dedges) = privmPatch(s1, dpairs, prBase)
+      w.hold(dedges)
       val delE = dedges.filter(col("sgn") < 0)
         .select(col("dsrc"), col("ddst"))
       val addE = dedges.filter(col("sgn") > 0)
@@ -774,10 +754,10 @@ ORDER BY pr DESC, node_id LIMIT 50"""
           col("src") === col("dsrc") && col("dst") === col("ddst"),
           "left_anti")
         .unionByName(addE)
-      val edgesFin =
+      val edgesFin = w.hold(
         if (bcastV) edgesFin0.truncateLineage
-        else edgesFin0.repartition(col("src")).truncateLineagePartitioned
-      val patchedCk = graft.Checkpoints.truncate(patched)
+        else edgesFin0.repartition(col("src")).truncateLineagePartitioned)
+      val patchedCk = w.hold(graft.Checkpoints.truncate(patched))
       mark("patch")
 
       // nodes is unused by the resumed loop (init is pre-patched) but
@@ -785,19 +765,29 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       val g = PrGraph(edgesFin, s1.select(col("node_id")),
         GraphAdaptive.pick(bcastV) _)
       val (s2, r2) = prPushLoop(g, patchedCk, prBase, eps)
+      w.hold(s2)
       mark("resume")
-      val res = s2.select(col("node_id"), col("pr"))
-        .orderBy(desc("pr"), asc("node_id")).limit(50)
-        .withColumn("r1", lit(r1)).withColumn("r2", lit(r2))
-      val rows = res.collect().toSeq
-      Seq(s2, dedges, dpairs, patchedCk, edgesFin)
-        .foreach(graft.Checkpoints.release)
-      ArtifactStore.dropTable(spark, ft)
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), res.schema)
-        .orderBy(desc("pr"), asc("node_id"))
+      prIvmTop(w, s2, r1, r2)
     }
   }
+
+  /** The pagerank IVM result when the base graph has no vertex. */
+  private def prIvmEmpty(spark: SparkSession): DataFrame =
+    spark.range(0).select(col("id").as("node_id"), col("id").as("pr"),
+      col("id").as("r1"), col("id").as("r2"))
+
+  /** The pagerank IVM result: the top-50 of the resumed state `s2` with
+    * both round counts, localized in `w` so every loop-era checkpoint the
+    * window holds (the final state, the graph blocks, the delta frame) is
+    * reclaimed when it closes — a long-lived verify/bench session in
+    * reliable-checkpoint mode would otherwise accumulate one
+    * converged-state frame per invocation. */
+  private def prIvmTop(w: IvmWindow, s2: DataFrame, r1: Long,
+      r2: Long): DataFrame =
+    w.localize(s2.select(col("node_id"), col("pr"))
+      .orderBy(desc("pr"), asc("node_id")).limit(50)
+      .withColumn("r1", lit(r1)).withColumn("r2", lit(r2)),
+      desc("pr"), asc("node_id"))
 
   /** q_pagerank_ivm's builder with a phase-boundary callback: `mark` is
     * invoked (with "p1", "delta", "p2") right after each eager phase
@@ -807,30 +797,11 @@ ORDER BY pr DESC, node_id LIMIT 50"""
     * oracle-gated path byte-identical. */
   private[graft] def pagerankIvmBuild(
       spark: SparkSession, dir: String,
-      mark: String => Unit = _ => ()): DataFrame = {
-    {
-      val ef = tbl(spark, dir, "lineitem")
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-        .distinct()
-      // the held-out layering is MATERIALIZED once (OPTIMIZATION r19):
-      // three separate actions read it below — the gen-1 append, the
-      // MERGE's delete source (whose own window stack sits on top), and
-      // the gen-3 append — and each used to re-run the full
-      // scan→distinct→2-window lineage. Blocks are released right after
-      // the last table commit; the maintenance path reads only the
-      // changes feed + persisted state from there on.
-      val ac = graft.Checkpoints.truncate(heldOut(ef, 31L, 41L))
-      val base0 = ac.filter(!col("held")).select("p", "s")
-      val adds = ac.filter(col("held")).select("p", "s")
+      mark: String => Unit = _ => ()): DataFrame =
+    IvmWindow.run(spark, dir, "privm", PairCols) { w =>
+      val (base0, adds) = addSplit(w, linePairs(spark, dir).distinct())
       val dels = heldOut(base0, 37L, 43L).filter(col("held")).select("p", "s")
-
-      // per-run nonce + stale-sibling sweep: the q_stream_ivm lesson —
-      // this is a multi-step stateful builder and bench can overlap verify
-      val ft = ArtifactStore.freshTable(spark, dir, "privm")
-      val t = ft.sql
-      spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
-        TBLPROPERTIES ('retain.generations' = '4')""")
-      base0.writeTo(t).append()                                    // gen 1
+      w.append(base0)                                              // gen 1
 
       // phase 1: the CONVERGED BASE STATE is a signature-keyed PERSISTED
       // artifact (the q_ivf_build/q_ivf_probe discipline): an IVM
@@ -846,36 +817,28 @@ ORDER BY pr DESC, node_id LIMIT 50"""
         "privm_state", privmRecipe)(privmBuildState(spark, base0))
       val metaRow = spark.read.parquet(s"$stateRoot/meta").head()
       val (r1, vCnt) = (metaRow.getLong(0), metaRow.getLong(1))
-      if (vCnt == 0L) {
-        graft.Checkpoints.release(ac)
-        ArtifactStore.dropTable(spark, ft)
-        spark.range(0).select(col("id").as("node_id"), col("id").as("pr"),
-          col("id").as("r1"), col("id").as("r2"))
-      } else {
+      if (vCnt == 0L) prIvmEmpty(spark)
+      else {
         val eps = Scale / (PrEpsDiv * vCnt)
         val prBase = (Scale * 15L) / (100L * vCnt)
         val s1 = spark.read.parquet(s"$stateRoot/state")
         mark("p1")
 
         // mutate: MERGE-delete (gen 2), append the held-out adds (gen 3)
-        val dv = s"privm_dels_${ft.name}"
-        dels.createOrReplaceTempView(dv)
-        spark.sql(s"""MERGE INTO $t tgt USING $dv d
-          ON tgt.p = d.p AND tgt.s = d.s
-          WHEN MATCHED THEN DELETE""")
-        spark.catalog.dropTempView(dv)
-        adds.writeTo(t).append()
-        graft.Checkpoints.release(ac) // last reader was the gen-3 append
+        w.deleteMatching(dels, "p", "s")
+        w.append(adds)
 
         // the delta from the changes feed, then the O(delta) broadcast
-        // patch of the converged state (netDelta/privmPatch — shared
-        // with the served path, which ScaleStress phases prices separately)
-        val dpairs = netDelta(spark, ft, Seq("p", "s"))
-        val (patched, dedges) = privmPatch(s1, dpairs, prBase)
+        // patch of the converged state (privmPatch — shared with the
+        // served path, which ScaleStress phases prices separately)
+        val (patched, dedges) =
+          privmPatch(s1, w.netDelta(Seq("p", "s")), prBase)
+        w.hold(dedges)
 
         // phase 2: resume on the FINAL graph (the table read is now the
         // mutated pair set)
-        val g2 = prGraphFromPairs(spark, spark.table(t))
+        val g2 = prGraphFromPairs(spark, spark.table(w.sql))
+        Seq(g2.edgesW, g2.nodes).foreach(w.hold)
         val v2 = g2.nodes.agg(count(lit(1))).head().getLong(0)
         require(v2 == vCnt,
           s"q_pagerank_ivm: the edge delta changed the vertex set " +
@@ -883,25 +846,11 @@ ORDER BY pr DESC, node_id LIMIT 50"""
             "rebases the teleport mass and needs a full recompute")
         mark("delta")
         val (s2, r2) = prPushLoop(g2, patched, prBase, eps)
+        w.hold(s2)
         mark("p2")
-        // materialize the O(1) top-50 locally so every loop-era
-        // checkpoint (the final state, g2's edge/node blocks, the delta
-        // frame) is reclaimable NOW — a long-lived verify/bench session
-        // in reliable-checkpoint mode would otherwise accumulate one
-        // converged-state frame per invocation
-        val res = s2.select(col("node_id"), col("pr"))
-          .orderBy(desc("pr"), asc("node_id")).limit(50)
-          .withColumn("r1", lit(r1)).withColumn("r2", lit(r2))
-        val rows = res.collect().toSeq
-        Seq(s2, g2.edgesW, g2.nodes, dedges)
-          .foreach(graft.Checkpoints.release)
-        ArtifactStore.dropTable(spark, ft)
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), res.schema)
-          .orderBy(desc("pr"), asc("node_id"))
+        prIvmTop(w, s2, r1, r2)
       }
     }
-  }
 
   /** Triangle counting over the part co-purchase graph (parts appearing
     * in the same order are adjacent) — the third classic iterative/graph
@@ -1509,9 +1458,7 @@ ORDER BY f.node_id"""
 
   private def civmBuildState(
       spark: SparkSession, base0: DataFrame)(r: String): Unit = {
-    val edges0 = base0
-      .select(col("p").as("u"), (col("s") + Off).as("v"))
-      .unionByName(base0.select((col("s") + Off).as("u"), col("p").as("v")))
+    val edges0 = bothWays(base0)
       .repartition(col("v"))
       .truncateLineagePartitioned
     val (labels, r1) = Dedup.componentsLoop(spark, edges0, None)
@@ -1533,60 +1480,51 @@ ORDER BY f.node_id"""
     * implementation detail, deliberately NOT result columns). */
   private[graft] def componentsIvmBuild(
       spark: SparkSession, dir: String,
-      mark: String => Unit = _ => ()): DataFrame = {
-    val ef = tbl(spark, dir, "lineitem")
+      mark: String => Unit = _ => ()): DataFrame =
+    IvmWindow.run(spark, dir, "civm", PairCols) { w =>
+      val (base0, adds) = addSplit(w, compPairs(spark, dir))
+      val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
+        "civm_state", civmRecipe)(civmBuildState(spark, base0))
+      val r1 = spark.read.parquet(s"$stateRoot/meta").head().getLong(0)
+      mark("p1")
+
+      w.append(base0)                                               // gen 1
+      w.append(adds)                                                // gen 2
+      val dedges = bothWays(w.delta(Seq("p", "s")))
+      val edgesFin = w.hold(spark.read.parquet(s"$stateRoot/edges")
+        .unionByName(dedges.select("u", "v"))
+        .repartition(col("v"))
+        .truncateLineagePartitioned)
+      val l0 = spark.read.parquet(s"$stateRoot/labels")
+      // unseen endpoints (vertices the adds introduce) start as their own
+      // component — the semilattice init the class comment requires
+      val init = l0.unionByName(
+        dedges.select(col("u")).distinct()
+          .join(l0.select(col("u")), Seq("u"), "left_anti")
+          .select(col("u"), col("u").as("lbl")))
+      mark("delta")
+      val (labels2, r2) = Dedup.componentsLoop(spark, edgesFin, Some(init))
+      w.hold(labels2)
+      mark(s"resume:r1=$r1:r2=$r2")
+      // the FULL per-node labeling (the q_dedup_components shape): every
+      // node's maintained label is hashed, so the gate proves the whole
+      // resumed fixpoint, not just an aggregate of it. SPILLED to parquet
+      // (not collected — the labeling is data-sized) so the loop-era
+      // checkpoints can be released before the distributed read-back scan
+      // is returned (VERDICT r17 task 1).
+      ArtifactStore.spillResult(spark, "civm_res", labels2
+        .select(col("u").as("node_id"), col("lbl").as("component_id")))
+        .orderBy("node_id")
+    }
+
+  /** The components exhibits' sparse pair set ([[CompQty]],
+    * [[CompPartMod]]), distinct. */
+  private def compPairs(spark: SparkSession, dir: String): DataFrame =
+    tbl(spark, dir, "lineitem")
       .filter(col("l_quantity") === CompQty &&
         col("l_partkey") % CompPartMod === 0)
       .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
       .distinct()
-    // materialized once (OPTIMIZATION r19): the two appends below each
-    // re-ran the scan→distinct→2-window lineage; released after the last
-    val ac = graft.Checkpoints.truncate(heldOut(ef, 31L, 41L))
-    val base0 = ac.filter(!col("held")).select("p", "s")
-    val adds = ac.filter(col("held")).select("p", "s")
-    val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
-      "civm_state", civmRecipe)(civmBuildState(spark, base0))
-    val r1 = spark.read.parquet(s"$stateRoot/meta").head().getLong(0)
-    mark("p1")
-
-    val ft = ArtifactStore.freshTable(spark, dir, "civm")
-    val t = ft.sql
-    spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
-      TBLPROPERTIES ('retain.generations' = '4')""")
-    base0.writeTo(t).append()                                     // gen 1
-    adds.writeTo(t).append()                                      // gen 2
-    graft.Checkpoints.release(ac)
-    val dpairs = graft.Checkpoints.truncate(
-      netDelta(spark, ft, Seq("p", "s")))
-    val dedges = dpairs
-      .select(col("p").as("u"), (col("s") + Off).as("v"))
-      .unionByName(dpairs.select((col("s") + Off).as("u"), col("p").as("v")))
-    val edgesFin = spark.read.parquet(s"$stateRoot/edges")
-      .unionByName(dedges.select("u", "v"))
-      .repartition(col("v"))
-      .truncateLineagePartitioned
-    val l0 = spark.read.parquet(s"$stateRoot/labels")
-    // unseen endpoints (vertices the adds introduce) start as their own
-    // component — the semilattice init the class comment requires
-    val init = l0.unionByName(
-      dedges.select(col("u")).distinct()
-        .join(l0.select(col("u")), Seq("u"), "left_anti")
-        .select(col("u"), col("u").as("lbl")))
-    mark("delta")
-    val (labels2, r2) = Dedup.componentsLoop(spark, edgesFin, Some(init))
-    mark(s"resume:r1=$r1:r2=$r2")
-    // the FULL per-node labeling (the q_dedup_components shape): every
-    // node's maintained label is hashed, so the gate proves the whole
-    // resumed fixpoint, not just an aggregate of it. SPILLED to parquet
-    // (not collected — the labeling is data-sized) so the loop-era
-    // checkpoints can be released before the distributed read-back scan
-    // is returned (VERDICT r17 task 1).
-    val out = ArtifactStore.spillResult(spark, "civm_res", labels2
-      .select(col("u").as("node_id"), col("lbl").as("component_id")))
-    Seq(labels2, edgesFin, dpairs).foreach(graft.Checkpoints.release)
-    ArtifactStore.dropTable(spark, ft)
-    out.orderBy("node_id")
-  }
 
   private val qComponentsIvm = QueryDef(
     "q_components_ivm",
@@ -1622,43 +1560,25 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
     * "recompute:r1=<cold rounds>:r2=<recompute rounds>:aff=<components>". */
   private[graft] def componentsIvmDelBuild(
       spark: SparkSession, dir: String,
-      mark: String => Unit = _ => ()): DataFrame = {
-    // materialized once (OPTIMIZATION r19): the gen-1 append and the
-    // MERGE's delete-source window stack below each re-ran the
-    // scan→distinct lineage; released after the MERGE commits
-    val ef = graft.Checkpoints.truncate(tbl(spark, dir, "lineitem")
-      .filter(col("l_quantity") === CompQty &&
-        col("l_partkey") % CompPartMod === 0)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-      .distinct())
-    val dels = heldOut(ef, 37L, 43L).filter(col("held")).select("p", "s")
-    val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
-      "civm_del_state", civmDelRecipe)(civmBuildState(spark, ef))
-    val r1 = spark.read.parquet(s"$stateRoot/meta").head().getLong(0)
-    mark("p1")
+      mark: String => Unit = _ => ()): DataFrame =
+    IvmWindow.run(spark, dir, "civmd", PairCols) { w =>
+      // materialized once (OPTIMIZATION r19): the gen-1 append and the
+      // MERGE's delete-source window stack below each re-ran the
+      // scan→distinct lineage
+      val ef = w.hold(graft.Checkpoints.truncate(compPairs(spark, dir)))
+      val dels = heldOut(ef, 37L, 43L).filter(col("held")).select("p", "s")
+      val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
+        "civm_del_state", civmDelRecipe)(civmBuildState(spark, ef))
+      val r1 = spark.read.parquet(s"$stateRoot/meta").head().getLong(0)
+      mark("p1")
 
-    val ft = ArtifactStore.freshTable(spark, dir, "civmd")
-    val t = ft.sql
-    spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
-      TBLPROPERTIES ('retain.generations' = '4')""")
-    ef.writeTo(t).append()                                        // gen 1
-    val dv = s"civmd_dels_${ft.name}"
-    dels.createOrReplaceTempView(dv)
-    spark.sql(s"""MERGE INTO $t tgt USING $dv d
-      ON tgt.p = d.p AND tgt.s = d.s
-      WHEN MATCHED THEN DELETE""")                                // gen 2
-    spark.catalog.dropTempView(dv)
-    graft.Checkpoints.release(ef)
-    val dpairs = graft.Checkpoints.truncate(
-      netDelta(spark, ft, Seq("p", "s")))  // all sgn = -1
-    val dedges = graft.Checkpoints.truncate(dpairs
-      .select(col("p").as("u"), (col("s") + Off).as("v"))
-      .unionByName(dpairs.select((col("s") + Off).as("u"),
-        col("p").as("v"))))
-    val l0 = spark.read.parquet(s"$stateRoot/labels")
-    mark("delta")
+      w.append(ef)                                                  // gen 1
+      w.deleteMatching(dels, "p", "s")                              // gen 2
+      val dedges = w.hold(graft.Checkpoints.truncate(
+        bothWays(w.delta(Seq("p", "s")))))  // all sgn = -1
+      val l0 = spark.read.parquet(s"$stateRoot/labels")
+      mark("delta")
 
-    val res =
       if (dedges.head(1).isEmpty) {
         // no-op delta at a degenerate SF: the base labeling stands
         mark(s"recompute:r1=$r1:r2=0:aff=0")
@@ -1674,31 +1594,26 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
           .select(col("lbl")).distinct()
         val nAff = affected.count()
         val affV = l0.join(broadcast(affected), Seq("lbl")).select(col("u"))
-        val remEdges = spark.read.parquet(s"$stateRoot/edges")
+        val remEdges = w.hold(spark.read.parquet(s"$stateRoot/edges")
           .join(broadcast(affV), Seq("u"), "left_semi")
           .join(broadcast(dedges.select(col("u"), col("v"))),
             Seq("u", "v"), "left_anti")
           .repartition(col("v"))
-          .truncateLineagePartitioned
+          .truncateLineagePartitioned)
         val (lab2, r2) = Dedup.componentsLoop(spark, remEdges, None)
+        w.hold(lab2)
         mark(s"recompute:r1=$r1:r2=$r2:aff=$nAff")
         val keep = l0.join(broadcast(affected), Seq("lbl"), "left_anti")
         // spliced labeling spilled to parquet (VERDICT r17 task 1): the
         // result is data-sized, so it must come back as a distributed
         // scan, not a driver collect-then-parallelize
-        val out = ArtifactStore.spillResult(spark, "civmd_res",
+        ArtifactStore.spillResult(spark, "civmd_res",
           keep.select(col("u").as("node_id"), col("lbl").as("component_id"))
             .unionByName(lab2.select(col("u").as("node_id"),
               col("lbl").as("component_id"))))
-        Seq(lab2, remEdges).foreach(graft.Checkpoints.release)
-        out.orderBy("node_id")
+          .orderBy("node_id")
       }
-    // released on BOTH branches (ADVICE r18): the no-op branch returned
-    // the base labeling while leaking the just-created delta checkpoints
-    Seq(dpairs, dedges).foreach(graft.Checkpoints.release)
-    ArtifactStore.dropTable(spark, ft)
-    res
-  }
+    }
 
   private val qComponentsIvmDel = QueryDef(
     "q_components_ivm_del",
@@ -1816,67 +1731,52 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
     * frame. `mark`: "p1", "delta", "resume:r1=<n>:r2=<m>". */
   private[graft] def bfsIvmBuild(
       spark: SparkSession, dir: String,
-      mark: String => Unit = _ => ()): DataFrame = {
-    val ef = tbl(spark, dir, "lineitem")
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-      .distinct()
-    // materialized once (OPTIMIZATION r19): the two appends below each
-    // re-ran the scan→distinct→2-window lineage; released after the last
-    val ac = graft.Checkpoints.truncate(heldOut(ef, 31L, 41L))
-    val base0 = ac.filter(!col("held")).select("p", "s")
-    val adds = ac.filter(col("held")).select("p", "s")
-    val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
-      "bfsivm_state", bfsIvmRecipe)(bfsIvmBuildState(spark, base0))
-    val meta = spark.read.parquet(s"$stateRoot/meta").head()
-    val (r1, vCnt) = (meta.getLong(0), meta.getLong(1))
-    mark("p1")
-    if (vCnt == 0L) {
-      graft.Checkpoints.release(ac)
-      spark.range(0).select(col("id").as("node_id"), col("id").as("hop"))
-    } else {
-      val ft = ArtifactStore.freshTable(spark, dir, "bfsivm")
-      val t = ft.sql
-      spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
-        TBLPROPERTIES ('retain.generations' = '4')""")
-      base0.writeTo(t).append()                                   // gen 1
-      adds.writeTo(t).append()                                    // gen 2
-      graft.Checkpoints.release(ac)
-      val dpairs = graft.Checkpoints.truncate(
-        netDelta(spark, ft, Seq("p", "s")))
-      val dedges = dpairs
-        .select(col("p").as("u"), (col("s") + Off).as("v"))
-        .unionByName(dpairs.select((col("s") + Off).as("u"),
-          col("p").as("v")))
-      val bcastV = GraphAdaptive.broadcastOk(spark, vCnt)
-      val edgesFin0 = spark.read.parquet(s"$stateRoot/edges")
-        .unionByName(dedges.select(col("u").as("src"), col("v").as("dst")))
-      val edgesFin =
-        if (bcastV) edgesFin0.truncateLineage
-        else edgesFin0.repartition(col("src")).truncateLineagePartitioned
-      // re-activate exactly the delta endpoints: pd = dist + 1 ≠ dist,
-      // so their out-edges relax in round 1 and improvements ripple out
-      val init = spark.read.parquet(s"$stateRoot/dist")
-        .join(broadcast(dedges.select(col("u")).distinct()),
-          col("node_id") === col("u"), "left")
-        .select(col("node_id"), col("dist"),
-          when(col("u").isNotNull, col("dist") + 1L)
-            .otherwise(col("dist")).as("pd"))
-      mark("delta")
-      val g = PrGraph(edgesFin,
-        spark.read.parquet(s"$stateRoot/dist").select(col("node_id")),
-        GraphAdaptive.pick(bcastV) _)
-      val (d2, r2) = bfsRelaxLoop(g, init)
-      mark(s"resume:r1=$r1:r2=$r2")
-      // data-sized distance frame → parquet spill + distributed
-      // read-back, never a driver collect (VERDICT r17 task 1)
-      val out = ArtifactStore.spillResult(spark, "bfsivm_res",
-        d2.filter(col("dist") < BfsInf)
-          .select(col("node_id"), col("dist").as("hop")))
-      Seq(d2, edgesFin, dpairs).foreach(graft.Checkpoints.release)
-      ArtifactStore.dropTable(spark, ft)
-      out.orderBy("hop", "node_id")
+      mark: String => Unit = _ => ()): DataFrame =
+    IvmWindow.run(spark, dir, "bfsivm", PairCols) { w =>
+      val (base0, adds) = addSplit(w, linePairs(spark, dir).distinct())
+      val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
+        "bfsivm_state", bfsIvmRecipe)(bfsIvmBuildState(spark, base0))
+      val meta = spark.read.parquet(s"$stateRoot/meta").head()
+      val (r1, vCnt) = (meta.getLong(0), meta.getLong(1))
+      mark("p1")
+      if (vCnt == 0L) bfsEmpty(spark)
+      else {
+        w.append(base0)                                             // gen 1
+        w.append(adds)                                              // gen 2
+        val dedges = bothWays(w.delta(Seq("p", "s")))
+        val bcastV = GraphAdaptive.broadcastOk(spark, vCnt)
+        val edgesFin0 = spark.read.parquet(s"$stateRoot/edges")
+          .unionByName(dedges.select(col("u").as("src"), col("v").as("dst")))
+        val edgesFin = w.hold(
+          if (bcastV) edgesFin0.truncateLineage
+          else edgesFin0.repartition(col("src")).truncateLineagePartitioned)
+        // re-activate exactly the delta endpoints: pd = dist + 1 ≠ dist,
+        // so their out-edges relax in round 1 and improvements ripple out
+        val init = spark.read.parquet(s"$stateRoot/dist")
+          .join(broadcast(dedges.select(col("u")).distinct()),
+            col("node_id") === col("u"), "left")
+          .select(col("node_id"), col("dist"),
+            when(col("u").isNotNull, col("dist") + 1L)
+              .otherwise(col("dist")).as("pd"))
+        mark("delta")
+        val g = PrGraph(edgesFin,
+          spark.read.parquet(s"$stateRoot/dist").select(col("node_id")),
+          GraphAdaptive.pick(bcastV) _)
+        val (d2, r2) = bfsRelaxLoop(g, init)
+        w.hold(d2)
+        mark(s"resume:r1=$r1:r2=$r2")
+        // data-sized distance frame → parquet spill + distributed
+        // read-back, never a driver collect (VERDICT r17 task 1)
+        ArtifactStore.spillResult(spark, "bfsivm_res",
+          d2.filter(col("dist") < BfsInf)
+            .select(col("node_id"), col("dist").as("hop")))
+          .orderBy("hop", "node_id")
+      }
     }
-  }
+
+  /** The BFS IVM result when the base graph has no vertex. */
+  private def bfsEmpty(spark: SparkSession): DataFrame =
+    spark.range(0).select(col("id").as("node_id"), col("id").as("hop"))
 
   /** Incremental BFS gate — final graph = the full pair set (base +
     * adds telescope back to ef), so the oracle is [[qBfsFull]]'s cold
@@ -1995,11 +1895,9 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     * "exhibit provably lengthens a hop" witness). Cheap when built. */
   private[graft] def bfsIvmDelStateRoot(
       spark: SparkSession, dir: String): String = {
-    val ef = tbl(spark, dir, "lineitem")
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-      .distinct()
     ArtifactStore.ensure(spark, dir, "lineitem",
-      "bfsivm_del_state", bfsIvmDelRecipe)(bfsIvmDelBuildState(spark, ef))
+      "bfsivm_del_state", bfsIvmDelRecipe)(
+      bfsIvmDelBuildState(spark, linePairs(spark, dir).distinct()))
   }
 
   private[graft] val BfsInfBound: Long = BfsInf
@@ -2119,43 +2017,26 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     * "recompute:r1=<cold>:r2=<resume>:dirty=<subtree size>". */
   private[graft] def bfsIvmDelBuild(
       spark: SparkSession, dir: String,
-      mark: String => Unit = _ => ()): DataFrame = {
-    // materialized once (OPTIMIZATION r19): the gen-1 append and the
-    // MERGE's delete-source window stack below each re-ran the
-    // scan→distinct lineage; released after the MERGE commits
-    val ef = graft.Checkpoints.truncate(tbl(spark, dir, "lineitem")
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-      .distinct())
-    val dels = heldOut(ef, 37L, 43L).filter(col("held")).select("p", "s")
-    val stateRoot = bfsIvmDelStateRoot(spark, dir)
-    val meta = spark.read.parquet(s"$stateRoot/meta").head()
-    val (r1, vCnt) = (meta.getLong(0), meta.getLong(1))
-    mark("p1")
-    if (vCnt == 0L) {
-      graft.Checkpoints.release(ef)
-      spark.range(0).select(col("id").as("node_id"), col("id").as("hop"))
-    } else {
-      val ft = ArtifactStore.freshTable(spark, dir, "bfsivmd")
-      val t = ft.sql
-      spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
-        TBLPROPERTIES ('retain.generations' = '4')""")
-      ef.writeTo(t).append()                                        // gen 1
-      val dv = s"bfsivmd_dels_${ft.name}"
-      dels.createOrReplaceTempView(dv)
-      spark.sql(s"""MERGE INTO $t tgt USING $dv d
-        ON tgt.p = d.p AND tgt.s = d.s
-        WHEN MATCHED THEN DELETE""")                                // gen 2
-      spark.catalog.dropTempView(dv)
-      graft.Checkpoints.release(ef)
-      val dpairs = graft.Checkpoints.truncate(
-        netDelta(spark, ft, Seq("p", "s")))  // all sgn = -1
-      val dedges = graft.Checkpoints.truncate(dpairs
-        .select(col("p").as("u"), (col("s") + Off).as("v"))
-        .unionByName(dpairs.select((col("s") + Off).as("u"),
-          col("p").as("v"))))
-      val st = spark.read.parquet(s"$stateRoot/dist") // (node_id, dist, par)
-      mark("delta")
-      val res =
+      mark: String => Unit = _ => ()): DataFrame =
+    IvmWindow.run(spark, dir, "bfsivmd", PairCols) { w =>
+      // materialized once (OPTIMIZATION r19): the gen-1 append and the
+      // MERGE's delete-source window stack below each re-ran the
+      // scan→distinct lineage
+      val ef = w.hold(graft.Checkpoints.truncate(
+        linePairs(spark, dir).distinct()))
+      val dels = heldOut(ef, 37L, 43L).filter(col("held")).select("p", "s")
+      val stateRoot = bfsIvmDelStateRoot(spark, dir)
+      val meta = spark.read.parquet(s"$stateRoot/meta").head()
+      val (r1, vCnt) = (meta.getLong(0), meta.getLong(1))
+      mark("p1")
+      if (vCnt == 0L) bfsEmpty(spark)
+      else {
+        w.append(ef)                                                // gen 1
+        w.deleteMatching(dels, "p", "s")                            // gen 2
+        val dedges = w.hold(graft.Checkpoints.truncate(
+          bothWays(w.delta(Seq("p", "s")))))  // all sgn = -1
+        val st = spark.read.parquet(s"$stateRoot/dist") // (node_id, dist, par)
+        mark("delta")
         if (dedges.head(1).isEmpty) {
           // no-op delta at a degenerate SF: the base distances stand
           mark(s"recompute:r1=$r1:r2=0:dirty=0")
@@ -2177,11 +2058,8 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
             mark(s"recompute:r1=$r1:r2=$r2:dirty=$nDirty")
           }
         }
-      Seq(dpairs, dedges).foreach(graft.Checkpoints.release)
-      ArtifactStore.dropTable(spark, ft)
-      res
+      }
     }
-  }
 
   // ---- MIXED add+delete BFS maintenance in ONE change batch: deletes
   // dirty their SP-subtrees exactly as in the delete variant; adds mean
@@ -2206,54 +2084,28 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     * "recompute:r1=<cold>:r2=<resume>:dirty=<n>:addv=<add endpoints>". */
   private[graft] def bfsIvmMixedBuild(
       spark: SparkSession, dir: String,
-      mark: String => Unit = _ => ()): DataFrame = {
-    val ef = tbl(spark, dir, "lineitem")
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-      .distinct()
-    // materialized once (OPTIMIZATION r19): THREE actions read this
-    // layering below — the gen-1 append, the MERGE's delete source
-    // (whose own window stack sits on top), and the gen-3 append — and
-    // each used to re-run the full scan→distinct→2-window lineage;
-    // released after the last table commit
-    val ac = graft.Checkpoints.truncate(heldOut(ef, 31L, 41L))
-    val base0 = ac.filter(!col("held")).select("p", "s")
-    val adds = ac.filter(col("held")).select("p", "s")
-    val dels = heldOut(base0, 37L, 43L).filter(col("held")).select("p", "s")
-    // the delete variant's parent-carrying state builder, on THIS base
-    val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
-      "bfsivm_mx_state", bfsIvmMixedRecipe)(bfsIvmDelBuildState(spark, base0))
-    val meta = spark.read.parquet(s"$stateRoot/meta").head()
-    val (r1, vCnt) = (meta.getLong(0), meta.getLong(1))
-    mark("p1")
-    if (vCnt == 0L) {
-      graft.Checkpoints.release(ac)
-      spark.range(0).select(col("id").as("node_id"), col("id").as("hop"))
-    } else {
-      val ft = ArtifactStore.freshTable(spark, dir, "bfsivmmx")
-      val t = ft.sql
-      spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
-        TBLPROPERTIES ('retain.generations' = '4')""")
-      base0.writeTo(t).append()                                     // gen 1
-      val dv = s"bfsivmmx_dels_${ft.name}"
-      dels.createOrReplaceTempView(dv)
-      spark.sql(s"""MERGE INTO $t tgt USING $dv d
-        ON tgt.p = d.p AND tgt.s = d.s
-        WHEN MATCHED THEN DELETE""")                                // gen 2
-      spark.catalog.dropTempView(dv)
-      adds.writeTo(t).append()                                      // gen 3
-      graft.Checkpoints.release(ac)
-      val dpairs = graft.Checkpoints.truncate(
-        netDelta(spark, ft, Seq("p", "s")))  // BOTH signs
-      def directed(df: DataFrame): DataFrame = df
-        .select(col("p").as("u"), (col("s") + Off).as("v"))
-        .unionByName(df.select((col("s") + Off).as("u"), col("p").as("v")))
-      val dedgesD = graft.Checkpoints.truncate(
-        directed(dpairs.filter(col("sgn") < 0)))
-      val dedgesA = graft.Checkpoints.truncate(
-        directed(dpairs.filter(col("sgn") > 0)))
-      val st = spark.read.parquet(s"$stateRoot/dist")
-      mark("delta")
-      val res =
+      mark: String => Unit = _ => ()): DataFrame =
+    IvmWindow.run(spark, dir, "bfsivmmx", PairCols) { w =>
+      val (base0, adds) = addSplit(w, linePairs(spark, dir).distinct())
+      val dels = heldOut(base0, 37L, 43L).filter(col("held")).select("p", "s")
+      // the delete variant's parent-carrying state builder, on THIS base
+      val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
+        "bfsivm_mx_state", bfsIvmMixedRecipe)(bfsIvmDelBuildState(spark, base0))
+      val meta = spark.read.parquet(s"$stateRoot/meta").head()
+      val (r1, vCnt) = (meta.getLong(0), meta.getLong(1))
+      mark("p1")
+      if (vCnt == 0L) bfsEmpty(spark)
+      else {
+        w.append(base0)                                             // gen 1
+        w.deleteMatching(dels, "p", "s")                            // gen 2
+        w.append(adds)                                              // gen 3
+        val dpairs = w.delta(Seq("p", "s"))  // BOTH signs
+        val dedgesD = w.hold(graft.Checkpoints.truncate(
+          bothWays(dpairs.filter(col("sgn") < 0))))
+        val dedgesA = w.hold(graft.Checkpoints.truncate(
+          bothWays(dpairs.filter(col("sgn") > 0))))
+        val st = spark.read.parquet(s"$stateRoot/dist")
+        mark("delta")
         if (dedgesD.head(1).isEmpty && dedgesA.head(1).isEmpty) {
           mark(s"recompute:r1=$r1:r2=0:dirty=0:addv=0")
           st.filter(col("dist") < BfsInf)
@@ -2297,11 +2149,8 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
             mark(s"recompute:r1=$r1:r2=$r2:dirty=$nDirty:addv=$nAddV")
           }
         }
-      Seq(dpairs, dedgesD, dedgesA).foreach(graft.Checkpoints.release)
-      ArtifactStore.dropTable(spark, ft)
-      res
+      }
     }
-  }
 
   /** Mixed-batch BFS gate — final graph = (base − dels) + adds = ef −
     * dels (the adds return), reconstructed in the oracle with BOTH
@@ -2424,31 +2273,29 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     * "apply:dt=<delta triangles>". */
   private[graft] def trianglesIvmBuild(
       spark: SparkSession, dir: String,
-      mark: String => Unit = _ => ()): DataFrame = {
-    val held = (col("u") * 31L + col("v")) % 41L === 0
-    // the artifact holds the FULL co-purchase pair set and the base
-    // counts and adjacency; the pair prologue (per-order collect_set +
-    // pair explosion + distinct — q_triangles' own first stage) runs
-    // only when it is built
-    val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
-      "triivm_state", triIvmRecipe)(triBuildState(spark, dir, !held))
-    mark("p1")
+      mark: String => Unit = _ => ()): DataFrame =
+    IvmWindow.run(spark, dir, "triivm", TriCols) { w =>
+      val held = (col("u") * 31L + col("v")) % 41L === 0
+      // the artifact holds the FULL co-purchase pair set and the base
+      // counts and adjacency; the pair prologue (per-order collect_set +
+      // pair explosion + distinct — q_triangles' own first stage) runs
+      // only when it is built
+      val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
+        "triivm_state", triIvmRecipe)(triBuildState(spark, dir, !held))
+      mark("p1")
 
-    val edges = spark.read.parquet(s"$stateRoot/edges")
-    val ft = ArtifactStore.freshTable(spark, dir, "triivm")
-    val t = ft.sql
-    spark.sql(s"""CREATE TABLE $t (u BIGINT, v BIGINT) USING `graft-tsv`
-      TBLPROPERTIES ('retain.generations' = '4')""")
-    edges.filter(!held).writeTo(t).append()                         // gen 1
-    edges.filter(held).writeTo(t).append()                          // gen 2
-    // the FINAL graph is the base pairs plus the net inserted ones
-    val out = triApply(spark, ft, 1L, stateRoot, mark)
-    ArtifactStore.dropTable(spark, ft)
-    out
-  }
+      val edges = spark.read.parquet(s"$stateRoot/edges")
+      w.append(edges.filter(!held))                                 // gen 1
+      w.append(edges.filter(held))                                  // gen 2
+      // the FINAL graph is the base pairs plus the net inserted ones
+      triApply(spark, w, 1L, stateRoot, mark)
+    }
+
+  /** Column definitions of the triangle windows' (u, v) pair tables. */
+  private val TriCols = "u BIGINT, v BIGINT"
 
   /** The delta window both triangle builders share, after the mutations
-    * committed to fresh table `ft`: the net delta edges of sign `sign`
+    * committed to the table of window `w`: the net delta edges of sign `sign`
     * (+1 inserted, −1 deleted) come off the changes feed, their
     * emptiness off the same checkpoint job (a max flag, exact in both
     * checkpoint modes). A non-empty delta counts, per node, the triangles
@@ -2467,19 +2314,17 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     * O(V) counts are read but never exchanged. The result's top-20 is
     * localized, so it reads neither the table nor the delta checkpoint.
     * Returns the top-20 (node, n_tri). */
-  private def triApply(spark: SparkSession, ft: ArtifactStore.ParityTable,
+  private def triApply(spark: SparkSession, w: IvmWindow,
       sign: Long, stateRoot: String, mark: String => Unit): DataFrame = {
     val baseCnt = spark.read.parquet(s"$stateRoot/counts")
     val (dedges, nonEmpty) = truncateObserved(
-      netDelta(spark, ft, Seq("u", "v"))
+      w.netDelta(Seq("u", "v"))
         .filter(col("sgn") * sign > 0L).select("u", "v"),
       max(lit(1L)))
+    w.hold(dedges)
     mark("delta")
     if (nonEmpty == 0L) {
       mark("apply:dt=0")
-      // released on BOTH branches (ADVICE r19) — the non-empty arm
-      // releases after the bounded top-20 is localized
-      graft.Checkpoints.release(dedges)
       baseCnt.orderBy(desc("n_tri"), asc("node")).limit(20)
     } else {
       val ends = dedges.select(col("u").as("n"))
@@ -2530,18 +2375,14 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
             struct(least(col("v"), col("w")),
               greatest(col("v"), col("w"))) <
               struct(col("u"), col("v"))))
-      val dCk = graft.Checkpoints.truncate(mine
+      val dCk = w.hold(graft.Checkpoints.truncate(mine
         .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("dn")))
+        .groupBy("node").agg(count(lit(1)).as("dn"))))
       val nDt = dCk.agg(sum(col("dn"))).head() // 3 rows per triangle
       mark(s"apply:dt=${if (nDt.isNullAt(0)) 0L else nDt.getLong(0) / 3}")
-      val out = triSplice(baseCnt, dCk, sign)
-        .orderBy(desc("n_tri"), asc("node")).limit(20)
-      val rows = out.collect().toSeq // bounded top-20 — fine to localize
-      Seq(dCk, dedges).foreach(graft.Checkpoints.release)
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), out.schema)
-        .orderBy(desc("n_tri"), asc("node"))
+      w.localize(triSplice(baseCnt, dCk, sign)
+        .orderBy(desc("n_tri"), asc("node")).limit(20),
+        desc("n_tri"), asc("node"))
     }
   }
 
@@ -2592,32 +2433,22 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     * "apply:dt=<triangles removed>". */
   private[graft] def trianglesIvmDelBuild(
       spark: SparkSession, dir: String,
-      mark: String => Unit = _ => ()): DataFrame = {
-    // the artifact holds the pair set and its counts and adjacency; the
-    // pair prologue runs only when it is built
-    val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
-      "triivm_del_state", triIvmDelRecipe)(
-      triBuildState(spark, dir, lit(true)))
-    mark("p1")
+      mark: String => Unit = _ => ()): DataFrame =
+    IvmWindow.run(spark, dir, "triivmd", TriCols) { w =>
+      // the artifact holds the pair set and its counts and adjacency; the
+      // pair prologue runs only when it is built
+      val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
+        "triivm_del_state", triIvmDelRecipe)(
+        triBuildState(spark, dir, lit(true)))
+      mark("p1")
 
-    val edges = spark.read.parquet(s"$stateRoot/edges")
-    val ft = ArtifactStore.freshTable(spark, dir, "triivmd")
-    val t = ft.sql
-    spark.sql(s"""CREATE TABLE $t (u BIGINT, v BIGINT) USING `graft-tsv`
-      TBLPROPERTIES ('retain.generations' = '4')""")
-    edges.writeTo(t).append()                                       // gen 1
-    val dv = s"triivmd_dels_${ft.name}"
-    edges.filter((col("u") * 37L + col("v")) % 43L === 0)
-      .createOrReplaceTempView(dv)
-    spark.sql(s"""MERGE INTO $t tgt USING $dv d
-      ON tgt.u = d.u AND tgt.v = d.v
-      WHEN MATCHED THEN DELETE""")                                  // gen 2
-    spark.catalog.dropTempView(dv)
-    // the PRE-delete graph is the base pair set itself
-    val out = triApply(spark, ft, -1L, stateRoot, mark)
-    ArtifactStore.dropTable(spark, ft)
-    out
-  }
+      val edges = spark.read.parquet(s"$stateRoot/edges")
+      w.append(edges)                                               // gen 1
+      w.deleteMatching(
+        edges.filter((col("u") * 37L + col("v")) % 43L === 0), "u", "v") // gen 2
+      // the PRE-delete graph is the base pair set itself
+      triApply(spark, w, -1L, stateRoot, mark)
+    }
 
   /** Delete-side triangle gate: the oracle is the cold kernel over the
     * SURVIVOR pair set (the hash-delete arithmetic mirrored in SQL) —
@@ -2711,39 +2542,23 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     * final components>". */
   private[graft] def labelPropIvmBuild(
       spark: SparkSession, dir: String,
-      mark: String => Unit = _ => ()): DataFrame = {
-    val ef = tbl(spark, dir, "lineitem")
-      .filter(col("l_quantity") === CompQty &&
-        col("l_partkey") % CompPartMod === 0)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
-      .distinct()
-    // materialized once (OPTIMIZATION r19): the two appends below each
-    // re-ran the scan→distinct→2-window lineage; released after the last
-    val ac = graft.Checkpoints.truncate(heldOut(ef, 31L, 41L))
-    val base0 = ac.filter(!col("held")).select("p", "s")
-    val adds = ac.filter(col("held")).select("p", "s")
-    val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
-      "lpivm_state", lpIvmRecipe)(lpIvmBuildState(spark, base0))
-    val meta = spark.read.parquet(s"$stateRoot/meta").head()
-    val (r1, vCnt) = (meta.getLong(0), meta.getLong(1))
-    mark("p1")
-    if (vCnt == 0L) {
-      graft.Checkpoints.release(ac)
-      spark.range(0).select(col("id").as("node_id"), col("id").as("lbl"),
-        col("id").as("comm_size"))
-    } else {
-      val ft = ArtifactStore.freshTable(spark, dir, "lpivm")
-      val t = ft.sql
-      spark.sql(s"""CREATE TABLE $t (p BIGINT, s BIGINT) USING `graft-tsv`
-        TBLPROPERTIES ('retain.generations' = '4')""")
-      base0.writeTo(t).append()                                     // gen 1
-      adds.writeTo(t).append()                                      // gen 2
-      graft.Checkpoints.release(ac)
-      val dpairs = graft.Checkpoints.truncate(
-        netDelta(spark, ft, Seq("p", "s")))
-      val lpBase = spark.read.parquet(s"$stateRoot/lp")
-      mark("delta")
-      val res =
+      mark: String => Unit = _ => ()): DataFrame =
+    IvmWindow.run(spark, dir, "lpivm", PairCols) { w =>
+      val (base0, adds) = addSplit(w, compPairs(spark, dir))
+      val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
+        "lpivm_state", lpIvmRecipe)(lpIvmBuildState(spark, base0))
+      val meta = spark.read.parquet(s"$stateRoot/meta").head()
+      val (r1, vCnt) = (meta.getLong(0), meta.getLong(1))
+      mark("p1")
+      if (vCnt == 0L)
+        spark.range(0).select(col("id").as("node_id"), col("id").as("lbl"),
+          col("id").as("comm_size"))
+      else {
+        w.append(base0)                                             // gen 1
+        w.append(adds)                                              // gen 2
+        val dpairs = w.delta(Seq("p", "s"))
+        val lpBase = spark.read.parquet(s"$stateRoot/lp")
+        mark("delta")
         if (dpairs.head(1).isEmpty) {
           mark(s"resume:r1=$r1:r2=0:aff=0")
           val sz = lpBase.groupBy("lbl").agg(count(lit(1)).as("comm_size"))
@@ -2759,27 +2574,28 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           val duv = dpairs.select(col("p").as("u"), (col("s") + Off).as("v"))
           val basePairs = spark.read.parquet(s"$stateRoot/pairs")
           val finPairs = basePairs.unionByName(duv)
-          val compEdges = graft.Checkpoints.truncate(
+          val compEdges = w.hold(graft.Checkpoints.truncate(
             finPairs.unionByName(
                 finPairs.select(col("v").as("u"), col("u").as("v")))
-              .repartition(col("v")), keepPartitioning = true)
+              .repartition(col("v")), keepPartitioning = true))
           val c0 = spark.read.parquet(s"$stateRoot/comp")
           val cInit = c0.unionByName(
             compEdges.select(col("u")).distinct()
               .join(c0.select(col("u")), Seq("u"), "left_anti")
               .select(col("u"), col("u").as("lbl")))
           val (finLbl, _) = Dedup.componentsLoop(spark, compEdges, Some(cInit))
+          w.hold(finLbl)
           val affected = finLbl
             .join(broadcast(dEnds), Seq("u"))
             .select(col("lbl")).distinct()
           val nAff = affected.count()
-          val affV = graft.Checkpoints.truncate(
+          val affV = w.hold(graft.Checkpoints.truncate(
             finLbl.join(broadcast(affected), Seq("lbl"))
-              .select(col("u").as("node_id")))
+              .select(col("u").as("node_id"))))
           // the affected SUBGRAPH's directed edges (components are
           // edge-closed, so a src-side semi-join captures them all)
           val bcast = GraphAdaptive.broadcastOk(spark, vCnt)
-          val affEdges = {
+          val affEdges = w.hold {
             val both = finPairs
               .select(col("u").as("src"), col("v").as("dst"))
               .unionByName(finPairs
@@ -2791,23 +2607,19 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
               both.repartition(col("src")), keepPartitioning = true)
           }
           val (lbl2, r2) = lpLoop(affEdges, GraphAdaptive.pick(bcast) _)
+          w.hold(lbl2)
           mark(s"resume:r1=$r1:r2=$r2:aff=$nAff")
           val keep = lpBase.join(broadcast(affV), Seq("node_id"), "left_anti")
           val spliced = keep
             .unionByName(lbl2.select(col("node_id"), col("lbl")))
           val sz = spliced.groupBy("lbl").agg(count(lit(1)).as("comm_size"))
-          val out = ArtifactStore.spillResult(spark, "lpivm_res",
+          ArtifactStore.spillResult(spark, "lpivm_res",
             spliced.join(sz, "lbl")
               .select(col("node_id"), col("lbl"), col("comm_size")))
-          Seq(lbl2, affEdges, affV, finLbl, compEdges)
-            .foreach(graft.Checkpoints.release)
-          out.orderBy("node_id")
+            .orderBy("node_id")
         }
-      graft.Checkpoints.release(dpairs)
-      ArtifactStore.dropTable(spark, ft)
-      res
+      }
     }
-  }
 
   /** Incremental label-prop gate — final subgraph = base + adds = the
     * q_components_ivm exhibit's full edge set, so the oracle is the cold

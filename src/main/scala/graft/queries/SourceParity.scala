@@ -25,6 +25,50 @@ import Parity._
   */
 object SourceParity {
 
+  /** Column definitions of the per-run customer tables of the stateful
+    * exhibits that run in an [[IvmWindow]]. */
+  private val CustCols =
+    "c_custkey BIGINT, c_mktsegment STRING, c_acctbal_str STRING"
+  private val DocCols = "doc_id BIGINT, text STRING"
+
+  /** The change-feed consumer of the streaming IVM exhibits, over window
+    * `w`'s table of `columns`: each [[drain]] runs the generation stream
+    * in change-feed mode (`stream.changes`) to exhaustion (AvailableNow)
+    * on the bare session [[ss]], into a parquet sink at [[out]] whose
+    * rows carry the change column. Checkpoint and sink live in a fresh
+    * work dir `prefix` that the window deletes: the table is fresh per
+    * run, so a carried offset clock would point into a previous table (a
+    * durable FILE sink, not memory — resuming from a checkpoint is
+    * exactly what the second drain exercises, and the memory sink does
+    * not support recovery). */
+  private final class ChangeFeed(spark: SparkSession, w: IvmWindow,
+      columns: String, prefix: String) {
+    val schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.StructType.fromDDL(
+        s"$columns, ${graft.sources.GraftTsvMeta.ChangeCol} STRING")
+    val ss: SparkSession = spark.newSession()
+    private val work = w.workDir(prefix)
+    val out = s"$work/out"
+
+    /** +1 for an inserted row, −1 for a deleted one. */
+    val sign: org.apache.spark.sql.Column =
+      when(col(graft.sources.GraftTsvMeta.ChangeCol) === "insert", lit(1))
+        .otherwise(lit(-1))
+
+    def drain(): Unit = {
+      val q = ss.readStream.format("graft-tsv").schema(schema)
+        .option("stream.by.generation", "true")
+        .option("stream.changes", "true")
+        .load(w.table.dir)
+        .writeStream.format("parquet").option("path", out)
+        .outputMode("append")
+        .option("checkpointLocation", s"$work/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(); q.stop()
+    }
+  }
+
   /** Write `table` out as `format` into a STABLE [[ArtifactStore]] root
     * (keyed by source dir and signature, format, table and options — a
     * fresh `createTempDirectory` per build leaked one dir per
@@ -1189,24 +1233,19 @@ object SourceParity {
       |FROM allr, victim WHERE vk IS NULL OR c_custkey <> vk
       |GROUP BY c_mktsegment ORDER BY c_mktsegment
       |""".stripMargin.trim),
-    (spark, dir) => {
-      // per-run nonce, not DROP/CREATE on a shared name: this is a
-      // multi-step stateful builder (two appends + a DELETE bracketing
-      // reads), and two concurrent invocations over the same sf dir
-      // (bench overlapping verify) would clobber each other mid-build —
-      // the q_stream_ivm lesson (ADVICE r14) applied at birth. Stale
-      // siblings (> 30 min, far past any live run) are swept instead.
-      val pt = ArtifactStore.freshTable(spark, dir, "cust_mfd")
-      val t = pt.sql
-      spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
-        c_acctbal_str STRING) USING `graft-tsv`
-        TBLPROPERTIES ('retain.generations' = '2')""")
+    // a per-run window table, not DROP/CREATE on a shared name: this is
+    // a multi-step stateful builder (two appends + a DELETE bracketing
+    // reads), and two concurrent invocations over the same sf dir (bench
+    // overlapping verify) would clobber each other mid-build — the
+    // q_stream_ivm lesson (ADVICE r14) applied at birth
+    (spark, dir) => IvmWindow.run(spark, dir, "cust_mfd", CustCols,
+        retain = 2) { w =>
+      val t = w.sql
       val base = tbl(spark, dir, "customer").select(
         col("c_custkey"), col("c_mktsegment"),
         dec("c_acctbal").cast("string").as("c_acctbal_str"))
-      base.repartitionByRange(80, col("c_custkey")).writeTo(t).append()
-      base.filter(col("c_custkey") % 97 === 0)
-        .coalesce(1).writeTo(t).append()
+      w.append(base.repartitionByRange(80, col("c_custkey")))
+      w.append(base.filter(col("c_custkey") % 97 === 0).coalesce(1))
       val victimRow = base.filter(col("c_custkey") % 100 === 7)
         .agg(org.apache.spark.sql.functions.min("c_custkey"))
         .collect().head
@@ -1218,7 +1257,7 @@ object SourceParity {
       }
       // structural proof that the NEW manifest forms are what the read
       // below resolves (guarded: a tiny SF may stay under the threshold)
-      val tdir = new org.apache.hadoop.fs.Path(pt.dir)
+      val tdir = new org.apache.hadoop.fs.Path(w.table.dir)
       val fs = tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val names = fs.listStatus(tdir).map(_.getPath.getName).toSeq
       val liveParts = graft.sources.GraftTsvManifest.readEntries(fs,
@@ -1243,11 +1282,11 @@ object SourceParity {
         require(graft.sources.GraftTsvManifest.retiredOf(headLines).nonEmpty,
           "expected the deleted file tombstoned (dropGen inside retention)")
       }
-      spark.table(t)
+      w.localize(spark.table(t)
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n"),
-          dsum(dec(col("c_acctbal_str"))).as("sum_bal"))
-        .orderBy("c_mktsegment")
+          dsum(dec(col("c_acctbal_str"))).as("sum_bal")),
+        col("c_mktsegment"))
     })
 
   /** VACUUM under the oracle gate — the last maintenance verb not yet
@@ -1734,58 +1773,22 @@ object SourceParity {
       |  ${sqlDsum("bal")} AS sum_bal
       |FROM final_rows GROUP BY seg ORDER BY seg
       |""".stripMargin.trim),
-    (spark, dir) => {
-      // PER-RUN nonce in the table name, work dir and checkpoint: two
-      // concurrent invocations over the same sf dir (bench overlapping
-      // verify) would otherwise clobber each other's checkpoint/sink
-      // mid-stream and fail or double-count (ADVICE r14). Leak control:
-      // instead of wipe-on-entry (which was the clobber), each run sweeps
-      // SIBLING runs' state older than 30 minutes — far past any live
-      // invocation, so a concurrent run is never touched and at most a
-      // bounded handful of recent copies exist at once.
-      val pt = ArtifactStore.freshTable(spark, dir, "cust_sivm")
-      val t = pt.sql
-      spark.sql(s"""CREATE TABLE $t (c_custkey BIGINT, c_mktsegment STRING,
-        c_acctbal_str STRING) USING `graft-tsv`
-        TBLPROPERTIES ('retain.generations' = '6')""")
+    // PER-RUN nonce in the table name, work dir and checkpoint: two
+    // concurrent invocations over the same sf dir (bench overlapping
+    // verify) would otherwise clobber each other's checkpoint/sink
+    // mid-stream and fail or double-count (ADVICE r14). The window drops
+    // the table and deletes the work dir when the run ends.
+    (spark, dir) => IvmWindow.run(spark, dir, "cust_sivm", CustCols,
+        retain = 6) { w =>
+      val t = w.sql
       val cust = tbl(spark, dir, "customer").select(
         col("c_custkey"), col("c_mktsegment"),
         dec("c_acctbal").cast("string").as("c_acctbal_str"))
-      cust.filter(col("c_custkey") % 4 =!= 0).writeTo(t).append()  // gen 1
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("c_custkey",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("c_mktsegment",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("c_acctbal_str",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(
-          graft.sources.GraftTsvMeta.ChangeCol,
-          org.apache.spark.sql.types.StringType)))
-      val ss = spark.newSession()
-      // fresh checkpoint + sink per run: the table is created fresh above
-      // (per-run nonce), so a carried offset clock would point into a
-      // previous table (a durable FILE sink, not memory — resuming from a
-      // checkpoint is exactly what phase 2 exercises, and the memory sink
-      // does not support recovery). The nonce'd path plus the stale sweep
-      // bounds leakage to the last half hour of runs.
-      val work = ArtifactStore.freshDir(spark, dir, "sivm")
-      val (ckpt, out) = (s"$work/ckpt", s"$work/out")
-      def drain(): Unit = {
-        val q = ss.readStream.format("graft-tsv").schema(schema)
-          .option("stream.by.generation", "true")
-          .option("stream.changes", "true")
-          .load(pt.dir)
-          .writeStream.format("parquet").option("path", out)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination(); q.stop()
-      }
-      drain()                                            // snapshot: gen 1
+      w.append(cust.filter(col("c_custkey") % 4 =!= 0))            // gen 1
+      val feed = new ChangeFeed(spark, w, CustCols, "sivm")
+      feed.drain()                                       // snapshot: gen 1
       spark.sql(s"DELETE FROM $t WHERE c_custkey % 5 = 2")        // gen 2
-      cust.filter(col("c_custkey") % 4 === 0).writeTo(t).append() // gen 3
+      w.append(cust.filter(col("c_custkey") % 4 === 0))           // gen 3
       spark.sql(s"""
         UPDATE $t SET
           c_mktsegment = concat('U_', c_mktsegment),
@@ -1793,18 +1796,17 @@ object SourceParity {
             CAST(CAST(c_acctbal_str AS DECIMAL(18,2)) + 25 AS STRING)
         WHERE c_custkey % 9 = 4
       """)                                                        // gen 4
-      drain()                              // resume: gens 2-4, signed
-      val sign = when(col(graft.sources.GraftTsvMeta.ChangeCol) === "insert",
-        lit(1)).otherwise(lit(-1))
-      ss.read.schema(schema).parquet(out)
+      feed.drain()                         // resume: gens 2-4, signed
+      val sign = feed.sign
+      w.localize(feed.ss.read.schema(feed.schema).parquet(feed.out)
         .groupBy(col("c_mktsegment"))
         .agg(sum(sign.cast("long")).as("n"),
           sum(sign.cast("decimal(18,2)") * dec(col("c_acctbal_str")))
             .as("s"))
         .filter(col("n") > 0)
         .select(col("c_mktsegment"), col("n"),
-          col("s").cast("double").as("sum_bal"))
-        .orderBy("c_mktsegment")
+          col("s").cast("double").as("sum_bal")),
+        col("c_mktsegment"))
     })
 
   /** STREAMING LSH-INDEX MAINTENANCE — the connector's change feed wired
@@ -1838,68 +1840,36 @@ object SourceParity {
       |  CAST(sum(doc_id) AS BIGINT) AS sum_doc
       |FROM b GROUP BY band, bucket ORDER BY band, bucket
       |""".stripMargin.trim),
-    (spark, dir) => {
-      val pt = ArtifactStore.freshTable(spark, dir, "docs_slsh")
-      val t = pt.sql
-      spark.sql(s"""CREATE TABLE $t (doc_id BIGINT, text STRING)
-        USING `graft-tsv` TBLPROPERTIES ('retain.generations' = '6')""")
+    (spark, dir) => IvmWindow.run(spark, dir, "docs_slsh", DocCols,
+        retain = 6) { w =>
+      val t = w.sql
       val docs = tbl(spark, dir, "documents").select(col("doc_id"), col("text"))
-      docs.filter(col("doc_id") % 3 =!= 0).writeTo(t).append()      // gen 1
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(
-          graft.sources.GraftTsvMeta.ChangeCol,
-          org.apache.spark.sql.types.StringType)))
-      val ss = spark.newSession()
-      val work = ArtifactStore.freshDir(spark, dir, "slsh")
-      val (ckpt, out) = (s"$work/ckpt", s"$work/out")
-      def drain(): Unit = {
-        // dev sweep knob (SCALE.md §29 follow-up): when set, the drain
-        // splits the backlog into max-N-file batches instead of one
-        // AvailableNow macro-batch — the per-batch fixed cost (state
-        // load, sink commit, offset log) is isolated by sweeping N.
-        // Unset (the gated default) drains whole generations.
-        val maxFiles = spark.conf
-          .getOption("spark.graft.stream.maxFilesPerTrigger")
-        val rs = ss.readStream.format("graft-tsv").schema(schema)
-          .option("stream.by.generation", "true")
-          .option("stream.changes", "true")
-        val q = maxFiles.fold(rs)(n => rs.option("max.files.per.trigger", n))
-          .load(pt.dir)
-          .writeStream.format("parquet").option("path", out)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination(); q.stop()
-      }
-      drain()                                             // snapshot: gen 1
+      w.append(docs.filter(col("doc_id") % 3 =!= 0))                // gen 1
+      val feed = new ChangeFeed(spark, w, DocCols, "slsh")
+      feed.drain()                                        // snapshot: gen 1
       spark.sql(s"DELETE FROM $t WHERE doc_id % 5 = 2")            // gen 2
-      docs.filter(col("doc_id") % 3 === 0).writeTo(t).append()     // gen 3
+      w.append(docs.filter(col("doc_id") % 3 === 0))               // gen 3
       spark.sql(
         s"UPDATE $t SET text = concat(text, ' upd42') WHERE doc_id % 7 = 4"
       )                                                            // gen 4
-      drain()                               // resume: gens 2-4, signed
-      val sign = when(col(graft.sources.GraftTsvMeta.ChangeCol) === "insert",
-        lit(1)).otherwise(lit(-1))
+      feed.drain()                          // resume: gens 2-4, signed
+      val sign = feed.sign
       // net the signed events per (doc, text) BEFORE hashing: a
       // rewritten doc's old version cancels here, so the expensive
       // shingle pass sees only the net-changed documents. Read the sink
       // with the MAIN session — bandsWeighted calls the graft native
       // functions, registered there (ss is a bare newSession for the
       // stream side only).
-      val net = spark.read.schema(schema).parquet(out)
+      val net = spark.read.schema(feed.schema).parquet(feed.out)
         .groupBy("doc_id", "text")
         .agg(sum(sign.cast("long")).as("w"))
         .filter(col("w") =!= 0)
-      Dedup.bandsWeighted(net)
+      // the index is data-sized: spilled, so it outlives the work dir
+      ArtifactStore.spillResult(spark, "slsh_res", Dedup.bandsWeighted(net)
         .groupBy("band", "bucket")
         .agg(sum(col("w")).as("n_docs"),
           sum(col("w") * col("doc_id")).as("sum_doc"))
-        .filter(col("n_docs") =!= 0)
+        .filter(col("n_docs") =!= 0))
         .orderBy("band", "bucket")
     })
 

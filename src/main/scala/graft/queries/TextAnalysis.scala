@@ -570,53 +570,52 @@ object TextAnalysis {
 
     // the CDC lifecycle: snapshot → DELETE → append → text-rewriting
     // UPDATE (the q_stream_lsh_ivm exhibit, batch feed)
-    val ft = ArtifactStore.freshTable(spark, dir, "bm25ivm")
-    val t = ft.sql
-    spark.sql(s"""CREATE TABLE $t (doc_id BIGINT, text STRING)
-      USING `graft-tsv` TBLPROPERTIES ('retain.generations' = '6')""")
-    base.writeTo(t).append()                                        // gen 1
-    spark.sql(s"DELETE FROM $t WHERE doc_id % 5 = 2")               // gen 2
-    docs.filter(col("doc_id") % 3 === 0).writeTo(t).append()        // gen 3
-    spark.sql(
-      s"UPDATE $t SET text = concat(text, ' upd42') WHERE doc_id % 7 = 4"
-    )                                                               // gen 4
-    val net = graft.Checkpoints.truncate(               // (doc_id, text, w)
-      Graph.netDelta(spark, ft, Seq("doc_id", "text"), "w"))
-    mark("delta")
+    val (dN, dl1, tf1) = IvmWindow.run(spark, dir, "bm25ivm",
+        "doc_id BIGINT, text STRING", retain = 6) { w =>
+      w.append(base)                                                // gen 1
+      spark.sql(s"DELETE FROM ${w.sql} WHERE doc_id % 5 = 2")       // gen 2
+      w.append(docs.filter(col("doc_id") % 3 === 0))                // gen 3
+      spark.sql(
+        s"UPDATE ${w.sql} SET text = concat(text, ' upd42') WHERE doc_id % 7 = 4"
+      )                                                             // gen 4
+      val net = w.delta(Seq("doc_id", "text"), "w")     // (doc_id, text, w)
+      mark("delta")
 
-    // tokenize ONLY the net-changed versions, signed — Σw over a
-    // version's tokens = w·len, so the groupBys below are the ⊕ deltas
-    val ntok = net
-      .select(col("doc_id"), col("w"),
-        explode(split(col("text"), "\\s+")).as("tkn"))
-      .filter(col("tkn") =!= "")
-    val ddl = ntok.groupBy("doc_id").agg(sum(col("w")).as("ddl"))
-    val dtf = ntok.filter(col("tkn").isin(searchTerms: _*))
-      .groupBy(col("doc_id"), col("tkn").as("term"))
-      .agg(sum(col("w")).as("dtf"))
-    val nr = net.agg(coalesce(sum(col("w")), lit(0L)).as("dn"),
-      count(lit(1)).as("n"),
-      coalesce(sum(when(col("w") < 0, 1L).otherwise(0L)), lit(0L)).as("neg"))
-      .head()
-    val (dN, nApplied, nNeg) = (nr.getLong(0), nr.getLong(1), nr.getLong(2))
-    mark(s"apply:n=$nApplied:neg=$nNeg")
+      // tokenize ONLY the net-changed versions, signed — Σw over a
+      // version's tokens = w·len, so the groupBys below are the ⊕ deltas
+      val ntok = net
+        .select(col("doc_id"), col("w"),
+          explode(split(col("text"), "\\s+")).as("tkn"))
+        .filter(col("tkn") =!= "")
+      val ddl = ntok.groupBy("doc_id").agg(sum(col("w")).as("ddl"))
+      val dtf = ntok.filter(col("tkn").isin(searchTerms: _*))
+        .groupBy(col("doc_id"), col("tkn").as("term"))
+        .agg(sum(col("w")).as("dtf"))
+      val nr = net.agg(coalesce(sum(col("w")), lit(0L)).as("dn"),
+        count(lit(1)).as("n"),
+        coalesce(sum(when(col("w") < 0, 1L).otherwise(0L)), lit(0L)).as("neg"))
+        .head()
+      val (dN, nApplied, nNeg) = (nr.getLong(0), nr.getLong(1), nr.getLong(2))
+      mark(s"apply:n=$nApplied:neg=$nNeg")
 
-    val dl1 = graft.Checkpoints.truncate(
-      spark.read.parquet(s"$stateRoot/dl")
-        .join(ddl, Seq("doc_id"), "full_outer")
-        .select(col("doc_id"),
-          (coalesce(col("dl"), lit(0L)) + coalesce(col("ddl"), lit(0L)))
-            .as("dl"))
-        .filter(col("dl") > 0))
-    val tf1 = graft.Checkpoints.truncate(
-      spark.read.parquet(s"$stateRoot/tf")
-        .join(dtf, Seq("doc_id", "term"), "full_outer")
-        .select(col("doc_id"), col("term"),
-          (coalesce(col("tf"), lit(0L)) + coalesce(col("dtf"), lit(0L)))
-            .as("tf"))
-        .filter(col("tf") > 0))
-    graft.Checkpoints.release(net)
-    ArtifactStore.dropTable(spark, ft)
+      // the maintained index frames: the result reads them, so they are
+      // truncated but not held by the window
+      val dl = graft.Checkpoints.truncate(
+        spark.read.parquet(s"$stateRoot/dl")
+          .join(ddl, Seq("doc_id"), "full_outer")
+          .select(col("doc_id"),
+            (coalesce(col("dl"), lit(0L)) + coalesce(col("ddl"), lit(0L)))
+              .as("dl"))
+          .filter(col("dl") > 0))
+      val tf = graft.Checkpoints.truncate(
+        spark.read.parquet(s"$stateRoot/tf")
+          .join(dtf, Seq("doc_id", "term"), "full_outer")
+          .select(col("doc_id"), col("term"),
+            (coalesce(col("tf"), lit(0L)) + coalesce(col("dtf"), lit(0L)))
+              .as("tf"))
+          .filter(col("tf") > 0))
+      (dN, dl, tf)
+    }
     val nDocs = nBase + dN
     val stats = dl1.agg(sum(col("dl")).as("t_tok"))
       .select(lit(nDocs).as("n_docs"),

@@ -15,15 +15,12 @@ class Bm25IvmSpec extends SparkSuite {
     val rows = queries.TextAnalysis.bm25IvmBuild(spark, sfDir, marks += _)
       .collect()
     assert(rows.nonEmpty, "empty scored result")
-    val am = marks.find(_.startsWith("apply:"))
-      .getOrElse(fail(s"no apply mark in $marks"))
-    val kv = am.split(":").drop(1)
-      .map(_.split("=")).map(a => a(0) -> a(1).toLong).toMap
-    assert(kv("n") >= 2, s"the CDC batch netted almost nothing: $am")
+    val kv = phaseCounts(marks, "apply")
+    assert(kv("n") >= 2, s"the CDC batch netted almost nothing: $kv")
     assert(kv("neg") >= 1,
       s"no net-deleted version in the batch — the signed-out path " +
-        s"(DELETE / update old-text) never ran: $am")
+        s"(DELETE / update old-text) never ran: $kv")
     assert(kv("n") - kv("neg") >= 1,
-      s"no net-inserted version in the batch: $am")
+      s"no net-inserted version in the batch: $kv")
   }
 }

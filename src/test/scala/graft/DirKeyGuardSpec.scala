@@ -9,10 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every name derived from a data dir has one owner,
   * [[graft.queries.ArtifactStore]]: roots, exports, parity and fresh
   * tables are keyed by its SHA-256 `dirDigest`, the `gparity` catalog is
-  * registered in one place, and pay-once exports go through its
-  * marker-guarded `ensure`. This scans the main sources so a query added
-  * by copying an old body cannot bring back a 32-bit `hashCode` key, a
-  * second catalog registration, or a hand-written `_SUCCESS` guard. */
+  * registered in one place, pay-once exports go through its
+  * marker-guarded `ensure`, and fresh tables live only inside an
+  * [[graft.queries.IvmWindow]]. This scans the main sources so a query
+  * added by copying an old body cannot bring back a 32-bit `hashCode` key,
+  * a second catalog registration, a hand-written `_SUCCESS` guard, or an
+  * IVM window that leaks its table. */
 class DirKeyGuardSpec extends AnyFunSuite {
 
   private val mainRoot: Path = Iterator
@@ -43,6 +45,16 @@ class DirKeyGuardSpec extends AnyFunSuite {
     val found = hits(
       sources.filterNot(_._1.endsWith("graft/queries/ArtifactStore.scala")),
       """spark\.sql\.catalog\.gparity""".r)
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  // a query that creates or drops a fresh table by hand (an IVM window
+  // copied from an old body) would leave its table behind when it throws
+  test("only IvmWindow creates, merge-deletes from or drops a fresh table") {
+    val found = hits(
+      sources.filter(_._1.startsWith(mainRoot.resolve("graft/queries")))
+        .filterNot(_._1.endsWith("graft/queries/IvmWindow.scala")),
+      """ArtifactStore\.(freshTable|dropTable)\(|WHEN MATCHED THEN DELETE""".r)
     assert(found.isEmpty, found.mkString("\n"))
   }
 

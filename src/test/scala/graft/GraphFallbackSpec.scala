@@ -139,10 +139,7 @@ class GraphFallbackSpec extends SparkSuite {
     val marks = scala.collection.mutable.ArrayBuffer.empty[String]
     val df = queries.Graph.componentsIvmBuild(spark, sfDir, marks += _)
     assert(df.count() > 0, "empty component labeling")
-    val rm = marks.find(_.startsWith("resume:"))
-      .getOrElse(fail(s"no resume mark in $marks"))
-    val kv = rm.split(":").drop(1)
-      .map(_.split("=")).map(a => a(0) -> a(1).toLong).toMap
+    val kv = phaseCounts(marks, "resume")
     assert(kv("r2") >= 1 && kv("r2") <= kv("r1"),
       s"resume rounds ${kv("r2")} exceed cold rounds ${kv("r1")}")
   }
@@ -155,18 +152,15 @@ class GraphFallbackSpec extends SparkSuite {
     val marks = scala.collection.mutable.ArrayBuffer.empty[String]
     val df = queries.Graph.componentsIvmDelBuild(spark, sfDir, marks += _)
     assert(df.count() > 0, "empty component labeling")
-    val rm = marks.find(_.startsWith("recompute:"))
-      .getOrElse(fail(s"no recompute mark in $marks"))
-    val kv = rm.split(":").drop(1)
-      .map(_.split("=")).map(a => a(0) -> a(1).toLong).toMap
+    val kv = phaseCounts(marks, "recompute")
     // a non-empty delta must touch at least one component; a regenerated
     // fixture whose held-out hash yields ZERO deletes legitimately takes
     // the no-op branch (aff=0, r2=0) — don't fail spuriously on it
     assert(kv("aff") >= 1 || kv("r2") == 0,
-      s"a real delta produced an empty affected set: $rm")
+      s"a real delta produced an empty affected set: $kv")
     assert(kv("r2") <= kv("r1"),
       s"affected-subgraph recompute took more rounds than the full cold " +
-        s"converge: $rm")
+        s"converge: $kv")
   }
 
   // Incremental BFS: oracle proves the resumed distances equal the cold
@@ -176,12 +170,9 @@ class GraphFallbackSpec extends SparkSuite {
     val marks = scala.collection.mutable.ArrayBuffer.empty[String]
     val df = queries.Graph.bfsIvmBuild(spark, sfDir, marks += _)
     assert(df.count() > 0, "empty distance frame")
-    val rm = marks.find(_.startsWith("resume:"))
-      .getOrElse(fail(s"no resume mark in $marks"))
-    val kv = rm.split(":").drop(1)
-      .map(_.split("=")).map(a => a(0) -> a(1).toLong).toMap
+    val kv = phaseCounts(marks, "resume")
     assert(kv("r2") <= kv("r1") + 1,
-      s"resume took materially more rounds than the cold converge: $rm")
+      s"resume took materially more rounds than the cold converge: $kv")
   }
 
   // Delete side of BFS maintenance: the oracle proves the spliced
@@ -195,12 +186,9 @@ class GraphFallbackSpec extends SparkSuite {
     val df = queries.Graph.bfsIvmDelBuild(spark, sfDir, marks += _)
     val res = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(res.nonEmpty, "empty maintained distance frame")
-    val rm = marks.find(_.startsWith("recompute:"))
-      .getOrElse(fail(s"no recompute mark in $marks"))
-    val kv = rm.split(":").drop(1)
-      .map(_.split("=")).map(a => a(0) -> a(1).toLong).toMap
+    val kv = phaseCounts(marks, "recompute")
     assert(kv("dirty") >= 1 || kv("r2") == 0,
-      s"a real delta produced an empty dirty set: $rm")
+      s"a real delta produced an empty dirty set: $kv")
     val root = queries.Graph.bfsIvmDelStateRoot(spark, sfDir)
     val base = spark.read.parquet(s"$root/dist")
       .filter(org.apache.spark.sql.functions.col("dist") <
@@ -227,10 +215,8 @@ class GraphFallbackSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(ivm == cold,
       s"maintained triangle top-20 diverged from the cold kernel:\n$ivm\nvs\n$cold")
-    val am = marks.find(_.startsWith("apply:"))
-      .getOrElse(fail(s"no apply mark in $marks"))
-    assert(am.stripPrefix("apply:dt=").toLong >= 1,
-      s"the exhibit adds produced no delta triangle: $am")
+    val kv = phaseCounts(marks, "apply")
+    assert(kv("dt") >= 1, s"the exhibit adds produced no delta triangle: $kv")
   }
 
   // Delete side: pure count subtraction — the removed-triangle tally
@@ -239,10 +225,8 @@ class GraphFallbackSpec extends SparkSuite {
     val marks = scala.collection.mutable.ArrayBuffer.empty[String]
     val ivm = queries.Graph.trianglesIvmDelBuild(spark, sfDir, marks += _)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val am = marks.find(_.startsWith("apply:"))
-      .getOrElse(fail(s"no apply mark in $marks"))
-    assert(am.stripPrefix("apply:dt=").toLong >= 1,
-      s"the exhibit deletes removed no triangle: $am")
+    val kv = phaseCounts(marks, "apply")
+    assert(kv("dt") >= 1, s"the exhibit deletes removed no triangle: $kv")
     val base = collectSorted("q_triangles")
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     val raised = ivm.filter { case (n, c) => base.get(n).exists(_ < c) }
@@ -291,19 +275,16 @@ class GraphFallbackSpec extends SparkSuite {
     val marks = scala.collection.mutable.ArrayBuffer.empty[String]
     val df = queries.Graph.labelPropIvmBuild(spark, sfDir, marks += _)
     assert(df.count() > 0, "empty labeling")
-    val rm = marks.find(_.startsWith("resume:"))
-      .getOrElse(fail(s"no resume mark in $marks"))
-    val kv = rm.split(":").drop(1)
-      .map(_.split("=")).map(a => a(0) -> a(1).toLong).toMap
+    val kv = phaseCounts(marks, "resume")
     // total final components on the same exhibit subgraph — from the
     // components gate, which runs on the identical edge set
     val totalComps = queries.Catalog.queries("q_components_ivm")(spark, sfDir)
       .select("component_id").distinct().count()
     assert(kv("aff") >= 1 || kv("r2") == 0,
-      s"a real delta touched no component: $rm")
+      s"a real delta touched no component: $kv")
     assert(kv("aff") < totalComps,
       s"recompute was NOT scoped: affected ${kv("aff")} of $totalComps " +
-        s"final components — the splice path never ran ($rm)")
+        s"final components — the splice path never ran ($kv)")
   }
 
   // The IVM gates return the FULL per-node labeling/distance set. r17
@@ -319,15 +300,12 @@ class GraphFallbackSpec extends SparkSuite {
     val marks = scala.collection.mutable.ArrayBuffer.empty[String]
     val df = queries.Graph.bfsIvmMixedBuild(spark, sfDir, marks += _)
     assert(df.count() > 0, "empty maintained distance frame")
-    val rm = marks.find(_.startsWith("recompute:"))
-      .getOrElse(fail(s"no recompute mark in $marks"))
-    val kv = rm.split(":").drop(1)
-      .map(_.split("=")).map(a => a(0) -> a(1).toLong).toMap
+    val kv = phaseCounts(marks, "recompute")
     assert(kv("dirty") >= 1,
-      s"the delete side of the mixed batch touched nothing: $rm")
+      s"the delete side of the mixed batch touched nothing: $kv")
     assert(kv("addv") >= 1,
-      s"the add side of the mixed batch activated nothing: $rm")
-    assert(kv("r2") >= 1, s"the mixed resume never relaxed: $rm")
+      s"the add side of the mixed batch activated nothing: $kv")
+    assert(kv("r2") >= 1, s"the mixed resume never relaxed: $kv")
   }
 
   // The dirty-walk joins of the BFS delete/mixed maintenance (VERDICT r18
@@ -349,12 +327,9 @@ class GraphFallbackSpec extends SparkSuite {
         build(spark, sfDir, marks += _).collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSeq
       }
-      val rm = marks.find(_.startsWith("recompute:"))
-        .getOrElse(fail(s"no recompute mark in $marks"))
-      val kv = rm.split(":").drop(1)
-        .map(_.split("=")).map(a => a(0) -> a(1).toLong).toMap
+      val kv = phaseCounts(marks, "recompute")
       assert(kv("dirty") >= 1,
-        s"forced run degenerated to a no-op delta: $rm")
+        s"forced run degenerated to a no-op delta: $kv")
       assert(fallback == default,
         s"$q: shuffle-hash dirty walk diverged from the broadcast path")
     }

@@ -17,10 +17,8 @@ class IvfIvmSpec extends SparkSuite {
     val df = queries.Similarity.ivfIvmBuild(spark, sfDir, marks += _)
     val rows = df.collect()
     assert(rows.nonEmpty, "empty probe result")
-    val dm = marks.find(_.startsWith("delta:"))
-      .getOrElse(fail(s"no delta mark in $marks"))
-    val nNew = dm.stripPrefix("delta:n=").toLong
-    assert(nNew >= 1, s"the exhibit batch assigned no new posting: $dm")
+    val kv = phaseCounts(marks, "delta")
+    assert(kv("n") >= 1, s"the exhibit batch assigned no new posting: $kv")
     val bnd = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .agg(min(col("vec_id")), max(col("vec_id"))).head()
     val cutoff = bnd.getLong(0) + (bnd.getLong(1) - bnd.getLong(0) + 1) * 7 / 8

@@ -24,13 +24,10 @@ class PipelineIvmSpec extends SparkSuite {
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(ivm == cold,
       s"maintained audit diverged from the cold pipeline:\n$ivm\nvs\n$cold")
-    val rm = marks.find(_.startsWith("resume:"))
-      .getOrElse(fail(s"no resume mark in $marks"))
-    val kv = rm.split(":").drop(1)
-      .map(_.split("=")).map(a => a(0) -> a(1).toLong).toMap
+    val kv = phaseCounts(marks, "resume")
     assert(kv("dt") + kv("db") >= 1,
-      s"the exhibit batch produced no delta edge at all: $rm")
+      s"the exhibit batch produced no delta edge at all: $kv")
     assert(kv("r2") >= 1 && kv("r2") <= kv("r1") + 1,
-      s"resume rounds materially exceed the cold converge: $rm")
+      s"resume rounds materially exceed the cold converge: $kv")
   }
 }

@@ -24,4 +24,13 @@ object TestSpark {
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** The counts of an IVM builder's first `phase` mark,
+    * "<phase>:<k>=<n>:<k>=<n>…", by name; fails the test when `marks`
+    * holds no such mark. */
+  def phaseCounts(marks: Iterable[String], phase: String): Map[String, Long] =
+    marks.find(_.startsWith(s"$phase:"))
+      .getOrElse(fail(s"no $phase mark in $marks"))
+      .split(":").drop(1)
+      .map(_.split("=")).map(a => a(0) -> a(1).toLong).toMap
 }

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions.col
 
 /** The triangle IVM windows after their artifact is served: the delta
   * window moves O(delta) bytes (the changes-feed diff and the adjacency no
-  * longer shuffle the pair set), the splice onto the artifact's counts
-  * exchanges neither side, and each window drops its fresh table. */
+  * longer shuffle the pair set) and the splice onto the artifact's counts
+  * exchanges neither side. Every IVM window drops its fresh table, also
+  * when it throws. */
 class TriangleIvmWindowSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private val windows
@@ -42,20 +43,76 @@ class TriangleIvmWindowSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       } finally spark.sparkContext.removeSparkListener(tally)
     }
 
-  test("triangle windows leave no fresh table behind") {
-    val db = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_parity_catalog/db")
-    val h = queries.ArtifactStore.dirDigest(sfDir)
-    def tables: Set[String] = Option(db.listFiles()).getOrElse(Array.empty)
-      .map(_.getName)
-      .filter(n => n.startsWith(s"triivm_${h}_") || n.startsWith(s"triivmd_${h}_"))
-      .toSet
-    val before = tables
-    for (_ <- 1 to 2; (_, build, _, _) <- windows)
-      build(spark, sfDir, _ => ()).collect()
-    assert(tables -- before == Set.empty[String],
-      s"windows left ${(tables -- before).mkString(", ")}")
+  /** Every window over a fresh table: (query, table prefix, a run that
+    * reports its phases to `mark`). */
+  private val freshWindows: Seq[(String, String, (String => Unit) => DataFrame)] = {
+    import queries.{Catalog, Graph, TextAnalysis}
+    Seq(
+      ("q_pagerank_ivm", "privm", Graph.pagerankIvmBuild(spark, sfDir, _)),
+      ("q_pagerank_ivm served", "privm",
+        m => Graph.pagerankIvmServe(spark, sfDir, m)),
+      ("q_components_ivm", "civm", Graph.componentsIvmBuild(spark, sfDir, _)),
+      ("q_components_ivm_del", "civmd",
+        Graph.componentsIvmDelBuild(spark, sfDir, _)),
+      ("q_bfs_ivm", "bfsivm", Graph.bfsIvmBuild(spark, sfDir, _)),
+      ("q_bfs_ivm_del", "bfsivmd", Graph.bfsIvmDelBuild(spark, sfDir, _)),
+      ("q_bfs_ivm_mixed", "bfsivmmx", Graph.bfsIvmMixedBuild(spark, sfDir, _)),
+      ("q_triangles_ivm", "triivm", Graph.trianglesIvmBuild(spark, sfDir, _)),
+      ("q_triangles_ivm_del", "triivmd",
+        Graph.trianglesIvmDelBuild(spark, sfDir, _)),
+      ("q_label_prop_ivm", "lpivm", Graph.labelPropIvmBuild(spark, sfDir, _)),
+      ("q_bm25_ivm", "bm25ivm", TextAnalysis.bm25IvmBuild(spark, sfDir, _)),
+      ("q_pipeline_multimodal_ivm", "pmm",
+        Catalog.pipelineMultimodalIvmBuild(spark, sfDir, _)))
   }
+
+  /** The stateful parity exhibits that run in a window: (query, table
+    * prefix, work-dir prefix or ""). */
+  private val parityWindows = Seq(("q_dsv2_manifest_delta", "cust_mfd", ""),
+    ("q_stream_ivm", "cust_sivm", "sivm"), ("q_stream_lsh_ivm", "docs_slsh", "slsh"))
+
+  /** The fresh tables of `prefixes` over `sfDir`, and the work dirs of
+    * `dirPrefixes`, that exist now. */
+  private def leftovers(prefixes: Seq[String],
+      dirPrefixes: Seq[String] = Nil): Set[String] = {
+    val h = queries.ArtifactStore.dirDigest(sfDir)
+    def names(d: java.io.File, stems: Seq[String]): Set[String] =
+      Option(d.listFiles()).getOrElse(Array.empty).map(_.getName)
+        .filter(n => stems.exists(n.startsWith)).toSet
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    names(new java.io.File(tmp, "graft_parity_catalog/db"),
+      prefixes.map(p => s"${p}_${h}_")) ++
+      names(tmp, dirPrefixes.map(p => s"graft_${p}_${h}_"))
+  }
+
+  test("IVM windows leave no fresh table or work dir behind") {
+    val prefixes = freshWindows.map(_._2) ++ parityWindows.map(_._2)
+    val dirPrefixes = parityWindows.map(_._3).filter(_.nonEmpty)
+    val before = leftovers(prefixes, dirPrefixes)
+    for (_ <- 1 to 2) {
+      for ((_, _, run) <- freshWindows) run(_ => ()).collect()
+      for ((q, _, _) <- parityWindows)
+        queries.Catalog.queries(q)(spark, sfDir).collect()
+    }
+    val left = leftovers(prefixes, dirPrefixes) -- before
+    assert(left.isEmpty, s"windows left ${left.mkString(", ")}")
+  }
+
+  // a window that throws mid-way (here from its own phase callback, after
+  // the table has taken its generations) must still drop its table, and
+  // the caller must see the window's exception, not a cleanup error
+  for ((q, prefix, run) <- freshWindows)
+    test(s"$q: a window that throws still drops its table") {
+      val at = if (q.endsWith("served")) "setup" else "delta"
+      val boom = new IllegalStateException(s"$q: thrown at $at")
+      val before = leftovers(Seq(prefix))
+      val e = intercept[IllegalStateException] {
+        run(m => if (m == at) throw boom).collect()
+      }
+      assert(e eq boom, s"the caller saw $e instead of the window's exception")
+      val left = leftovers(Seq(prefix)) -- before
+      assert(left.isEmpty, s"the failed window left ${left.mkString(", ")}")
+    }
 
   test("triSplice: base counts plus signed delta counts, with no exchange") {
     import spark.implicits._
