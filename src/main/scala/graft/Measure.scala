@@ -88,11 +88,14 @@ object Measure {
     spark.sparkContext.addSparkListener(this)
 
     // AQE submits a query's stage jobs from its own threads, so a job's
-    // own call site names a thread pool; the execution's names the action
+    // own call site names a thread pool; the execution's names the action.
+    // IvmWindow frames are skipped: every window truncates through it, so
+    // its caller names the step
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case s: SparkListenerSQLExecutionStart =>
         val step = s.details.linesIterator.map(_.trim)
-          .find(_.startsWith("graft.queries."))
+          .find(f => f.startsWith("graft.queries.") &&
+            !f.startsWith("graft.queries.IvmWindow"))
         executions.put(s.executionId,
           s.description + step.fold("")(f => s" [$f]"))
       case s: SparkListenerSQLExecutionEnd => executions.remove(s.executionId)

@@ -1321,8 +1321,8 @@ object Catalog {
         "doc_id BIGINT, text STRING") { w =>
       w.append(base)                                               // gen 1
       w.append(docs.filter(col("doc_id") >= cutoff))               // gen 2
-      val net = w.hold(graft.Checkpoints.truncate(
-        w.netDelta(Seq("doc_id", "text"), "w").filter(col("w") > 0)))
+      val net = w.truncated(
+        w.netDelta(Seq("doc_id", "text"), "w").filter(col("w") > 0))
 
       // delta TEXT edges: new docs' band memberships, old members fetched
       // from the index by bucket key, pairs kept only with >= 1 new side

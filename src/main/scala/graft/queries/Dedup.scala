@@ -771,8 +771,13 @@ FROM bs GROUP BY band ORDER BY band"""),
     * (that is the premise of decontamination), so its shingle-hash set
     * BROADCASTS and the corpus side never shuffles for the join — one
     * scan, an 8-byte-hash broadcast probe in the map stage, then a
-    * single per-doc aggregation shuffle (count-distincts dedupe in the
-    * agg, so no standalone global DISTINCT pass is paid). The 60-bit
+    * single per-doc aggregation shuffle (the two distinct counts are
+    * `size(collect_set)`s, deduped in the agg, so no standalone global
+    * DISTINCT pass is paid). Two `countDistinct`s would plan an Expand
+    * that shuffles one row per (doc, distinct value, group) and numbers
+    * its groups in exprId order, so its bytes flip between runs of one
+    * session (SCALE.md §59); the sets shuffle one row per doc and map
+    * task, under half the Expand's bytes (SCALE.md §60). The 60-bit
     * shingle hash keeps the probe narrow; both engines hash identically
     * so parity is exact. */
   private val qDecontaminate = QueryDef(
@@ -793,8 +798,8 @@ GROUP BY t.doc_id ORDER BY doc_id"""),
       hashed.filter(col("doc_id") % 17 =!= 0)
         .join(broadcast(bench), col("hp") === col("b_hp"))
         .groupBy("doc_id")
-        .agg(countDistinct(col("hp")).as("n_hits"),
-          countDistinct(col("b_id")).as("n_bench"))
+        .agg(size(collect_set(col("hp"))).cast("long").as("n_hits"),
+          size(collect_set(col("b_id"))).cast("long").as("n_bench"))
         .orderBy("doc_id")
     })
 

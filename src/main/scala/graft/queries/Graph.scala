@@ -1574,8 +1574,8 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
 
       w.append(ef)                                                  // gen 1
       w.deleteMatching(dels, "p", "s")                              // gen 2
-      val dedges = w.hold(graft.Checkpoints.truncate(
-        bothWays(w.delta(Seq("p", "s")))))  // all sgn = -1
+      val dedges = w.truncated(
+        bothWays(w.delta(Seq("p", "s"))))  // all sgn = -1
       val l0 = spark.read.parquet(s"$stateRoot/labels")
       mark("delta")
 
@@ -2033,8 +2033,8 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       else {
         w.append(ef)                                                // gen 1
         w.deleteMatching(dels, "p", "s")                            // gen 2
-        val dedges = w.hold(graft.Checkpoints.truncate(
-          bothWays(w.delta(Seq("p", "s")))))  // all sgn = -1
+        val dedges = w.truncated(
+          bothWays(w.delta(Seq("p", "s"))))  // all sgn = -1
         val st = spark.read.parquet(s"$stateRoot/dist") // (node_id, dist, par)
         mark("delta")
         if (dedges.head(1).isEmpty) {
@@ -2100,10 +2100,8 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
         w.deleteMatching(dels, "p", "s")                            // gen 2
         w.append(adds)                                              // gen 3
         val dpairs = w.delta(Seq("p", "s"))  // BOTH signs
-        val dedgesD = w.hold(graft.Checkpoints.truncate(
-          bothWays(dpairs.filter(col("sgn") < 0))))
-        val dedgesA = w.hold(graft.Checkpoints.truncate(
-          bothWays(dpairs.filter(col("sgn") > 0))))
+        val dedgesD = w.truncated(bothWays(dpairs.filter(col("sgn") < 0)))
+        val dedgesA = w.truncated(bothWays(dpairs.filter(col("sgn") > 0)))
         val st = spark.read.parquet(s"$stateRoot/dist")
         mark("delta")
         if (dedgesD.head(1).isEmpty && dedgesA.head(1).isEmpty) {
@@ -2133,7 +2131,12 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
             // so reading the metric off addV would yield 0).
             val addVName = graft.Checkpoints.observedName("bfs_addv")
             val actName = graft.Checkpoints.observedName("bfs_act_ct")
+            // hashed on node_id like the clean frontier, so the union's
+            // distinct reads both sides where they are: a one-partition
+            // delta (IvmWindow.truncated) would otherwise re-exchange the
+            // frontier; a hashed one keeps its distinct's exchange only
             val addV = dedgesA.select(col("u").as("node_id")).distinct()
+              .repartition(col("node_id"))
               .observe(addVName, count(lit(1)).as("v"))
             val actObs = cleanFrontier.unionByName(addV).distinct()
               .observe(actName, count(lit(1)).as("v"))
@@ -2298,7 +2301,10 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     * committed to the table of window `w`: the net delta edges of sign `sign`
     * (+1 inserted, −1 deleted) come off the changes feed, their
     * emptiness off the same checkpoint job (a max flag, exact in both
-    * checkpoint modes). A non-empty delta counts, per node, the triangles
+    * checkpoint modes), through the window's one-partition rule
+    * ([[IvmWindow.truncatedObserved]]): a delta the diff planned as one
+    * partition counts its triangles in that one task, with no exchange.
+    * A non-empty delta counts, per node, the triangles
     * containing >= 1 delta edge — of the FINAL graph for adds, of the
     * PRE-delete graph for deletes — each attributed to its SMALLEST delta
     * edge, and splices them onto the artifact's `counts` with that sign.
@@ -2317,18 +2323,18 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
   private def triApply(spark: SparkSession, w: IvmWindow,
       sign: Long, stateRoot: String, mark: String => Unit): DataFrame = {
     val baseCnt = spark.read.parquet(s"$stateRoot/counts")
-    val (dedges, nonEmpty) = truncateObserved(
+    val (dedges, nonEmpty) = w.truncatedObserved(
       w.netDelta(Seq("u", "v"))
         .filter(col("sgn") * sign > 0L).select("u", "v"),
       max(lit(1L)))
-    w.hold(dedges)
     mark("delta")
     if (nonEmpty == 0L) {
       mark("apply:dt=0")
       baseCnt.orderBy(desc("n_tri"), asc("node")).limit(20)
     } else {
+      // the build side of a semi join: duplicate keys leave it unchanged
       val ends = dedges.select(col("u").as("n"))
-        .unionByName(dedges.select(col("v").as("n"))).distinct()
+        .unionByName(dedges.select(col("v").as("n")))
       val baseAdj = spark.read.parquet(s"$stateRoot/adj")
         .join(broadcast(ends), col("src") === col("n"), "left_semi")
       val adj =
@@ -2375,9 +2381,9 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
             struct(least(col("v"), col("w")),
               greatest(col("v"), col("w"))) <
               struct(col("u"), col("v"))))
-      val dCk = w.hold(graft.Checkpoints.truncate(mine
+      val dCk = w.truncated(mine
         .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("dn"))))
+        .groupBy("node").agg(count(lit(1)).as("dn")))
       val nDt = dCk.agg(sum(col("dn"))).head() // 3 rows per triangle
       mark(s"apply:dt=${if (nDt.isNullAt(0)) 0L else nDt.getLong(0) / 3}")
       w.localize(triSplice(baseCnt, dCk, sign)

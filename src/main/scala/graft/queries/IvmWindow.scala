@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions.{col, lit}
   *     `CREATE TABLE` it with the given columns and retained generations;
   *  2. run the body: it commits generations ([[append]],
   *     [[deleteMatching]], or SQL verbs on [[sql]]), reads the net delta
-  *     ([[delta]]) and applies it;
+  *     ([[delta]], [[truncated]]) and applies it;
   *  3. in a `finally`, whether the body returned or threw: release every
-  *     frame the window holds ([[hold]], [[delta]]), delete its work dirs
+  *     frame the window holds ([[hold]], [[truncated]]), delete its work dirs
   *     ([[workDir]]), then drop the table. An exception from the body
   *     propagates unchanged; a cleanup step that fails is attached to it
   *     as suppressed (and thrown itself when the body returned).
@@ -27,7 +27,23 @@ import org.apache.spark.sql.functions.{col, lit}
   * the table, a held frame, or a work dir. The body localizes a bounded
   * result ([[localize]]) or spills a data-sized one
   * ([[ArtifactStore.spillResult]]) before it returns; a checkpoint the
-  * result reads (BM25's maintained `dl1`/`tf1`) is left unheld. */
+  * result reads (BM25's maintained `dl1`/`tf1`) is left unheld.
+  *
+  * The one-partition rule: the window reads its delta, and the frames it
+  * truncates from it ([[truncated]], [[truncatedObserved]]), as
+  * checkpoints, and a checkpoint that has exactly one partition is
+  * returned as `coalesce(1)`. A small changes-feed diff is planned as one
+  * partition (`GraftTsvCatalog.signedDiff`), but a checkpoint records an
+  * unknown partitioning, so an aggregate over it would hash-exchange that
+  * one partition into the session's shuffle partitions. On a
+  * one-partition frame `coalesce(1)` moves no data: it declares
+  * `SinglePartition`, which broadcast joins, `explode` and filters keep,
+  * so the aggregates over the delta and the frames derived from it run in
+  * that one task with no exchange. A delta of more partitions is returned
+  * unchanged and keeps its parallel exchanges. The rule keys on the
+  * checkpoint's own partition count, and only the window applies it: a
+  * large single-split input truncated elsewhere keeps its parallel
+  * reduce side. */
 final class IvmWindow private (spark: SparkSession, dir: String,
     val table: ArtifactStore.ParityTable) {
 
@@ -76,9 +92,30 @@ final class IvmWindow private (spark: SparkSession, dir: String,
       col(graft.sources.GraftTsvMeta.NetCol).as(sgn): _*)
   }
 
-  /** [[netDelta]], truncated and held. */
+  /** [[netDelta]], [[truncated]]. */
   def delta(keys: Seq[String], sgn: String = "sgn"): DataFrame =
-    hold(graft.Checkpoints.truncate(netDelta(keys, sgn)))
+    truncated(netDelta(keys, sgn))
+
+  /** `df`, the net delta or a frame derived from it, truncated and held,
+    * under the window's one-partition rule ([[onePartition]]). */
+  def truncated(df: DataFrame): DataFrame =
+    onePartition(hold(graft.Checkpoints.truncate(df)))
+
+  /** [[truncated]], with the aggregate `metric` read off the same
+    * checkpoint job ([[graft.Checkpoints.truncateObserved]]). */
+  def truncatedObserved(df: DataFrame, metric: Column): (DataFrame, Long) = {
+    val (ck, v) = graft.Checkpoints.truncateObserved(df, metric)
+    (onePartition(hold(ck)), v)
+  }
+
+  /** `ck`, a checkpoint root, as `coalesce(1)` when it has one
+    * partition: the class doc's one-partition rule. */
+  private def onePartition(ck: DataFrame): DataFrame =
+    ck.queryExecution.logical match {
+      case l: org.apache.spark.sql.execution.LogicalRDD
+          if l.rdd.getNumPartitions == 1 => ck.coalesce(1)
+      case _ => ck
+    }
 
   /** A fresh per-run work dir ([[ArtifactStore.freshDir]]), deleted when
     * the window closes. */
@@ -89,11 +126,12 @@ final class IvmWindow private (spark: SparkSession, dir: String,
   }
 
   /** A bounded result collected to the driver and returned as a
-    * one-partition frame sorted by `order`, so it outlives the window. */
+    * one-partition frame sorted by `order`, so it outlives the window.
+    * Declared one partition, so the sort plans no range exchange. */
   def localize(df: DataFrame, order: Column*): DataFrame = {
     val rows = df.collect().toSeq
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), df.schema)
-      .orderBy(order: _*)
+      .coalesce(1).orderBy(order: _*)
   }
 
   private def close(failure: Option[Throwable]): Unit = {

@@ -887,9 +887,11 @@ object TextAnalysis {
     * length stats, computed in ONE aggregation pass over the table (every
     * stat is an aggregate over the same scan; no per-column jobs). The
     * wide-and-flat output (one row) keeps it a single map-side-partial
-    * HashAggregate at any corpus size; distinct counts are the only
+    * aggregate at any corpus size; distinct counts are the only
     * non-O(1)-state stats and would switch to approx_count_distinct at
-    * 100 TB (exact here so the oracle can check values). */
+    * 100 TB (exact here so the oracle can check values). They are
+    * `size(collect_set)`s, one set per map task, not two `countDistinct`s,
+    * which Spark plans as a run-order-dependent Expand (SCALE.md §59). */
   private val qProfile = QueryDef(
     "q_profile",
     Some("""
@@ -906,8 +908,8 @@ object TextAnalysis {
     (spark, dir) =>
       tbl(spark, dir, "documents")
         .agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("doc_id")).as("n_ids"),
-          countDistinct(col("lang")).as("n_langs"),
+          size(collect_set(col("doc_id"))).cast("long").as("n_ids"),
+          size(collect_set(col("lang"))).cast("long").as("n_langs"),
           count(when(col("text").isNull || col("text") === "", 1))
             .as("n_empty_text"),
           min(length(col("text"))).cast("long").as("min_len"),

@@ -256,7 +256,11 @@ class CheckpointSpec extends SparkSuite {
     "q_entity_resolution" -> None,
     "q_bfs_ivm" -> Some("bfsivm_state" -> Graph.bfsIvmRecipe),
     "q_bfs_ivm_del" -> Some("bfsivm_del_state" -> Graph.bfsIvmDelRecipe),
-    "q_bfs_ivm_mixed" -> Some("bfsivm_mx_state" -> Graph.bfsIvmMixedRecipe)
+    "q_bfs_ivm_mixed" -> Some("bfsivm_mx_state" -> Graph.bfsIvmMixedRecipe),
+    // the triangle windows' one-partition rule reads the delta
+    // checkpoint's partition count, which each mode makes on its own
+    "q_triangles_ivm" -> Some("triivm_state" -> Graph.triIvmRecipe),
+    "q_triangles_ivm_del" -> Some("triivm_del_state" -> Graph.triIvmDelRecipe)
   ).foreach { case (name, state) =>
     test(s"$name returns the same rows through the reliable path") {
       val q = queries.Catalog.queries(name)

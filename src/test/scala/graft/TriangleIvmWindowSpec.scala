@@ -43,6 +43,75 @@ class TriangleIvmWindowSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       } finally spark.sparkContext.removeSparkListener(tally)
     }
 
+  /** Shuffle bytes the warm q_triangles_ivm_del window over `dir` writes
+    * from its "delta" mark (the net delta read) to its "apply" mark (the
+    * endpoint broadcast, the per-node delta count and its sum), and the
+    * window's top-20 rows; the artifact is served by a first run. */
+  private def delWindow(session: SparkSession, dir: String): (Long, Seq[String]) = {
+    queries.Graph.trianglesIvmDelBuild(session, dir, _ => ()).collect()
+    val tally = new Measure.Tally(session)
+    try {
+      var atDelta, atApply: Option[Measure.Snap] = None
+      val rows = queries.Graph.trianglesIvmDelBuild(session, dir, m =>
+          if (m == "delta") atDelta = Some(tally.snap())
+          else if (m.startsWith("apply")) atApply = Some(tally.snap()))
+        .collect().map(_.toString).toSeq
+      val bytes = (atApply.getOrElse(fail("no apply mark")) -
+        atDelta.getOrElse(fail("no delta mark"))).shuffleBytes
+      (bytes, rows)
+    } finally session.sparkContext.removeSparkListener(tally)
+  }
+
+  /** The sf0.01 data dir, a sibling of the suite's sf0.001 `sfDir`. */
+  private val sf001 = sfDir.stripSuffix("0.001") + "0.01"
+
+  test("q_triangles_ivm_del at sf0.01: a one-partition delta counts its " +
+      "triangles with no exchange") {
+    val (bytes, rows) = delWindow(spark, sf001)
+    assert(rows.nonEmpty)
+    assert(bytes == 0L,
+      s"the endpoint and delta-count jobs wrote $bytes shuffle bytes")
+  }
+
+  test("q_triangles_ivm_del at sf0.01: a delta of several partitions keeps " +
+      "its exchanges and the same rows") {
+    val (_, rows) = delWindow(spark, sf001)
+    // no broadcast threshold: the changes-feed diff keeps its hash
+    // exchange, so the delta arrives in more than one partition
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val (bytes, wideRows) = delWindow(wide, sf001)
+    assert(bytes > 0L, "a delta of several partitions planned no exchange")
+    assert(wideRows === rows)
+  }
+
+  test("IvmWindow: a one-partition delta is declared one partition, a wider " +
+      "one is returned as it is") {
+    def window(session: SparkSession): (Int, Int) =
+      queries.IvmWindow.run(session, sfDir, "ivmrule", "k BIGINT, v BIGINT") { w =>
+        w.append(session.range(0, 40).select(col("id").as("k"),
+          (col("id") % 7).as("v")))
+        w.append(session.range(40, 80).select(col("id").as("k"),
+          (col("id") % 7).as("v")))
+        val d = w.delta(Seq("k", "v"))
+        val agg = d.groupBy("v").count()
+        assert(agg.collect().map(_.getLong(1)).sum == 40L)
+        val exchanges = collect(agg.queryExecution.executedPlan) {
+          case e: ShuffleExchangeExec => e
+        }
+        (d.rdd.getNumPartitions, exchanges.size)
+      }
+    val (parts, exchanges) = window(spark)
+    assert(parts == 1 && exchanges == 0,
+      s"one-partition delta: $parts partitions, $exchanges exchanges")
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    wide.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val (wparts, wexchanges) = window(wide)
+    assert(wparts > 1 && wexchanges == 1,
+      s"wide delta: $wparts partitions, $wexchanges exchanges")
+  }
+
   /** Every window over a fresh table: (query, table prefix, a run that
     * reports its phases to `mark`). */
   private val freshWindows: Seq[(String, String, (String => Unit) => DataFrame)] = {
